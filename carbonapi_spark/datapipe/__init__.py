@@ -4,6 +4,7 @@ multimodal plumbing. All DataFrame-native; Python only in clearly-marked
 kernels."""
 
 import logging
+import threading
 
 from pyspark.sql import DataFrame, functions as F
 
@@ -235,6 +236,7 @@ def sql_dlit(v: float) -> str:
 
 _EXPR_CACHE: dict = {}
 _EXPR_CACHE_MAX = 256
+_EXPR_CACHE_LOCK = threading.Lock()
 
 
 def expr_cached(s: str):
@@ -251,7 +253,9 @@ def expr_cached(s: str):
     Keyed on the live gateway (a restarted JVM invalidates cached
     JavaObjects); FIFO-capped so pathological literal churn (per-step
     k_center distances over unbounded inputs) cannot grow it without
-    bound."""
+    bound.  The eviction runs under a lock: request threads share the
+    cache, and two threads at the cap would otherwise pop the same oldest
+    key."""
     from pyspark import SparkContext
     sc = SparkContext._active_spark_context
     gw = getattr(sc, "_gateway", None) if sc is not None else None
@@ -261,9 +265,10 @@ def expr_cached(s: str):
     col = _EXPR_CACHE.get(key)
     if col is None:
         col = F.expr(s)
-        if len(_EXPR_CACHE) >= _EXPR_CACHE_MAX:
-            _EXPR_CACHE.pop(next(iter(_EXPR_CACHE)))
-        _EXPR_CACHE[key] = col
+        with _EXPR_CACHE_LOCK:
+            if key not in _EXPR_CACHE and len(_EXPR_CACHE) >= _EXPR_CACHE_MAX:
+                _EXPR_CACHE.pop(next(iter(_EXPR_CACHE)))
+            col = _EXPR_CACHE.setdefault(key, col)
     return col
 
 

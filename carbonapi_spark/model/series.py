@@ -52,10 +52,12 @@ class SeriesFrame:
     consolidation: str = "average"
     xff: float = 0.0
     dense: bool = False
-    # the pre-densification plan, kept by densify() ONLY: NULL-skipping
-    # aggregations can consume it directly and skip the densify shuffle
-    # (missing row == NULL row for those folds). Any transform invalidates
-    # it (with_df/map_value/map_name clear it).
+    # the pre-densification plan, kept by densify() ONLY. Its consumers
+    # treat a missing row like a NULL row and so skip the densify shuffle:
+    # NULL-skipping aggregations (functions/aggregate.py) and the render
+    # collect (render/serialize.py collect_series, which densifies on the
+    # driver). Any transform invalidates it (with_df/map_value/map_name
+    # clear it).
     raw_df: DataFrame | None = None
     # render hints set by the graph-decorator functions (color/alpha/
     # lineWidth/dashed/drawAsInfinite/stacked/secondYAxis) and consumed by

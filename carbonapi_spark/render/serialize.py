@@ -1,10 +1,16 @@
 """Serializers: SeriesFrame -> graphite wire formats.
 
-This is the single place a render pipeline calls ``collect()``: everything
+This is the single place a render pipeline runs its plan: everything
 upstream is lazy DataFrame algebra, and maxDataPoints consolidation happens
-*inside* the plan (a window aggregation appended before collect), so the
+*inside* the plan (a window aggregation appended before the collect), so the
 data crossing the driver boundary is already capped at
 ``maxDataPoints * n_series`` points.
+
+``collect_series`` fetches the frame's pre-densify plan (``raw_df``, when the
+frame still has one) as Arrow batches with ``DataFrame.toArrow()`` and builds
+the dense per-series vectors on the driver with numpy. A plain fetch thus
+runs one scan job: the densify shuffle, which only fills gaps with NULL rows,
+is never executed for a frame that goes straight to the wire.
 
 Formats (reference ``expr/types/types.go``):
 - JSON  (types.go:120-199): ``[{"target","datapoints":[[v,ts]...],"tags"}]``
@@ -21,7 +27,8 @@ import math
 import pickle
 from dataclasses import dataclass
 
-from pyspark.sql import functions as F
+import numpy as np
+import pyarrow as pa
 
 from carbonapi_spark.model.series import NAME, ORD, TS, VALUE, SeriesFrame
 
@@ -65,22 +72,60 @@ def consolidate_for_points(frame: SeriesFrame, max_data_points: int) -> SeriesFr
     return frame.consolidate_to(frame.step * vpp)
 
 
+def _dense_vectors(table: pa.Table, start: int, stop: int,
+                   step: int) -> list[SeriesResult]:
+    """Group a (name, ord, ts, value) Arrow table by ``(ord, name)`` and lay
+    each group out over ``range(start, stop, step)``: a missing, NULL or
+    unaligned point is None, NaN stays NaN. The groups come back sorted by
+    ``(ord, name)``, the stable series order. Two rows for one in-range
+    bucket of one series are an error, like the ``map_from_entries``
+    duplicate-key failure of ``SeriesFrame.densify``: no value is picked."""
+    if not table.num_rows:
+        return []
+    ords = table.column(ORD).combine_chunks().dictionary_encode()
+    names = table.column(NAME).combine_chunks().dictionary_encode()
+    width = len(names.dictionary)
+    pair = (ords.indices.to_numpy(zero_copy_only=False).astype(np.int64) * width
+            + names.indices.to_numpy(zero_copy_only=False))
+    pairs, group = np.unique(pair, return_inverse=True)
+    keys = [(ords.dictionary[int(p) // width].as_py(),
+             names.dictionary[int(p) % width].as_py()) for p in pairs]
+    order = sorted(range(len(keys)), key=keys.__getitem__)
+    keys = [keys[k] for k in order]
+    rank = np.empty(len(keys), np.int64)
+    rank[order] = np.arange(len(keys))
+
+    n = len(range(start, stop, step))
+    # a NULL ts reads as NaN and fails every comparison: the point is dropped
+    off = table.column(TS).to_numpy() - start
+    keep = (off >= 0) & (off < n * step) & (off % step == 0)
+    cell = rank[group[keep]] * n + (off[keep] // step).astype(np.int64)
+    hits = np.bincount(cell, minlength=len(keys) * n)
+    if len(cell) and hits.max() > 1:
+        g, i = divmod(int(np.argmax(hits > 1)), n)
+        raise ValueError(f"duplicate point for series {keys[g][1]!r} "
+                         f"at ts {start + i * step}")
+    values = np.full(len(keys) * n, np.nan)
+    values[cell] = table.column(VALUE).to_numpy()[keep]
+    present = np.zeros(len(keys) * n, bool)
+    present[cell] = table.column(VALUE).is_valid().to_numpy()[keep]
+    dense = values.astype(object)  # Python floats, as a Row collect gives
+    dense[~present] = None
+    return [SeriesResult(name, start, stop, step, vals, _parse_tags(name))
+            for (_ord, name), vals in zip(keys, dense.reshape(len(keys), n).tolist())]
+
+
 def collect_series(frame: SeriesFrame, max_data_points: int = 0) -> list[SeriesResult]:
     """Execute the plan once; return dense per-series vectors ordered by the
-    stable series order (``ord``)."""
+    stable series order (``ord``).
+
+    Reads ``frame.raw_df`` when the frame kept one (a densified frame that no
+    transform touched since), else ``frame.df``, and densifies on the driver:
+    a missing row and a NULL row both render as a gap."""
     frame = consolidate_for_points(frame, max_data_points)
-    rows = frame.df.select(NAME, ORD, TS, VALUE).collect()
-    by_series: dict[tuple, dict] = {}
-    for r in rows:
-        key = (r[ORD], r[NAME])
-        by_series.setdefault(key, {})[r[TS]] = r[VALUE]
-    out = []
-    for (ord_, name) in sorted(by_series):
-        pts = by_series[(ord_, name)]
-        values = [pts.get(t) for t in range(frame.start, frame.stop, frame.step)]
-        out.append(SeriesResult(name, frame.start, frame.stop, frame.step,
-                                values, _parse_tags(name)))
-    return out
+    src = frame.df if frame.raw_df is None else frame.raw_df
+    table = src.select(NAME, ORD, TS, VALUE).toArrow()
+    return _dense_vectors(table, frame.start, frame.stop, frame.step)
 
 
 def render_json(series: list[SeriesResult], timestamp_multiplier: int = 1,
@@ -102,15 +147,17 @@ def render_json(series: list[SeriesResult], timestamp_multiplier: int = 1,
 
 def render_csv(series: list[SeriesResult], tz: str = "UTC") -> str:
     lines = []
+    stamps: dict[tuple, list[str]] = {}  # one formatted axis per (start, step, len)
     for s in series:
-        t = s.start
-        for v in s.values:
-            stamp = _dt.datetime.fromtimestamp(t, _dt.timezone.utc) \
-                .strftime("%Y-%m-%d %H:%M:%S")
+        axis = (s.start, s.step, len(s.values))
+        if axis not in stamps:
+            stamps[axis] = [
+                _dt.datetime.fromtimestamp(s.start + i * s.step, _dt.timezone.utc)
+                .strftime("%Y-%m-%d %H:%M:%S") for i in range(len(s.values))]
+        for stamp, v in zip(stamps[axis], s.values):
             vs = "" if v is None or (isinstance(v, float) and math.isnan(v)) \
                 else repr(float(v))
             lines.append(f'"{s.name}",{stamp},{vs}')
-            t += s.step
     return "\n".join(lines) + ("\n" if lines else "")
 
 

@@ -4935,3 +4935,41 @@ def test_partition_stats_lazy_df_footer_and_fallback(spark, tmp_path):
     assert built, "fallback materializes the callable"
     assert sorted((r["k"], r["__n"]) for r in per) == \
         sorted((r["k"], r["__n"]) for r in ref)
+
+
+def test_expr_cached_concurrent_eviction(spark, monkeypatch):
+    """Request threads share expr_cached's FIFO cache. Hammered from many
+    threads well past _EXPR_CACHE_MAX, no call fails (two threads at the
+    cap popping the same oldest key was a KeyError), every call returns
+    its own expression and the cache stays at the cap."""
+    import sys
+    import threading
+
+    import carbonapi_spark.datapipe as dp
+    monkeypatch.setattr(dp, "_EXPR_CACHE", {})
+    n_threads, per_thread = 8, dp._EXPR_CACHE_MAX // 2
+    start, errors = threading.Barrier(n_threads), []
+
+    def hammer(t):
+        try:
+            start.wait(timeout=60)
+            for i in range(per_thread):
+                # half the strings are shared, so inserts of one key race too
+                s = f"{i % 50} + {t % 2}" if i % 2 else f"{t} * {i}"
+                assert str(dp.expr_cached(s)) == str(F.expr(s))
+        except Exception as exc:  # noqa: BLE001
+            errors.append(exc)
+
+    threads = [threading.Thread(target=hammer, args=(t,)) for t in range(n_threads)]
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)  # switch threads as often as possible
+    try:
+        for th in threads:
+            th.start()
+        for th in threads:
+            th.join(timeout=120)
+    finally:
+        sys.setswitchinterval(interval)
+    assert not any(th.is_alive() for th in threads)
+    assert errors == []
+    assert len(dp._EXPR_CACHE) == dp._EXPR_CACHE_MAX

@@ -917,3 +917,48 @@ def test_compaction_rewrite_single_exchange(spark, tmp_path):
            .groupBy("band", "bucket")
            .agg(F.countDistinct("f").alias("nf")).collect())
     assert all(r["nf"] == 1 for r in per)
+
+
+def _render_jobs(spark, tmp_path, targets) -> tuple[int, int]:
+    """(jobs, stages) one in-process /render request runs over a Parquet
+    lake of four hourly series, like the service's."""
+    from carbonapi_spark.render.api import GraphiteAPI
+    from carbonapi_spark.sources.lake import SeriesLake
+    rows = [(f"events.u{u}.{e}", 3600 * h, float(u * h))
+            for u in (1, 2) for e in ("click", "view") for h in range(24)]
+    path = str(tmp_path / "lake")
+    spark.createDataFrame(rows, "name STRING, ts BIGINT, value DOUBLE") \
+        .write.mode("overwrite").parquet(path)
+    api = GraphiteAPI(spark, SeriesLake(spark.read.parquet(path), 3600))
+    sc = spark.sparkContext
+    group = "render-shape:" + "&".join(targets)
+    sc.setJobGroup(group, group)
+    try:
+        code, _ctype, body = api.render({
+            "target": list(targets), "from": ["0"], "until": ["86400"],
+            "format": ["json"], "noCache": ["1"]})[:3]
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert code == 200, body
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    tracker = sc.statusTracker()
+    jobs = tracker.getJobIdsForGroup(group)
+    stages = {s for j in jobs for s in tracker.getJobInfo(j).stageIds}
+    return len(jobs), len(stages)
+
+
+def test_plain_glob_render_is_one_scan_job(spark, tmp_path):
+    """A plain glob renders from the pre-densify scan: one Spark job of one
+    stage, i.e. no Exchange — the gaps are filled on the driver, so the
+    densify shuffle never runs for a frame that goes straight to the wire."""
+    assert _render_jobs(spark, tmp_path, ["events.u*.click"]) == (1, 1)
+
+
+def test_two_target_render_job_budget(spark, tmp_path):
+    """The dashboard's two-target shape: the glob costs one job, the
+    sumSeries (densify + fold) the rest; at most 4 jobs (5 with a Row
+    collect of the densified glob)."""
+    jobs, _stages = _render_jobs(
+        spark, tmp_path, ["events.u*.click", "sumSeries(events.u*.view)"])
+    assert jobs <= 4

@@ -2,6 +2,7 @@
 cmd/mockbackend analog)."""
 
 import json
+import math
 import urllib.parse
 import urllib.request
 
@@ -1239,3 +1240,160 @@ def test_render_dual_axis_log_inverted_overrides_defined(spark):
                                     "yMinLeft": ["100"],
                                     "yMaxLeft": ["10"]})
     assert png[:8] == b"\x89PNG\r\n\x1a\n"
+
+
+# ------------------------------------------------- columnar collect parity
+
+NAN, INF = float("nan"), float("inf")
+
+
+def _rows_lake(spark, rows, step):
+    from carbonapi_spark.sources.lake import SeriesLake
+    return SeriesLake(spark.createDataFrame(
+        rows, "name STRING, ts BIGINT, value DOUBLE"), step)
+
+
+_GAPS = [("m.a", 0, 1.0), ("m.a", 10, None), ("m.a", 30, 3.0), ("m.b", 10, 2.0)]
+_SPECIAL = [("m.a", 0, NAN), ("m.a", 10, None), ("m.a", 20, 1.5),
+            ("m.b", 0, INF), ("m.b", 10, -INF), ("m.b", 20, 0.0)]
+_LAKES = {
+    "gaps": _GAPS,
+    "special": _SPECIAL,
+    "unaligned": [("m.a", 0, 1.0), ("m.a", 5, 2.0), ("m.a", 10, 3.0),
+                  ("m.a", 25, 4.0), ("m.a", 30, 5.0), ("m.b", 15, 6.0)],
+    "tagged": [("cpu;host=h1;dc=west", 0, 1.0), ("cpu;host=h2;dc=east", 10, 2.0),
+               ("mem;host=h1", 0, 3.0)],
+    "multi": [("m.c", 0, 1.0), ("m.c", 10, 9.0), ("m.a", 0, 5.0), ("m.b", 10, 7.0)],
+    "long": [("m.a", t, float(t)) for t in range(0, 100, 10) if t not in (40, 50)]
+            + [("m.a", 50, None)],
+}
+
+# case -> (lake, target, from, until, widen, maxDataPoints, expected), the
+# expected series being (name, start, stop, step, values, tags) exactly as
+# the Row collect with a per-point dict densify returned them.
+_COLLECT_CASES = {
+    "interior_gaps": ("gaps", "m.*", 0, 50, 0, 0, [
+        ("m.a", 0, 50, 10, [1.0, None, None, 3.0, None], {"name": "m.a"}),
+        ("m.b", 0, 50, 10, [None, 2.0, None, None, None], {"name": "m.b"})]),
+    "null_vs_nan_and_inf": ("special", "m.*", 0, 30, 0, 0, [
+        ("m.a", 0, 30, 10, [NAN, None, 1.5], {"name": "m.a"}),
+        ("m.b", 0, 30, 10, [INF, -INF, 0.0], {"name": "m.b"})]),
+    "negated_nan": ("special", "scale(m.a, -1)", 0, 30, 0, 0, [
+        ("scale(m.a,-1)", 0, 30, 10, [NAN, None, -1.5],
+         {"name": "scale(m.a,-1)"})]),
+    "unaligned_dropped": ("unaligned", "m.*", 0, 40, 0, 0, [
+        ("m.a", 0, 40, 10, [1.0, 3.0, None, 5.0], {"name": "m.a"}),
+        ("m.b", 0, 40, 10, [None, None, None, None], {"name": "m.b"})]),
+    "densify_wider_than_fetch": ("gaps", "m.*", 10, 30, 20, 0, [
+        ("m.a", -10, 50, 10, [None] * 6, {"name": "m.a"}),
+        ("m.b", -10, 50, 10, [None, None, 2.0, None, None, None],
+         {"name": "m.b"})]),
+    "empty_match": ("gaps", "nomatch.*", 0, 50, 0, 0, []),
+    "tagged_names": ("tagged", "seriesByTag('name=cpu')", 0, 20, 0, 0, [
+        ("cpu;host=h1;dc=west", 0, 20, 10, [1.0, None],
+         {"name": "cpu", "host": "h1", "dc": "west"}),
+        ("cpu;host=h2;dc=east", 0, 20, 10, [None, 2.0],
+         {"name": "cpu", "host": "h2", "dc": "east"})]),
+    "multi_target_ord": ("multi", "group(m.c, m.a, m.b)", 0, 20, 0, 0, [
+        ("m.c", 0, 20, 10, [1.0, 9.0], {"name": "m.c"}),
+        ("m.a", 0, 20, 10, [5.0, None], {"name": "m.a"}),
+        ("m.b", 0, 20, 10, [None, 7.0], {"name": "m.b"})]),
+    "sorted_ord": ("multi", "sortByMaxima(m.*)", 0, 20, 0, 0, [
+        ("m.c", 0, 20, 10, [1.0, 9.0], {"name": "m.c"}),
+        ("m.b", 0, 20, 10, [None, 7.0], {"name": "m.b"}),
+        ("m.a", 0, 20, 10, [5.0, None], {"name": "m.a"})]),
+    "alias_after_fetch": ("gaps", "alias(m.a, 'x')", 0, 50, 0, 0, [
+        ("x", 0, 50, 10, [1.0, None, None, 3.0, None], {"name": "x"})]),
+    "sum_series": ("gaps", "sumSeries(m.*)", 0, 50, 0, 0, [
+        ("sumSeries(m.*)", 0, 50, 10, [1.0, 2.0, None, 3.0, None],
+         {"name": "sumSeries(m.*)"})]),
+    "sparse_aggregate": ("gaps", "aggregate(m.*, 'sum')", 0, 50, 0, 0, [
+        ("sumSeries(m.*)", 0, 50, 10, [1.0, 2.0, None, 3.0, None],
+         {"name": "sumSeries(m.*)"})]),
+    "sparse_group_by_node": ("gaps", "groupByNode(m.*, 0, 'max')", 0, 50, 0, 0, [
+        ("m", 0, 50, 10, [1.0, 2.0, None, 3.0, None], {"name": "m"})]),
+    "max_data_points_gaps": ("gaps", "m.*", 0, 50, 0, 4, [
+        ("m.a", 0, 60, 20, [1.0, 3.0, None], {"name": "m.a"}),
+        ("m.b", 0, 60, 20, [2.0, None, None], {"name": "m.b"})]),
+    "max_data_points_4": ("long", "m.a", 0, 100, 0, 4, [
+        ("m.a", 0, 120, 30, [10.0, 30.0, 70.0, 90.0], {"name": "m.a"})]),
+    "max_data_points_3": ("long", "m.a", 0, 100, 0, 3, [
+        ("m.a", 0, 120, 40, [15.0, 65.0, 85.0], {"name": "m.a"})]),
+}
+
+
+def _nan_safe(series):
+    return [(s.name, s.start, s.stop, s.step,
+             ["nan" if isinstance(v, float) and math.isnan(v) else v
+              for v in s.values], s.tags) for s in series]
+
+
+@pytest.mark.parametrize("case", sorted(_COLLECT_CASES))
+def test_collect_series_matches_row_collect(spark, case):
+    """The Arrow collect + driver densify returns exactly what the Row
+    collect + per-point dict densify returned, for raw_df frames (plain
+    fetches, sparse aggregates) and df frames (transforms, consolidation)."""
+    from carbonapi_spark.render.serialize import SeriesResult
+    lake, target, f, u, widen, mdp, want = _COLLECT_CASES[case]
+    frame = _frame(spark, _rows_lake(spark, _LAKES[lake], 10), target, f, u)
+    if widen:
+        frame = frame.densify(frame.start - widen, frame.stop + widen)
+    got = collect_series(frame, mdp)
+    assert _nan_safe(got) == _nan_safe([SeriesResult(*w) for w in want])
+    assert all(v is None or type(v) is float for s in got for v in s.values)
+
+
+def test_collect_series_nan_stays_nan_on_the_wire(spark):
+    """A stored NaN is a value, not a gap, until the encoder: null in JSON,
+    NaN in pickle and protobuf, empty in CSV — the same as a NULL."""
+    import pickle
+    import struct
+    from carbonapi_spark.render.serialize import render_pickle, render_protobuf_v3
+    frame = _frame(spark, _rows_lake(spark, _SPECIAL, 10), "m.a", 0, 30)
+    series = collect_series(frame)
+    assert json.loads(render_json(series))[0]["datapoints"] == [
+        [None, 0], [None, 10], [1.5, 20]]
+    vals = pickle.loads(render_pickle(series))[0]["values"]
+    assert math.isnan(vals[0]) and math.isnan(vals[1]) and vals[2] == 1.5
+    (_f, _w, metric), = list(_pb_fields(render_protobuf_v3(series)))
+    fields = {fl: val for fl, _, val in _pb_fields(metric)}
+    v = struct.unpack("<3d", fields[9])
+    assert math.isnan(v[0]) and math.isnan(v[1]) and v[2] == 1.5
+    assert render_csv(series).splitlines() == [
+        '"m.a",1970-01-01 00:00:00,', '"m.a",1970-01-01 00:00:10,',
+        '"m.a",1970-01-01 00:00:20,1.5']
+
+
+def test_collect_series_rejects_duplicate_points(spark):
+    """A lake holding one (name, ts) twice is an error, as the densify
+    shuffle's map_from_entries made it: no value is silently picked, and the
+    HTTP handler answers the ValueError with a 500. Out-of-range and
+    unaligned rows are dropped before the check."""
+    from carbonapi_spark.render.api import GraphiteAPI
+    lake = _rows_lake(spark, [("m.a", 0, 1.0), ("m.a", 5, 8.0), ("m.a", 5, 9.0),
+                              ("m.a", 10, 2.0), ("m.a", 10, 3.0),
+                              ("m.b", 0, 4.0)], 10)
+    with pytest.raises(ValueError, match="duplicate point .*'m.a' at ts 10"):
+        collect_series(_frame(spark, lake, "m.*", 0, 20))
+    with pytest.raises(ValueError, match="duplicate point"):
+        GraphiteAPI(spark, lake).render({
+            "target": ["m.a"], "from": ["0"], "until": ["20"],
+            "noCache": ["1"]})
+    assert [s.values for s in collect_series(_frame(spark, lake, "m.*", 0, 10))] \
+        == [[1.0], [4.0]]
+
+
+def test_render_csv_formats_each_time_axis_once():
+    """render_csv output is byte-identical to the per-point strftime
+    formatter's, over two different time axes (the first one shared)."""
+    from carbonapi_spark.render.serialize import SeriesResult
+    year = 86400 * 365
+    series = [SeriesResult("a", year, year + 180, 60, [1.0, None, NAN], {}),
+              SeriesResult("b;x=y", 1700000000, 1700007200, 3600, [2.5, -INF], {}),
+              SeriesResult("c", year, year + 180, 60, [INF, 0.0, 3.0], {})]
+    assert render_csv(series) == (
+        '"a",1971-01-01 00:00:00,1.0\n"a",1971-01-01 00:01:00,\n'
+        '"a",1971-01-01 00:02:00,\n"b;x=y",2023-11-14 22:13:20,2.5\n'
+        '"b;x=y",2023-11-14 23:13:20,-inf\n"c",1971-01-01 00:00:00,inf\n'
+        '"c",1971-01-01 00:01:00,0.0\n"c",1971-01-01 00:02:00,3.0\n')
+    assert render_csv([]) == ""
