@@ -22,6 +22,7 @@ from __future__ import annotations
 
 import contextlib
 import os
+import threading
 
 from pyspark.sql import functions as F
 
@@ -271,6 +272,10 @@ def _local_root(path: str):
     return None
 
 
+# serializes read_index_table's set/restore of a session-wide conf
+_DISCOVERY_CONF_LOCK = threading.Lock()
+
+
 def read_index_table(spark, path: str):
     """``spark.read.parquet`` for a PARTITIONED index grid (the
     band/bucket and cell layouts).  Past
@@ -289,12 +294,15 @@ def read_index_table(spark, path: str):
     if _local_root(path) is None:
         return spark.read.parquet(path)
     key = "spark.sql.sources.parallelPartitionDiscovery.threshold"
-    old = spark.conf.get(key)
-    spark.conf.set(key, "8192")
-    try:
-        return spark.read.parquet(path)
-    finally:
-        spark.conf.set(key, old)
+    # the override is session-wide: two overlapping reads would otherwise
+    # restore each other's value, leaving 8192 behind for good
+    with _DISCOVERY_CONF_LOCK:
+        old = spark.conf.get(key)
+        spark.conf.set(key, "8192")
+        try:
+            return spark.read.parquet(path)
+        finally:
+            spark.conf.set(key, old)
 
 
 def _partition_stats(spark, table_path: str, df,
@@ -311,6 +319,8 @@ def _partition_stats(spark, table_path: str, df,
     scan is actually needed.  Post-rewrite stats calls use this: the
     rewrite preserves the schema, so the caller passes the
     pre-rewrite schema and a lazy re-read."""
+    if callable(df) and schema is None:
+        raise TypeError("_partition_stats: a callable df needs schema=")
     root = _local_root(table_path)
     if root is not None:
         try:

@@ -7,8 +7,11 @@ On Spark the economics invert: scans are lazy, so "prefetch analysis"
 extensions) collapses into *recursive lazy evaluation with a memoized fetch
 cache* — identical semantics (functions that need extended history fetch
 with adjusted [from, until)), but the whole render stays one Spark job DAG
-and Catalyst dedups/reuses the underlying scans. Nothing is collected until
-serialization.
+and Catalyst dedups/reuses the underlying scans. The series data is not
+collected until serialization, but building a frame may run small jobs: a
+seriesByTag fetch resolves its series names and a multi-resolution lake its
+common step (``SeriesLake.fetch``), and a few functions (sort/limit, some
+extras) run a driver action.
 
 Dispatch parity: name -> fetch (expr.go:163-166); function -> registry
 (expr.go:187-211); series-list args flatten like helper.GetSeriesArgs

@@ -53,9 +53,11 @@ class SeriesFrame:
     xff: float = 0.0
     dense: bool = False
     # the pre-densification plan, kept by densify() ONLY. Its consumers
-    # treat a missing row like a NULL row and so skip the densify shuffle:
-    # NULL-skipping aggregations (functions/aggregate.py) and the render
-    # collect (render/serialize.py collect_series, which densifies on the
+    # treat a missing row like a NULL row and so neither run the densify
+    # shuffle nor build the dense plan (densify() leaves ``df`` unbuilt
+    # until it is read): NULL-skipping aggregations
+    # (functions/aggregate.py) and the render collect
+    # (render/serialize.py collect_series, which densifies on the
     # driver). Any transform invalidates it (with_df/map_value/map_name
     # clear it).
     raw_df: DataFrame | None = None
@@ -106,9 +108,14 @@ class SeriesFrame:
     def densify(self, start: int | None = None, stop: int | None = None) -> "SeriesFrame":
         """Materialize NULL rows for every missing (series, bucket).
 
-        One hash aggregation by series (``ord``) collecting a ts->value map,
-        then an inline spine explode with map lookup. Exactly ONE shuffle —
-        and its partitioning (hash(ord)) is what downstream
+        The dense plan is built on the first read of the returned frame's
+        ``df`` and memoized there: a frame that reaches the wire through
+        ``raw_df`` (render/serialize.py collect_series) or aggregates it
+        (functions/aggregate.py) never pays the py4j calls that build it.
+
+        The plan: one hash aggregation by series (``ord``) collecting a
+        ts->value map, then an inline spine explode with map lookup. Exactly
+        ONE shuffle — and its partitioning (hash(ord)) is what downstream
         ``Window.partitionBy(ord)`` operators need, so a fetch → densify →
         window pipeline runs with no further exchange. Map size per series
         is bounded by the request's point count.
@@ -119,19 +126,24 @@ class SeriesFrame:
             return self
         if stop <= start:
             return replace(self, start=start, stop=stop, dense=True)
-        per_series = (self.df
+        out = replace(self, df=None, start=start, stop=stop, dense=True,
+                      raw_df=self.raw_df if self.dense else self.df)
+        out._densify_of = self
+        return out
+
+    def _dense_plan(self, src: "SeriesFrame") -> DataFrame:
+        per_series = (src.df
                       .groupBy(ORD)
                       .agg(F.first(NAME, ignorenulls=True).alias(NAME),
                            F.map_from_entries(
                                F.collect_list(F.struct(F.col(TS),
                                                        F.col(VALUE)))).alias("__pts")))
-        spine = F.sequence(F.lit(start), F.lit(stop - self.step), F.lit(self.step))
-        df = (per_series
-              .select(NAME, ORD, F.explode(spine).alias(TS), F.col("__pts"))
-              .select(NAME, ORD, F.col(TS).cast("long"),
-                      F.try_element_at(F.col("__pts"), F.col(TS)).alias(VALUE)))
-        return replace(self, df=df, start=start, stop=stop, dense=True,
-                       raw_df=self.raw_df if self.dense else self.df)
+        spine = F.sequence(F.lit(self.start), F.lit(self.stop - self.step),
+                           F.lit(self.step))
+        return (per_series
+                .select(NAME, ORD, F.explode(spine).alias(TS), F.col("__pts"))
+                .select(NAME, ORD, F.col(TS).cast("long"),
+                        F.try_element_at(F.col("__pts"), F.col(TS)).alias(VALUE)))
 
     # ------------------------------------------------------------------
     def consolidate_to(self, step: int, consolidation: str | None = None,
@@ -194,3 +206,20 @@ def combine(frames: list[SeriesFrame], *, densify: bool = True) -> SeriesFrame:
         out = out.unionByName(d)
     base = aligned[0]
     return replace(base, df=out, raw_df=None)
+
+
+def _frame_df(frame: SeriesFrame) -> DataFrame:
+    df = frame.__dict__["df"]
+    if df is None:  # densify() left it to be built here, once
+        df = frame.__dict__["df"] = frame._dense_plan(
+            frame.__dict__.pop("_densify_of"))
+    return df
+
+
+def _set_frame_df(frame: SeriesFrame, df: DataFrame | None) -> None:
+    frame.__dict__["df"] = df
+
+
+# ``df`` stays a dataclass field (constructor argument, replace(df=...))
+# read through this property, which builds a densified frame's plan lazily
+SeriesFrame.df = property(_frame_df, _set_frame_df)

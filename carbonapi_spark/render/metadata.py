@@ -14,7 +14,7 @@ from pyspark.sql import functions as F
 
 from carbonapi_spark.model.series import NAME
 from carbonapi_spark.parser.globs import glob_to_java_regex
-from carbonapi_spark.sources.lake import SeriesLake, tags_expr
+from carbonapi_spark.sources.lake import SeriesLake, by_name, tags_expr
 
 
 def find(lake: SeriesLake, query: str) -> list[dict]:
@@ -65,23 +65,15 @@ def expand(lake: SeriesLake, query: str) -> list[str]:
     return [r["p"] for r in rows]
 
 
-def _expr_filtered(lake: SeriesLake, exprs: list[str] | None):
-    """Restrict the lake to series matching every seriesByTag-style term
-    (the graphite-web autocomplete ``expr=`` params; the reference proxies
-    them verbatim to the backend's /tags endpoints,
-    zipper/types/interface.go:29-30)."""
-    from carbonapi_spark.sources.lake import tag_predicate
-
-    df = lake.df
-    for spec in exprs or []:
-        df = df.where(tag_predicate(spec, tags_expr(F.col(NAME))))
-    return df
-
-
 def tag_names(lake: SeriesLake, prefix: str = "", limit: int = 100,
               exprs: list[str] | None = None) -> list[str]:
+    """Tag keys of the series matching every seriesByTag-style term in
+    *exprs* (the graphite-web autocomplete ``expr=`` params; the reference
+    proxies them verbatim to the backend's /tags endpoints,
+    zipper/types/interface.go:29-30). Tags are parsed once per distinct
+    name, not per row."""
     tags = tags_expr(F.col(NAME))
-    df = (_expr_filtered(lake, exprs)
+    df = (by_name(lake.df, exprs or [])
           .select(F.explode(F.map_keys(tags)).alias("k")).distinct())
     if prefix:
         df = df.where(F.col("k").startswith(prefix))
@@ -90,8 +82,9 @@ def tag_names(lake: SeriesLake, prefix: str = "", limit: int = 100,
 
 def tag_values(lake: SeriesLake, tag: str, value_prefix: str = "",
                limit: int = 100, exprs: list[str] | None = None) -> list[str]:
+    """Values of *tag* over the series matching *exprs* (see tag_names)."""
     tags = tags_expr(F.col(NAME))
-    df = (_expr_filtered(lake, exprs)
+    df = (by_name(lake.df, exprs or [])
           .select(tags.getItem(tag).alias("v"))
           .where(F.col("v").isNotNull()).distinct())
     if value_prefix:
@@ -107,12 +100,12 @@ def info(lake: SeriesLake, target: str) -> dict:
     each matching series reports its step (per-series when the lake is
     multi-resolution) and the lake's time span as a single retention archive.
     """
-    df = lake.df.where(lake._name_predicate(target))
+    pred, terms = lake._name_filter(target)
     has_step = lake.per_series_step
     aggs = [F.min("ts").alias("lo"), F.max("ts").alias("hi")]
     if has_step:
         aggs.append(F.max("step").alias("step"))
-    rows = df.groupBy(NAME).agg(*aggs).orderBy(NAME).collect()
+    rows = by_name(lake.df.where(pred), terms, *aggs).orderBy(NAME).collect()
     out = {}
     for r in rows:
         step = int(r["step"]) if has_step else lake.step

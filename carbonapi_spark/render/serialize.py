@@ -22,6 +22,7 @@ Formats (reference ``expr/types/types.go``):
 from __future__ import annotations
 
 import datetime as _dt
+import itertools
 import json
 import math
 import pickle
@@ -130,19 +131,23 @@ def collect_series(frame: SeriesFrame, max_data_points: int = 0) -> list[SeriesR
 
 def render_json(series: list[SeriesResult], timestamp_multiplier: int = 1,
                 no_null_points: bool = False) -> str:
-    payload = []
+    """The ``json.dumps`` text of ``[{"target", "datapoints", "tags"}]``,
+    each series' datapoints written by comprehensions. NaN and ±inf
+    values are ``null``: ``v - v`` is NaN, which is true, for those only.
+    A float is formatted with ``float.__repr__``, as ``json`` does; a
+    numpy float64's own ``repr`` reads ``np.float64(…)``."""
+    out = []
     for s in series:
-        datapoints = []
-        t = s.start
-        for v in s.values:
-            if v is not None and (math.isnan(v) or math.isinf(v)):
-                v = None
-            if not (no_null_points and v is None):
-                datapoints.append([v, t * timestamp_multiplier])
-            t += s.step
-        payload.append({"target": s.name, "datapoints": datapoints,
-                        "tags": s.tags})
-    return json.dumps(payload)
+        stamps = itertools.count(s.start * timestamp_multiplier,
+                                 s.step * timestamp_multiplier)
+        text = ["null" if v is None or v - v else
+                int.__repr__(v) if v.__class__ is int else float.__repr__(v)
+                for v in s.values]
+        points = ", ".join([f"[{v}, {t}]" for v, t in zip(text, stamps)
+                            if not (no_null_points and v == "null")])
+        out.append(f'{{"target": {json.dumps(s.name)}, '
+                   f'"datapoints": [{points}], "tags": {json.dumps(s.tags)}}}')
+    return "[" + ", ".join(out) + "]"
 
 
 def render_csv(series: list[SeriesResult], tz: str = "UTC") -> str:
@@ -154,10 +159,10 @@ def render_csv(series: list[SeriesResult], tz: str = "UTC") -> str:
             stamps[axis] = [
                 _dt.datetime.fromtimestamp(s.start + i * s.step, _dt.timezone.utc)
                 .strftime("%Y-%m-%d %H:%M:%S") for i in range(len(s.values))]
-        for stamp, v in zip(stamps[axis], s.values):
-            vs = "" if v is None or (isinstance(v, float) and math.isnan(v)) \
-                else repr(float(v))
-            lines.append(f'"{s.name}",{stamp},{vs}')
+        # float(v) first: a numpy float64's own repr reads np.float64(…)
+        lines += [f'"{s.name}",{stamp},'
+                  f'{"" if v is None or v != v else repr(float(v))}'
+                  for stamp, v in zip(stamps[axis], s.values)]
     return "\n".join(lines) + ("\n" if lines else "")
 
 

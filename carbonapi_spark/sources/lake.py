@@ -15,8 +15,13 @@ fetches, we own a long Parquet table
   ``StartsWith`` we derive from the pattern),
 - [from, until) -> range predicate on ``ts`` (partition pruning when the
   lake is laid out by time),
-- tag queries (``seriesByTag``) -> predicates over tags parsed from the
-  ``;k=v`` name suffix (``expr/tags/helper.go:160`` semantics).
+- tag queries (``seriesByTag``) -> resolved once per distinct series
+  name, like the reference's lookup in a backend name index
+  (``expr/functions/seriesByTag/function.go:40``): a name-only job over the
+  request window evaluates the tag terms on the distinct names
+  (:func:`by_name`), and the data scan reads ``name IN (<those names>)``.
+  A ``name=`` term is plain string ops on both sides, with a pushed-down
+  ``StartsWith`` guard.
 
 Fetched frames are densified so downstream operators see the reference's
 dense-vector invariant (gap == NULL row).
@@ -24,6 +29,7 @@ dense-vector invariant (gap == NULL row).
 
 from __future__ import annotations
 
+import functools
 import math
 import re
 
@@ -40,13 +46,14 @@ def tags_expr(name: Column) -> Column:
     """MAP<STRING,STRING> of graphite tags from ``base;k=v;k2=v2`` names.
 
     The ``name`` tag always exists and holds the base (tags/helper.go:160).
+    A tag splits at its first ``=``: the value of ``k=a=b`` is ``a=b``.
     """
     parts = F.split(name, ";")
     kvs = F.filter(F.slice(parts, 2, F.greatest(F.size(parts) - 1, F.lit(0))),
                    lambda s: s.contains("="))
     entries = F.transform(
-        kvs, lambda s: F.struct(F.split_part(s, F.lit("="), F.lit(1)).alias("key"),
-                                F.substring_index(s, "=", -1).alias("value")))
+        F.transform(kvs, lambda s: F.split(s, "=", 2)),
+        lambda kv: F.struct(kv[0].alias("key"), kv[1].alias("value")))
     base_entry = F.array(F.struct(F.lit("name").alias("key"),
                                   F.element_at(parts, 1).alias("value")))
     return F.map_from_entries(F.concat(base_entry, entries))
@@ -78,6 +85,23 @@ def tag_predicate(spec: str, tags: Column) -> Column:
     if op == "=~":
         return tag.isNotNull() & tag.rlike(rx)
     return tag.isNull() | ~tag.rlike(rx)
+
+
+def by_name(df: DataFrame, terms: list[str], *aggs: Column) -> DataFrame:
+    """One row per distinct ``name`` of *df* matching every seriesByTag
+    term in *terms*, with *aggs* computed per name.
+
+    The terms read ``tags_expr`` once per distinct name instead of once
+    per scanned row. They filter the name as the aggregate's result,
+    ``first(name)``: Catalyst pushes a filter on a grouping key below the
+    aggregate, back onto every row."""
+    out = (df.groupBy(F.col(NAME).alias("__key"))
+           .agg(F.first(NAME).alias(NAME), *aggs).drop("__key"))
+    if terms:
+        tags = tags_expr(F.col(NAME))
+        out = out.where(functools.reduce(
+            Column.__and__, [tag_predicate(t, tags) for t in terms]))
+    return out
 
 
 def glob_prefix(pattern: str) -> str:
@@ -114,45 +138,57 @@ class SeriesLake:
             time_partition_col in df.columns else None)
         self.time_partition_seconds = time_partition_seconds
 
-    def _name_predicate(self, pattern: str) -> Column:
+    def _name_filter(self, pattern: str) -> tuple[Column, list[str]]:
+        """(row predicate, seriesByTag terms left for :func:`by_name`).
+
+        A glob has no terms. Of a seriesByTag query only the ``name=``
+        terms become row predicates: the name tag IS the pre-';' base, so
+        plain string ops with a prefix guard that pushes down to Parquet
+        as StringStartsWith (the tag map never would)."""
         name = F.col(NAME)
         if pattern.startswith("seriesByTag(") and pattern.endswith(")"):
-            inner = pattern[len("seriesByTag("):-1]
-            terms = []
-            for raw in _split_quoted_args(inner):
+            args = _split_quoted_args(pattern[len("seriesByTag("):-1])
+            if not args:
+                raise ValueError("seriesByTag needs at least one term")
+            pred, terms = F.lit(True), []
+            for raw in args:
                 m = _TAG_TERM.match(raw)
                 term = (m.group(1) or m.group(2)) if m else raw.strip()
                 tm = _TAG_EXPR.match(term)
                 if (tm and tm.group(1).strip() == "name"
                         and tm.group(2) == "=" and tm.group(3).strip()):
-                    # the name tag IS the pre-';' base — plain string ops
-                    # instead of building the whole tag map per scanned row,
-                    # with a prefix guard that pushes down to Parquet as
-                    # StringStartsWith (the map expression never would)
                     val = tm.group(3).strip()
-                    terms.append(
-                        name.startswith(val) &
-                        (F.split_part(name, F.lit(";"), F.lit(1)) == val))
+                    pred = pred & name.startswith(val) & (
+                        F.split_part(name, F.lit(";"), F.lit(1)) == val)
                 else:
-                    terms.append(tag_predicate(term, tags_expr(name)))
-            pred = terms[0]
-            for t in terms[1:]:
-                pred = pred & t
-            return pred
+                    terms.append(term)
+            return pred, terms
         if not has_wildcard(pattern):
-            return name == pattern
+            return name == pattern, []
         exact = expand_braces(pattern)
         if exact is not None:
             # brace-only alternation -> IN, which (unlike rlike) reaches the
             # Parquet row-group filters as an In pushed filter
-            return name.isin(exact)
+            return name.isin(exact), []
         pred = name.rlike(glob_to_java_regex(pattern))
         prefix = glob_prefix(pattern)
         if prefix:
             # startswith IS pushed to Parquet (StringStartsWith filter);
             # rlike is evaluated post-scan, so this prunes row groups.
             pred = name.startswith(prefix) & pred
-        return pred
+        return pred, []
+
+    def _name_predicate(self, pattern: str, window: Column) -> Column:
+        """Row predicate selecting the series of *pattern*. Tag terms are
+        resolved first: one job collects the distinct names inside
+        *window* that match them, and the predicate reads ``name IN``
+        those names (pushed to Parquet as an In filter)."""
+        pred, terms = self._name_filter(pattern)
+        if not terms:
+            return pred
+        names = [r[0] for r in by_name(self.df.where(pred & window), terms)
+                 .collect() if r[0] is not None]
+        return pred & F.col(NAME).isin(names)
 
     def fetch(self, spark, pattern: str, from_ts: int, until_ts: int,
               *, densify: bool = True) -> SeriesFrame:
@@ -164,13 +200,12 @@ class SeriesLake:
         stop = until_ts + (-until_ts) % step
         if stop <= start:
             stop = start + step
-        df = (self.df
-              .where(self._name_predicate(pattern))
-              .where((F.col(TS) >= start) & (F.col(TS) < stop)))
+        window = (F.col(TS) >= start) & (F.col(TS) < stop)
         if self.time_partition_col:
             w = self.time_partition_seconds
-            df = df.where(F.col(self.time_partition_col)
-                          .between(start - start % w, stop - 1))
+            window = window & F.col(self.time_partition_col).between(
+                start - start % w, stop - 1)
+        df = self.df.where(self._name_predicate(pattern, window)).where(window)
         if self.per_series_step:
             # rescale every series to the LCM step: bucket each raw point
             # and fold with the default consolidation (average, NULL-skipped
@@ -188,14 +223,16 @@ class SeriesLake:
     def _common_step(self, pattern: str, until_ts: int) -> int:
         """LCM of the steps of the series matching *pattern*.
 
-        One tiny pushed-down aggregate over the ``step`` column. A
+        One tiny pushed-down aggregate over the ``step`` column, per
+        distinct name (:func:`by_name` evaluates tag terms there). A
         production lake would keep (name, step) in a small series_meta
         table instead of re-deriving it from the data scan; the plan shape
-        (scan → partial distinct → 1-row result) is the same either way.
+        (scan → per-name aggregate → distinct steps) is the same either way.
         """
-        rows = (self.df.where(self._name_predicate(pattern))
-                .where(F.col(TS) < until_ts)
-                .select("step").distinct().collect())
+        pred, terms = self._name_filter(pattern)
+        rows = (by_name(self.df.where(pred & (F.col(TS) < until_ts)), terms,
+                        F.collect_set("step").alias("steps"))
+                .select(F.explode("steps")).distinct().collect())
         step = 1
         for r in rows:
             step = step * int(r[0]) // math.gcd(step, int(r[0]))

@@ -4906,6 +4906,53 @@ def test_read_index_table_matches_default_read_and_restores_conf(
         "threshold must be restored on error too"
 
 
+def test_read_index_table_restores_conf_after_failed_read(spark, tmp_path):
+    """A local grid holding a file that is not Parquet fails the read on
+    the override path; the session conf is restored all the same, and
+    the lock is released for the next read."""
+    from carbonapi_spark.datapipe import maintenance as M
+    d = tmp_path / "grid" / "cell=0"
+    d.mkdir(parents=True)
+    (d / "part-00000.parquet").write_text("not a parquet file")
+    key = "spark.sql.sources.parallelPartitionDiscovery.threshold"
+    before = spark.conf.get(key)
+    with pytest.raises(Exception):
+        M.read_index_table(spark, str(tmp_path / "grid"))
+    assert spark.conf.get(key) == before
+    assert not M._DISCOVERY_CONF_LOCK.locked()
+
+
+def test_read_index_table_concurrent_reads_restore_conf(spark, tmp_path):
+    """Overlapping reads from more threads than cores leave the session
+    conf as it was (unguarded, a thread can save another's override as
+    the value to restore)."""
+    import concurrent.futures as cf
+    import sys
+    from carbonapi_spark.datapipe.maintenance import read_index_table
+    p = str(tmp_path / "grid")
+    (spark.range(40).select((F.col("id") % 8).alias("cell"), F.col("id"))
+     .write.partitionBy("cell").parquet(p))
+    key = "spark.sql.sources.parallelPartitionDiscovery.threshold"
+    before = spark.conf.get(key)
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        with cf.ThreadPoolExecutor(16) as pool:
+            futures = [pool.submit(lambda: read_index_table(spark, p).columns)
+                       for _ in range(32)]
+            cols = [f.result(timeout=120) for f in futures]
+    finally:
+        sys.setswitchinterval(interval)
+    assert all(sorted(c) == ["cell", "id"] for c in cols)
+    assert spark.conf.get(key) == before
+
+
+def test_partition_stats_callable_df_needs_schema(spark, tmp_path):
+    from carbonapi_spark.datapipe import maintenance as M
+    with pytest.raises(TypeError, match="schema"):
+        M._partition_stats(spark, str(tmp_path), lambda: None, ["k"])
+
+
 def test_partition_stats_lazy_df_footer_and_fallback(spark, tmp_path):
     """r15: _partition_stats accepts a ZERO-ARG CALLABLE df (with the
     schema passed separately) so the footer path never constructs the

@@ -101,6 +101,19 @@ def test_multi_resolution_lake(spark, tmp_path_factory):
     assert fine_only.df.count() == 12
 
 
+def test_multi_resolution_tagged_common_step(spark):
+    """The LCM step of a seriesByTag fetch covers only the series its tag
+    terms select (resolved per distinct name)."""
+    rows = [("a;k=1", i * 60, 1.0, 60) for i in range(6)]
+    rows += [("b;k=1", i * 180, 2.0, 180) for i in range(2)]
+    rows += [("c;k=2", i * 120, 3.0, 120) for i in range(3)]
+    lake = SeriesLake(spark.createDataFrame(
+        rows, "name STRING, ts BIGINT, value DOUBLE, step INT"))
+    frame = lake.fetch(spark, "seriesByTag('k=1')", 0, 360)
+    assert frame.step == 180
+    assert sorted({r["name"] for r in frame.df.collect()}) == ["a;k=1", "b;k=1"]
+
+
 def test_jsonl_ingest_with_corrupt_capture(spark, tmp_path):
     """JSONL ingest: clean rows get content-stable ids, corrupt lines are
     quarantined (not silently dropped), and re-ingestion reproduces ids."""

@@ -962,3 +962,121 @@ def test_two_target_render_job_budget(spark, tmp_path):
     jobs, _stages = _render_jobs(
         spark, tmp_path, ["events.u*.click", "sumSeries(events.u*.view)"])
     assert jobs <= 4
+
+
+def _nodes(plan):
+    children = plan.children()
+    return [children.apply(i) for i in range(children.size())]
+
+
+def _tag_map_rows(plan) -> list[str]:
+    """Plan nodes that build the tag map (``tags_expr``'s map_from_entries)
+    with a path to a leaf that crosses no Aggregate: nodes that evaluate
+    it once per scanned row rather than once per distinct name."""
+    def unaggregated(node) -> bool:
+        if node.nodeName() == "Aggregate":
+            return False
+        kids = _nodes(node)
+        return not kids or any(unaggregated(k) for k in kids)
+
+    out = []
+
+    def walk(node):
+        if ("map_from_entries" in node.simpleString(1000)
+                and unaggregated(node)):
+            out.append(node.nodeName())
+        for k in _nodes(node):
+            walk(k)
+
+    walk(plan)
+    return out
+
+
+def _tagged_lake(spark, tmp_path):
+    from carbonapi_spark.sources.lake import SeriesLake
+    rows = [(f"app.req;dc=dc{d};host=h{h}", 60 * t, float(t))
+            for d in (0, 1) for h in (0, 1, 2) for t in range(4)]
+    rows += [(f"app.err;dc=dc0;host=h{h}", 60 * t, 1.0)
+             for h in (0, 1) for t in range(4)]
+    path = str(tmp_path / "tagged")
+    spark.createDataFrame(rows, "name STRING, ts BIGINT, value DOUBLE") \
+        .write.mode("overwrite").parquet(path)
+    return SeriesLake(spark.read.parquet(path), 60)
+
+
+def test_tagged_fetch_resolves_names_once(spark, tmp_path, monkeypatch):
+    """seriesByTag runs a names job that evaluates the tag terms above its
+    per-name aggregate; the data scan then reads a pushed-down
+    In(name, ...) filter and builds no tag map at all."""
+    from carbonapi_spark.sources import lake as lake_mod
+    lake = _tagged_lake(spark, tmp_path)
+    jobs = []
+
+    def by_name(*a, **kw):
+        jobs.append(real(*a, **kw))
+        return jobs[-1]
+
+    real = lake_mod.by_name
+    monkeypatch.setattr(lake_mod, "by_name", by_name)
+    frame = lake.fetch(spark, "seriesByTag('name=app.req', 'dc=dc0', "
+                              "'host!=h2')", 0, 240, densify=False)
+    assert len(jobs) == 1
+    names = jobs[0]._jdf.queryExecution().optimizedPlan()
+    assert "map_from_entries" in names.toString()
+    assert _tag_map_rows(names) == []
+    scan = frame.df._jdf.queryExecution().executedPlan().toString()
+    assert re.search(r"PushedFilters: \[[^\]]*In\(name,", scan), scan
+    assert "StringStartsWith(name,app.req)" in scan
+    assert "map_from_entries" not in scan
+    assert sorted(r["name"] for r in frame.df.select("name").distinct()
+                  .collect()) == ["app.req;dc=dc0;host=h0",
+                                  "app.req;dc=dc0;host=h1"]
+
+
+def test_metadata_tag_paths_parse_tags_per_name(spark, tmp_path, monkeypatch):
+    """tag autocomplete (with and without expr=) and /info over a
+    seriesByTag target build the tag map only above the per-name
+    aggregate."""
+    from carbonapi_spark.render import metadata as meta
+    lake = _tagged_lake(spark, tmp_path)
+    plans = []
+    real_collect = type(lake.df).collect
+
+    def collect(df):
+        plans.append(df._jdf.queryExecution().optimizedPlan())
+        return real_collect(df)
+
+    monkeypatch.setattr(type(lake.df), "collect", collect)
+    assert meta.tag_names(lake) == ["dc", "host", "name"]
+    assert meta.tag_values(lake, "host", exprs=["dc=dc1"]) == \
+        ["h0", "h1", "h2"]
+    assert sorted(meta.info(lake, "seriesByTag('dc=dc0', 'host=h0')")) == \
+        ["app.err;dc=dc0;host=h0", "app.req;dc=dc0;host=h0"]
+    assert len(plans) == 3
+    for plan in plans:
+        assert "map_from_entries" in plan.toString()
+        assert _tag_map_rows(plan) == []
+
+
+def test_plain_glob_render_never_builds_dense_plan(spark, tmp_path,
+                                                   monkeypatch):
+    """densify() leaves the dense plan unbuilt: a plain glob reaches the
+    wire through raw_df, so the render never builds it; the first read
+    of ``df`` builds it once."""
+    from carbonapi_spark.model.series import SeriesFrame
+    built = []
+    real = SeriesFrame._dense_plan
+
+    def dense_plan(self, src):
+        built.append(1)
+        return real(self, src)
+
+    monkeypatch.setattr(SeriesFrame, "_dense_plan", dense_plan)
+    _render_jobs(spark, tmp_path, ["events.u*.click"])
+    assert built == []
+    lake = make_lake(spark, {"m.a": [1.0, None, 3.0]}, 1, 0)
+    frame = lake.fetch(spark, "m.a", 0, 3)
+    assert built == [] and frame.raw_df is not None
+    df = frame.df
+    assert frame.df is df and built == [1]
+    assert [r["value"] for r in df.orderBy("ts").collect()] == [1.0, None, 3.0]

@@ -6,6 +6,7 @@ import math
 import urllib.parse
 import urllib.request
 
+import numpy as np
 import pytest
 
 from carbonapi_spark.evaluator import EvalContext, eval_target
@@ -33,6 +34,86 @@ def test_render_json_no_null_points(spark):
     frame = _frame(spark, lake, "m.a", 0, 2)
     out = json.loads(render_json(collect_series(frame), no_null_points=True))
     assert out[0]["datapoints"] == [[1.0, 0]]
+
+
+def _encoder_series():
+    from carbonapi_spark.render.serialize import SeriesResult, _parse_tags
+    tagged = "ü.名;k=a=b;dc=west"
+    return [
+        SeriesResult("a.b", 60, 720, 60,
+                     [1.5, None, math.nan, math.inf, -math.inf, 3, -0.0,
+                      1e16, 1e-05, 123456.789, np.float64(2.5)],
+                     {"name": "a.b"}),
+        SeriesResult(tagged, 0, 20, 10, [None, 7], _parse_tags(tagged)),
+        SeriesResult("empty", 0, 0, 60, [], {"name": "empty"}),
+    ]
+
+
+# The JSON and CSV bodies the per-point encoders (json.dumps of the
+# payload; a repr(float(v)) line per point) gave for _encoder_series().
+_JSON_BODY = (
+    '[{"target": "a.b", "datapoints": [[1.5, 60], [null, 120], [null, 180], '
+    '[null, 240], [null, 300], [3, 360], [-0.0, 420], [1e+16, 480], '
+    '[1e-05, 540], [123456.789, 600], [2.5, 660]], "tags": {"name": "a.b"}}, '
+    '{"target": "\\u00fc.\\u540d;k=a=b;dc=west", "datapoints": [[null, 0], '
+    '[7, 10]], "tags": {"name": "\\u00fc.\\u540d", "k": "a=b", "dc": "west"}}, '
+    '{"target": "empty", "datapoints": [], "tags": {"name": "empty"}}]')
+_JSON_BODY_NO_NULLS = (
+    '[{"target": "a.b", "datapoints": [[1.5, 60], [3, 360], [-0.0, 420], '
+    '[1e+16, 480], [1e-05, 540], [123456.789, 600], [2.5, 660]], '
+    '"tags": {"name": "a.b"}}, '
+    '{"target": "\\u00fc.\\u540d;k=a=b;dc=west", "datapoints": [[7, 10]], '
+    '"tags": {"name": "\\u00fc.\\u540d", "k": "a=b", "dc": "west"}}, '
+    '{"target": "empty", "datapoints": [], "tags": {"name": "empty"}}]')
+_JSON_BODY_MS = (
+    '[{"target": "a.b", "datapoints": [[1.5, 60000], [null, 120000], '
+    '[null, 180000], [null, 240000], [null, 300000], [3, 360000], '
+    '[-0.0, 420000], [1e+16, 480000], [1e-05, 540000], '
+    '[123456.789, 600000], [2.5, 660000]], "tags": {"name": "a.b"}}, '
+    '{"target": "\\u00fc.\\u540d;k=a=b;dc=west", "datapoints": [[null, 0], '
+    '[7, 10000]], "tags": {"name": "\\u00fc.\\u540d", "k": "a=b", '
+    '"dc": "west"}}, '
+    '{"target": "empty", "datapoints": [], "tags": {"name": "empty"}}]')
+_CSV_BODY = (
+    '"a.b",1970-01-01 00:01:00,1.5\n"a.b",1970-01-01 00:02:00,\n'
+    '"a.b",1970-01-01 00:03:00,\n"a.b",1970-01-01 00:04:00,inf\n'
+    '"a.b",1970-01-01 00:05:00,-inf\n"a.b",1970-01-01 00:06:00,3.0\n'
+    '"a.b",1970-01-01 00:07:00,-0.0\n"a.b",1970-01-01 00:08:00,1e+16\n'
+    '"a.b",1970-01-01 00:09:00,1e-05\n"a.b",1970-01-01 00:10:00,123456.789\n'
+    '"a.b",1970-01-01 00:11:00,2.5\n'
+    '"ü.名;k=a=b;dc=west",1970-01-01 00:00:00,\n'
+    '"ü.名;k=a=b;dc=west",1970-01-01 00:00:10,7.0\n')
+
+
+def test_json_encoder_bytes_frozen():
+    """NaN, ±inf and None are null, ints stay ints, floats (a numpy
+    float64 too) read as json.dumps writes them; non-ASCII names and tags
+    are escaped; noNullPoints drops nulls; ms multiplies every stamp."""
+    series = _encoder_series()
+    assert render_json(series) == _JSON_BODY
+    assert render_json(series, no_null_points=True) == _JSON_BODY_NO_NULLS
+    assert render_json(series, timestamp_multiplier=1000) == _JSON_BODY_MS
+    assert render_json([]) == "[]"
+
+
+def test_csv_encoder_bytes_frozen():
+    assert render_csv(_encoder_series()) == _CSV_BODY
+    assert render_csv([]) == ""
+
+
+def test_jsonp_body_frozen(spark):
+    from carbonapi_spark.render.api import GraphiteAPI
+    api = GraphiteAPI(spark, make_lake(
+        spark, {"m.a": [1.0, None, 3.0], "m.b;k=a=b": [2.0, 2.5, None]}, 1, 0))
+    code, ctype, body = api.render({
+        "target": ["m.*"], "from": ["0"], "until": ["3"], "format": ["json"],
+        "jsonp": ["cb"], "timestampFormat": ["ms"], "noCache": ["1"]})[:3]
+    assert (code, ctype) == (200, "text/javascript; charset=utf-8")
+    assert body == (
+        b'cb([{"target": "m.a", "datapoints": [[1.0, 0], [null, 1000], '
+        b'[3.0, 2000]], "tags": {"name": "m.a"}}, {"target": "m.b;k=a=b", '
+        b'"datapoints": [[2.0, 0], [2.5, 1000], [null, 2000]], '
+        b'"tags": {"name": "m.b", "k": "a=b"}}])')
 
 
 def test_max_data_points_consolidation(spark):
@@ -96,6 +177,28 @@ def test_tag_autocomplete(spark):
     assert tag_names(lake, exprs=["dc=w"]) == ["dc", "host", "name"]
     assert tag_values(lake, "host", exprs=["dc=w"]) == ["h2"]
     assert tag_values(lake, "host", exprs=["dc="]) == ["h1"]
+
+
+def test_tag_value_containing_equals_sign(spark):
+    """A tag splits at its first '=': `x;k=a=b` has k = 'a=b' everywhere —
+    in the rendered tags, in seriesByTag, in autocomplete and in
+    groupByTags."""
+    lake = make_lake(spark, {"x;k=a=b;h=1": [1.0, 2.0],
+                             "x;k=a=b;h=2": [10.0, 20.0],
+                             "x;k=b": [5.0, 6.0]}, 1, 0)
+    frame = _frame(spark, lake, "seriesByTag('k=a=b')", 0, 2)
+    out = json.loads(render_json(collect_series(frame)))
+    assert [(s["target"], s["tags"]) for s in out] == [
+        ("x;k=a=b;h=1", {"name": "x", "k": "a=b", "h": "1"}),
+        ("x;k=a=b;h=2", {"name": "x", "k": "a=b", "h": "2"})]
+    frame = _frame(spark, lake, "seriesByTag('name=x', 'k=~a=', 'h!=2')", 0, 2)
+    assert [s.name for s in collect_series(frame)] == ["x;k=a=b;h=1"]
+    assert tag_values(lake, "k") == ["a=b", "b"]
+    assert tag_values(lake, "h", exprs=["k=a=b"]) == ["1", "2"]
+    frame = _frame(spark, lake,
+                   "groupByTags(seriesByTag('k=a=b'), 'sum', 'k')", 0, 2)
+    assert [(s.name, s.values) for s in collect_series(frame)] == [
+        ("x;k=a=b", [11.0, 22.0])]
 
 
 # ----------------------------------------------------------- HTTP e2e
