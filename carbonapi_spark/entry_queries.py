@@ -48,16 +48,21 @@ def _cached_lake(spark: SparkSession, sf_dir: str):
     return _LAKE_CACHE[key]
 
 
+def _wire_rows(frame) -> DataFrame:
+    """(name, ts, value) rows of *frame* densified — the shape a client
+    gets — with NaN read as a gap and values rounded to 6 dp."""
+    v = F.col(VALUE)
+    return frame.densify().df.select(
+        F.col(NAME).alias("name"), F.col(TS).alias("ts"),
+        F.round(F.when(~F.isnan(v), v), 6).alias("value"))
+
+
 def graphite_query(target: str, from_ts: int = EVENTS_FROM,
                    until_ts: int = EVENTS_UNTIL):
     def q(spark: SparkSession, sf_dir: str) -> DataFrame:
         lake = _cached_lake(spark, sf_dir)
         ctx = EvalContext(spark, lake, from_ts, until_ts)
-        frame = eval_target(ctx, target)
-        v = F.col(VALUE)
-        return frame.df.select(
-            F.col(NAME).alias("name"), F.col(TS).alias("ts"),
-            F.round(F.when(~F.isnan(v), v), 6).alias("value"))
+        return _wire_rows(eval_target(ctx, target))
     q.__name__ = f"graphite[{target}]"
     return q
 
@@ -1405,10 +1410,8 @@ def _tagged_lake(spark, sf_dir):
 
 def _q_series_by_tag(spark, sf_dir):
     ctx = EvalContext(spark, _tagged_lake(spark, sf_dir), EVENTS_FROM, EVENTS_UNTIL)
-    frame = eval_target(ctx, "seriesByTag('name=events.value', 'type=click', 'user=~u[0-4]')")
-    v = F.col(VALUE)
-    return frame.df.select(F.col(NAME).alias("name"), F.col(TS).alias("ts"),
-                           F.round(F.when(~F.isnan(v), v), 6).alias("value"))
+    return _wire_rows(eval_target(
+        ctx, "seriesByTag('name=events.value', 'type=click', 'user=~u[0-4]')"))
 
 
 _register("series_by_tag", _q_series_by_tag, f"""
@@ -1564,11 +1567,16 @@ SELECT d.name, d.ts, round(d.value, 6) AS value FROM dense d JOIN sel USING (nam
 
 _g("count_values", "countValues(isNonNull(events.u*.signup))",
    """
-SELECT 'value_' || CAST(CAST(floor(present) AS BIGINT) AS VARCHAR) AS name,
-       ts, round(CAST(COUNT(*) AS DOUBLE), 6) AS value
-FROM (SELECT ts, CASE WHEN value IS NOT NULL THEN 1.0 ELSE 0.0 END AS present
-      FROM dense)
-GROUP BY floor(present), ts
+, counts AS (
+  SELECT 'value_' || CAST(CAST(floor(present) AS BIGINT) AS VARCHAR) AS name,
+         ts, CAST(COUNT(*) AS DOUBLE) AS value
+  FROM (SELECT ts, CASE WHEN value IS NOT NULL THEN 1.0 ELSE 0.0 END AS present
+        FROM dense)
+  GROUP BY floor(present), ts
+)
+SELECT b.name, s.ts, round(c.value, 6) AS value
+FROM (VALUES ('value_0'), ('value_1')) b(name) CROSS JOIN spine s
+LEFT JOIN counts c ON c.name = b.name AND c.ts = s.ts
 """.strip(),
    r"regexp_matches(name, '^events\.u[^.]*\.signup$')")
 
@@ -1621,10 +1629,8 @@ FROM dense d JOIN fit f USING (name)
 
 def _q_group_by_tags(spark, sf_dir):
     ctx = EvalContext(spark, _tagged_lake(spark, sf_dir), EVENTS_FROM, EVENTS_UNTIL)
-    frame = eval_target(ctx, "groupByTags(seriesByTag('name=events.value'), 'sum', 'type')")
-    v = F.col(VALUE)
-    return frame.df.select(F.col(NAME).alias("name"), F.col(TS).alias("ts"),
-                           F.round(F.when(~F.isnan(v), v), 6).alias("value"))
+    return _wire_rows(eval_target(
+        ctx, "groupByTags(seriesByTag('name=events.value'), 'sum', 'type')"))
 
 
 _register("group_by_tags", _q_group_by_tags, f"""
@@ -5758,7 +5764,7 @@ def _q_tiered_fetch(spark, sf_dir):
             now=now)
         assert tiered.select_tier(now - 20 * 86400) == 1
         frame = tiered.fetch(spark, "events.u*.{click,purchase}",
-                             now - 20 * 86400, now, densify=False)
+                             now - 20 * 86400, now)
         rows = (frame.df
                 .select(NAME, TS, F.round(VALUE, 6).alias(VALUE))
                 .collect())

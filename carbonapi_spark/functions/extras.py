@@ -117,10 +117,10 @@ def ks_test2(ctx, exp, f, u):
     """rolling two-sample KS statistic of two series
     — kolmogorovSmirnovTest2/function.go:32-85 (numpy kernel; window is the
     previous windowSize points, first windowSize outputs NaN)."""
-    s1 = series_arg(ctx, exp, exp.args[0], f, u).densify()
+    s1 = series_arg(ctx, exp, exp.args[0], f, u)
     s2 = eval_expr(ctx, exp.args[1], f, u)
     n = exp.get_int(2)
-    s1, s2 = align([s1, s2])
+    s1, s2 = (s.densify() for s in align([s1, s2]))
     b = s2.df.select(F.col(TS).alias("__ts2"), F.col(VALUE).alias("__v2"),
                      F.col(NAME).alias("__n2"))
     joined = s1.df.join(F.broadcast(b), F.col(TS) == F.col("__ts2"), "left")

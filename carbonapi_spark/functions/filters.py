@@ -12,7 +12,7 @@ from pyspark.sql import functions as F
 
 from carbonapi_spark.functions import register
 from carbonapi_spark.functions.helper import series_arg, wrap_name
-from carbonapi_spark.model.consolidation import agg_column
+from carbonapi_spark.model.consolidation import agg_column, skips_nulls
 from carbonapi_spark.model.series import NAME, ORD, TS, VALUE, SeriesFrame
 
 
@@ -30,7 +30,8 @@ def _filter_by_agg(frame: SeriesFrame, func: str, op: str, threshold: float) -> 
     V = F.col(VALUE)
     if op not in _OPS:
         raise ValueError(f"unsupported operator {op!r}")
-    per = frame.df.groupBy(ORD).agg(
+    src = frame if skips_nulls(func) else frame.densify()
+    per = src.df.groupBy(ORD).agg(
         agg_column(func, V, F.col(TS), 0.0).cast("double").alias("__agg"))
     keep = per.where(_OPS[op](F.col("__agg"), F.lit(threshold))).select(ORD)
     return frame.with_df(frame.df.join(F.broadcast(keep), ORD, "left_semi"))
@@ -160,7 +161,8 @@ def tukey(ctx, exp, f, u):
     frame = series_arg(ctx, exp, exp.args[0], f, u)
     basis = exp.get_string(1)
     n = exp.get_float(2, 1.5)
-    per = frame.df.groupBy(ORD).agg(
+    src = frame if skips_nulls(basis) else frame.densify()
+    per = src.df.groupBy(ORD).agg(
         agg_column(basis, V, F.col(TS), 0.0).cast("double").alias("__agg"))
     q = per.agg(F.percentile(F.col("__agg"), F.lit(0.25)).alias("__q1"),
                 F.percentile(F.col("__agg"), F.lit(0.75)).alias("__q3"))

@@ -78,7 +78,9 @@ def series_lists(ctx, exp, f, u):
     else:
         name_fn, op = _LIST_OPS[exp.target]
 
-    fa, fb = align([fa, fb])
+    # dense sides: the inner join below drops a missing row (a pair that
+    # never overlaps would vanish) and greatest/least skip a NULL
+    fa, fb = (fr.densify() for fr in align([fa, fb]))
     # one job fetches both sides' series orders (tiny: one row per series);
     # positional indexing then happens via a literal array — no count() jobs,
     # no broadcast-index subplans re-evaluating the fetch pipeline per side
@@ -131,9 +133,10 @@ def as_percent(ctx, exp, f, u):
 
     total = eval_expr(ctx, total_arg, f, u)
     frame, total = align([frame, total])
+    total = total.densify()
     # single total series: broadcast join on ts; multi without nodes sums them.
     # The single-vs-multi naming decision rides the SAME aggregation as the
-    # sum (aligned frames are dense, so every series has a row at every ts
+    # sum (the total is densified, so every series has a row at every ts
     # and the per-ts distinct-name count IS the global series count) — the
     # total subplan is evaluated exactly once, no separate count() job.
     tot_df = total.df.groupBy(TS).agg(F.sum(V).alias("__tot"),
@@ -165,7 +168,8 @@ def _as_percent_by_nodes(ctx, exp, frame, total_arg, nodes, f, u):
         return frame.with_df(df)
 
     total = eval_expr(ctx, total_arg, f, u)
-    frame2, total = align([frame, total])
+    # dense sides: the full join below pads a missing row as MISSING
+    frame2, total = (fr.densify() for fr in align([frame, total]))
     tkey = agg_key_expr(F.col(NAME), nodes)
     tot = (total.df.withColumn("__key", tkey)
            .groupBy("__key", TS).agg(F.sum(V).alias("__tot"),
@@ -201,7 +205,8 @@ def weighted_average(ctx, exp, f, u):
     favg = series_arg(ctx, exp, exp.args[0], f, u)
     fwgt = series_arg(ctx, exp, exp.args[1], f, u)
     nodes = exp.get_node_or_tag_args(2)
-    favg, fwgt = align([favg, fwgt])
+    # dense sides: over sparse ones no two rows may meet in the join below
+    favg, fwgt = (fr.densify() for fr in align([favg, fwgt]))
     key = agg_key_expr(F.col(NAME), nodes)
     a = favg.df.select(key.alias("__key"), F.col(TS), V.alias("__a"))
     w = fwgt.df.select(key.alias("__key"), F.col(TS), V.alias("__w"))

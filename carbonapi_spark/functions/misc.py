@@ -14,7 +14,7 @@ from carbonapi_spark.functions import register
 from carbonapi_spark.functions.helper import (
     node_expr, series_arg, series_args, wrap_name,
 )
-from carbonapi_spark.model.consolidation import agg_column
+from carbonapi_spark.model.consolidation import agg_column, skips_nulls
 from carbonapi_spark.model.series import NAME, ORD, TS, VALUE, SeriesFrame, align
 
 
@@ -91,9 +91,9 @@ def integral_with_reset(ctx, exp, f, u):
     """running sum that resets where the companion series is non-zero
     — integralWithReset/function.go:32."""
     V = F.col(VALUE)
-    frame = series_arg(ctx, exp, exp.args[0], f, u).densify()
+    frame = series_arg(ctx, exp, exp.args[0], f, u)
     reset = eval_expr(ctx, exp.args[1], f, u)
-    frame2, reset = align([frame, reset])
+    frame2, reset = (fr.densify() for fr in align([frame, reset]))
     r = reset.df.select(F.col(TS).alias("__rts"), V.alias("__rv"))
     joined = frame2.df.join(F.broadcast(r), F.col(TS) == F.col("__rts"), "left")
     is_reset = F.coalesce(F.col("__rv") != 0, F.lit(False)).cast("int")
@@ -139,7 +139,7 @@ def pow_series(ctx, exp, f, u):
     df = (frame.df.groupBy(TS).agg(out.cast("double").alias(VALUE))
           .select(F.lit(name).alias(NAME), F.lit(name).alias(ORD),
                   F.col(TS), F.col(VALUE)))
-    return frame.with_df(df, dense=True)
+    return frame.with_df(df)
 
 
 # ------------------------------------------------------- set operations
@@ -161,14 +161,14 @@ def join_series(ctx, exp, f, u):
         a = fa2.df.withColumn(ORD, F.concat(F.lit("0|"), F.col(ORD)))
         extra = (fb2.df.join(F.broadcast(names_a), NAME, "left_anti")
                  .withColumn(ORD, F.concat(F.lit("1|"), F.col(ORD))))
-        return fa2.with_df(a.unionByName(extra))
+        return fa2.with_df(a.unionByName(extra), dense=fa2.dense and fb2.dense)
     if join_type == "XOR":
         fa2, fb2 = align([fa, fb])
         a = (fa2.df.join(F.broadcast(names_b), NAME, "left_anti")
              .withColumn(ORD, F.concat(F.lit("0|"), F.col(ORD))))
         b = (fb2.df.join(F.broadcast(names_a), NAME, "left_anti")
              .withColumn(ORD, F.concat(F.lit("1|"), F.col(ORD))))
-        return fa2.with_df(a.unionByName(b))
+        return fa2.with_df(a.unionByName(b), dense=fa2.dense and fb2.dense)
     raise ValueError(f"join: unknown join type {join_type}")
 
 
@@ -314,9 +314,11 @@ def legend_value(ctx, exp, f, u):
             names.append(vt)
         except ValueError:
             continue
-    per = frame.df.groupBy(ORD).agg(*aggs) if aggs else None
-    if per is None:
+    if not aggs:
         return frame
+    if not all(skips_nulls(vt) for vt in names):
+        frame = frame.densify()
+    per = frame.df.groupBy(ORD).agg(*aggs)
     df = frame.df.join(F.broadcast(per), ORD)
     suffix = F.lit("")
     for vt in names:
@@ -333,7 +335,7 @@ def legend_value(ctx, exp, f, u):
 def cacti_style(ctx, exp, f, u):
     """Cacti-style 'Current/Max/Min' legend — cactiStyle/function.go:33."""
     V = F.col(VALUE)
-    frame = series_arg(ctx, exp, exp.args[0], f, u)
+    frame = series_arg(ctx, exp, exp.args[0], f, u).densify()
     per = frame.df.groupBy(ORD).agg(
         agg_column("current", V, F.col(TS), 0.0).alias("__cur"),
         F.max(V).alias("__max"),

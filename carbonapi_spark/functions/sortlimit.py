@@ -15,7 +15,7 @@ from pyspark.sql.window import Window
 
 from carbonapi_spark.functions import register
 from carbonapi_spark.functions.helper import series_arg, series_args
-from carbonapi_spark.model.consolidation import agg_column
+from carbonapi_spark.model.consolidation import agg_column, skips_nulls
 from carbonapi_spark.model.series import NAME, ORD, TS, VALUE, SeriesFrame
 
 
@@ -23,7 +23,8 @@ from carbonapi_spark.model.series import NAME, ORD, TS, VALUE, SeriesFrame
 def _per_series(frame: SeriesFrame, func: str):
     """One row per series: (ord, __agg)."""
     V = F.col(VALUE)
-    return frame.df.groupBy(ORD).agg(
+    src = frame if skips_nulls(func) else frame.densify()
+    return src.df.groupBy(ORD).agg(
         agg_column(func, V, F.col(TS), 0.0).cast("double").alias("__agg"))
 
 

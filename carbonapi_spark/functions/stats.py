@@ -303,7 +303,8 @@ def pearson(ctx, exp, f, u):
     s1 = series_arg(ctx, exp, exp.args[0], f, u)
     s2 = eval_expr(ctx, exp.args[1], f, u)
     n = exp.get_int(2)
-    s1, s2 = align([s1, s2])
+    # the window counts rows: both sides dense
+    s1, s2 = (s.densify() for s in align([s1, s2]))
     b = s2.df.select(F.col(TS).alias("__ts2"), V.alias("__v2"))
     joined = s1.df.join(F.broadcast(b), F.col(TS) == F.col("__ts2"), "left")
     w = Window.partitionBy(ORD).orderBy(TS).rowsBetween(-(n - 1), 0)
@@ -324,7 +325,8 @@ def pearson_closest(ctx, exp, f, u):
     n = exp.get_int(2)
     direction = exp.get_string(3, "abs", names=("direction",))
     frame, ref = align([frame, ref])
-    b = ref.df.select(F.col(TS).alias("__ts2"), V.alias("__v2"))
+    # a dense reference gives every series its (maybe NULL) correlation
+    b = ref.densify().df.select(F.col(TS).alias("__ts2"), V.alias("__v2"))
     joined = frame.df.join(F.broadcast(b), F.col(TS) == F.col("__ts2"))
     per = joined.groupBy(ORD).agg(F.corr(V, F.col("__v2")).alias("__c"))
     metric = {"pos": F.col("__c"), "neg": -F.col("__c")}.get(

@@ -137,7 +137,7 @@ def round_(ctx, exp, f, u):
 def is_non_null(ctx, exp, f, u):
     """1 if value present else 0 — isNotNull/function.go:31."""
     return wrap_name(exp.target,
-                     _simple(ctx, exp, f, u).map_value(
+                     _simple(ctx, exp, f, u).densify().map_value(
                          lambda v: v.isNotNull().cast("double")))
 
 
@@ -147,7 +147,7 @@ def transform_null(ctx, exp, f, u):
     joins against a mask of the reference's non-null points)."""
     V = F.col(VALUE)
     default = exp.get_float(1, 0.0, names=("default",))
-    frame = _simple(ctx, exp, f, u)
+    frame = _simple(ctx, exp, f, u).densify()
     ref_exp = exp.named_args.get("referenceSeries")
     suffix = exp.raw_arg(1) if len(exp.args) > 1 else (
         float_str(default) if ("default" in exp.named_args or ref_exp) else None)

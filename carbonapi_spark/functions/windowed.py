@@ -327,7 +327,7 @@ def n_percentile(ctx, exp, f, u):
     """flat line at the series' n-th percentile (non-interpolated)
     — nPercentile/function.go:32."""
     V = F.col(VALUE)
-    frame = series_arg(ctx, exp, exp.args[0], f, u)
+    frame = series_arg(ctx, exp, exp.args[0], f, u).densify()
     n = exp.get_float(1)
     from carbonapi_spark.model.consolidation import percentile_column
     per = (frame.df.groupBy(NAME, ORD)
@@ -341,7 +341,7 @@ def n_percentile(ctx, exp, f, u):
 def aggregate_line(ctx, exp, f, u):
     """flat line at the per-series aggregate — aggregateLine/function.go:32."""
     V = F.col(VALUE)
-    frame = series_arg(ctx, exp, exp.args[0], f, u)
+    frame = series_arg(ctx, exp, exp.args[0], f, u).densify()
     func = exp.get_string(1, "average")
     agg = agg_column(func, V, F.col(TS), 0.0).cast("double").alias("__a")
     per = frame.df.groupBy(NAME, ORD).agg(agg)

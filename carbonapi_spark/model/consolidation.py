@@ -38,6 +38,23 @@ def is_valid_consolidation(name: str) -> bool:
     return name in VALID_CONSOLIDATIONS or bool(_PERCENTILE_RE.match(name))
 
 
+# folds that skip NULL values: over a bucket they give the same result
+# whether a gap is a NULL row or no row at all, so they may read a sparse
+# frame. The others count the bucket's rows (avg_zero, multiply, first,
+# last/current, diff), and with xFilesFactor > 0 every fold does.
+_NULL_SKIPPING = frozenset({
+    "sum", "total", "avg", "average", "max", "maximum", "min", "minimum",
+    "count", "range", "rangeOf", "stddev", "median",
+})
+
+
+def skips_nulls(func: str, xff: float = 0.0) -> bool:
+    """Whether fold *func* gated by *xff* may read a sparse frame; for any
+    other fold the caller densifies first."""
+    return not xff > 0 and (func in _NULL_SKIPPING
+                            or bool(_PERCENTILE_RE.match(func)))
+
+
 def _ordered_values(v: Column, order: Column) -> Column:
     """Non-NULL-preserving ordered value array for positional folds.
 
@@ -56,8 +73,7 @@ def agg_column(func: str, v: Column, order: Column, xff: float = 0.0) -> Column:
     The group is "one output bucket": all series' values at one ts for
     cross-series aggregation, or one series' values in one time bucket for
     summarize/consolidation. ``count(*)`` within the group is the dense
-    bucket size (callers densify first when xff or avg_zero semantics are
-    in play).
+    bucket size: callers densify first unless :func:`skips_nulls`.
     """
     nn = F.count(v)  # non-null count
     total = F.count(F.lit(1))  # bucket size incl. nulls

@@ -6,11 +6,12 @@ upstream is lazy DataFrame algebra, and maxDataPoints consolidation happens
 data crossing the driver boundary is already capped at
 ``maxDataPoints * n_series`` points.
 
-``collect_series`` fetches the frame's pre-densify plan (``raw_df``, when the
-frame still has one) as Arrow batches with ``DataFrame.toArrow()`` and builds
-the dense per-series vectors on the driver with numpy. A plain fetch thus
-runs one scan job: the densify shuffle, which only fills gaps with NULL rows,
-is never executed for a frame that goes straight to the wire.
+``collect_series`` fetches the frame's plan as Arrow batches with
+``DataFrame.toArrow()`` and builds the dense per-series vectors on the
+driver with numpy: a missing row and a NULL row both become a gap. A
+sparse frame (a fetch, a pointwise transform, sort or filter of one) thus
+reaches the wire without the densify shuffle; a plain fetch runs one scan
+job.
 
 Formats (reference ``expr/types/types.go``):
 - JSON  (types.go:120-199): ``[{"target","datapoints":[[v,ts]...],"tags"}]``
@@ -120,12 +121,10 @@ def collect_series(frame: SeriesFrame, max_data_points: int = 0) -> list[SeriesR
     """Execute the plan once; return dense per-series vectors ordered by the
     stable series order (``ord``).
 
-    Reads ``frame.raw_df`` when the frame kept one (a densified frame that no
-    transform touched since), else ``frame.df``, and densifies on the driver:
-    a missing row and a NULL row both render as a gap."""
+    Reads ``frame.df``, dense or not, and fills the gaps on the driver
+    (:func:`_dense_vectors`)."""
     frame = consolidate_for_points(frame, max_data_points)
-    src = frame.df if frame.raw_df is None else frame.raw_df
-    table = src.select(NAME, ORD, TS, VALUE).toArrow()
+    table = frame.df.select(NAME, ORD, TS, VALUE).toArrow()
     return _dense_vectors(table, frame.start, frame.stop, frame.step)
 
 

@@ -23,8 +23,9 @@ fetches, we own a long Parquet table
   A ``name=`` term is plain string ops on both sides, with a pushed-down
   ``StartsWith`` guard.
 
-Fetched frames are densified so downstream operators see the reference's
-dense-vector invariant (gap == NULL row).
+A fetch returns the sparse scan (``dense=False``): a point the lake does
+not hold is a missing row, which means a gap just as a NULL row does.
+Operators that must tell the two apart call ``SeriesFrame.densify()``.
 """
 
 from __future__ import annotations
@@ -190,9 +191,9 @@ class SeriesLake:
                  .collect() if r[0] is not None]
         return pred & F.col(NAME).isin(names)
 
-    def fetch(self, spark, pattern: str, from_ts: int, until_ts: int,
-              *, densify: bool = True) -> SeriesFrame:
-        """Series matching *pattern* with buckets covering [from, until)."""
+    def fetch(self, spark, pattern: str, from_ts: int, until_ts: int) -> SeriesFrame:
+        """Series matching *pattern* with buckets covering [from, until):
+        the rows the lake holds on those buckets, undensified."""
         step = self.step
         if self.per_series_step:
             step = self._common_step(pattern, until_ts)
@@ -215,10 +216,13 @@ class SeriesLake:
                   .agg(agg_column("average", F.col(VALUE), F.col(TS), 0.0)
                        .cast("double").alias(VALUE)))
         else:
-            df = df.select(F.col(NAME), F.col(NAME).alias(ORD),
-                           F.col(TS).cast("long"), F.col(VALUE).cast("double"))
-        frame = SeriesFrame(df, step, start, stop)
-        return frame.densify() if densify else frame
+            # a point off the bucket grid is no bucket's value (densify
+            # never picks it); its row keeps the series in the frame
+            ts = F.col(TS).cast("long")
+            df = df.select(F.col(NAME), F.col(NAME).alias(ORD), ts.alias(TS),
+                           F.when((ts - start) % step == 0,
+                                  F.col(VALUE).cast("double")).alias(VALUE))
+        return SeriesFrame(df, step, start, stop)
 
     def _common_step(self, pattern: str, until_ts: int) -> int:
         """LCM of the steps of the series matching *pattern*.
@@ -374,7 +378,6 @@ class TieredLake:
         return len(self.tiers) - 1
 
     def fetch(self, spark, pattern: str, from_ts: int, until_ts: int,
-              *, densify: bool = True, now: int | None = None):
+              *, now: int | None = None):
         _step, _ret, lake = self.tiers[self.select_tier(from_ts, now)]
-        return lake.fetch(spark, pattern, from_ts, until_ts,
-                          densify=densify)
+        return lake.fetch(spark, pattern, from_ts, until_ts)

@@ -25,8 +25,9 @@ def spark():
 def make_lake(spark, series: dict[str, list], step: int = 1, start: int = 0) -> SeriesLake:
     """MakeMetricData analog (types.go:802): dense values, NaN/None = gap.
 
-    Gaps are stored as NULL rows (the lake may hold them; fetch densifies
-    anyway)."""
+    Gaps are stored as NULL rows, so every series has a row at every
+    bucket; tests/test_sparse_frames.py renders lakes that leave the
+    gaps out."""
     rows = []
     for name, values in series.items():
         for i, v in enumerate(values):

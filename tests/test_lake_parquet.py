@@ -24,8 +24,7 @@ def parquet_lake(spark, tmp_path_factory):
 
 
 def test_fetch_prunes_and_pushes(spark, parquet_lake):
-    frame = parquet_lake.fetch(spark, "web.*.cpu", 86400, 2 * 86400,
-                               densify=False)
+    frame = parquet_lake.fetch(spark, "web.*.cpu", 86400, 2 * 86400)
     plan = frame.df._jdf.queryExecution().executedPlan().toString()
     assert "PartitionFilters" in plan
     assert "StringStartsWith(name,web.)" in plan
@@ -37,15 +36,14 @@ def test_fetch_prunes_and_pushes(spark, parquet_lake):
 def test_brace_pattern_pushes_in_filter(spark, parquet_lake):
     """A brace-only alternation becomes a pushed-down In filter (reaching
     the Parquet row-group stats), not a post-scan rlike."""
-    frame = parquet_lake.fetch(spark, "{web.h1.cpu,db.h1.io}", 0, 86400,
-                               densify=False)
+    frame = parquet_lake.fetch(spark, "{web.h1.cpu,db.h1.io}", 0, 86400)
     plan = frame.df._jdf.queryExecution().executedPlan().toString()
     assert "In(name" in plan
     assert "RLike" not in plan and "rlike" not in plan
     names = {r["name"] for r in frame.df.select("name").distinct().collect()}
     assert names == {"web.h1.cpu", "db.h1.io"}
     # mixed brace+star still matches (regex path)
-    star = parquet_lake.fetch(spark, "{web,db}.h1.*", 0, 86400, densify=False)
+    star = parquet_lake.fetch(spark, "{web,db}.h1.*", 0, 86400)
     got = {r["name"] for r in star.df.select("name").distinct().collect()}
     assert got == {"web.h1.cpu", "db.h1.io"}
 
@@ -62,7 +60,7 @@ def test_series_by_tag_name_term_pushes_prefix(spark, tmp_path_factory):
         .write.mode("overwrite").parquet(path)
     lake = SeriesLake(spark.read.parquet(path), 60)
     frame = lake.fetch(spark, "seriesByTag('name=cpu.load', 'host=a')",
-                       0, 240, densify=False)
+                       0, 240)
     plan = frame.df._jdf.queryExecution().executedPlan().toString()
     assert "StringStartsWith(name,cpu.load)" in plan
     got = {r["name"] for r in frame.df.select("name").distinct().collect()}
@@ -213,13 +211,12 @@ def test_rollup_methods_and_tier_selection(spark, tmp_path):
     # exactly at the fine retention edge -> fine tier; older -> coarse
     assert tiered.select_tier(now - 86400) == 0
     assert tiered.select_tier(now - 86400 - 1) == 1
-    coarse = tiered.fetch(spark, "app.req.count", 0, now, densify=False)
+    coarse = tiered.fetch(spark, "app.req.count", 0, now)
     assert coarse.step == 86400
     got = {r["ts"]: r["value"] for r in coarse.df.collect()}
     assert got == {0: float(sum(range(24))),
                    86400: float(sum(range(24, 48)))}
-    fine = tiered.fetch(spark, "app.req.count", now - 3600, now,
-                        densify=False)
+    fine = tiered.fetch(spark, "app.req.count", now - 3600, now)
     assert fine.step == 3600 and fine.df.count() == 1
 
 

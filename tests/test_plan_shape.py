@@ -2,6 +2,7 @@
 property, not an accident. These tests count Exchange operators in real
 plans so a refactor that silently doubles the shuffles fails CI."""
 
+import itertools
 import re
 
 from carbonapi_spark.evaluator import EvalContext, eval_target
@@ -24,9 +25,9 @@ def test_window_pipeline_single_shuffle(spark):
 
 
 def test_pointwise_chain_adds_no_shuffle(spark):
-    """scale(absolute(x)) fuses into the densify stage: still one exchange."""
+    """scale(absolute(x)) maps the sparse scan row by row: no exchange."""
     lake = make_lake(spark, {"m.a": [1, -2]}, 1, 0)
-    assert _exchanges(spark, lake, "scale(absolute(m.a), 2)", 0, 2) == 1
+    assert _exchanges(spark, lake, "scale(absolute(m.a), 2)", 0, 2) == 0
 
 
 def test_aggregation_shuffle_budget(spark):
@@ -919,24 +920,32 @@ def test_compaction_rewrite_single_exchange(spark, tmp_path):
     assert all(r["nf"] == 1 for r in per)
 
 
-def _render_jobs(spark, tmp_path, targets) -> tuple[int, int]:
+_RENDER_GROUPS = itertools.count()
+
+
+def _render_jobs(spark, tmp_path, targets, lake=None, until=86400,
+                 **params) -> tuple[int, int]:
     """(jobs, stages) one in-process /render request runs over a Parquet
-    lake of four hourly series, like the service's."""
+    lake, like the service's: by default four hourly series."""
     from carbonapi_spark.render.api import GraphiteAPI
     from carbonapi_spark.sources.lake import SeriesLake
-    rows = [(f"events.u{u}.{e}", 3600 * h, float(u * h))
-            for u in (1, 2) for e in ("click", "view") for h in range(24)]
-    path = str(tmp_path / "lake")
-    spark.createDataFrame(rows, "name STRING, ts BIGINT, value DOUBLE") \
-        .write.mode("overwrite").parquet(path)
-    api = GraphiteAPI(spark, SeriesLake(spark.read.parquet(path), 3600))
+    if lake is None:
+        rows = [(f"events.u{u}.{e}", 3600 * h, float(u * h))
+                for u in (1, 2) for e in ("click", "view") for h in range(24)]
+        path = str(tmp_path / "lake")
+        spark.createDataFrame(rows, "name STRING, ts BIGINT, value DOUBLE") \
+            .write.mode("overwrite").parquet(path)
+        lake = SeriesLake(spark.read.parquet(path), 3600)
+    api = GraphiteAPI(spark, lake)
     sc = spark.sparkContext
-    group = "render-shape:" + "&".join(targets)
+    # a fresh group per call: the tracker keeps the jobs of earlier ones
+    group = f"render-shape-{next(_RENDER_GROUPS)}:" + "&".join(targets)
     sc.setJobGroup(group, group)
     try:
         code, _ctype, body = api.render({
-            "target": list(targets), "from": ["0"], "until": ["86400"],
-            "format": ["json"], "noCache": ["1"]})[:3]
+            "target": list(targets), "from": ["0"], "until": [str(until)],
+            "format": ["json"], "noCache": ["1"],
+            **{k: [str(v)] for k, v in params.items()}})[:3]
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
@@ -1019,7 +1028,7 @@ def test_tagged_fetch_resolves_names_once(spark, tmp_path, monkeypatch):
     real = lake_mod.by_name
     monkeypatch.setattr(lake_mod, "by_name", by_name)
     frame = lake.fetch(spark, "seriesByTag('name=app.req', 'dc=dc0', "
-                              "'host!=h2')", 0, 240, densify=False)
+                              "'host!=h2')", 0, 240)
     assert len(jobs) == 1
     names = jobs[0]._jdf.queryExecution().optimizedPlan()
     assert "map_from_entries" in names.toString()
@@ -1058,25 +1067,50 @@ def test_metadata_tag_paths_parse_tags_per_name(spark, tmp_path, monkeypatch):
         assert _tag_map_rows(plan) == []
 
 
-def test_plain_glob_render_never_builds_dense_plan(spark, tmp_path,
-                                                   monkeypatch):
-    """densify() leaves the dense plan unbuilt: a plain glob reaches the
-    wire through raw_df, so the render never builds it; the first read
-    of ``df`` builds it once."""
+def _densify_calls(monkeypatch) -> list:
+    """Record every SeriesFrame.densify call from now on."""
     from carbonapi_spark.model.series import SeriesFrame
-    built = []
-    real = SeriesFrame._dense_plan
+    calls = []
+    real = SeriesFrame.densify
 
-    def dense_plan(self, src):
-        built.append(1)
-        return real(self, src)
+    def densify(self, *a, **kw):
+        calls.append(self)
+        return real(self, *a, **kw)
 
-    monkeypatch.setattr(SeriesFrame, "_dense_plan", dense_plan)
-    _render_jobs(spark, tmp_path, ["events.u*.click"])
-    assert built == []
-    lake = make_lake(spark, {"m.a": [1.0, None, 3.0]}, 1, 0)
-    frame = lake.fetch(spark, "m.a", 0, 3)
-    assert built == [] and frame.raw_df is not None
-    df = frame.df
-    assert frame.df is df and built == [1]
-    assert [r["value"] for r in df.orderBy("ts").collect()] == [1.0, None, 3.0]
+    monkeypatch.setattr(SeriesFrame, "densify", densify)
+    return calls
+
+
+def test_sparse_renders_never_densify(spark, tmp_path, monkeypatch):
+    """A plain glob, a NULL-skipping sort/limit and a two-frame join reach
+    the wire without SeriesFrame.densify: the fetches stay sparse and the
+    gaps are filled on the driver. An order-sensitive window does call
+    it, so the probe is live."""
+    calls = _densify_calls(monkeypatch)
+    for target in ("events.u*.click", "sortByMaxima(events.*.click)|limit(3)",
+                   "divideSeries(events.u1.click, events.u2.click)"):
+        _render_jobs(spark, tmp_path, [target])
+    assert calls == []
+    _render_jobs(spark, tmp_path, ["derivative(events.u1.click)"])
+    assert len(calls) == 1
+
+
+def test_sort_limit_render_job_count(spark, tmp_path):
+    """The dashboard's sortByMaxima(...)|limit(3): max skips NULLs, so the
+    per-series ranking reads the sparse scan — 6 jobs / 10 stages, where
+    ranking a densified fetch ran 8 / 15."""
+    assert _render_jobs(spark, tmp_path,
+                        ["sortByMaxima(events.*.click)|limit(3)"]) == (6, 10)
+
+
+def test_tagged_max_data_points_consolidates_sparse_plan(spark, tmp_path,
+                                                         monkeypatch):
+    """seriesByTag with maxDataPoints: the names job, then the
+    consolidation (average skips NULLs) folds the sparse scan — no densify
+    — in 4 jobs / 6 stages."""
+    calls = _densify_calls(monkeypatch)
+    assert _render_jobs(spark, tmp_path,
+                        ["seriesByTag('name=app.req', 'dc=dc0')"],
+                        lake=_tagged_lake(spark, tmp_path), until=240,
+                        maxDataPoints=2) == (4, 6)
+    assert calls == []
