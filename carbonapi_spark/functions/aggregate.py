@@ -10,10 +10,11 @@ fuses the pre-agg projection into the scan stage.
 
 from __future__ import annotations
 
-from pyspark.sql import functions as F
+from pyspark.sql import Column, functions as F
 
 from carbonapi_spark.functions import register
-from carbonapi_spark.functions.helper import agg_key_expr, series_arg, series_args
+from carbonapi_spark.evaluator import eval_expr
+from carbonapi_spark.functions.helper import agg_key_expr, series_args
 from carbonapi_spark.model.consolidation import (
     agg_column, percentile_column, skips_nulls,
 )
@@ -37,22 +38,28 @@ SERIES_ALIASES = {
 }
 
 
-def _aggregate_frames(frame: SeriesFrame, func: str, out_name: str,
-                      xff: float = 0.0) -> SeriesFrame:
-    """Fold all series in *frame* pointwise into one named series.
+def _fold(frame: SeriesFrame, key: Column | str, func: str,
+          xff: float = 0.0) -> SeriesFrame:
+    """Fold the series of *frame* pointwise: one output series per value of
+    *key*, a Column over the input rows, named by that value; or, for a
+    str *key*, all into one series of that name. (A str rather than a
+    literal Column, which Catalyst would keep as a grouping key.)
 
     A NULL-skipping fold reads the frame as it is, so the densify shuffle
-    of a sparse input is skipped; the folded output (one row per bucket)
-    is densified instead, which hands a later fold (maxDataPoints
+    of a sparse input is skipped; the folded output (one row per key and
+    bucket) is densified instead, which hands a later fold (maxDataPoints
     consolidation) its rows in the order that fixes the float sums pinned
     by ``renderbench/answer_key.json``. Any other fold reads the densified
     frame."""
     if not skips_nulls(func, xff):
         frame = frame.densify()
     agg = agg_column(func, F.col(VALUE), F.col(ORD), xff).cast("double").alias(VALUE)
-    df = (frame.df.groupBy(TS).agg(agg)
-          .select(F.lit(out_name).alias(NAME), F.lit(out_name).alias(ORD),
-                  F.col(TS), F.col(VALUE)))
+    if isinstance(key, str):
+        df, name = frame.df.groupBy(TS).agg(agg), F.lit(key)
+    else:
+        df = frame.df.withColumn("__key", key).groupBy("__key", TS).agg(agg)
+        name = F.col("__key")
+    df = df.select(name.alias(NAME), name.alias(ORD), F.col(TS), F.col(VALUE))
     return frame.with_df(df).densify()
 
 
@@ -70,7 +77,7 @@ def aggregate(ctx, exp, f, u):
     if exp.target == "aggregate" and callback is None:
         raise ValueError("aggregate: missing func argument")
     if callback is not None:
-        frame = series_arg(ctx, exp, exp.args[0], f, u)
+        frame = eval_expr(ctx, exp.args[0], f, u)
         xff = exp.get_float(2, frame.xff, names=("xFilesFactor",))
         raw = exp.args[0].to_string()
     else:
@@ -78,16 +85,15 @@ def aggregate(ctx, exp, f, u):
         frame = series_args(ctx, exp, f, u)
         xff = -1.0
         raw = exp.arg_string
-    out_name = f"{callback}Series({raw})"
-    return _aggregate_frames(frame, callback, out_name,
-                             xff if xff and xff > 0 else 0.0)
+    return _fold(frame, f"{callback}Series({raw})", callback,
+                 xff if xff and xff > 0 else 0.0)
 
 
 @register("percentileOfSeries")
 def percentile_of_series(ctx, exp, f, u):
     """per-ts n-th percentile across series — percentileOfSeries/function.go:37."""
     V = F.col(VALUE)
-    frame = series_arg(ctx, exp, exp.args[0], f, u)
+    frame = eval_expr(ctx, exp.args[0], f, u)
     n = exp.get_float(1)
     interpolate = exp.get_bool(2, False, names=("interpolate",))
     out_name = f"percentileOfSeries({exp.arg_string})"
@@ -98,31 +104,13 @@ def percentile_of_series(ctx, exp, f, u):
     return frame.with_df(df)
 
 
-def _grouped_aggregate(frame: SeriesFrame, key_col, callback: str,
-                       name_fmt) -> SeriesFrame:
-    """groupBy(key, ts) fold; output one series per key, named by *name_fmt*
-    (a Column fn of the key). As :func:`_aggregate_frames`, only a
-    NULL-skipping *callback* reads a sparse frame, and the per-key output
-    is densified."""
-    if not skips_nulls(callback):
-        frame = frame.densify()
-    df = (frame.df
-          .withColumn("__key", key_col)
-          .groupBy("__key", TS)
-          .agg(agg_column(callback, F.col(VALUE), F.col(ORD), 0.0)
-               .cast("double").alias(VALUE))
-          .select(name_fmt(F.col("__key")).alias(NAME),
-                  name_fmt(F.col("__key")).alias(ORD), F.col(TS), F.col(VALUE)))
-    return frame.with_df(df).densify()
-
-
 @register("groupByNode", "groupByNodes")
 def group_by_node(ctx, exp, f, u):
     """group by dot-node(s)/tag(s), fold with callback — groupByNode/function.go:33.
 
     groupByNode(sl, node, callback='average'); groupByNodes(sl, callback, *nodes).
     Output series are named by the group key itself."""
-    frame = series_arg(ctx, exp, exp.args[0], f, u)
+    frame = eval_expr(ctx, exp.args[0], f, u)
     if exp.target == "groupByNode":
         keys = [exp.get_int(1)]
         callback = exp.get_string(2, "average", names=("callback",))
@@ -132,7 +120,7 @@ def group_by_node(ctx, exp, f, u):
         if not keys:
             raise ValueError("groupByNodes: at least one node required")
     key = agg_key_expr(F.col(NAME), keys)
-    return _grouped_aggregate(frame, key, callback, lambda k: k)
+    return _fold(frame, key, callback)
 
 
 @register("aggregateWithWildcards", "averageSeriesWithWildcards",
@@ -140,7 +128,7 @@ def group_by_node(ctx, exp, f, u):
 def aggregate_with_wildcards(ctx, exp, f, u):
     """group key = name with given node positions removed
     — aggregateWithWildcards/function.go:30."""
-    frame = series_arg(ctx, exp, exp.args[0], f, u)
+    frame = eval_expr(ctx, exp.args[0], f, u)
     if exp.target == "aggregateWithWildcards":
         callback = exp.get_string(1)
         positions = [exp.get_int(i) for i in range(2, len(exp.args))]
@@ -153,7 +141,7 @@ def aggregate_with_wildcards(ctx, exp, f, u):
     parts = F.split(base, "\\.")
     kept = F.filter(parts, lambda x, i: ~i.isin([p for p in positions]))
     key = F.array_join(kept, ".")
-    return _grouped_aggregate(frame, key, callback, lambda k: k)
+    return _fold(frame, key, callback)
 
 
 @register("groupByTags")
@@ -169,7 +157,7 @@ def group_by_tags(ctx, exp, f, u):
     is the reference's everything-after-first-'=' semantics."""
     import re as _re
 
-    frame = series_arg(ctx, exp, exp.args[0], f, u)
+    frame = eval_expr(ctx, exp.args[0], f, u)
     callback = exp.get_string(1)
     tag_names = [exp.get_string(i) for i in range(2, len(exp.args))]
     if not tag_names:
@@ -180,7 +168,7 @@ def group_by_tags(ctx, exp, f, u):
             val = F.regexp_extract(F.col(NAME), ";" + _re.escape(t) + "=([^;]*)", 1)
             parts.append(F.concat(F.lit(f";{t}="), val))
     key = F.concat(*parts)
-    return _grouped_aggregate(frame, key, callback, lambda k: k)
+    return _fold(frame, key, callback)
 
 
 @register("countValues")
@@ -188,7 +176,7 @@ def count_values(ctx, exp, f, u):
     """histogram-as-series: one series per distinct int(value)
     — countValues/function.go:38 (carbonapi extension)."""
     V = F.col(VALUE)
-    frame = series_arg(ctx, exp, exp.args[0], f, u)
+    frame = eval_expr(ctx, exp.args[0], f, u)
     limit = exp.get_int(1, 50, names=("valuesLimit",))
     bucket = F.floor(V).cast("long")
     df = (frame.df.where(V.isNotNull())

@@ -13,8 +13,6 @@ from pyspark.sql.window import Window
 
 from carbonapi_spark.evaluator import EvalError, eval_expr
 from carbonapi_spark.functions import register
-from carbonapi_spark.functions.helper import series_arg
-from carbonapi_spark.model.consolidation import agg_column
 from carbonapi_spark.model.series import (
     NAME, ORD, TS, VALUE, SERIES_SCHEMA, SeriesFrame, align, combine,
 )
@@ -32,7 +30,7 @@ def slo(ctx, exp, f, u):
     """per-bucket fraction of points meeting the predicate; error budget =
     (fraction - objective) * bucketSize — slo/function.go:29-230."""
     V = F.col(VALUE)
-    frame = series_arg(ctx, exp, exp.args[0], f, u).densify()
+    frame = eval_expr(ctx, exp.args[0], f, u).densify()
     bucket_size = exp.get_interval(1)
     method = exp.get_string(2)
     value = exp.get_float(3)
@@ -75,7 +73,7 @@ def baseline(ctx, exp, f, u):
     end_i = exp.get_int(3)
     is_aberration = exp.target == "baselineAberration"
 
-    current = series_arg(ctx, exp, exp.args[0], f, u).densify()
+    current = eval_expr(ctx, exp.args[0], f, u).densify()
     shifted = []
     for i in range(start_i, end_i):
         if i == 0:
@@ -117,7 +115,7 @@ def ks_test2(ctx, exp, f, u):
     """rolling two-sample KS statistic of two series
     — kolmogorovSmirnovTest2/function.go:32-85 (numpy kernel; window is the
     previous windowSize points, first windowSize outputs NaN)."""
-    s1 = series_arg(ctx, exp, exp.args[0], f, u)
+    s1 = eval_expr(ctx, exp.args[0], f, u)
     s2 = eval_expr(ctx, exp.args[1], f, u)
     n = exp.get_int(2)
     s1, s2 = (s.densify() for s in align([s1, s2]))
@@ -168,7 +166,7 @@ def apply_by_node(ctx, exp, f, u):
     (driver-side macro expansion, as in the reference's RewriteExpr)."""
     from carbonapi_spark.parser import parse
 
-    frame = series_arg(ctx, exp, exp.args[0], f, u)
+    frame = eval_expr(ctx, exp.args[0], f, u)
     node = exp.get_int(1)
     template = exp.get_string(2)
     new_name = exp.get_string(3, "", names=("newName",))
@@ -198,16 +196,15 @@ def remove_between_percentile(ctx, exp, f, u):
     """keep series that stray outside the [n, 100-n] band of the per-ts
     cross-series percentiles — removeBetweenPercentile/function.go:32."""
     V = F.col(VALUE)
-    frame = series_arg(ctx, exp, exp.args[0], f, u).densify()
+    frame = eval_expr(ctx, exp.args[0], f, u).densify()
     n = exp.get_float(1)
     lo_p, hi_p = min(n, 100 - n) / 100, max(n, 100 - n) / 100
     bands = (frame.df.groupBy(TS)
              .agg(F.percentile(V, F.lit(lo_p)).alias("__lo"),
                   F.percentile(V, F.lit(hi_p)).alias("__hi")))
-    outside = (frame.df.join(bands, TS)
-               .where((V < F.col("__lo")) | (V > F.col("__hi")))
-               .select(ORD).distinct())
-    return frame.with_df(frame.df.join(F.broadcast(outside), ORD, "left_semi"))
+    return frame.keep(frame.df.join(bands, TS)
+                      .where((V < F.col("__lo")) | (V > F.col("__hi")))
+                      .select(ORD).distinct())
 
 
 def _require_client(ctx, name: str):
@@ -246,7 +243,7 @@ def alias_by_redis(ctx, exp, f, u):
     (the reference does one HGET per series; one round-trip per render is
     the Spark-right shape). Lookup misses keep the original name."""
     client = _require_client(ctx, "aliasByRedis")
-    frame = series_arg(ctx, exp, exp.args[0], f, u)
+    frame = eval_expr(ctx, exp.args[0], f, u)
     hash_name = exp.get_string(1)
     keep_path = exp.get_bool(2, False, names=("keepPath",))
 
@@ -280,7 +277,7 @@ def alias_by_postgres(ctx, exp, f, u):
     match are DROPPED, as in the reference (function.go:220-233 appends
     only matched results)."""
     client = _require_client(ctx, "aliasByPostgres")
-    frame = series_arg(ctx, exp, exp.args[0], f, u)
+    frame = eval_expr(ctx, exp.args[0], f, u)
     database = exp.get_string(1)
     key = exp.get_string(2)
     fields = [exp.get_int(i) for i in range(3, len(exp.args))]
@@ -320,7 +317,7 @@ def graphite_web(ctx, exp, f, u):
 def area_between(ctx, exp, f, u):
     """graph decorator: band between two series; values unchanged, names
     wrapped — cairo areaBetween semantics."""
-    frame = series_arg(ctx, exp, exp.args[0], f, u)
+    frame = eval_expr(ctx, exp.args[0], f, u)
     return frame.map_name(lambda n: F.format_string("areaBetween(%s)", n))
 
 
@@ -333,7 +330,7 @@ def compress_periodic_gaps(ctx, exp, f, u):
     import pandas as pd
     from carbonapi_spark.model.series import SERIES_SCHEMA
 
-    frame = series_arg(ctx, exp, exp.args[0], f, u).densify()
+    frame = eval_expr(ctx, exp.args[0], f, u).densify()
     step = frame.step
 
     def apply(key, pdf: pd.DataFrame) -> pd.DataFrame:
@@ -383,7 +380,7 @@ def time_shift_by_metric(ctx, exp, f, u):
     (exact then prefix match); unmatched series are dropped."""
     import re as _re
 
-    metrics = series_arg(ctx, exp, exp.args[0], f, u).densify()
+    metrics = eval_expr(ctx, exp.args[0], f, u).densify()
     marks = eval_expr(ctx, exp.args[1], f, u).densify()
     version_rank = exp.get_int(2)
     step = metrics.step
@@ -438,7 +435,7 @@ def alias_query(ctx, exp, f, u):
     import re as _re
     from carbonapi_spark.parser import parse as _parse
 
-    frame = series_arg(ctx, exp, exp.args[0], f, u)
+    frame = eval_expr(ctx, exp.args[0], f, u)
     search = exp.get_string(1)
     replace = exp.get_string(2)
     new_name = exp.get_string(3)

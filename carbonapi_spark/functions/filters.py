@@ -1,9 +1,10 @@
 """Series-set filters (SURVEY §2.2): relational sigma over the series
 dimension with per-series aggregate predicates.
 
-Physical shape: per-series aggregate (tiny table) -> broadcast semi-join
-back onto the points. The filter predicate itself is computed in one hash
-aggregation; no per-row Python anywhere.
+Physical shape: the per-series table (:meth:`SeriesFrame.per_series`, one
+hash aggregation, which also decides whether the fold reads the sparse or
+the densified frame) is filtered, then semi-joined back onto the points by
+broadcast (:meth:`SeriesFrame.keep`); no per-row Python anywhere.
 """
 
 from __future__ import annotations
@@ -11,9 +12,10 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from carbonapi_spark.functions import register
-from carbonapi_spark.functions.helper import series_arg, wrap_name
-from carbonapi_spark.model.consolidation import agg_column, skips_nulls
-from carbonapi_spark.model.series import NAME, ORD, TS, VALUE, SeriesFrame
+from carbonapi_spark.evaluator import eval_expr
+from carbonapi_spark.functions.helper import wrap_name
+from carbonapi_spark.model.consolidation import percentile_column
+from carbonapi_spark.model.series import NAME, ORD, VALUE, SeriesFrame
 
 
 _OPS = {
@@ -27,20 +29,16 @@ _OPS = {
 
 
 def _filter_by_agg(frame: SeriesFrame, func: str, op: str, threshold: float) -> SeriesFrame:
-    V = F.col(VALUE)
     if op not in _OPS:
         raise ValueError(f"unsupported operator {op!r}")
-    src = frame if skips_nulls(func) else frame.densify()
-    per = src.df.groupBy(ORD).agg(
-        agg_column(func, V, F.col(TS), 0.0).cast("double").alias("__agg"))
-    keep = per.where(_OPS[op](F.col("__agg"), F.lit(threshold))).select(ORD)
-    return frame.with_df(frame.df.join(F.broadcast(keep), ORD, "left_semi"))
+    per = frame.per_series(__agg=func)
+    return frame.keep(per.where(_OPS[op](F.col("__agg"), F.lit(threshold))))
 
 
 @register("filterSeries")
 def filter_series(ctx, exp, f, u):
     """keep series where agg(values) <op> n — filter/function.go:39."""
-    frame = series_arg(ctx, exp, exp.args[0], f, u)
+    frame = eval_expr(ctx, exp.args[0], f, u)
     func = exp.get_string(1)
     op = exp.get_string(2)
     threshold = exp.get_float(3)
@@ -59,7 +57,7 @@ _SHORTCUTS = {
 def above_below(ctx, exp, f, u):
     """fixed agg+op shortcuts of filterSeries — below/function.go:31
     (maximum/minimum use strict compare, average/current inclusive)."""
-    frame = series_arg(ctx, exp, exp.args[0], f, u)
+    frame = eval_expr(ctx, exp.args[0], f, u)
     n = exp.get_float(1)
     func, op = _SHORTCUTS[exp.target]
     return _filter_by_agg(frame, func, op, n)
@@ -69,7 +67,7 @@ def above_below(ctx, exp, f, u):
 def exclude(ctx, exp, f, u):
     """drop series whose name matches regex — exclude/function.go:30."""
     pattern = exp.get_string(1)
-    frame = series_arg(ctx, exp, exp.args[0], f, u)
+    frame = eval_expr(ctx, exp.args[0], f, u)
     return frame.with_df(frame.df.where(~F.col(NAME).rlike(pattern)))
 
 
@@ -77,7 +75,7 @@ def exclude(ctx, exp, f, u):
 def grep(ctx, exp, f, u):
     """keep series whose name matches regex — grep/function.go:30."""
     pattern = exp.get_string(1)
-    frame = series_arg(ctx, exp, exp.args[0], f, u)
+    frame = eval_expr(ctx, exp.args[0], f, u)
     return frame.with_df(frame.df.where(F.col(NAME).rlike(pattern)))
 
 
@@ -85,7 +83,7 @@ def grep(ctx, exp, f, u):
 def remove_value(ctx, exp, f, u):
     """pointwise: value -> NaN beyond threshold — removeBelowSeries pkg."""
     n = exp.get_float(1)
-    frame = series_arg(ctx, exp, exp.args[0], f, u)
+    frame = eval_expr(ctx, exp.args[0], f, u)
     if exp.target == "removeAboveValue":
         fn = lambda v: F.when(v <= n, v)  # noqa: E731
     else:
@@ -98,10 +96,8 @@ def remove_percentile(ctx, exp, f, u):
     """per-series percentile threshold then pointwise NaN."""
     V = F.col(VALUE)
     n = exp.get_float(1)
-    frame = series_arg(ctx, exp, exp.args[0], f, u)
-    from carbonapi_spark.model.consolidation import percentile_column
-    per = (frame.df.groupBy(ORD)
-           .agg(percentile_column(V, n, False).cast("double").alias("__thr")))
+    frame = eval_expr(ctx, exp.args[0], f, u)
+    per = frame.per_series(__thr=percentile_column(V, n, False).cast("double"))
     df = frame.df.join(F.broadcast(per), ORD)
     if exp.target == "removeAbovePercentile":
         df = df.withColumn(VALUE, F.when(V <= F.col("__thr"), V))
@@ -114,56 +110,44 @@ def remove_percentile(ctx, exp, f, u):
 def remove_empty_series(ctx, exp, f, u):
     """drop all-NaN series; with xff, drop series whose non-null ratio is
     below it — removeEmptySeries/function.go:31."""
-    V = F.col(VALUE)
-    frame = series_arg(ctx, exp, exp.args[0], f, u).densify()
+    frame = eval_expr(ctx, exp.args[0], f, u)
     xff = exp.get_float(1, 0.0, names=("xFilesFactor",))
-    per = frame.df.groupBy(ORD).agg(
-        (F.count(V).cast("double") / F.count(F.lit(1))).alias("__ratio"),
-        F.count(V).alias("__nn"))
-    cond = (F.col("__ratio") >= xff) & (F.col("__nn") > 0) if xff > 0 \
-        else F.col("__nn") > 0
-    keep = per.where(cond).select(ORD)
-    return frame.with_df(frame.df.join(F.broadcast(keep), ORD, "left_semi"))
+    # count is NULL for a series with no value, or too few for xff
+    per = frame.per_series(__nn="count", xff=max(xff, 0.0))
+    return frame.keep(per.where(F.col("__nn").isNotNull()))
 
 
 @register("removeZeroSeries")
 def remove_zero_series(ctx, exp, f, u):
     """drop series whose every non-null value is 0 (carbonapi ext)."""
     V = F.col(VALUE)
-    frame = series_arg(ctx, exp, exp.args[0], f, u)
-    per = frame.df.groupBy(ORD).agg(
-        F.count(F.when(V != 0, 1)).alias("__nz"))
-    keep = per.where(F.col("__nz") > 0).select(ORD)
-    return frame.with_df(frame.df.join(F.broadcast(keep), ORD, "left_semi"))
+    frame = eval_expr(ctx, exp.args[0], f, u)
+    per = frame.per_series(__nz=F.count(F.when(V != 0, 1)))
+    return frame.keep(per.where(F.col("__nz") > 0))
 
 
 @register("averageOutsidePercentile")
 def average_outside_percentile(ctx, exp, f, u):
     """keep series whose average falls outside the [100-n, n] percentile
     band of all the averages — averageOutsidePercentile/function.go:29."""
-    V = F.col(VALUE)
-    frame = series_arg(ctx, exp, exp.args[0], f, u)
+    frame = eval_expr(ctx, exp.args[0], f, u)
     n = exp.get_float(1)
     lo_p, hi_p = min(n, 100 - n), max(n, 100 - n)
-    per = frame.df.groupBy(ORD).agg(F.avg(V).alias("__avg"))
+    per = frame.per_series(__avg="average")
     bounds = per.agg(F.percentile(F.col("__avg"), F.lit(lo_p / 100)).alias("__lo"),
                      F.percentile(F.col("__avg"), F.lit(hi_p / 100)).alias("__hi"))
-    keep = (per.crossJoin(F.broadcast(bounds))
-            .where((F.col("__avg") < F.col("__lo")) | (F.col("__avg") > F.col("__hi")))
-            .select(ORD))
-    return frame.with_df(frame.df.join(F.broadcast(keep), ORD, "left_semi"))
+    return frame.keep(per.crossJoin(F.broadcast(bounds))
+                      .where((F.col("__avg") < F.col("__lo"))
+                             | (F.col("__avg") > F.col("__hi"))))
 
 
 @register("tukeyAbove", "tukeyBelow")
 def tukey(ctx, exp, f, u):
     """Tukey-fence outlier series by IQR rule — tukey/function.go:34."""
-    V = F.col(VALUE)
-    frame = series_arg(ctx, exp, exp.args[0], f, u)
+    frame = eval_expr(ctx, exp.args[0], f, u)
     basis = exp.get_string(1)
     n = exp.get_float(2, 1.5)
-    src = frame if skips_nulls(basis) else frame.densify()
-    per = src.df.groupBy(ORD).agg(
-        agg_column(basis, V, F.col(TS), 0.0).cast("double").alias("__agg"))
+    per = frame.per_series(__agg=basis)
     q = per.agg(F.percentile(F.col("__agg"), F.lit(0.25)).alias("__q1"),
                 F.percentile(F.col("__agg"), F.lit(0.75)).alias("__q3"))
     joined = per.crossJoin(F.broadcast(q))
@@ -172,5 +156,4 @@ def tukey(ctx, exp, f, u):
         cond = F.col("__agg") >= F.col("__q3") + F.lit(n) * iqr
     else:
         cond = F.col("__agg") <= F.col("__q1") - F.lit(n) * iqr
-    keep = joined.where(cond).select(ORD)
-    return frame.with_df(frame.df.join(F.broadcast(keep), ORD, "left_semi"))
+    return frame.keep(joined.where(cond))

@@ -6,14 +6,8 @@ from pyspark.sql import Column, functions as F
 from pyspark.sql.window import Window
 
 from carbonapi_spark.evaluator import EvalContext, eval_expr
-from carbonapi_spark.model.series import NAME, ORD, TS, VALUE, SeriesFrame, combine
+from carbonapi_spark.model.series import ORD, TS, SeriesFrame, combine
 from carbonapi_spark.parser import Expr
-
-
-def series_arg(ctx: EvalContext, exp: Expr, arg: Expr, from_ts: int,
-               until_ts: int) -> SeriesFrame:
-    """helper.GetSeriesArg analog (expr/helper/helper.go:26-37)."""
-    return eval_expr(ctx, arg, from_ts, until_ts)
 
 
 def series_args(ctx: EvalContext, exp: Expr, from_ts: int, until_ts: int,
@@ -40,10 +34,6 @@ def wrap_name(fname: str, frame: SeriesFrame, *suffix_args: str) -> SeriesFrame:
     else:
         tail = ""
     return frame.map_name(lambda n: F.concat(F.lit(fname + "("), n, F.lit(tail + ")")))
-
-
-def set_name(frame: SeriesFrame, literal: str) -> SeriesFrame:
-    return frame.map_name(lambda n: F.lit(literal))
 
 
 def node_expr(name: Column, idx: int) -> Column:

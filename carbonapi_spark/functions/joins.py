@@ -18,8 +18,8 @@ from pyspark.sql.window import Window
 
 from carbonapi_spark.evaluator import eval_expr
 from carbonapi_spark.functions import register
-from carbonapi_spark.functions.helper import agg_key_expr, series_arg
-from carbonapi_spark.model.series import NAME, ORD, TS, VALUE, SeriesFrame, align
+from carbonapi_spark.functions.helper import agg_key_expr
+from carbonapi_spark.model.series import NAME, ORD, TS, VALUE, align
 
 
 
@@ -30,7 +30,7 @@ def divide_series(ctx, exp, f, u):
     With 2+ args and a wildcard-multi divisor the reference errors; a single
     divisor is broadcast-joined on ts."""
     V = F.col(VALUE)
-    dividend = series_arg(ctx, exp, exp.args[0], f, u)
+    dividend = eval_expr(ctx, exp.args[0], f, u)
     if len(exp.args) == 1:
         raise ValueError("divideSeries: divisor required")
     divisor = eval_expr(ctx, exp.args[1], f, u)
@@ -60,8 +60,8 @@ def series_lists(ctx, exp, f, u):
     """pairwise i-th vs i-th — seriesList/function.go:31; lists must have
     equal lengths. Join key = (series rank, ts)."""
     V = F.col(VALUE)
-    fa = series_arg(ctx, exp, exp.args[0], f, u)
-    fb = series_arg(ctx, exp, exp.args[1], f, u)
+    fa = eval_expr(ctx, exp.args[0], f, u)
+    fb = eval_expr(ctx, exp.args[1], f, u)
     if exp.target == "aggregateSeriesLists":
         func = exp.get_string(2)
         name_fn = func.replace("Series", "") + "Series"
@@ -109,7 +109,7 @@ def as_percent(ctx, exp, f, u):
     """% of total — asPercent/function.go:335-489, all four shapes:
     (sl), (sl, N), (sl, totalSeries), (sl, None|total, *nodes)."""
     V = F.col(VALUE)
-    frame = series_arg(ctx, exp, exp.args[0], f, u)
+    frame = eval_expr(ctx, exp.args[0], f, u)
     nodes = exp.get_node_or_tag_args(2) if len(exp.args) > 2 else []
     total_arg = exp.args[1] if len(exp.args) > 1 else None
 
@@ -202,8 +202,8 @@ def weighted_average(ctx, exp, f, u):
     """sum(avg*weight)/sum(weight) matched by node key
     — weightedAverage/function.go:31."""
     V = F.col(VALUE)
-    favg = series_arg(ctx, exp, exp.args[0], f, u)
-    fwgt = series_arg(ctx, exp, exp.args[1], f, u)
+    favg = eval_expr(ctx, exp.args[0], f, u)
+    fwgt = eval_expr(ctx, exp.args[1], f, u)
     nodes = exp.get_node_or_tag_args(2)
     # dense sides: over sparse ones no two rows may meet in the join below
     favg, fwgt = (fr.densify() for fr in align([favg, fwgt]))
@@ -227,7 +227,7 @@ def fallback_series(ctx, exp, f, u):
 
     The emptiness probe is the one place a driver-side count is semantically
     required (the reference does the same list-length check)."""
-    frame = series_arg(ctx, exp, exp.args[0], f, u)
+    frame = eval_expr(ctx, exp.args[0], f, u)
     if frame.df.select(NAME).limit(1).count() == 0:
-        return series_arg(ctx, exp, exp.args[1], f, u)
+        return eval_expr(ctx, exp.args[1], f, u)
     return frame

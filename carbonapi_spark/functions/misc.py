@@ -9,13 +9,13 @@ from pyspark.sql import functions as F
 from carbonapi_spark.datapipe import local_df as _local_df
 from pyspark.sql.window import Window
 
-from carbonapi_spark.evaluator import eval_expr
+from carbonapi_spark.evaluator import EvalError, eval_expr
 from carbonapi_spark.functions import register
-from carbonapi_spark.functions.helper import (
-    node_expr, series_arg, series_args, wrap_name,
+from carbonapi_spark.functions.helper import series_args, wrap_name
+from carbonapi_spark.model.consolidation import is_valid_consolidation
+from carbonapi_spark.model.series import (
+    NAME, ORD, TS, VALUE, SeriesFrame, align, union,
 )
-from carbonapi_spark.model.consolidation import agg_column, skips_nulls
-from carbonapi_spark.model.series import NAME, ORD, TS, VALUE, SeriesFrame, align
 
 
 
@@ -26,7 +26,7 @@ def substr(ctx, exp, f, u):
     """slice dot-nodes [start, stop) of the name — substr/function.go:31."""
     start = exp.get_int(1, 0)
     stop = exp.get_int(2, 0)
-    frame = series_arg(ctx, exp, exp.args[0], f, u)
+    frame = eval_expr(ctx, exp.args[0], f, u)
 
     def fn(n):
         base = F.split_part(n, F.lit(";"), F.lit(1))
@@ -44,13 +44,13 @@ def substr(ctx, exp, f, u):
 @register("toLowerCase", "lower")
 def to_lower(ctx, exp, f, u):
     """lowercase the name — toLowerCase/function.go:30."""
-    return series_arg(ctx, exp, exp.args[0], f, u).map_name(F.lower)
+    return eval_expr(ctx, exp.args[0], f, u).map_name(F.lower)
 
 
 @register("toUpperCase", "upper")
 def to_upper(ctx, exp, f, u):
     """uppercase the name — toUpperCase/function.go:30."""
-    return series_arg(ctx, exp, exp.args[0], f, u).map_name(F.upper)
+    return eval_expr(ctx, exp.args[0], f, u).map_name(F.upper)
 
 
 # ------------------------------------------------------- meta setters
@@ -61,7 +61,9 @@ def consolidate_by(ctx, exp, f, u):
     — consolidateBy/function.go:41."""
     from dataclasses import replace
     func = exp.get_string(1)
-    frame = series_arg(ctx, exp, exp.args[0], f, u)
+    if not is_valid_consolidation(func):
+        raise EvalError(f"consolidateBy: invalid consolidation function {func!r}")
+    frame = eval_expr(ctx, exp.args[0], f, u)
     frame = replace(frame, consolidation=func)
     return wrap_name("consolidateBy", frame, f"'{func}'")
 
@@ -71,7 +73,7 @@ def set_xff(ctx, exp, f, u):
     """set xFilesFactor metadata — setXFilesFactor/function.go:30."""
     from dataclasses import replace
     xff = exp.get_float(1)
-    frame = series_arg(ctx, exp, exp.args[0], f, u)
+    frame = eval_expr(ctx, exp.args[0], f, u)
     return replace(frame, xff=xff)
 
 
@@ -79,7 +81,7 @@ def set_xff(ctx, exp, f, u):
 def cumulative(ctx, exp, f, u):
     """alias for consolidateBy(sl, 'sum') — cumulative/function.go:29."""
     from dataclasses import replace
-    frame = series_arg(ctx, exp, exp.args[0], f, u)
+    frame = eval_expr(ctx, exp.args[0], f, u)
     frame = replace(frame, consolidation="sum")
     return wrap_name("cumulative", frame)
 
@@ -91,7 +93,7 @@ def integral_with_reset(ctx, exp, f, u):
     """running sum that resets where the companion series is non-zero
     — integralWithReset/function.go:32."""
     V = F.col(VALUE)
-    frame = series_arg(ctx, exp, exp.args[0], f, u)
+    frame = eval_expr(ctx, exp.args[0], f, u)
     reset = eval_expr(ctx, exp.args[1], f, u)
     frame2, reset = (fr.densify() for fr in align([frame, reset]))
     r = reset.df.select(F.col(TS).alias("__rts"), V.alias("__rv"))
@@ -147,7 +149,7 @@ def pow_series(ctx, exp, f, u):
 @register("join")
 def join_series(ctx, exp, f, u):
     """AND/OR/XOR/SUB of two seriesLists by name — join/function.go:78-173."""
-    fa = series_arg(ctx, exp, exp.args[0], f, u)
+    fa = eval_expr(ctx, exp.args[0], f, u)
     fb = eval_expr(ctx, exp.args[1], f, u)
     join_type = exp.get_string(2, "AND", names=("type",)).upper()
     names_a = fa.df.select(NAME).distinct()
@@ -156,19 +158,12 @@ def join_series(ctx, exp, f, u):
         return fa.with_df(fa.df.join(F.broadcast(names_b), NAME, "left_semi"))
     if join_type == "SUB":
         return fa.with_df(fa.df.join(F.broadcast(names_b), NAME, "left_anti"))
-    if join_type == "OR":
+    if join_type in ("OR", "XOR"):
         fa2, fb2 = align([fa, fb])
-        a = fa2.df.withColumn(ORD, F.concat(F.lit("0|"), F.col(ORD)))
-        extra = (fb2.df.join(F.broadcast(names_a), NAME, "left_anti")
-                 .withColumn(ORD, F.concat(F.lit("1|"), F.col(ORD))))
-        return fa2.with_df(a.unionByName(extra), dense=fa2.dense and fb2.dense)
-    if join_type == "XOR":
-        fa2, fb2 = align([fa, fb])
-        a = (fa2.df.join(F.broadcast(names_b), NAME, "left_anti")
-             .withColumn(ORD, F.concat(F.lit("0|"), F.col(ORD))))
-        b = (fb2.df.join(F.broadcast(names_a), NAME, "left_anti")
-             .withColumn(ORD, F.concat(F.lit("1|"), F.col(ORD))))
-        return fa2.with_df(a.unionByName(b), dense=fa2.dense and fb2.dense)
+        if join_type == "XOR":
+            fa2 = fa2.with_df(fa2.df.join(F.broadcast(names_b), NAME, "left_anti"))
+        fb2 = fb2.with_df(fb2.df.join(F.broadcast(names_a), NAME, "left_anti"))
+        return union([fa2, fb2])
     raise ValueError(f"join: unknown join type {join_type}")
 
 
@@ -183,7 +178,7 @@ def use_series_above(ctx, exp, f, u):
     V = F.col(VALUE)
     import re as _re
     from carbonapi_spark.parser.globs import has_wildcard
-    frame = series_arg(ctx, exp, exp.args[0], f, u)
+    frame = eval_expr(ctx, exp.args[0], f, u)
     value = exp.get_float(1)
     search = exp.get_string(2)
     replace = exp.get_string(3)
@@ -215,7 +210,7 @@ def use_series_above(ctx, exp, f, u):
 def map_series(ctx, exp, f, u):
     """structural partition by node key; a no-op at the frame level — the
     grouping is re-derived by reduceSeries — mapSeries/function.go:30."""
-    return series_arg(ctx, exp, exp.args[0], f, u)
+    return eval_expr(ctx, exp.args[0], f, u)
 
 
 _REDUCERS = {
@@ -241,7 +236,7 @@ def reduce_series(ctx, exp, f, u):
     """reduceSeries(mapSeries(...), fn, reduceNode, *matchers): group series
     by the name with node[reduceNode] replaced by 'reduce.<fn>', pick the
     matcher series positionally, apply fn — reduce/function.go:32-120."""
-    frame = series_arg(ctx, exp, exp.args[0], f, u).densify()
+    frame = eval_expr(ctx, exp.args[0], f, u).densify()
     fn_name = exp.get_string(1)
     node = exp.get_int(2)
     matchers = [exp.get_string(i) for i in range(3, len(exp.args))]
@@ -299,26 +294,15 @@ def _si_format(col):
 def legend_value(ctx, exp, f, u):
     """append '(func: value)' stats to the legend name
     — legendValue/function.go:33."""
-    V = F.col(VALUE)
-    frame = series_arg(ctx, exp, exp.args[0], f, u)
+    frame = eval_expr(ctx, exp.args[0], f, u)
     value_types = [exp.get_string(i) for i in range(1, len(exp.args))]
     system = ""
     if value_types and value_types[-1] in ("si", "binary"):
         system = value_types.pop()
-    aggs = []
-    names = []
-    for vt in value_types:
-        try:
-            aggs.append(agg_column(vt if vt != "total" else "sum", V,
-                                   F.col(TS), 0.0).alias(f"__lv_{vt}"))
-            names.append(vt)
-        except ValueError:
-            continue
-    if not aggs:
+    names = [vt for vt in value_types if is_valid_consolidation(vt)]
+    if not names:
         return frame
-    if not all(skips_nulls(vt) for vt in names):
-        frame = frame.densify()
-    per = frame.df.groupBy(ORD).agg(*aggs)
+    per = frame.per_series(**{f"__lv_{vt}": vt for vt in names})
     df = frame.df.join(F.broadcast(per), ORD)
     suffix = F.lit("")
     for vt in names:
@@ -334,12 +318,8 @@ def legend_value(ctx, exp, f, u):
 @register("cactiStyle")
 def cacti_style(ctx, exp, f, u):
     """Cacti-style 'Current/Max/Min' legend — cactiStyle/function.go:33."""
-    V = F.col(VALUE)
-    frame = series_arg(ctx, exp, exp.args[0], f, u).densify()
-    per = frame.df.groupBy(ORD).agg(
-        agg_column("current", V, F.col(TS), 0.0).alias("__cur"),
-        F.max(V).alias("__max"),
-        F.min(V).alias("__min"))
+    frame = eval_expr(ctx, exp.args[0], f, u)
+    per = frame.per_series(__cur="current", __max="max", __min="min")
     df = frame.df.join(F.broadcast(per), ORD)
     fmt = lambda c: F.when(c.isNull(), F.lit("nan")).otherwise(  # noqa: E731
         F.format_number(c, 2))
@@ -356,17 +336,16 @@ def heat_map(ctx, exp, f, u):
     """pairwise diff of adjacent series (sorted by name)
     — heatMap/function.go:28."""
     V = F.col(VALUE)
-    frame = series_arg(ctx, exp, exp.args[0], f, u).densify()
-    w = Window.orderBy(ORD)
-    idx = (frame.df.select(ORD).distinct()
-           .withColumn("__idx", F.row_number().over(w)))
-    tagged = frame.df.join(F.broadcast(idx), ORD)
-    cur = tagged.select(F.col("__idx"), F.col(NAME), F.col(TS), V.alias("__cv"))
-    prev = tagged.select((F.col("__idx") + 1).alias("__idx"), F.col(TS),
+    frame = eval_expr(ctx, exp.args[0], f, u).densify()
+    # ord becomes the series' position in list order
+    tagged = frame.rank(frame.df.select(ORD).distinct()).df
+    idx = F.col(ORD).cast("long")
+    cur = tagged.select(idx.alias("__idx"), F.col(ORD), F.col(NAME), F.col(TS),
+                        V.alias("__cv"))
+    prev = tagged.select((idx + 1).alias("__idx"), F.col(TS),
                          V.alias("__pv"), F.col(NAME).alias("__pn"))
     df = (cur.join(prev, ["__idx", TS])
           .select(F.format_string("heatMap(%s,%s)", F.col(NAME), F.col("__pn")).alias(NAME),
-                  F.format_string("%05d", F.col("__idx")).alias(ORD),
-                  F.col(TS),
+                  F.col(ORD), F.col(TS),
                   (F.col("__cv") - F.col("__pv")).cast("double").alias(VALUE)))
     return frame.with_df(df)

@@ -19,9 +19,9 @@ from pyspark.sql.window import Window
 
 from carbonapi_spark.evaluator import eval_expr
 from carbonapi_spark.functions import register
-from carbonapi_spark.functions.helper import series_arg, wrap_name
+from carbonapi_spark.functions.helper import wrap_name
 from carbonapi_spark.model.series import (
-    NAME, ORD, TS, VALUE, SERIES_SCHEMA, SeriesFrame, align,
+    NAME, ORD, TS, VALUE, SERIES_SCHEMA, SeriesFrame, align, ranked,
 )
 
 
@@ -60,11 +60,12 @@ def exponential_moving_average(ctx, exp, f, u):
     """EMA with c=2/(n+1), seeded by the mean of the first window; output
     half-even rounded to 6 — exponentialMovingAverage/function.go:32-141."""
     arg1 = exp.args[1]
-    probe = eval_expr(ctx, exp.args[0], f, u)
     if arg1.is_const():
         wp = abs(exp.get_int(1))
         argstr = arg1.val_str
-        preview = wp * probe.step
+        # build the argument once over the request window to learn its
+        # step; an interval window needs no step
+        preview = wp * eval_expr(ctx, exp.args[0], f, u).step
         constant = 2.0 / (wp + 1)
     else:
         preview = abs(exp.get_interval(1))
@@ -85,7 +86,7 @@ def exponential_moving_average(ctx, exp, f, u):
 def ewma(ctx, exp, f, u):
     """EMA with explicit alpha; NaN passes through without updating state
     — ewma/function.go:31-71."""
-    frame = series_arg(ctx, exp, exp.args[0], f, u)
+    frame = eval_expr(ctx, exp.args[0], f, u)
     alpha = exp.get_float(1)
     alpha_str = exp.args[1].val_str
 
@@ -218,7 +219,7 @@ def holt_winters_aberration(ctx, exp, f, u):
 def polyfit(ctx, exp, f, u):
     """degree-k least-squares polynomial fit + optional forecast offset
     — polyfit/function.go:34 (gonum Vandermonde == numpy.polyfit)."""
-    frame = series_arg(ctx, exp, exp.args[0], f, u)
+    frame = eval_expr(ctx, exp.args[0], f, u)
     degree = exp.get_int(1, 1, names=("degree",))
     offset = exp.get_interval(2, 1, 0, names=("offset",)) if len(exp.args) > 2 else 0
     step = frame.step
@@ -246,7 +247,7 @@ def polyfit(ctx, exp, f, u):
 def low_pass(ctx, exp, f, u):
     """FFT low-pass filter keeping cutPercent% of low frequencies
     — lowPass/function.go:31."""
-    frame = series_arg(ctx, exp, exp.args[0], f, u)
+    frame = eval_expr(ctx, exp.args[0], f, u)
     cut = exp.get_float(1)
 
     def fn(ts, vals):
@@ -269,7 +270,7 @@ def low_pass(ctx, exp, f, u):
 @register("fft")
 def fft_(ctx, exp, f, u):
     """forward FFT magnitude (or phase) — fft/function.go:41."""
-    frame = series_arg(ctx, exp, exp.args[0], f, u)
+    frame = eval_expr(ctx, exp.args[0], f, u)
     mode = exp.get_string(1, "abs") if len(exp.args) > 1 else "abs"
 
     def fn(ts, vals):
@@ -284,7 +285,7 @@ def fft_(ctx, exp, f, u):
 @register("ifft")
 def ifft_(ctx, exp, f, u):
     """inverse FFT of a magnitude spectrum — ifft/function.go:32."""
-    frame = series_arg(ctx, exp, exp.args[0], f, u)
+    frame = eval_expr(ctx, exp.args[0], f, u)
 
     def fn(ts, vals):
         out = np.real(np.fft.ifft(np.nan_to_num(vals)))
@@ -300,7 +301,7 @@ def pearson(ctx, exp, f, u):
     """rolling Pearson correlation of two series — pearson/function.go:31.
     JVM-side: join on ts + corr window aggregate."""
     V = F.col(VALUE)
-    s1 = series_arg(ctx, exp, exp.args[0], f, u)
+    s1 = eval_expr(ctx, exp.args[0], f, u)
     s2 = eval_expr(ctx, exp.args[1], f, u)
     n = exp.get_int(2)
     # the window counts rows: both sides dense
@@ -320,7 +321,7 @@ def pearson_closest(ctx, exp, f, u):
     """top-n series most correlated with the reference
     — pearsonClosest/function.go:33."""
     V = F.col(VALUE)
-    frame = series_arg(ctx, exp, exp.args[0], f, u)
+    frame = eval_expr(ctx, exp.args[0], f, u)
     ref = eval_expr(ctx, exp.args[1], f, u)
     n = exp.get_int(2)
     direction = exp.get_string(3, "abs", names=("direction",))
@@ -328,10 +329,7 @@ def pearson_closest(ctx, exp, f, u):
     # a dense reference gives every series its (maybe NULL) correlation
     b = ref.densify().df.select(F.col(TS).alias("__ts2"), V.alias("__v2"))
     joined = frame.df.join(F.broadcast(b), F.col(TS) == F.col("__ts2"))
-    per = joined.groupBy(ORD).agg(F.corr(V, F.col("__v2")).alias("__c"))
+    per = frame.with_df(joined).per_series(__c=F.corr(V, F.col("__v2")))
     metric = {"pos": F.col("__c"), "neg": -F.col("__c")}.get(
         direction, F.abs(F.col("__c")))
-    w = Window.orderBy(metric.desc_nulls_last(), F.col(ORD))
-    keep = (per.withColumn("__rk", F.row_number().over(w))
-            .where(F.col("__rk") <= n).select(ORD))
-    return frame.with_df(frame.df.join(F.broadcast(keep), ORD, "left_semi"))
+    return frame.keep(ranked(per, metric.desc_nulls_last(), n=n))

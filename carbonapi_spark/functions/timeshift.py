@@ -4,12 +4,13 @@ evaluator passes the displaced [from, until) down to the fetch instead)."""
 
 from __future__ import annotations
 
+from dataclasses import replace
+
 from pyspark.sql import functions as F
 
 from carbonapi_spark.evaluator import eval_expr
 from carbonapi_spark.functions import register
-from carbonapi_spark.model.series import NAME, ORD, TS, VALUE, SeriesFrame
-from carbonapi_spark.parser.interval import interval_seconds
+from carbonapi_spark.model.series import NAME, TS, SeriesFrame, union
 
 
 @register("timeShift")
@@ -40,16 +41,9 @@ def time_stack(ctx, exp, f, u):
         sub = eval_expr(ctx, exp.args[0], f + delta, u + delta)
         df = (sub.df.withColumn(TS, (F.col(TS) - delta).cast("long"))
               .withColumn(NAME, F.format_string(f"timeShift(%s,{raw},{i})",
-                                                F.col(NAME)))
-              .withColumn(ORD, F.concat(F.lit(f"{i:04d}|"), F.col(ORD))))
-        frames.append(SeriesFrame(df, sub.step, sub.start - delta, sub.stop - delta,
-                                  sub.consolidation, sub.xff, sub.dense))
+                                                F.col(NAME))))
+        frames.append(replace(sub, df=df, start=sub.start - delta,
+                              stop=sub.stop - delta))
     if not frames:
         raise ValueError("timeStack: empty range")
-    out = frames[0].df
-    for fr in frames[1:]:
-        out = out.unionByName(fr.df)
-    base = frames[0]
-    return SeriesFrame(out, base.step, min(fr.start for fr in frames),
-                       max(fr.stop for fr in frames), base.consolidation,
-                       base.xff, False)
+    return union(frames)

@@ -14,19 +14,15 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from carbonapi_spark.evaluator import eval_expr
 from carbonapi_spark.functions import register
 from carbonapi_spark.functions.helper import (
     float_str,
-    series_arg,
     series_window,
     wrap_name,
 )
-from carbonapi_spark.model.series import NAME, ORD, TS, VALUE
+from carbonapi_spark.model.series import ORD, TS, VALUE
 
-
-
-def _simple(ctx, exp, from_ts, until_ts):
-    return series_arg(ctx, exp, exp.args[0], from_ts, until_ts)
 
 
 # ---------------------------------------------------------------- pure maps
@@ -34,14 +30,14 @@ def _simple(ctx, exp, from_ts, until_ts):
 @register("absolute")
 def absolute(ctx, exp, f, u):
     """abs(v) — absolute/function.go:28."""
-    return wrap_name("absolute", _simple(ctx, exp, f, u).map_value(F.abs))
+    return wrap_name("absolute", eval_expr(ctx, exp.args[0], f, u).map_value(F.abs))
 
 
 @register("offset", "add")
 def offset(ctx, exp, f, u):
     """v + c — offset/function.go:30."""
     c = exp.get_float(1)
-    return wrap_name(exp.target, _simple(ctx, exp, f, u).map_value(lambda v: v + c),
+    return wrap_name(exp.target, eval_expr(ctx, exp.args[0], f, u).map_value(lambda v: v + c),
                      exp.raw_arg(1))
 
 
@@ -49,7 +45,7 @@ def offset(ctx, exp, f, u):
 def scale(ctx, exp, f, u):
     """v * c — scale/function.go:30."""
     c = exp.get_float(1)
-    return wrap_name("scale", _simple(ctx, exp, f, u).map_value(lambda v: v * c),
+    return wrap_name("scale", eval_expr(ctx, exp.args[0], f, u).map_value(lambda v: v * c),
                      exp.raw_arg(1))
 
 
@@ -57,7 +53,7 @@ def scale(ctx, exp, f, u):
 def scale_to_seconds(ctx, exp, f, u):
     """v * seconds/step — scaleToSeconds/function.go:30."""
     sec = exp.get_float(1)
-    frame = _simple(ctx, exp, f, u)
+    frame = eval_expr(ctx, exp.args[0], f, u)
     k = sec / frame.step
     return wrap_name("scaleToSeconds", frame.map_value(lambda v: v * k),
                      float_str(sec))
@@ -67,7 +63,7 @@ def scale_to_seconds(ctx, exp, f, u):
 def invert(ctx, exp, f, u):
     """1/v, 0 -> NaN — invert/function.go:30."""
     return wrap_name("invert",
-                     _simple(ctx, exp, f, u).map_value(
+                     eval_expr(ctx, exp.args[0], f, u).map_value(
                          lambda v: F.when(v != 0, F.lit(1.0) / v)))
 
 
@@ -75,7 +71,7 @@ def invert(ctx, exp, f, u):
 def pow_(ctx, exp, f, u):
     """v^c — pow/function.go:31."""
     c = exp.get_float(1)
-    return wrap_name("pow", _simple(ctx, exp, f, u).map_value(lambda v: F.pow(v, c)),
+    return wrap_name("pow", eval_expr(ctx, exp.args[0], f, u).map_value(lambda v: F.pow(v, c)),
                      exp.raw_arg(1))
 
 
@@ -83,21 +79,21 @@ def pow_(ctx, exp, f, u):
 def square_root(ctx, exp, f, u):
     """sqrt(v), negative -> NaN — squareRoot/function.go:30."""
     return wrap_name("squareRoot",
-                     _simple(ctx, exp, f, u).map_value(
+                     eval_expr(ctx, exp.args[0], f, u).map_value(
                          lambda v: F.when(v >= 0, F.sqrt(v))))
 
 
 @register("exp")
 def exp_(ctx, exp, f, u):
     """e^v — exp/function.go:29."""
-    return wrap_name("exp", _simple(ctx, exp, f, u).map_value(F.exp))
+    return wrap_name("exp", eval_expr(ctx, exp.args[0], f, u).map_value(F.exp))
 
 
 @register("sigmoid")
 def sigmoid(ctx, exp, f, u):
     """1/(1+e^-v) — sigmoid/function.go:30."""
     return wrap_name("sigmoid",
-                     _simple(ctx, exp, f, u).map_value(
+                     eval_expr(ctx, exp.args[0], f, u).map_value(
                          lambda v: F.lit(1.0) / (F.lit(1.0) + F.exp(-v))))
 
 
@@ -107,7 +103,7 @@ def logit(ctx, exp, f, u):
     def fn(v):
         ratio = F.when(v != 1.0, v / (F.lit(1.0) - v))
         return F.when(ratio > 0, F.log(ratio))
-    return wrap_name("logit", _simple(ctx, exp, f, u).map_value(fn))
+    return wrap_name("logit", eval_expr(ctx, exp.args[0], f, u).map_value(fn))
 
 
 @register("log", "logarithm")
@@ -116,7 +112,7 @@ def logarithm(ctx, exp, f, u):
     base = exp.get_float(1, 10.0, names=("base",))
     def fn(v):
         return F.when(v > 0, F.log(float(base), v))
-    frame = _simple(ctx, exp, f, u).map_value(fn)
+    frame = eval_expr(ctx, exp.args[0], f, u).map_value(fn)
     if len(exp.args) > 1 or "base" in exp.named_args:
         return wrap_name("logarithm", frame, exp.raw_arg(1) if len(exp.args) > 1
                          else f"base={float_str(base)}")
@@ -127,7 +123,7 @@ def logarithm(ctx, exp, f, u):
 def round_(ctx, exp, f, u):
     """half-even rounding like helper.SafeRound (helper.go:225-231)."""
     precision = exp.get_int(1, 0, names=("precision",))
-    frame = _simple(ctx, exp, f, u).map_value(lambda v: F.bround(v, precision))
+    frame = eval_expr(ctx, exp.args[0], f, u).map_value(lambda v: F.bround(v, precision))
     if len(exp.args) > 1 or "precision" in exp.named_args:
         return wrap_name("round", frame, str(precision))
     return wrap_name("round", frame)
@@ -137,7 +133,7 @@ def round_(ctx, exp, f, u):
 def is_non_null(ctx, exp, f, u):
     """1 if value present else 0 — isNotNull/function.go:31."""
     return wrap_name(exp.target,
-                     _simple(ctx, exp, f, u).densify().map_value(
+                     eval_expr(ctx, exp.args[0], f, u).densify().map_value(
                          lambda v: v.isNotNull().cast("double")))
 
 
@@ -147,12 +143,11 @@ def transform_null(ctx, exp, f, u):
     joins against a mask of the reference's non-null points)."""
     V = F.col(VALUE)
     default = exp.get_float(1, 0.0, names=("default",))
-    frame = _simple(ctx, exp, f, u).densify()
+    frame = eval_expr(ctx, exp.args[0], f, u).densify()
     ref_exp = exp.named_args.get("referenceSeries")
     suffix = exp.raw_arg(1) if len(exp.args) > 1 else (
         float_str(default) if ("default" in exp.named_args or ref_exp) else None)
     if ref_exp is not None:
-        from carbonapi_spark.evaluator import eval_expr
         ref = eval_expr(ctx, ref_exp, f, u)
         mask = (ref.df.groupBy(TS)
                 .agg(F.max(V.isNotNull().cast("int")).alias("__ref_ok")))
@@ -174,7 +169,7 @@ def time_slice(ctx, exp, f, u):
     end = exp.get_interval(2, default_sign=-1, default=0)
     now = int(ctx.now.timestamp()) if ctx.now else u
     lo, hi = now + start, (now + end if end else u)
-    frame = _simple(ctx, exp, f, u)
+    frame = eval_expr(ctx, exp.args[0], f, u)
     out = frame.with_df(frame.df.withColumn(
         VALUE, F.when((F.col(TS) >= lo) & (F.col(TS) <= hi), V)))
     return wrap_name("timeSlice", out, str(start), str(end or u - now))
@@ -186,7 +181,7 @@ def time_slice(ctx, exp, f, u):
 def offset_to_zero(ctx, exp, f, u):
     """v - min(series) — offsetToZero/function.go:31."""
     V = F.col(VALUE)
-    frame = _simple(ctx, exp, f, u)
+    frame = eval_expr(ctx, exp.args[0], f, u)
     w = Window.partitionBy(ORD)
     df = frame.df.withColumn(VALUE, V - F.min(V).over(w))
     return wrap_name("offsetToZero", frame.with_df(df))
@@ -196,7 +191,7 @@ def offset_to_zero(ctx, exp, f, u):
 def min_max(ctx, exp, f, u):
     """(v-min)/(max-min), degenerate -> 0 — minMax/function.go:32."""
     V = F.col(VALUE)
-    frame = _simple(ctx, exp, f, u)
+    frame = eval_expr(ctx, exp.args[0], f, u)
     w = Window.partitionBy(ORD)
     lo, hi = F.min(V).over(w), F.max(V).over(w)
     df = frame.df.withColumn(
@@ -211,7 +206,7 @@ def min_max(ctx, exp, f, u):
 def derivative(ctx, exp, f, u):
     """v - prev, first point NaN — derivative/function.go:30."""
     V = F.col(VALUE)
-    frame = _simple(ctx, exp, f, u).densify()
+    frame = eval_expr(ctx, exp.args[0], f, u).densify()
     df = frame.df.withColumn(VALUE, V - F.lag(V).over(series_window()))
     return wrap_name("derivative", frame.with_df(df))
 
@@ -238,7 +233,7 @@ def non_negative_derivative(ctx, exp, f, u):
     min_v = exp.get_float(2, float("nan"), names=("minValue",))
     has_max = max_v == max_v
     has_min = min_v == min_v
-    frame = _simple(ctx, exp, f, u).densify()
+    frame = eval_expr(ctx, exp.args[0], f, u).densify()
     df = frame.df.withColumn(
         VALUE, _nn_derivative_value(max_v if has_max else None,
                                     min_v if has_min else None))
@@ -255,7 +250,7 @@ def per_second(ctx, exp, f, u):
     """nonNegativeDerivative / step — perSecond/function.go:33."""
     max_v = exp.get_float(1, float("nan"), names=("maxValue",))
     has_max = max_v == max_v
-    frame = _simple(ctx, exp, f, u).densify()
+    frame = eval_expr(ctx, exp.args[0], f, u).densify()
     step = frame.step
     val = _nn_derivative_value(max_v if has_max else None, None) / F.lit(float(step))
     df = frame.df.withColumn(VALUE, val)
@@ -268,7 +263,7 @@ def delay(ctx, exp, f, u):
     """shift values by n steps — delay/function.go:30."""
     V = F.col(VALUE)
     steps = exp.get_int(1)
-    frame = _simple(ctx, exp, f, u).densify()
+    frame = eval_expr(ctx, exp.args[0], f, u).densify()
     df = frame.df.withColumn(VALUE, F.lag(V, steps).over(series_window()))
     return wrap_name("delay", frame.with_df(df), str(steps))
 
@@ -277,7 +272,7 @@ def delay(ctx, exp, f, u):
 def integral(ctx, exp, f, u):
     """running sum; NULL points stay NULL but don't reset — integral/function.go:30."""
     V = F.col(VALUE)
-    frame = _simple(ctx, exp, f, u).densify()
+    frame = eval_expr(ctx, exp.args[0], f, u).densify()
     w = series_window().rowsBetween(Window.unboundedPreceding, 0)
     df = frame.df.withColumn(VALUE, F.when(V.isNotNull(), F.sum(V).over(w)))
     return wrap_name("integral", frame.with_df(df))
@@ -289,7 +284,7 @@ def integral_by_interval(ctx, exp, f, u):
     — integralByInterval/function.go:30."""
     V = F.col(VALUE)
     interval = exp.get_interval(1)
-    frame = _simple(ctx, exp, f, u).densify()
+    frame = eval_expr(ctx, exp.args[0], f, u).densify()
     bucket = F.col(TS) - ((F.col(TS) - f) % F.lit(interval))
     w = (Window.partitionBy(ORD, bucket).orderBy(TS)
          .rowsBetween(Window.unboundedPreceding, 0))
@@ -303,7 +298,7 @@ def keep_last_value(ctx, exp, f, u):
     (fills the first `limit` points of longer gaps, carbonapi behavior)."""
     V = F.col(VALUE)
     limit = exp.get_float(1, float("inf"), names=("limit",))
-    frame = _simple(ctx, exp, f, u).densify()
+    frame = eval_expr(ctx, exp.args[0], f, u).densify()
     w = series_window().rowsBetween(Window.unboundedPreceding, 0)
     last_v = F.last(V, ignorenulls=True).over(w)
     last_ts = F.last(F.when(V.isNotNull(), F.col(TS)), ignorenulls=True).over(w)
@@ -321,7 +316,7 @@ def interpolate(ctx, exp, f, u):
     """linear interpolation across gaps <= limit — interpolate/function.go:26."""
     V = F.col(VALUE)
     limit = exp.get_float(1, float("inf"), names=("limit",))
-    frame = _simple(ctx, exp, f, u).densify()
+    frame = eval_expr(ctx, exp.args[0], f, u).densify()
     w_back = series_window().rowsBetween(Window.unboundedPreceding, 0)
     w_fwd = series_window().rowsBetween(0, Window.unboundedFollowing)
     prev_v = F.last(V, ignorenulls=True).over(w_back)
@@ -343,7 +338,7 @@ def interpolate(ctx, exp, f, u):
 def changed(ctx, exp, f, u):
     """1 when value differs from previous else 0 — changed/function.go:30."""
     V = F.col(VALUE)
-    frame = _simple(ctx, exp, f, u).densify()
+    frame = eval_expr(ctx, exp.args[0], f, u).densify()
     prev = F.lag(V).over(series_window())
     df = frame.df.withColumn(
         VALUE,
@@ -360,7 +355,7 @@ def graph_decorator(ctx, exp, f, u):
     the option is recorded on the frame and consumed by format=png/svg
     (render/graph.py); wire formats see only the name annotation."""
     from dataclasses import replace
-    frame = _simple(ctx, exp, f, u)
+    frame = eval_expr(ctx, exp.args[0], f, u)
     opts = dict(frame.graph_options or {})
     if exp.target == "color":
         opts["color"] = exp.get_string(1, "")

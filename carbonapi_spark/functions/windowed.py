@@ -16,12 +16,13 @@ Two physical shapes, both shuffle-light:
 from __future__ import annotations
 
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
 
 from carbonapi_spark.evaluator import eval_expr
 from carbonapi_spark.functions import register
-from carbonapi_spark.functions.helper import series_arg, series_window, wrap_name
-from carbonapi_spark.model.consolidation import _PERCENTILE_RE, agg_column
+from carbonapi_spark.functions.helper import series_window, wrap_name
+from carbonapi_spark.model.consolidation import (
+    _PERCENTILE_RE, agg_column, percentile_column,
+)
 from carbonapi_spark.model.series import (NAME, ORD, TS, VALUE, SERIES_SCHEMA,
                                           SeriesFrame)
 
@@ -39,7 +40,7 @@ def summarize(ctx, exp, f, u):
     at the series start. Point->bucket assignment is by timestamp
     (function.go:112-135's ceil arithmetic reduces to floor((ts-start)/sz))."""
     V = F.col(VALUE)
-    frame = series_arg(ctx, exp, exp.args[0], f, u).densify()
+    frame = eval_expr(ctx, exp.args[0], f, u).densify()
     bucket_size = exp.get_interval(1)
     func = exp.get_string(2, "sum", names=("func",))
     func_given = "func" in exp.named_args or len(exp.args) > 2
@@ -252,14 +253,16 @@ def moving(ctx, exp, f, u):
     any output window)."""
     V = F.col(VALUE)
     arg1 = exp.args[1]
+    # the history to fetch before f: an interval window gives it; a point
+    # count needs the step, known only per frame, so the argument is built
+    # over the request window once to learn it (the reference does the same
+    # double take)
     if arg1.is_const():
-        n_points = exp.get_int(1)
         argstr = arg1.val_str
-        preview_of = lambda step: n_points * step  # noqa: E731
+        preview = exp.get_int(1) * eval_expr(ctx, exp.args[0], f, u).step
     else:
-        iv = abs(exp.get_interval(1))
         argstr = f"'{arg1.val_str or arg1.target}'"
-        preview_of = lambda step: iv  # noqa: E731
+        preview = abs(exp.get_interval(1))
 
     if exp.target == "movingWindow":
         cons = exp.get_string(2, "average")
@@ -268,10 +271,6 @@ def moving(ctx, exp, f, u):
         cons = _MOVING_CONS[exp.target]
         xff = exp.get_float(2, 0.0, names=("xFilesFactor",)) if len(exp.args) > 2 else 0.0
 
-    # fetch with extended history (step known only per-frame; fetch at lake
-    # step first to learn it, reference does the same double-take)
-    probe = eval_expr(ctx, exp.args[0], f, u)
-    preview = preview_of(probe.step)
     frame = eval_expr(ctx, exp.args[0], f - preview, u).densify()
     wp = preview // frame.step
     if wp <= 0:
@@ -306,7 +305,7 @@ def stdev(ctx, exp, f, u):
     """rolling population stddev of last N points (partial head windows
     allowed) — stdev/function.go:29-77."""
     V = F.col(VALUE)
-    frame = series_arg(ctx, exp, exp.args[0], f, u).densify()
+    frame = eval_expr(ctx, exp.args[0], f, u).densify()
     points = exp.get_int(1)
     tolerance = exp.get_float(2, 0.1)
     min_len = int((1 - tolerance) * points)
@@ -326,26 +325,19 @@ def stdev(ctx, exp, f, u):
 def n_percentile(ctx, exp, f, u):
     """flat line at the series' n-th percentile (non-interpolated)
     — nPercentile/function.go:32."""
-    V = F.col(VALUE)
-    frame = series_arg(ctx, exp, exp.args[0], f, u).densify()
+    frame = eval_expr(ctx, exp.args[0], f, u).densify()
     n = exp.get_float(1)
-    from carbonapi_spark.model.consolidation import percentile_column
-    per = (frame.df.groupBy(NAME, ORD)
-           .agg(percentile_column(V, n, False).cast("double").alias("__p")))
-    df = (frame.df.drop(VALUE).join(per.withColumnRenamed("__p", VALUE),
-                                    [NAME, ORD]))
+    per = frame.per_series(value=percentile_column(F.col(VALUE), n, False).cast("double"))
+    df = frame.df.drop(VALUE).join(per, ORD)
     return wrap_name("nPercentile", frame.with_df(df), exp.raw_arg(1))
 
 
 @register("aggregateLine")
 def aggregate_line(ctx, exp, f, u):
     """flat line at the per-series aggregate — aggregateLine/function.go:32."""
-    V = F.col(VALUE)
-    frame = series_arg(ctx, exp, exp.args[0], f, u).densify()
+    frame = eval_expr(ctx, exp.args[0], f, u).densify()
     func = exp.get_string(1, "average")
-    agg = agg_column(func, V, F.col(TS), 0.0).cast("double").alias("__a")
-    per = frame.df.groupBy(NAME, ORD).agg(agg)
-    df = frame.df.drop(VALUE).join(per.withColumnRenamed("__a", VALUE), [NAME, ORD])
+    df = frame.df.drop(VALUE).join(frame.per_series(value=func), ORD)
     return wrap_name("aggregateLine", frame.with_df(df), f"'{func}'")
 
 

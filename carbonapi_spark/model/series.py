@@ -19,30 +19,46 @@ DataFrame
 - ``ord`` is the stable series identity assigned at fetch time (the original
   name); it survives alias/name rewrites so order-sensitive operators
   (diffSeries first-arg, seriesList positional zips) stay deterministic in
-  an unordered engine,
+  an unordered engine. The serializer orders series by it, and only this
+  module rewrites it: :func:`union` prefixes each frame's ords with its
+  zero-padded position (``0000|``, ``0001|``, …) so list order survives
+  concatenation, and :meth:`SeriesFrame.rank` replaces ``ord`` with the
+  series' zero-padded rank (``%010d``),
 - frame-level metadata (step/start/stop/consolidation/xFilesFactor) rides on
   the Python wrapper: it is uniform per fetch by construction and combining
   frames of different steps goes through LCM re-consolidation
   (``expr/helper/align.go:76-189`` semantics).
 
+Per-series folds (one row per series, keyed by ``ord``) go through
+:meth:`SeriesFrame.per_series`, which holds the NULL rule for them: it
+reads the sparse frame only when every fold skips NULLs
+(:func:`~carbonapi_spark.model.consolidation.skips_nulls`), else the
+densified one. :meth:`SeriesFrame.keep` and :meth:`SeriesFrame.rank` join
+such a table back by broadcast.
+
 The series data is lazy DataFrame algebra: only the serializer collects it.
 Building a frame may still run small driver actions — a seriesByTag fetch
-resolves its names, sort/limit and a few extras collect per-series keys
-(see ``evaluator.py``).
+resolves its names, and a few operators (seriesLists, fallbackSeries,
+countValues, useSeriesAbove, applyByNode and the alias/shift-by-lookup
+extras) collect per-series keys (see ``evaluator.py``); sorts and limits
+stay lazy.
 """
 
 from __future__ import annotations
 
 import math
 from dataclasses import dataclass, replace
+from functools import reduce
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import Column, DataFrame, functions as F
+from pyspark.sql.window import Window
 
 from carbonapi_spark.datapipe import local_df as _local_df
 
 from carbonapi_spark.model.consolidation import agg_column, skips_nulls
 
 NAME, ORD, TS, VALUE = "name", "ord", "ts", "value"
+RANK = "__rank"
 SERIES_SCHEMA = "name STRING, ord STRING, ts BIGINT, value DOUBLE"
 
 
@@ -119,6 +135,39 @@ class SeriesFrame:
         return replace(self, df=df, start=start, stop=stop, dense=True)
 
     # ------------------------------------------------------------------
+    def per_series(self, *, xff: float = 0.0, **folds: str | Column) -> DataFrame:
+        """One row per series: ``(ord, <alias>…)``, one fold per alias.
+
+        A fold is a consolidation name, folded by :func:`agg_column` in
+        time order and gated by *xff*, or an aggregate Column over the
+        frame's columns that skips NULLs, as every SQL aggregate of a
+        column does (``count(*)`` does not). The sparse frame is read only
+        when every named fold :func:`skips_nulls`; otherwise the densified
+        one, so that a fold which counts rows counts the missing ones."""
+        named = [f for f in folds.values() if isinstance(f, str)]
+        src = self if all(skips_nulls(f, xff) for f in named) else self.densify()
+        aggs = [(agg_column(f, F.col(VALUE), F.col(TS), xff).cast("double")
+                 if isinstance(f, str) else f).alias(alias)
+                for alias, f in folds.items()]
+        return src.df.groupBy(ORD).agg(*aggs)
+
+    def keep(self, ords: DataFrame) -> "SeriesFrame":
+        """The series whose ``ord`` is in *ords* (a DataFrame with an
+        ``ord`` column), ``ord`` unchanged: a broadcast left-semi join."""
+        return self.with_df(self.df.join(F.broadcast(ords.select(ORD)), ORD,
+                                         "left_semi"))
+
+    def rank(self, per: DataFrame, *order: Column, n: int | None = None) -> "SeriesFrame":
+        """Reorder the series by *per* (one row per ``ord``) sorted on
+        *order* (see :func:`ranked`), keeping the first *n* if given:
+        ``ord`` becomes the zero-padded rank."""
+        ranks = ranked(per, *order, n=n).select(ORD, RANK)
+        df = (self.df.join(F.broadcast(ranks), ORD)
+              .withColumn(ORD, F.format_string("%010d", F.col(RANK)))
+              .drop(RANK))
+        return self.with_df(df)
+
+    # ------------------------------------------------------------------
     def consolidate_to(self, step: int, consolidation: str | None = None,
                        xff: float | None = None) -> "SeriesFrame":
         """Re-bucket to a coarser step using the series' consolidation
@@ -138,6 +187,15 @@ class SeriesFrame:
         start = self.start - self.start % step
         stop_last = (self.stop - 1) - (self.stop - 1) % step
         return replace(src, df=df, step=step, start=start, stop=stop_last + step)
+
+
+def ranked(per: DataFrame, *order: Column, n: int | None = None) -> DataFrame:
+    """*per* (one row per ``ord``) with its 1-based row number ``__rank``
+    by ``(*order, ord)``, the first *n* rows if given. ``ord`` breaks ties,
+    so the order is total. The window is unpartitioned: *per* is small."""
+    w = Window.orderBy(*order, F.col(ORD))
+    out = per.withColumn(RANK, F.row_number().over(w))
+    return out if n is None else out.where(F.col(RANK) <= n)
 
 
 # ----------------------------------------------------------------------
@@ -168,10 +226,23 @@ def align(frames: list[SeriesFrame]) -> list[SeriesFrame]:
             else replace(f, start=start, stop=stop, dense=False) for f in frames]
 
 
+def union(frames: list[SeriesFrame]) -> SeriesFrame:
+    """Concatenate series lists in order: each frame's ``ord`` is prefixed
+    with its zero-padded position (``0000|``…). The result spans all the
+    frames' bounds, and is dense only if they all are over the same
+    bounds; step and metadata are the first frame's."""
+    dfs = [f.df.withColumn(ORD, F.concat(F.lit(f"{i:04d}|"), F.col(ORD)))
+           for i, f in enumerate(frames)]
+    start = min(f.start for f in frames)
+    stop = max(f.stop for f in frames)
+    dense = all(f.dense and (f.start, f.stop) == (start, stop) for f in frames)
+    return replace(frames[0], df=reduce(DataFrame.unionByName, dfs),
+                   start=start, stop=stop, dense=dense)
+
+
 def combine(frames: list[SeriesFrame]) -> SeriesFrame:
-    """Align N frames, densify each and union them into one, with ``ord``
-    made globally order-stable across argument position (arg index
-    prefixes the ord key).
+    """:func:`union` of the frames aligned to one step and range, each
+    densified.
 
     Each frame is densified before its ``ord`` is prefixed. That fixes the
     order in which a fold over the combined frame adds its values, and so
@@ -180,11 +251,4 @@ def combine(frames: list[SeriesFrame]) -> SeriesFrame:
     frames = [f for f in frames if f is not None]
     if not frames:
         raise ValueError("combine() of zero frames")
-    aligned = [f.densify() for f in align(frames)]
-    dfs = []
-    for i, f in enumerate(aligned):
-        dfs.append(f.df.withColumn(ORD, F.concat(F.lit(f"{i:04d}|"), F.col(ORD))))
-    out = dfs[0]
-    for d in dfs[1:]:
-        out = out.unionByName(d)
-    return replace(aligned[0], df=out)
+    return union([f.densify() for f in align(frames)])

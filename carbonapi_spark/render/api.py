@@ -29,7 +29,6 @@ from carbonapi_spark.evaluator import (
 )
 from carbonapi_spark.parser import ParseError
 from carbonapi_spark.functions import REGISTRY
-from carbonapi_spark.model.series import combine
 from carbonapi_spark.render import metadata as meta
 from carbonapi_spark.render.cache import ExpireCache
 from carbonapi_spark.render.serialize import (

@@ -40,10 +40,6 @@ def find(lake: SeriesLake, query: str) -> list[dict]:
              "leaf": int(r["is_leaf"])} for r in rows]
 
 
-def find_treejson(entries: list[dict]) -> list[dict]:
-    return entries
-
-
 def find_completer(entries: list[dict]) -> dict:
     metrics = []
     for e in entries:

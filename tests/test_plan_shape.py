@@ -5,6 +5,8 @@ plans so a refactor that silently doubles the shuffles fails CI."""
 import itertools
 import re
 
+import pytest
+
 from carbonapi_spark.evaluator import EvalContext, eval_target
 from tests.conftest import make_lake
 
@@ -1101,6 +1103,44 @@ def test_sort_limit_render_job_count(spark, tmp_path):
     ranking a densified fetch ran 8 / 15."""
     assert _render_jobs(spark, tmp_path,
                         ["sortByMaxima(events.*.click)|limit(3)"]) == (6, 10)
+
+
+@pytest.mark.parametrize("target, jobs_stages", [
+    ("highestAverage(events.u*.click, 3)", (3, 4)),
+    ("sumSeries(events.u*.click)", (3, 6)),
+    ("groupByNode(events.u*.*, 2, 'sum')", (3, 6)),
+])
+def test_panel_render_job_count(spark, tmp_path, target, jobs_stages):
+    """(jobs, stages) of the dashboard's top-k, cross-series and grouped
+    fold panels: the per-series rank reads the sparse scan (average skips
+    NULLs); the folds read it too and densify their output."""
+    assert _render_jobs(spark, tmp_path, [target]) == jobs_stages
+
+
+def test_interval_window_builds_its_argument_once(spark, tmp_path,
+                                                  monkeypatch):
+    """movingAverage over an interval needs no step to size its history,
+    so a tagged argument resolves its names once; a point-count window
+    builds the argument a second time to learn the step."""
+    from carbonapi_spark.sources import lake as lake_mod
+    lake = _tagged_lake(spark, tmp_path)
+    calls = []
+    real = lake_mod.by_name
+
+    def by_name(*a, **kw):
+        calls.append(a)
+        return real(*a, **kw)
+
+    monkeypatch.setattr(lake_mod, "by_name", by_name)
+    for window, builds in (("'2min'", 1), ("2", 2)):
+        calls.clear()
+        eval_target(EvalContext(spark, lake, 0, 240),
+                    f"movingAverage(seriesByTag('name=app.req','dc=dc0'),{window})")
+        assert len(calls) == builds, window
+    calls.clear()
+    eval_target(EvalContext(spark, lake, 0, 240),
+                "exponentialMovingAverage(seriesByTag('name=app.req','dc=dc0'),'2min')")
+    assert len(calls) == 1
 
 
 def test_tagged_max_data_points_consolidates_sparse_plan(spark, tmp_path,

@@ -288,6 +288,28 @@ def test_http_bad_targets_are_400(server):
         assert code == 400, target
 
 
+def test_consolidate_by_unknown_function_is_400(spark, server):
+    """consolidateBy validates its function name when the target is built,
+    so a bad name is a client error whether or not maxDataPoints makes the
+    collect fold with it."""
+    from carbonapi_spark.evaluator import EvalError
+    from carbonapi_spark.render.api import GraphiteAPI
+    target = "consolidateBy(web.host1.cpu,'bogus')"
+    lake = make_lake(spark, {"web.host1.cpu": [1.0, 2.0, 3.0, 4.0]}, 1, 0)
+    for extra in ({}, {"maxDataPoints": ["2"]}):
+        with pytest.raises(EvalError, match="bogus"):
+            GraphiteAPI(spark, lake).render({
+                "target": [target], "from": ["0"], "until": ["4"],
+                "noCache": ["1"], **extra})
+    url = f"{server}/render?target={urllib.parse.quote(target)}&from=0&until=4"
+    for extra in ("", "&maxDataPoints=3"):
+        code, body = _get_no_raise(url + extra)
+        assert code == 400, body
+        assert b"bogus" in body
+    code, _ = _get_no_raise(url.replace("bogus", "max") + "&maxDataPoints=3")
+    assert code == 200
+
+
 def _pb_fields(buf: bytes):
     """Minimal proto3 wire decoder: yields (field, wire, value)."""
     i = 0

@@ -37,6 +37,21 @@ PANELS = [
     (("events.u*.click", "sumSeries(events.u*.view)"), 0),
 ]
 
+# targets whose per-series fold counts rows (SeriesFrame.per_series reads
+# the densified frame for them) or that concatenate series lists; no
+# catalog target or panel reaches these folds
+FOLDS = [
+    "sortBy(events.u*.click,'last')",
+    "highest(events.u*.view,2,'multiply')",
+    "filterSeries(events.u*.purchase,'first','>',0)",
+    "legendValue(events.u*.click,'avg','last')",
+    "tukeyBelow(events.u*.click,'diff',0)",
+    "cactiStyle(events.u*.error)",
+    "sortByMinima(events.u*.view)",
+    "timeStack(events.click,'1h',0,2)",
+    "join(events.u0.click,events.u1.click,'OR')",
+]
+
 TYPES = ("click", "view", "purchase", "signup", "error")
 HOURS = 48
 UNTIL = EVENTS_FROM + HOURS * EVENTS_STEP
@@ -99,8 +114,8 @@ def _assert_same_series(got, want):
 
 @pytest.mark.parametrize(
     "targets, mdp",
-    [((t,), 0) for t in CATALOG] + PANELS,
-    ids=[f"catalog:{t}" for t in CATALOG]
+    [((t,), 0) for t in CATALOG + FOLDS] + PANELS,
+    ids=[f"catalog:{t}" for t in CATALOG] + [f"fold:{t}" for t in FOLDS]
     + [f"panel:{'&'.join(t)}|mdp={m}" for t, m in PANELS])
 def test_missing_row_renders_like_null_row(spark, events_lakes, targets, mdp):
     sparse, nulls = events_lakes
