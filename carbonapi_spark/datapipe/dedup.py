@@ -852,30 +852,6 @@ def write_band_index(df: DataFrame, path: str, text_col: str = "text",
         raise
 
 
-def _band_l0(spark, path: str):
-    """The band index's L0 side table (``{path}/bands_l0``), or None —
-    the MinHash twin of the ANN ``codes_l0`` design (see
-    :func:`carbonapi_spark.datapipe.similarity._l0_delta`): ``l0=True``
-    appends land here UNPARTITIONED, one file per batch, instead of
-    fragmenting every touched (band, bucket) directory (measured r14:
-    a 500-doc delta touches all 256 combos, so each partitioned append
-    paid ~0.9 s of many-file write overhead for 0.17 s of data).
-    ``band``/``bucket`` ride along as ordinary columns, so probes
-    filter L0 with a pushed-down predicate; compaction folds it into
-    the partitioned layout and removes it."""
-    from pyspark.errors import AnalysisException
-
-    from carbonapi_spark.datapipe.maintenance import _hpath
-    p, fs = _hpath(spark, f"{path}/bands_l0")
-    if not fs.exists(p):
-        return None
-    try:
-        return spark.read.parquet(f"{path}/bands_l0")
-    except AnalysisException:
-        # first-append window: directory exists, no commits yet
-        return None
-
-
 def append_band_index(df: DataFrame, path: str, text_col: str = "text",
                       id_col: str = "doc_id", l0: bool = False) -> None:
     """Fold a delta batch into a durable band index: the delta is
@@ -884,59 +860,23 @@ def append_band_index(df: DataFrame, path: str, text_col: str = "text",
     build over corpus+delta (same rows, same partitions).  Refuses
     loudly while a ``_MAINTENANCE`` marker is present.
 
-    ``l0=True`` appends into the UNPARTITIONED ``bands_l0`` side table
-    instead — ONE file per append regardless of how many (band,
-    bucket) combos the delta touches (a small delta's keys spread
-    across essentially all of them, so every partitioned append
-    fragments the whole grid).  Probes read main ∪ L0 transparently
-    (:func:`_band_l0`); :func:`compact_band_index` folds L0 into the
-    partitioned layout and removes it.  Same trade as the ANN twin:
-    L0 rows are not partition-pruned at probe time, so keep L0
-    delta-sized and fold on a schedule."""
+    ``l0=True`` appends ONE file into the ``bands_l0`` side table
+    instead of one into every (band, bucket) combo the delta touches —
+    a small delta's keys spread across essentially all of them.  Probes
+    read main ∪ L0 and :func:`compact_band_index` folds L0 in: the L0
+    protocol of :mod:`carbonapi_spark.datapipe.maintenance`."""
     from carbonapi_spark.datapipe.maintenance import (
-        assert_not_under_maintenance)
+        append_delta, assert_not_under_maintenance)
     spark = df.sparkSession
     assert_not_under_maintenance(spark, path, "append_band_index")
     st = read_small_table(spark, f"{path}/stats")[0]
-    # A REPLAYED append (the at-least-once pattern every compact probe
-    # exercises) re-shingles and re-minhashes the identical delta; the
-    # banded rows are a pure function of (delta plan, frozen index
-    # params), so share them through the REQUEST-scoped scratch memo —
-    # the second append reuses the tracked signature blocks instead of
-    # re-running the whole encode pipeline (r15; released at the
-    # request boundary, so nothing crosses bench runs).  sameResult
-    # canonicalizes expression ids, so two separately-built but
-    # identical delta plans match.
-    from carbonapi_spark import scratch
-    params = ("band_delta", st["num_hashes"], st["bands"], st["ngram"],
-              st["seed"], st["n_buckets"], text_col, id_col)
-    hit = scratch.memo().get(params)
-    bucketed = None
-    if hit is not None:
-        try:
-            if df._jdf.queryExecution().analyzed().sameResult(
-                    hit[0].queryExecution().analyzed()):
-                bucketed = hit[1]
-        except Exception:
-            bucketed = None
-    if bucketed is None:
-        idx = minhash_band_index(df, text_col, id_col, st["num_hashes"],
-                                 st["bands"], st["ngram"], st["seed"])
-        bucketed = scratch.track(idx.withColumn(
-            "bucket",
-            F.pmod(F.xxhash64("key"), F.lit(st["n_buckets"])).cast("int")))
-        scratch.memo()[params] = (df._jdf, bucketed)
-    if l0:
-        # repartition(1), NOT coalesce(1): keep the banding/minhash
-        # pipeline at input parallelism; only the single write task is
-        # serial (the ANN L0 lesson — SCALE.md r14)
-        bucketed.repartition(1).write.mode("append") \
-            .parquet(f"{path}/bands_l0")
-        return
-    (combo_repartition(bucketed, ["band", "bucket"],
-                       st["bands"] * st["n_buckets"])
-     .write.mode("append").partitionBy("band", "bucket")
-     .parquet(f"{path}/bands"))
+    idx = minhash_band_index(df, text_col, id_col, st["num_hashes"],
+                             st["bands"], st["ngram"], st["seed"])
+    bucketed = idx.withColumn(
+        "bucket",
+        F.pmod(F.xxhash64("key"), F.lit(st["n_buckets"])).cast("int"))
+    append_delta(bucketed, path, "bands", ["band", "bucket"],
+                 st["bands"] * st["n_buckets"], l0)
 
 
 def compact_band_index(spark, path: str,
@@ -951,25 +891,15 @@ def compact_band_index(spark, path: str,
     a bucket past the probe's ``max_bucket`` truncation cap, changing
     candidate sets.  Same modes/caveats as the shared kernel
     (:func:`carbonapi_spark.datapipe.maintenance.compact_partitioned`);
-    ``fragmented_only=True`` rewrites only >1-file partitions."""
-    from carbonapi_spark.datapipe.maintenance import (_hpath,
-                                                      compact_partitioned,
-                                                      maintenance_lock,
-                                                      table_row_count)
+    ``fragmented_only=True`` rewrites only >1-file partitions.  A
+    ``bands_l0`` side table is folded in and removed
+    (``l0_rows_folded``), per the maintenance module's L0 protocol."""
+    from carbonapi_spark.datapipe.maintenance import (compact_with_l0,
+                                                      maintenance_lock)
     with maintenance_lock(spark, path, "compact_band_index"):
-        l0 = _band_l0(spark, path)
-        n_l0 = (table_row_count(spark, f"{path}/bands_l0", l0)
-                if l0 is not None else 0)
-        stats = compact_partitioned(spark, f"{path}/bands",
-                                    ["band", "key", "doc_id"],
-                                    ["band", "bucket"], fragmented_only,
-                                    extra_df=l0, extra_rows=n_l0)
-        if l0 is not None:
-            lp, fs = _hpath(spark, f"{path}/bands_l0")
-            fs.delete(lp, True)
-            spark.catalog.refreshByPath(f"{path}/bands_l0")
-            stats["l0_rows_folded"] = n_l0
-        return stats
+        return compact_with_l0(spark, path, "bands",
+                               ["band", "key", "doc_id"],
+                               ["band", "bucket"], fragmented_only)
 
 
 def delete_from_band_index(spark, path: str, doc_ids,
@@ -986,8 +916,8 @@ def delete_from_band_index(spark, path: str, doc_ids,
     appends into an emptied index resume the (band, bucket) layout
     only after a rebuild."""
     from carbonapi_spark.datapipe.maintenance import (
-        delete_rows_partitioned, maintenance_lock)
-    from carbonapi_spark.datapipe.maintenance import read_index_table
+        delete_from_l0, delete_rows_partitioned, maintenance_lock,
+        read_index_table, read_l0, table_row_count)
     if isinstance(doc_ids, (list, tuple, set)):
         dt = read_index_table(spark, f"{path}/bands") \
             .schema["doc_id"].dataType.simpleString()
@@ -996,7 +926,7 @@ def delete_from_band_index(spark, path: str, doc_ids,
     else:
         ids_df = doc_ids.select(F.col(id_col).alias("doc_id"))
     with maintenance_lock(spark, path, "delete_from_band_index"):
-        n_l0 = _delete_from_band_l0(spark, path, ids_df)
+        n_l0 = delete_from_l0(spark, path, "bands", ids_df, "doc_id")
         stats = delete_rows_partitioned(spark, f"{path}/bands", ids_df,
                                         ["doc_id"], ["band", "bucket"])
         stats["rows_deleted"] += n_l0
@@ -1004,37 +934,11 @@ def delete_from_band_index(spark, path: str, doc_ids,
         # include L0 survivors so the stats stay internally consistent
         # when a bands_l0 side table outlives the deletion (ADVICE r14).
         # Footer-based count — zero Spark jobs on local paths.
-        if _band_l0(spark, path) is not None:
-            from carbonapi_spark.datapipe.maintenance import \
-                table_row_count
+        l0 = read_l0(spark, path, "bands")
+        if l0 is not None:
             stats["rows_after"] += table_row_count(
-                spark, f"{path}/bands_l0")
+                spark, f"{path}/bands_l0", l0)
         return stats
-
-
-def _delete_from_band_l0(spark, path: str, ids_df) -> int:
-    """Drop ``ids_df`` docs from the band L0 side table, if present —
-    the band twin of the ANN ``_delete_from_l0`` (delta-sized by
-    contract: plain rewrite through a rename swap; an emptied L0 is
-    removed outright).  Returns rows deleted."""
-    from carbonapi_spark.datapipe.maintenance import _hpath, swap_in
-    l0 = _band_l0(spark, path)
-    if l0 is None:
-        return 0
-    n_hit = l0.join(F.broadcast(ids_df), "doc_id").count()
-    if n_hit == 0:
-        return 0
-    lp, fs = _hpath(spark, f"{path}/bands_l0")
-    keep = l0.join(F.broadcast(ids_df), "doc_id", "left_anti")
-    if keep.isEmpty():
-        fs.delete(lp, True)
-        spark.catalog.refreshByPath(f"{path}/bands_l0")
-        return n_hit
-    stage = f"{path}/bands_l0.deleting"
-    keep.coalesce(1).write.mode("overwrite").parquet(stage)
-    swap_in(spark, f"{path}/bands_l0", stage,
-            f"{path}/bands_l0.predelete", "_delete_from_band_l0")
-    return n_hit
 
 
 def probe_band_index(spark, path: str, new_docs: DataFrame,
@@ -1079,7 +983,8 @@ def probe_band_index(spark, path: str, new_docs: DataFrame,
             *[F.struct(F.lit(b), F.lit(k)) for b, k in pairs_lit])
         idx = idx.where(cond)
     idx = idx.select("band", "key", "doc_id")
-    l0 = _band_l0(spark, path)
+    from carbonapi_spark.datapipe.maintenance import read_l0
+    l0 = read_l0(spark, path, "bands")
     if l0 is not None:
         # L0 rows carry band/bucket as ordinary columns — the same
         # combo restriction arrives as a pushed-down parquet predicate

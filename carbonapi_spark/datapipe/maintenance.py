@@ -1,5 +1,6 @@
-"""Durable-index maintenance: compaction for the partitioned Parquet
-index layouts (ANN cells, MinHash bands, BM25 postings).
+"""Durable-index maintenance: compaction, deletion and the L0 side
+table for the partitioned Parquet index layouts (ANN cells, MinHash
+bands, BM25 postings).
 
 All three durable indexes share the same operational exposure: their
 ``append_*`` twins run in retried batch jobs (and, for ANN, a
@@ -16,6 +17,41 @@ so a replayed row re-derives identically), which makes key-based
 :func:`carbonapi_spark.datapipe.dedup.compact_band_index`,
 :func:`carbonapi_spark.datapipe.retrieval.compact_text_index`) add the
 index-specific keys and side tables.
+
+The L0 protocol
+---------------
+A partitioned index table ``{path}/{name}`` (``codes`` for ANN,
+``bands`` for MinHash) may carry an L0 side table ``{path}/{name}_l0``:
+the same rows, partition columns included as ordinary columns, written
+UNPARTITIONED.  It is the LSM-style answer to append fragmentation
+(Krypton, VLDB 2023: keep appends cheap, push the work into
+compaction).  A partitioned append writes one file into EVERY
+partition its delta touches, and a small delta's keys spread across
+nearly all of them (measured r14: a 500-doc band delta touched all 256
+(band, bucket) combos; a 2 s-tick ANN stream fragmented all 256 cells
+per batch).  An L0 append is ONE file, whatever the spread.  The four
+helpers at the end of this module are the whole protocol:
+
+- :func:`append_delta` writes one append: ``repartition(1)`` into L0
+  (not ``coalesce(1)``, which would serialize the delta's encode
+  pipeline into the single write task), or ``combo_repartition`` +
+  ``partitionBy`` into the main table.
+- :func:`read_l0` is what probes union with the main table.  The
+  probe's partition restriction becomes a pushed-down Parquet
+  predicate on L0 instead of partition pruning — the right trade for a
+  table that is delta-sized by contract.  An absent L0 is the normal
+  steady state; the first-append window (directory made, nothing
+  committed yet) also reads as no L0.
+- :func:`delete_from_l0` rewrites L0 whole through :func:`swap_in`;
+  an L0 emptied entirely is removed, not left as a placeholder.
+- :func:`compact_with_l0` folds L0 into the partitioned layout in the
+  same pass as the dedupe (``compact_partitioned(extra_df=)``), then
+  removes L0.  A crash between the fold commit and the removal leaves
+  the folded rows in both places: exact duplicates that a probe-side
+  dedupe hides and a retried compaction removes durably.
+
+Appends into L0 refuse under a maintenance marker exactly like
+partitioned appends (the caller's check).  The text index has no L0.
 """
 
 from __future__ import annotations
@@ -25,6 +61,8 @@ import os
 import threading
 
 from pyspark.sql import functions as F
+
+from carbonapi_spark.datapipe import combo_repartition, local_df
 
 
 def _hpath(spark, path: str):
@@ -129,7 +167,6 @@ def _ensure_readable(spark, path: str, schema) -> None:
     while it.hasNext():
         if it.next().getPath().getName().endswith(".parquet"):
             return
-    from carbonapi_spark.datapipe import local_df
     local_df(spark, [], schema).coalesce(1) \
         .write.mode("append").parquet(path)
 
@@ -156,7 +193,6 @@ def delete_rows_partitioned(spark, table_path: str, ids_df,
                                     partition_cols))
     keep = df.join(F.broadcast(ids_df), join_cols, "left_anti")
     tmp = f"{table_path}.deleting"
-    from carbonapi_spark.datapipe import combo_repartition
     (combo_repartition(keep, partition_cols,
                        df.sparkSession.sparkContext.defaultParallelism)
      .write.mode("overwrite")
@@ -362,7 +398,6 @@ def _combo_df(spark, combos, df, partition_cols: list[str]):
     measurements showed SQL-literal predicates carry a real per-query
     fixed cost, while a broadcast semi-join against a local relation is
     identical semantics with no literal codegen at any combo count)."""
-    from carbonapi_spark.datapipe import local_df
     ddl = ", ".join(
         f"`{c}` {df.schema[c].dataType.simpleString()}"
         for c in partition_cols)
@@ -511,14 +546,11 @@ def compact_partitioned(spark, table_path: str, key_cols: list[str],
     before/after + ``partitions_rewritten``.
 
     ``extra_df`` folds a side table into the partitioned layout in the
-    same pass (the L0-delta fold: ``partition_cols`` are ordinary
-    columns there).  In ``fragmented_only`` mode every partition combo
-    PRESENT in ``extra_df`` counts as fragmented — its rows have to be
-    merged into the combo's directory, so that combo must be rewritten
-    whether or not the main table fragmented it.  The CALLER removes
-    the side table after this returns; a crash in between leaves the
-    folded rows in both places — exact duplicates that a probe-side
-    dedupe hides and a retry (idempotent dedupe) removes durably.
+    same pass (the L0 fold of :func:`compact_with_l0`: ``partition_cols``
+    are ordinary columns there).  In ``fragmented_only`` mode every
+    partition combo PRESENT in ``extra_df`` counts as fragmented — its
+    rows have to be merged into the combo's directory, so that combo
+    must be rewritten whether or not the main table fragmented it.
     ``extra_rows`` lets a caller that already counted ``extra_df``
     skip the recount.
 
@@ -574,7 +606,6 @@ def compact_partitioned(spark, table_path: str, key_cols: list[str],
                            "left_semi")
         if extra_df is not None:
             to_stage = to_stage.unionByName(extra_df)
-        from carbonapi_spark.datapipe import combo_repartition
         (combo_repartition(to_stage, partition_cols, n_frag)
          .dropDuplicates(dedup_keys)
          .write.mode("overwrite")
@@ -585,7 +616,6 @@ def compact_partitioned(spark, table_path: str, key_cols: list[str],
     else:
         tmp = f"{table_path}.compacting"
         full = (df if extra_df is None else df.unionByName(extra_df))
-        from carbonapi_spark.datapipe import combo_repartition
         (combo_repartition(full, partition_cols, max(1, len(per)))
          .dropDuplicates(dedup_keys)
          .write.mode("overwrite")
@@ -610,3 +640,77 @@ def compact_partitioned(spark, table_path: str, key_cols: list[str],
             "files_before": f_before,
             "files_after": sum(r["__nf"] for r in per_after),
             "partitions_rewritten": rewritten}
+
+
+# ------------------------------------------------------------ L0 protocol
+# (see the module docstring)
+
+def read_l0(spark, path: str, name: str):
+    """``{path}/{name}_l0`` as a DataFrame, or None when there is no L0
+    — including the first-append window, where the directory exists
+    but holds no committed parquet yet (only ``_temporary``), which
+    must read as "no L0" rather than UNABLE_TO_INFER_SCHEMA."""
+    from pyspark.errors import AnalysisException
+    p, fs = _hpath(spark, f"{path}/{name}_l0")
+    if not fs.exists(p):
+        return None
+    try:
+        return spark.read.parquet(f"{path}/{name}_l0")
+    except AnalysisException:
+        return None
+
+
+def append_delta(delta, path: str, name: str, partition_cols: list[str],
+                 n_combos: int, l0: bool) -> None:
+    """Append ``delta`` to index table ``name``: ONE file into L0 when
+    ``l0``, else one file per touched combo of the partitioned table."""
+    if l0:
+        delta.repartition(1).write.mode("append") \
+            .parquet(f"{path}/{name}_l0")
+    else:
+        (combo_repartition(delta, partition_cols, n_combos)
+         .write.mode("append").partitionBy(*partition_cols)
+         .parquet(f"{path}/{name}"))
+
+
+def delete_from_l0(spark, path: str, name: str, ids_df,
+                   id_col: str) -> int:
+    """Drop the rows matching ``ids_df`` on ``id_col`` from L0, if there
+    is one; returns the rows deleted."""
+    l0 = read_l0(spark, path, name)
+    if l0 is None:
+        return 0
+    n_hit = l0.join(F.broadcast(ids_df), id_col).count()
+    if n_hit == 0:
+        return 0
+    live = f"{path}/{name}_l0"
+    keep = l0.join(F.broadcast(ids_df), id_col, "left_anti")
+    if keep.isEmpty():
+        lp, fs = _hpath(spark, live)
+        fs.delete(lp, True)
+        spark.catalog.refreshByPath(live)
+        return n_hit
+    keep.coalesce(1).write.mode("overwrite").parquet(f"{live}.deleting")
+    swap_in(spark, live, f"{live}.deleting", f"{live}.predelete",
+            "delete_from_l0")
+    return n_hit
+
+
+def compact_with_l0(spark, path: str, name: str, key_cols: list[str],
+                    partition_cols: list[str],
+                    fragmented_only: bool) -> dict:
+    """:func:`compact_partitioned` over ``{path}/{name}`` with L0 folded
+    in, then L0 removed; adds ``l0_rows_folded`` when there was one.
+    The caller holds the :func:`maintenance_lock`."""
+    live = f"{path}/{name}_l0"
+    l0 = read_l0(spark, path, name)
+    n_l0 = table_row_count(spark, live, l0) if l0 is not None else 0
+    stats = compact_partitioned(spark, f"{path}/{name}", key_cols,
+                                partition_cols, fragmented_only,
+                                extra_df=l0, extra_rows=n_l0)
+    if l0 is not None:
+        lp, fs = _hpath(spark, live)
+        fs.delete(lp, True)
+        spark.catalog.refreshByPath(live)
+        stats["l0_rows_folded"] = n_l0
+    return stats

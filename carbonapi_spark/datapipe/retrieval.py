@@ -326,52 +326,27 @@ def append_text_index(df: DataFrame, path: str, text_col: str = "text",
     assert_not_under_maintenance(spark, path, "append_text_index")
     stats_row = read_small_table(spark, f"{path}/stats")[0]
     n_buckets = stats_row["n_buckets"]
-    # A REPLAYED append (the at-least-once pattern text_compact_probe
-    # exercises) re-tokenizes the identical delta twice over; the
-    # bucketed postings and the per-doc lengths are pure functions of
-    # (delta plan, n_buckets), so share them through the REQUEST-scoped
-    # scratch memo exactly like append_band_index/append_ann_index —
-    # the second append writes from the tracked tables instead of
-    # re-running the tokenize pipeline (r15; released at the request
-    # boundary, nothing crosses bench runs).  The replay still APPENDS
-    # its rows again — only the computation is shared, not the write.
-    from carbonapi_spark import scratch
-    params = ("text_delta", n_buckets, text_col, id_col)
-    hit = scratch.memo().get(params)
-    bucketed = lengths_base = None
-    if hit is not None:
-        try:
-            if df._jdf.queryExecution().analyzed().sameResult(
-                    hit[0].queryExecution().analyzed()):
-                bucketed, lengths_base = hit[1], hit[2]
-        except Exception:
-            bucketed = lengths_base = None
-    if bucketed is None:
-        tf = (df.select(F.col(id_col).alias("doc_id"),
-                        F.explode(tokens(F.lower(F.col(text_col))))
-                        .alias("term"))
-              .groupBy("doc_id", "term")
-              .agg(F.count(F.lit(1)).alias("tf")))
-        bucketed = scratch.track(tf.withColumn(
-            "bucket",
-            F.pmod(F.xxhash64("term"), F.lit(n_buckets)).cast("int")))
-        lengths_base = scratch.track(
-            df.select(F.col(id_col).alias("doc_id"),
-                      token_count(F.col(text_col)).cast("long")
-                      .alias("dl")))
-        scratch.memo()[params] = (df._jdf, bucketed, lengths_base)
+    bucketed = (df.select(F.col(id_col).alias("doc_id"),
+                          F.explode(tokens(F.lower(F.col(text_col))))
+                          .alias("term"))
+                .groupBy("doc_id", "term")
+                .agg(F.count(F.lit(1)).alias("tf"))
+                .withColumn("bucket", F.pmod(F.xxhash64("term"),
+                                             F.lit(n_buckets)).cast("int")))
     # delta totals ride the doclens append job as observed metrics
     # (guide §2.4: the old separate agg re-ran the tokenize pass); the
     # independent postings append overlaps the doclens+stats chain
     # from a second driver thread (guide §2.6).  The Observation is
-    # PER-APPEND (each append merges its delta into the stats it read),
-    # attached on top of the shared lengths table.
+    # PER-APPEND: each append merges its delta into the stats it read.
     from pyspark.sql import Observation
 
     from carbonapi_spark.datapipe import overlap_jobs
     obs = Observation()
-    lengths = lengths_base.observe(obs, F.count(F.lit(1)).alias("n"),
-                                   F.sum("dl").alias("s"))
+    lengths = (df.select(F.col(id_col).alias("doc_id"),
+                         token_count(F.col(text_col)).cast("long")
+                         .alias("dl"))
+               .observe(obs, F.count(F.lit(1)).alias("n"),
+                        F.sum("dl").alias("s")))
 
     def _doclens_then_stats():
         lengths.write.mode("append").parquet(f"{path}/doclens")

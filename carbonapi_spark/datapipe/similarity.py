@@ -188,28 +188,6 @@ def brute_force_topk_arrow(corpus: DataFrame, query: DataFrame,
             .where(F.col("__rk") <= k).drop("__rk"))
 
 
-def hyperplane_signature(vec: Column, planes: list[list[float]]) -> Column:
-    """Random-hyperplane LSH signature: bit i = sign(dot(vec, plane_i))."""
-    bits = [F.when(dot(_as_double(vec), F.array(*[F.lit(p) for p in plane])) > 0,
-                   F.lit(1)).otherwise(F.lit(0))
-            for plane in planes]
-    return F.concat_ws("", *[b.cast("string") for b in bits])
-
-
-def _vec_lit_sql(vals: list[float]) -> str:
-    return "array(" + ",".join(repr(float(x)) + "D" for x in vals) + ")"
-
-
-def _dot_sql(vec_sql: str, vals: list[float]) -> str:
-    """SQL for dot(vec, literal) — same zip_with/aggregate fold as
-    ``dot()``, built as one string so the literal-heavy ANN projections
-    cost one parse instead of a py4j call per element (the
-    ``minhash_signatures_df`` trick; ~0.5-1 s driver time per query at
-    dim 64)."""
-    return (f"aggregate(zip_with({vec_sql}, {_vec_lit_sql(vals)}, "
-            f"(x, y) -> x * y), 0.0D, (acc, x) -> acc + x)")
-
-
 def _signature_sql(vec_sql: str, planes: list[list[float]]) -> str:
     # ONE transform HOF over the constant-folded plane matrix (r14; the
     # _cell_score_sql rationale) — per-plane fold and bit order are
@@ -518,15 +496,6 @@ def pq_train(sample: list[list[float]], m: int = 8, ksub: int = 16,
     return out
 
 
-def _nested_array_lit(rows: list[list[float]]) -> Column:
-    """array<array<double>> literal; built from one SQL string so Catalyst
-    constant-folds it into a single Literal instead of per-row CreateArray."""
-    body = ",".join(
-        "array(" + ",".join(repr(float(x)) + "D" for x in row) + ")"
-        for row in rows)
-    return F.expr(f"array({body})")
-
-
 def _cb_sql(rows: list[list[float]]) -> str:
     """Nested array<array<double>> literal SQL (constant-folded by
     Catalyst into one Literal)."""
@@ -545,17 +514,6 @@ def _sqdists_sql(vec_sql: str, cb: list[list[float]], j: int,
     return (f"transform({_cb_sql(cb)}, cw -> aggregate(zip_with("
             f"slice({vec_sql}, {j * dsub + 1}, {dsub}), cw, "
             f"(x, y) -> (x - y) * (x - y)), 0.0D, (acc, x) -> acc + x))")
-
-
-def _sub_sqdists(vec: Column, cb_lit: Column, j: int, dsub: int) -> Column:
-    """Column form of ``_sqdists_sql`` (kept for composition with
-    non-SQL callers, e.g. the oracle-margin analysis)."""
-    sub = F.slice(vec, j * dsub + 1, dsub)
-    return F.transform(
-        cb_lit,
-        lambda cw: F.aggregate(F.zip_with(sub, cw,
-                                          lambda x, y: (x - y) * (x - y)),
-                               F.lit(0.0), lambda acc, x: acc + x))
 
 
 def _pq_code_sql(vec_sql: str, codebooks: list[list[list[float]]]) -> str:
@@ -872,16 +830,44 @@ def _probe_rows_df(spark, query: DataFrame, id_col: str,
                      f"`__dtab` array<array<double>>")
 
 
-def _driver_probe_tables(query: DataFrame, cents: list[list[float]],
-                         cbs: list[list[list[float]]], nprobe: int,
-                         id_col: str, vec_col: str, l2: bool,
-                         residual: bool, dsub: int) -> DataFrame:
-    """DataFrame form of :func:`_driver_probe_rows` — the
-    ``query_tables="driver"`` path of :func:`ivfpq_topk`."""
-    return _probe_rows_df(
-        query.sparkSession, query, id_col,
-        _driver_probe_rows(query, cents, cbs, nprobe, id_col, vec_col,
-                           l2, residual, dsub))
+def _sql_probe_tables(query: DataFrame, cents: list[list[float]],
+                      cbs: list[list[list[float]]], nprobe: int,
+                      id_col: str, vec_col: str, l2: bool,
+                      residual: bool) -> DataFrame:
+    """(query_id, __cell, __dtab) probe rows as one SQL fold — the
+    default ``query_tables="sql"`` path: each query's ``nprobe``
+    best-scoring cells (ties to the lowest cell index), each with its
+    ADC distance table, built from the query residual ``q - c_cell``
+    when ``residual``.  :func:`ivfpq_topk` joins it; :func:`ann_index_topk`
+    collects it, so one query-side job serves both the pruning cell set
+    and the probe."""
+    qv = f"cast({vec_col} as array<double>)"
+    dsub = len(cbs[0][0])
+    wq = Window.partitionBy("query_id").orderBy(F.col("__dot").desc(),
+                                                F.col("__pos"))
+    head = (f"{qv} as __qv" if residual else "array(" + ",".join(
+        _sqdists_sql(qv, cbs[j], j, dsub) for j in range(len(cbs)))
+        + ") as __dtab")
+    carry = "__qv" if residual else "__dtab"
+    q = (selectx(query, f"{id_col} as query_id", head,
+                 f"{_cell_score_sql(qv, cents, l2=l2)} as __d")
+         .select("query_id", carry,
+                 F.posexplode("__d").alias("__pos", "__dot"))
+         .withColumn("__rk", F.row_number().over(wq))
+         .where(F.col("__rk") <= nprobe)
+         .select("query_id",
+                 (F.col("__pos") + 1).cast("int").alias("__cell"), carry))
+    if not residual:
+        return q
+    # probe cells FIRST, then one distance table per (query, cell) from
+    # the matching residual — computed once per probe row
+    rq = (f"zip_with(__qv, element_at({_cb_sql(cents)}, __cell), "
+          f"(x, y) -> x - y)")
+    q = selectx(q, "query_id", "__cell", f"{rq} as __rq")
+    dtab = "array(" + ",".join(
+        _sqdists_sql("__rq", cbs[j], j, dsub)
+        for j in range(len(cbs))) + ")"
+    return selectx(q, "query_id", "__cell", f"{dtab} as __dtab")
 
 
 def ivfpq_topk(corpus: DataFrame, query: DataFrame, k: int = 10,
@@ -958,12 +944,6 @@ def ivfpq_topk(corpus: DataFrame, query: DataFrame, k: int = 10,
                           "__cell", "__codes", l2_cells=l2_cells,
                           residual=residual)
              .withColumnRenamed(id_col, "neighbor_id"))
-    qv = f"cast({vec_col} as array<double>)"
-    if probe_tables is None and query_tables != "driver":
-        # only the SQL branches pay these literal-heavy constructions
-        cell_dots = _cell_score_sql(qv, cents, l2=l2_cells)
-        wq = Window.partitionBy("query_id").orderBy(F.col("__dot").desc(),
-                                                    F.col("__pos"))
     if probe_tables is not None:
         q = probe_tables  # precomputed (query_id, __cell, __dtab) rows
     elif query_tables == "driver":
@@ -975,37 +955,13 @@ def ivfpq_topk(corpus: DataFrame, query: DataFrame, k: int = 10,
         # per probe batch at (256 cells, PQ8x8). Values can differ from
         # the SQL fold in the last ulp (numpy sum order), so catalog
         # oracle entries keep the default.
-        q = _driver_probe_tables(query, cents, cbs, nprobe, id_col,
-                                 vec_col, l2_cells, residual, dsub)
-    elif residual:
-        # probe cells FIRST, then one distance table per (query, cell)
-        # from the matching residual — computed once per probe row
-        q0 = (selectx(query, f"{id_col} as query_id", f"{qv} as __qv",
-                      f"{cell_dots} as __d")
-              .select("query_id", "__qv",
-                      F.posexplode("__d").alias("__pos", "__dot")))
-        q = (q0.withColumn("__rk", F.row_number().over(wq))
-             .where(F.col("__rk") <= nprobe)
-             .select("query_id", "__qv",
-                     (F.col("__pos") + 1).cast("int").alias("__cell")))
-        rq = (f"zip_with(__qv, element_at({_cb_sql(cents)}, __cell), "
-              f"(x, y) -> x - y)")
-        q = selectx(q, "query_id", "__cell", f"{rq} as __rq")
-        dtab = "array(" + ",".join(
-            _sqdists_sql("__rq", cbs[j], j, dsub)
-            for j in range(len(cbs))) + ")"
-        q = selectx(q, "query_id", "__cell", f"{dtab} as __dtab")
+        q = _probe_rows_df(
+            query.sparkSession, query, id_col,
+            _driver_probe_rows(query, cents, cbs, nprobe, id_col,
+                               vec_col, l2_cells, residual, dsub))
     else:
-        dtab = "array(" + ",".join(
-            _sqdists_sql(qv, cbs[j], j, dsub) for j in range(len(cbs))) + ")"
-        q0 = (selectx(query, f"{id_col} as query_id", f"{dtab} as __dtab",
-                      f"{cell_dots} as __d")
-              .select("query_id", "__dtab",
-                      F.posexplode("__d").alias("__pos", "__dot")))
-        q = (q0.withColumn("__rk", F.row_number().over(wq))
-             .where(F.col("__rk") <= nprobe)
-             .select("query_id", "__dtab",
-                     (F.col("__pos") + 1).cast("int").alias("__cell")))
+        q = _sql_probe_tables(query, cents, cbs, nprobe, id_col, vec_col,
+                              l2_cells, residual)
     adc = F.aggregate(
         F.zip_with(F.col("__codes"), F.col("__dtab"),
                    lambda code, tab: F.element_at(tab, code)),
@@ -1265,94 +1221,6 @@ def read_ann_index(spark, path: str):
     return codes, centroids, codebooks, l2_cells, residual
 
 
-def _l0_delta(spark, path: str):
-    """The index's L0 side table (``{path}/codes_l0``), or None.
-
-    ``l0=True`` appends land here UNPARTITIONED, one file per batch —
-    the LSM-style answer to streaming-append fragmentation: a
-    cell-partitioned append writes one file into EVERY touched cell
-    per micro-batch (measured in SCALE.md r14: a 2 s-tick stream
-    fragments all 256 cells each batch — ~43k files/cell/day), while
-    an L0 batch is exactly ONE file regardless of cell spread.  The
-    ``cell`` assignment rides along as an ordinary column, so probes
-    filter it with a pushed-down predicate instead of partition
-    pruning — the right trade for a table that is delta-sized by
-    contract (compaction folds it into the cell layout and removes
-    it; an absent directory is the normal steady state)."""
-    from pyspark.errors import AnalysisException
-
-    from carbonapi_spark.datapipe.maintenance import _hpath
-    p, fs = _hpath(spark, f"{path}/codes_l0")
-    if not fs.exists(p):
-        return None
-    try:
-        return spark.read.parquet(f"{path}/codes_l0")
-    except AnalysisException:
-        # the very FIRST l0 append creates the directory before its
-        # parquet commits land (only _temporary inside) — a probe in
-        # that window must see "no L0 yet", not UNABLE_TO_INFER_SCHEMA
-        return None
-
-
-def _build_probe_rows(spark, query: DataFrame, cents, cbs, nprobe: int,
-                      id_col: str, vec_col: str, l2_cells: bool,
-                      residual: bool):
-    """The SQL-fold query-side routing job of :func:`ann_index_topk`:
-    ONE collect serves BOTH the pruning cell set and the ADC distance
-    tables (r15) — the old shape collected bare cells and then
-    re-CONSTRUCTED the whole literal-heavy query pipeline inside
-    ivfpq_topk (~20 eagerly-analyzed DataFrame ops over
-    n_centroids*dim + m*ksub*dsub literal trees, twice).  The dtab
-    values come from the SAME SQL fold the inline plan evaluated, so
-    every ADC distance is bit-identical (oracle-pinned); they just
-    travel as DATA (nprobe x m x ksub doubles per query — query
-    batches are small by the probe contract, which is why the cells
-    collect was already driver-side).  Returns (rows, cells,
-    probe_df)."""
-    v = f"cast({vec_col} as array<double>)"
-    scores = _cell_score_sql(v, cents, l2=l2_cells)
-    dsub = len(cbs[0][0])
-    wq = Window.partitionBy("query_id").orderBy(
-        F.col("__s").desc(), F.col("__pos"))
-    if residual:
-        q1 = (selectx(query, f"{id_col} as query_id", f"{v} as __qv",
-                      f"{scores} as __d")
-              .select("query_id", "__qv",
-                      F.posexplode("__d").alias("__pos", "__s"))
-              .withColumn("__rk", F.row_number().over(wq))
-              .where(F.col("__rk") <= nprobe)
-              .select("query_id", "__qv",
-                      (F.col("__pos") + 1).cast("int")
-                      .alias("__cell")))
-        rq = (f"zip_with(__qv, element_at({_cb_sql(cents)}, __cell), "
-              f"(x, y) -> x - y)")
-        q1 = selectx(q1, "query_id", "__cell", f"{rq} as __rq")
-        dtab = "array(" + ",".join(
-            _sqdists_sql("__rq", cbs[j], j, dsub)
-            for j in range(len(cbs))) + ")"
-        q1 = selectx(q1, "query_id", "__cell", f"{dtab} as __dtab")
-    else:
-        dtab = "array(" + ",".join(
-            _sqdists_sql(v, cbs[j], j, dsub)
-            for j in range(len(cbs))) + ")"
-        q1 = (selectx(query, f"{id_col} as query_id",
-                      f"{dtab} as __dtab", f"{scores} as __d")
-              .select("query_id", "__dtab",
-                      F.posexplode("__d").alias("__pos", "__s"))
-              .withColumn("__rk", F.row_number().over(wq))
-              .where(F.col("__rk") <= nprobe)
-              .select("query_id",
-                      (F.col("__pos") + 1).cast("int").alias("__cell"),
-                      "__dtab"))
-    probe_rows = q1.collect()
-    cells = sorted({r["__cell"] for r in probe_rows})
-    probe_df = _probe_rows_df(
-        spark, query, id_col,
-        [(r["query_id"], r["__cell"], r["__dtab"])
-         for r in probe_rows])
-    return probe_rows, cells, probe_df
-
-
 def ann_index_topk(spark, path: str, query: DataFrame, k: int = 10,
                    nprobe: int = 2, refine: int | None = None,
                    corpus: DataFrame | None = None,
@@ -1393,67 +1261,31 @@ def ann_index_topk(spark, path: str, query: DataFrame, k: int = 10,
                          "index built with store_vectors=True, for the "
                          "exact rerank stage")
     dim = len(cents[0])
-    probe_df = None
+    # ONE query-side job serves BOTH the pruning cell set and the ADC
+    # distance tables (r15): the tables travel to ivfpq_topk as DATA
+    # (nprobe x m x ksub doubles per query — query batches are small by
+    # the probe contract) instead of re-building the literal-heavy
+    # query pipeline there.  The SQL path's values come from the same
+    # fold ivfpq_topk would evaluate inline, so every ADC distance is
+    # bit-identical (oracle-pinned); "driver" computes them in numpy.
     if query_tables == "driver":
-        # ONE query collect serves both the pruning cell set and the
-        # ADC probe tables (and skips parsing the n_centroids*dim- and
-        # m*ksub*dsub-literal expressions of the SQL path)
-        dsub = len(cbs[0][0])
         rows = _driver_probe_rows(query, cents, cbs, nprobe, id_col,
-                                  vec_col, l2_cells, residual, dsub)
-        cells = sorted({cell for _q, cell, _d in rows})
-        probe_df = _probe_rows_df(spark, query, id_col, rows)
+                                  vec_col, l2_cells, residual,
+                                  len(cbs[0][0]))
     else:
-        # ONE query-side job serves BOTH the pruning cell set and the
-        # ADC distance tables (r15): the old shape collected bare cells
-        # here and then re-CONSTRUCTED the whole literal-heavy query
-        # pipeline inside ivfpq_topk — ~20 eagerly-analyzed DataFrame
-        # ops over n_centroids*dim + m*ksub*dsub literal trees, twice.
-        # The dtab values come from the SAME SQL fold the inline plan
-        # evaluated, so every ADC distance is bit-identical (oracle-
-        # pinned); they just travel as DATA (nprobe x m x ksub doubles
-        # per query — query batches are small by the probe contract,
-        # which is why the cells collect was already driver-side).
-        # The probe rows are a pure function of (query plan, frozen
-        # quantizers, nprobe) — the codes table plays no part — so a
-        # REPEATED probe within one request (ann_l0_probe probes the
-        # same query before and after compaction) reuses them through
-        # the request-scoped scratch memo instead of re-running the
-        # routing job (r15; released at the request boundary, nothing
-        # crosses bench runs).
-        from carbonapi_spark import scratch
-        memo_key = ("ann_probe_rows", id_col, vec_col, nprobe,
-                    l2_cells, residual,
-                    hash((tuple(map(tuple, cents)),
-                          tuple(tuple(map(tuple, cb)) for cb in cbs))))
-        hit = scratch.memo().get(memo_key)
-        if hit is not None:
-            try:
-                if not query._jdf.queryExecution().analyzed().sameResult(
-                        hit[0].queryExecution().analyzed()):
-                    hit = None
-            except Exception:
-                hit = None
-        if hit is not None:
-            probe_rows = hit[1]
-            cells = sorted({r["__cell"] for r in probe_rows})
-            probe_df = _probe_rows_df(
-                spark, query, id_col,
-                [(r["query_id"], r["__cell"], r["__dtab"])
-                 for r in probe_rows])
-        if probe_df is None:
-            probe_rows, cells, probe_df = _build_probe_rows(
-                spark, query, cents, cbs, nprobe, id_col, vec_col,
-                l2_cells, residual)
-            scratch.memo()[memo_key] = (query._jdf, probe_rows)
+        rows = [tuple(r) for r in _sql_probe_tables(
+            query, cents, cbs, nprobe, id_col, vec_col, l2_cells,
+            residual).collect()]
+    cells = sorted({cell for _q, cell, _d in rows})
+    probe_df = _probe_rows_df(spark, query, id_col, rows)
     pruned = codes.where(F.col("cell").isin(cells))
-    l0 = _l0_delta(spark, path)
+    from carbonapi_spark.datapipe.maintenance import read_l0
+    l0 = read_l0(spark, path, "codes")
     if l0 is not None:
-        # L0 rows carry cell as an ordinary column: the same isin
-        # filter is a pushed-down parquet predicate rather than
-        # partition pruning — fine for a delta-sized table, and the
-        # union keeps every downstream stage (dedupe, ADC scoring,
-        # stored-vector rerank) oblivious to where a row lives
+        # L0 rows carry cell as an ordinary column (the maintenance
+        # module's L0 protocol); the union keeps every downstream stage
+        # (dedupe, ADC scoring, stored-vector rerank) oblivious to
+        # where a row lives
         pruned = pruned.unionByName(
             l0.where(F.col("cell").isin(cells)).select(*pruned.columns))
     if dedupe:
@@ -1519,59 +1351,32 @@ def append_ann_index(df: DataFrame, path: str, id_col: str = "vec_id",
     in a different cell and survive compaction alongside the old one);
     delete first, then append.
 
-    ``l0=True`` appends into the UNPARTITIONED ``codes_l0`` side table
-    instead — ONE file per append regardless of how many cells the
-    delta touches (a cell-partitioned append writes a file into every
-    touched cell, which for frequent small deltas fragments the whole
-    index: SCALE.md r14 measured a 2 s-tick stream adding 256
-    files/batch).  Probes read main ∪ L0 transparently
-    (:func:`_l0_delta`); :func:`compact_ann_index` folds L0 into the
-    cell layout and removes it.  The trade: L0 rows are not
-    partition-pruned at probe time, so keep L0 delta-sized and fold on
-    a schedule."""
+    ``l0=True`` appends ONE file into the ``codes_l0`` side table
+    instead of one into every cell the delta touches (SCALE.md r14
+    measured a 2 s-tick stream adding 256 files/batch).  Probes read
+    main ∪ L0 and :func:`compact_ann_index` folds L0 in: the L0
+    protocol of :mod:`carbonapi_spark.datapipe.maintenance`."""
     from carbonapi_spark.datapipe.maintenance import (
         assert_not_under_maintenance)
     spark = df.sparkSession
     assert_not_under_maintenance(spark, path, "append_ann_index")
-    codes, centroids, codebooks, l2_cells, residual = \
-        read_ann_index(spark, path)
-    # replayed-append sharing through the request-scoped scratch memo
-    # (see append_band_index): the encoded delta is a pure function of
-    # (delta plan, frozen quantizers), so the second append of the same
-    # epoch reuses the tracked codes instead of re-running the encode
-    from carbonapi_spark import scratch
-    keep_vec = vec_col in codes.columns
-    params = ("ann_delta", encoder, id_col, vec_col, l2_cells, residual,
-              keep_vec,
-              hash((tuple(map(tuple, centroids)),
-                    tuple(tuple(map(tuple, cb)) for cb in codebooks))))
-    hit = scratch.memo().get(params)
-    delta = None
-    if hit is not None:
-        try:
-            if df._jdf.queryExecution().analyzed().sameResult(
-                    hit[0].queryExecution().analyzed()):
-                delta = hit[1]
-        except Exception:
-            delta = None
-    if delta is None:
-        enc = ivfpq_encode_arrow if encoder == "arrow" else ivfpq_encode
-        delta = scratch.track(
-            enc(df, codebooks, centroids, id_col, vec_col,
-                l2_cells=l2_cells, residual=residual, keep_vec=keep_vec))
-        scratch.memo()[params] = (df._jdf, delta)
-    if l0:
-        # repartition(1), NOT coalesce(1): coalesce collapses the
-        # whole chain into one task, serializing the encode matmuls
-        # (measured ~1.8x slower batch absorb at 10M — SCALE.md r14);
-        # the shuffle boundary keeps the encode at input parallelism
-        # and only the single write task is serial
-        delta.repartition(1).write.mode("append") \
-            .parquet(f"{path}/codes_l0")
-    else:
-        combo_repartition(delta, ["cell"], len(centroids)) \
-            .write.mode("append") \
-            .partitionBy("cell").parquet(f"{path}/codes")
+    _append_codes(df, path, read_ann_index(spark, path), id_col, vec_col,
+                  encoder, l0)
+
+
+def _append_codes(df: DataFrame, path: str, index, id_col: str,
+                  vec_col: str, encoder: str, l0: bool) -> None:
+    """Encode ``df`` with the frozen quantizers of ``index`` (the
+    :func:`read_ann_index` tuple) and append the codes — the one write
+    behind :func:`append_ann_index` and every
+    :func:`stream_append_ann_index` epoch."""
+    from carbonapi_spark.datapipe.maintenance import append_delta
+    codes, centroids, codebooks, l2_cells, residual = index
+    enc = ivfpq_encode_arrow if encoder == "arrow" else ivfpq_encode
+    delta = enc(df, codebooks, centroids, id_col, vec_col,
+                l2_cells=l2_cells, residual=residual,
+                keep_vec=vec_col in codes.columns)
+    append_delta(delta, path, "codes", ["cell"], len(centroids), l0)
 
 
 def ann_auto_topk(corpus: DataFrame, query: DataFrame, k: int = 10,
@@ -1703,35 +1508,20 @@ def compact_ann_index(spark, path: str, id_col: str = "vec_id",
     counted via ``input_file_name()`` — the fragmentation metric
     appends accumulate) plus ``cells_rewritten``.
 
-    When an L0 side table exists (``l0=True`` appends —
-    :func:`_l0_delta`), the same pass FOLDS it into the cell layout
-    and removes it: in ``fragmented_only`` mode every cell present in
-    L0 is rewritten (its rows must merge into that cell's directory),
-    plus whatever the main table fragmented.  A crash between the fold
-    commit and the L0 removal leaves the folded rows in both places —
-    exact duplicates that ``dedupe=True`` probes hide and a retry
-    removes durably.  ``l0_rows_folded`` is reported when a fold
-    happened.
+    An L0 side table (``l0=True`` appends) is folded into the cell
+    layout in the same pass and removed (``l0_rows_folded``): in
+    ``fragmented_only`` mode every cell present in L0 is rewritten too.
+    The crash window between the fold and the L0 removal is described
+    with the L0 protocol in :mod:`carbonapi_spark.datapipe.maintenance`.
 
     Delegates to :func:`carbonapi_spark.datapipe.maintenance.
     compact_partitioned` — the shared kernel behind the band-index and
     text-index compactors."""
-    from carbonapi_spark.datapipe.maintenance import (_hpath,
-                                                      compact_partitioned,
-                                                      maintenance_lock,
-                                                      table_row_count)
+    from carbonapi_spark.datapipe.maintenance import (compact_with_l0,
+                                                      maintenance_lock)
     with maintenance_lock(spark, path, "compact_ann_index"):
-        l0 = _l0_delta(spark, path)
-        n_l0 = (table_row_count(spark, f"{path}/codes_l0", l0)
-                if l0 is not None else 0)
-        stats = compact_partitioned(spark, f"{path}/codes", [id_col],
-                                    ["cell"], fragmented_only,
-                                    extra_df=l0, extra_rows=n_l0)
-        if l0 is not None:
-            lp, fs = _hpath(spark, f"{path}/codes_l0")
-            fs.delete(lp, True)
-            spark.catalog.refreshByPath(f"{path}/codes_l0")
-            stats["l0_rows_folded"] = n_l0
+        stats = compact_with_l0(spark, path, "codes", [id_col], ["cell"],
+                                fragmented_only)
     stats["cells_rewritten"] = stats.pop("partitions_rewritten")
     return stats
 
@@ -1763,16 +1553,14 @@ def delete_from_ann_index(spark, path: str, ids, id_col: str = "vec_id",
     schema-bearing empty placeholder (probes return no candidates);
     appends into an emptied index resume the ``cell=`` layout only
     after a rebuild."""
-    from carbonapi_spark.datapipe.maintenance import (_hpath,
-                                                      maintenance_lock)
+    from carbonapi_spark.datapipe.maintenance import (maintenance_lock,
+                                                      read_index_table)
     with maintenance_lock(spark, path, "delete_from_ann_index"):
         # the codes read must happen INSIDE the lock: its eager file
         # listing pins the rewrite's input, so a read taken before the
         # marker was up would let an append committing in between be
         # silently erased by the cell rewrite — the exact lost-append
         # the lock exists to prevent
-        from carbonapi_spark.datapipe.maintenance import \
-            read_index_table
         codes = read_index_table(spark, f"{path}/codes")
         if isinstance(ids, (list, tuple, set)):
             id_dt = codes.schema[id_col].dataType.simpleString()
@@ -1787,15 +1575,14 @@ def delete_from_ann_index(spark, path: str, ids, id_col: str = "vec_id",
 def _delete_from_ann_index_locked(spark, path, codes, ids_df,
                                   id_col) -> dict:
     from carbonapi_spark.datapipe.maintenance import (
-        _hpath, recover_staged_commit)
+        _hpath, delete_from_l0, read_index_table, recover_staged_commit)
     # finish (or discard) a crashed prior deletion's staged cells before
     # planning this one — the codes read below must see the recovered
     # table, not one missing a half-moved cell (ADVICE r14)
     if recover_staged_commit(spark, f"{path}/codes",
                              f"{path}/codes.deleting", ["cell"]):
-        from carbonapi_spark.datapipe.maintenance import read_index_table
         codes = read_index_table(spark, f"{path}/codes")
-    l0_deleted = _delete_from_l0(spark, path, ids_df, id_col)
+    l0_deleted = delete_from_l0(spark, path, "codes", ids_df, id_col)
     hit = codes.join(F.broadcast(ids_df), id_col)
     per_cell = {r["cell"]: r["n"] for r in
                 hit.groupBy("cell").agg(F.count(F.lit(1)).alias("n"))
@@ -1839,33 +1626,6 @@ def _delete_from_ann_index_locked(spark, path, codes, ids_df,
             "cells_emptied": len(emptied)}
 
 
-def _delete_from_l0(spark, path, ids_df, id_col) -> int:
-    """Drop ``ids_df`` rows from the L0 side table, if one exists.
-    L0 is delta-sized by contract, so this is a plain full rewrite
-    through a rename swap; an L0 emptied entirely is REMOVED (an
-    absent ``codes_l0`` is the normal steady state, so no
-    schema-bearing placeholder is needed).  Returns rows deleted."""
-    from carbonapi_spark.datapipe.maintenance import _hpath
-    l0 = _l0_delta(spark, path)
-    if l0 is None:
-        return 0
-    n_hit = l0.join(F.broadcast(ids_df), id_col).count()
-    if n_hit == 0:
-        return 0
-    lp, fs = _hpath(spark, f"{path}/codes_l0")
-    keep = l0.join(F.broadcast(ids_df), id_col, "left_anti")
-    if keep.isEmpty():
-        fs.delete(lp, True)
-        spark.catalog.refreshByPath(f"{path}/codes_l0")
-        return n_hit
-    from carbonapi_spark.datapipe.maintenance import swap_in
-    stage = f"{path}/codes_l0.deleting"
-    keep.coalesce(1).write.mode("overwrite").parquet(stage)
-    swap_in(spark, f"{path}/codes_l0", stage,
-            f"{path}/codes_l0.predelete", "_delete_from_l0")
-    return n_hit
-
-
 def stream_append_ann_index(stream_df: DataFrame, path: str,
                             id_col: str = "vec_id",
                             vec_col: str = "embedding",
@@ -1896,20 +1656,14 @@ def stream_append_ann_index(stream_df: DataFrame, path: str,
     per micro-batch for model-sized constants.
 
     ``l0=True`` is the continuous-ingest default to prefer: each epoch
-    writes ONE file into the unpartitioned ``codes_l0`` side table
-    instead of one file into EVERY touched cell (a processingTime
-    stream otherwise fragments all n_centroids cells every tick —
-    SCALE.md r14 measured 256 files/batch at 2 s ticks, with the only
-    remedy a full-index rewrite).  Probes union L0 in transparently;
-    :func:`compact_ann_index` folds it into the cell layout.  Replay
-    semantics are unchanged: a retried epoch duplicates exact rows in
-    L0 exactly as it would in the cell partitions, and the same
-    probe-time ``dedupe=`` / compaction answers apply."""
-    spark = stream_df.sparkSession
-    codes, centroids, codebooks, l2_cells, residual = \
-        read_ann_index(spark, path)
-    keep_vec = vec_col in codes.columns
-    enc = ivfpq_encode_arrow if encoder == "arrow" else ivfpq_encode
+    writes ONE file into the ``codes_l0`` side table instead of one
+    into EVERY touched cell (SCALE.md r14 measured 256 files/batch at
+    2 s ticks) — the same write as :func:`append_ann_index`, under the
+    L0 protocol of :mod:`carbonapi_spark.datapipe.maintenance`.  A
+    retried epoch duplicates exact rows in L0 exactly as it would in
+    the cell partitions, and the same probe-time ``dedupe=`` /
+    compaction answers apply."""
+    index = read_ann_index(stream_df.sparkSession, path)
 
     def _sink(batch_df: DataFrame, _epoch: int) -> None:
         if batch_df.isEmpty():
@@ -1921,17 +1675,7 @@ def stream_append_ann_index(stream_df: DataFrame, path: str,
             assert_not_under_maintenance)
         assert_not_under_maintenance(batch_df.sparkSession, path,
                                      "stream_append_ann_index")
-        delta = enc(batch_df, codebooks, centroids, id_col, vec_col,
-                    l2_cells=l2_cells, residual=residual,
-                    keep_vec=keep_vec)
-        if l0:
-            # repartition(1), not coalesce(1) — same reason as
-            # append_ann_index: keep the per-epoch encode parallel
-            delta.repartition(1).write.mode("append") \
-                .parquet(f"{path}/codes_l0")
-        else:
-            delta.repartition(F.col("cell")).write.mode("append") \
-                .partitionBy("cell").parquet(f"{path}/codes")
+        _append_codes(batch_df, path, index, id_col, vec_col, encoder, l0)
 
     w = stream_df.writeStream.foreachBatch(_sink)
     if checkpoint_dir is not None:

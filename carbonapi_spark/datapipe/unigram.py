@@ -102,10 +102,6 @@ def seed_pieces(words: DataFrame,
             .select("piece", "score"))
 
 
-def _null_state() -> Column:
-    return F.lit(None).cast(_STATE_T)
-
-
 def _sql_str(s: str) -> str:
     """Spark-SQL single-quoted string literal (backslash escapes on)."""
     return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"

@@ -14,20 +14,35 @@ from pyspark.sql import functions as F
 
 from carbonapi_spark.model.series import NAME
 from carbonapi_spark.parser.globs import glob_to_java_regex
-from carbonapi_spark.sources.lake import SeriesLake, by_name, tags_expr
+from carbonapi_spark.sources.lake import (SeriesLake, by_name, glob_prefix,
+                                          tags_expr)
+
+
+def _name_prefixes(lake: SeriesLake, query: str):
+    """(rows, ``p``, ``deeper``) for a one-level glob expansion: ``p`` is
+    each name's first len(query.split('.')) components, ``deeper`` says
+    the name has more.  ``p`` matching the glob implies the name starts
+    with the glob's literal prefix, so that prefix guards the scan: the
+    same ``startswith`` a fetch uses, which Parquet receives as a
+    pushed ``StringStartsWith`` filter (``rlike`` is evaluated only
+    after the scan)."""
+    depth = len(query.split("."))
+    parts = F.split(F.split_part(F.col(NAME), F.lit(";"), F.lit(1)), "\\.")
+    rows = lake.df
+    literal = glob_prefix(query)
+    if literal:
+        rows = rows.where(F.col(NAME).startswith(literal))
+    return (rows, F.array_join(F.slice(parts, 1, depth), ".").alias("p"),
+            F.size(parts) > depth)
 
 
 def find(lake: SeriesLake, query: str) -> list[dict]:
     """Expand a glob one level: entries for every matching prefix of depth
     len(query.split('.')), flagged leaf/branch (find_handlers.go:41-174)."""
-    depth = len(query.split("."))
-    base = F.split_part(F.col(NAME), F.lit(";"), F.lit(1))
-    parts = F.split(base, "\\.")
-    prefix = F.array_join(F.slice(parts, 1, depth), ".")
-    rx = glob_to_java_regex(query)
-    rows = (lake.df
-            .select(prefix.alias("p"), (F.size(parts) > depth).alias("deeper"))
-            .where(F.col("p").rlike(rx))
+    rows, prefix, deeper = _name_prefixes(lake, query)
+    rows = (rows
+            .select(prefix, deeper.alias("deeper"))
+            .where(F.col("p").rlike(glob_to_java_regex(query)))
             .groupBy("p")
             .agg(F.max(F.col("deeper").cast("int")).alias("has_children"),
                  F.max((~F.col("deeper")).cast("int")).alias("is_leaf"))
@@ -51,12 +66,9 @@ def find_completer(entries: list[dict]) -> dict:
 
 def expand(lake: SeriesLake, query: str) -> list[str]:
     """Flat glob expansion to full depth of the pattern (expand_handler.go)."""
-    depth = len(query.split("."))
-    base = F.split_part(F.col(NAME), F.lit(";"), F.lit(1))
-    parts = F.split(base, "\\.")
-    prefix = F.array_join(F.slice(parts, 1, depth), ".")
-    rx = glob_to_java_regex(query)
-    rows = (lake.df.select(prefix.alias("p")).where(F.col("p").rlike(rx))
+    rows, prefix, _ = _name_prefixes(lake, query)
+    rows = (rows.select(prefix)
+            .where(F.col("p").rlike(glob_to_java_regex(query)))
             .distinct().orderBy("p").collect())
     return [r["p"] for r in rows]
 

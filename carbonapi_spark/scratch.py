@@ -49,27 +49,9 @@ def track(df: DataFrame) -> DataFrame:
     return df
 
 
-def memo() -> dict:
-    """Request-scoped key-value scratch for THIS thread, cleared by
-    :func:`release` with everything else at the request boundary.
-
-    Lets one logical operation that is invoked several times within a
-    request (a replayed append, a probe repeated around a maintenance
-    op) re-use expensive DERIVED state — a tracked signature table, a
-    collected probe-row set — without any cross-request survival: the
-    bench and the HTTP handler both call ``release()`` per query, so
-    nothing here outlives the request that computed it (the
-    no-result-caching-across-runs rule stays intact by construction)."""
-    d = getattr(_LOCAL, "memo", None)
-    if d is None:
-        d = _LOCAL.memo = {}
-    return d
-
-
 def release() -> int:
-    """Unpersist every scratch DataFrame tracked by THIS thread (and
-    drop its request-scoped memo); returns how many were tracked."""
-    getattr(_LOCAL, "memo", {}).clear()
+    """Unpersist every scratch DataFrame tracked by THIS thread;
+    returns how many were tracked."""
     lst = _tracked()
     n = len(lst)
     while lst:

@@ -601,14 +601,6 @@ ANOM_OUT = "key STRING, oid LONG, x_micro LONG, dev_micro LONG"
 ANOM_STATE = "e LONG, m LONG, n LONG"
 
 
-def _trunc_div(a: int, b: int) -> int:
-    """Truncate-toward-zero integer division — Spark's ``div`` and
-    DuckDB's ``//`` convention (Python's ``//`` floors instead, which
-    diverges on negatives)."""
-    q = abs(a) // abs(b)
-    return q if (a >= 0) == (b >= 0) else -q
-
-
 def stream_ewma_anomaly(rows: DataFrame, key_col: str = "key",
                         order_col: str = "oid",
                         val_col: str = "x_micro",

@@ -803,12 +803,12 @@ def test_l0_first_append_window_is_invisible(vecs, spark, tmp_path):
     UNABLE_TO_INFER_SCHEMA — caught live by the r14 streaming smoke."""
     import os
 
-    from carbonapi_spark.datapipe.similarity import _l0_delta
+    from carbonapi_spark.datapipe.maintenance import read_l0
     cbs = pq_codebooks(DIM, M, KSUB, seed=44)
     cents = _centroids(True)
     p = str(tmp_path / "window")
     write_ann_index(vecs, p, cbs, cents, l2_cells=True)
     os.makedirs(f"{p}/codes_l0/_temporary", exist_ok=True)
-    assert _l0_delta(spark, p) is None
+    assert read_l0(spark, p, "codes") is None
     query = vecs.where(F.col("vec_id") % 97 == 3)
     assert ann_index_topk(spark, p, query, k=5, nprobe=2).count() > 0

@@ -1154,3 +1154,37 @@ def test_tagged_max_data_points_consolidates_sparse_plan(spark, tmp_path,
                         lake=_tagged_lake(spark, tmp_path), until=240,
                         maxDataPoints=2) == (4, 6)
     assert calls == []
+
+
+def test_metadata_name_scans_push_glob_prefix(spark, tmp_path, monkeypatch):
+    """find and expand guard their name scan with the glob's literal
+    prefix, so Parquet receives a StringStartsWith filter instead of
+    reading every name in the lake (rlike alone is evaluated post-scan)."""
+    from carbonapi_spark.render import metadata
+    from carbonapi_spark.sources.lake import SeriesLake
+    rows = [(f"events.u{u}.{t}", ts, 1.0)
+            for u in (1, 2, 10) for t in ("click", "view")
+            for ts in (0, 60)]
+    rows.append(("other.u1.click", 0, 1.0))
+    path = str(tmp_path / "lake")
+    spark.createDataFrame(rows, "name STRING, ts BIGINT, value DOUBLE") \
+        .write.parquet(path)
+    lake = SeriesLake(spark.read.parquet(path), 60)
+    plans = []
+    frame_type = type(lake.df)
+    real = frame_type.collect
+
+    def collect(self):
+        plans.append(self._jdf.queryExecution().executedPlan().toString())
+        return real(self)
+
+    monkeypatch.setattr(frame_type, "collect", collect)
+    found = metadata.find(lake, "events.u1.*")
+    expanded = metadata.expand(lake, "events.u1.*")
+    assert [e["id"] for e in found] == ["events.u1.click", "events.u1.view"]
+    assert all(e["leaf"] == 1 and e["expandable"] == 0 for e in found)
+    assert expanded == ["events.u1.click", "events.u1.view"]
+    assert len(plans) == 2
+    for plan in plans:
+        pushed = re.search(r"PushedFilters: \[([^\]]*)\]", plan).group(1)
+        assert "StringStartsWith(name,events.u1.)" in pushed, plan

@@ -132,8 +132,8 @@ def main():
     def l0_df():
         # the engine helper tolerates the first-append in-flight
         # window (dir exists, no committed parquet yet)
-        from carbonapi_spark.datapipe.similarity import _l0_delta
-        return _l0_delta(spark, f"{WORK}/index")
+        from carbonapi_spark.datapipe.maintenance import read_l0
+        return read_l0(spark, f"{WORK}/index", "codes")
 
     def total_rows():
         l0 = l0_df()
