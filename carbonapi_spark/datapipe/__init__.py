@@ -189,6 +189,16 @@ def read_small_table(spark, path: str) -> list[dict]:
     return [r.asDict() for r in spark.read.parquet(p).collect()]
 
 
+def write_small_table(spark, path: str, rows, schema) -> None:
+    """Overwrite ``path`` with driver-local ``rows`` as ONE Parquet file —
+    the writer behind every model-sized metadata table that
+    :func:`read_small_table` reads back (index stats, centroids,
+    codebooks, tokenizer vocab/meta).  Rows ride an Arrow local relation
+    (:func:`local_df`), so the write is a single JVM-local task."""
+    local_df(spark, rows, schema).coalesce(1) \
+        .write.mode("overwrite").parquet(path)
+
+
 def overlap_jobs(*thunks) -> list:
     """Run INDEPENDENT Spark actions concurrently from driver threads
     (guide §2.6: actions are only sequential because driver code calls
@@ -200,12 +210,20 @@ def overlap_jobs(*thunks) -> list:
     returned in thunk order; the first exception propagates after all
     thunks settle (no half-cancelled writes — each job is atomic via
     its own commit protocol, same crash semantics as the serial
-    form)."""
+    form).
+
+    Each thunk runs with the caller's Spark local properties and tags
+    (``inheritable_thread_target``), so its jobs carry the caller's job
+    group and can be found and cancelled with it."""
     from concurrent.futures import ThreadPoolExecutor
+
+    from pyspark import inheritable_thread_target
+    from pyspark.sql import SparkSession
     if len(thunks) == 1:
         return [thunks[0]()]
+    inherit = inheritable_thread_target(SparkSession.active())
     with ThreadPoolExecutor(max_workers=len(thunks)) as ex:
-        futs = [ex.submit(t) for t in thunks]
+        futs = [ex.submit(inherit(t)) for t in thunks]
         done = [None] * len(futs)
         err = None
         for i, f in enumerate(futs):
@@ -246,7 +264,8 @@ def expr_cached(s: str):
     (centroid matrices, PQ codebooks, viterbi folds) are deterministic
     functions of frozen index parameters, so the same SQL text is
     re-parsed on every probe call: ~0.2-0.4 s per ANN probe at bench
-    scale (measured r15, tools/opt_probe_profile.py).  An unresolved
+    scale (measured r15,
+    ``git show 34ba022:tools/opt_probe_profile.py``).  An unresolved
     parsed expression carries no data, no plan state and no column
     bindings — reusing the Column object across DataFrames is exactly
     what a repeated ``selectExpr`` produces, so plans are byte-identical.

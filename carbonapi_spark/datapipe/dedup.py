@@ -18,8 +18,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, functions as F
 from pyspark.sql.window import Window
 
-from carbonapi_spark.datapipe import (combo_repartition, local_df,
-                                      read_small_table)
+from carbonapi_spark.datapipe import (local_df, read_small_table,
+                                      write_small_table)
 
 from carbonapi_spark.datapipe.text import tokens, _poly_hash
 
@@ -824,32 +824,25 @@ def write_band_index(df: DataFrame, path: str, text_col: str = "text",
     delta batch's scan touches only the band/bucket directories its own
     keys hash into (static Catalyst partition pruning on the directory
     columns), so daily incremental dedup reads delta-proportional
-    bytes, never the corpus."""
+    bytes, never the corpus.  Build, append, compaction and deletion
+    run through the shared lifecycle helpers of
+    :mod:`carbonapi_spark.datapipe.maintenance`."""
     idx = minhash_band_index(df, text_col, id_col, num_hashes, bands,
                              ngram, seed)
     bucketed = idx.withColumn(
         "bucket", F.pmod(F.xxhash64("key"), F.lit(n_buckets)).cast("int"))
     spark = df.sparkSession
-    from carbonapi_spark.datapipe import overlap_jobs
-    try:
-        overlap_jobs(
-            lambda: (combo_repartition(bucketed, ["band", "bucket"],
-                                       bands * n_buckets)
-                     .write.mode("overwrite").partitionBy("band", "bucket")
-                     .parquet(f"{path}/bands")),
-            lambda: (local_df(
-                spark, [(num_hashes, bands, ngram, seed, n_buckets)],
-                "num_hashes INT, bands INT, ngram INT, seed INT, "
-                "n_buckets INT")
-                .write.mode("overwrite").parquet(f"{path}/stats")))
-    except BaseException:
-        # the overlapped stats job may have committed before the bands
-        # write failed — a failed build must be unambiguously absent
-        # (ADVICE r14)
-        from carbonapi_spark.datapipe.maintenance import \
-            discard_failed_build
-        discard_failed_build(spark, path, ["bands", "stats"])
-        raise
+    from carbonapi_spark.datapipe.maintenance import (build_index,
+                                                      write_partitioned)
+    build_index(
+        spark, path, ["bands", "stats"],
+        lambda: write_partitioned(bucketed, f"{path}/bands",
+                                  ["band", "bucket"], bands * n_buckets,
+                                  "overwrite"),
+        lambda: write_small_table(
+            spark, f"{path}/stats",
+            [(num_hashes, bands, ngram, seed, n_buckets)],
+            "num_hashes INT, bands INT, ngram INT, seed INT, n_buckets INT"))
 
 
 def append_band_index(df: DataFrame, path: str, text_col: str = "text",
@@ -916,15 +909,11 @@ def delete_from_band_index(spark, path: str, doc_ids,
     appends into an emptied index resume the (band, bucket) layout
     only after a rebuild."""
     from carbonapi_spark.datapipe.maintenance import (
-        delete_from_l0, delete_rows_partitioned, maintenance_lock,
-        read_index_table, read_l0, table_row_count)
-    if isinstance(doc_ids, (list, tuple, set)):
-        dt = read_index_table(spark, f"{path}/bands") \
-            .schema["doc_id"].dataType.simpleString()
-        ids_df = local_df(spark, [(i,) for i in sorted(doc_ids)],
-                          f"doc_id {dt}")
-    else:
-        ids_df = doc_ids.select(F.col(id_col).alias("doc_id"))
+        delete_from_l0, delete_rows_partitioned, ids_frame,
+        maintenance_lock, read_index_table, read_l0, table_row_count)
+    ids_df = ids_frame(spark, doc_ids, id_col,
+                       lambda: read_index_table(spark, f"{path}/bands"),
+                       "doc_id")
     with maintenance_lock(spark, path, "delete_from_band_index"):
         n_l0 = delete_from_l0(spark, path, "bands", ids_df, "doc_id")
         stats = delete_rows_partitioned(spark, f"{path}/bands", ids_df,

@@ -1,6 +1,34 @@
-"""Durable-index maintenance: compaction, deletion and the L0 side
-table for the partitioned Parquet index layouts (ANN cells, MinHash
-bands, BM25 postings).
+"""The durable-index lifecycle — build, append, compact, delete and
+the L0 side table — for the partitioned Parquet index layouts: ANN
+``codes`` (by ``cell``), MinHash ``bands`` (by ``band``, ``bucket``)
+and BM25 ``postings`` (by ``bucket``).  Each step has one helper here,
+and all three indexes (:mod:`~carbonapi_spark.datapipe.similarity`,
+:mod:`~carbonapi_spark.datapipe.dedup`,
+:mod:`~carbonapi_spark.datapipe.retrieval`) call it; the per-index
+functions add only their own keys and side tables.
+
+- **Build**: :func:`build_index` runs the sub-table writes concurrently
+  and removes every sub-table if one fails.  The partitioned table is
+  written by :func:`write_partitioned` (one file per partition combo),
+  the model-sized metadata tables by
+  :func:`carbonapi_spark.datapipe.write_small_table`.
+- **Append**: :func:`assert_not_under_maintenance`, then
+  :func:`append_delta` (into L0, or into the partitioned table).
+- **Compact**: under :func:`maintenance_lock`,
+  :func:`compact_with_l0` — the dedupe-and-defragment kernel
+  :func:`compact_partitioned` with L0 folded in.
+- **Delete**: :func:`ids_frame` coerces the id set; under
+  :func:`maintenance_lock`, :func:`delete_from_l0` and
+  :func:`delete_rows_partitioned` (the ANN index rewrites only the
+  affected cells instead).  Unpartitioned side tables are replaced
+  through :func:`swap_in`.
+- **L0**: :func:`read_l0`, :func:`append_delta` with ``l0=True``,
+  :func:`delete_from_l0` and :func:`compact_with_l0` (below).
+
+The text index uses every step but L0: its postings append
+partitioned, so giving it L0 is ``append_delta(l0=True)`` plus
+:func:`read_l0` in the probe and :func:`compact_with_l0` in its
+compaction.
 
 All three durable indexes share the same operational exposure: their
 ``append_*`` twins run in retried batch jobs (and, for ANN, a
@@ -11,12 +39,6 @@ thousands.  Duplicates are exact by construction in every case (the
 quantizers / band parameters / tokenization are frozen at build time,
 so a replayed row re-derives identically), which makes key-based
 ``dropDuplicates`` lossless.
-
-``compact_partitioned`` is the shared kernel; the per-index wrappers
-(:func:`carbonapi_spark.datapipe.similarity.compact_ann_index`,
-:func:`carbonapi_spark.datapipe.dedup.compact_band_index`,
-:func:`carbonapi_spark.datapipe.retrieval.compact_text_index`) add the
-index-specific keys and side tables.
 
 The L0 protocol
 ---------------
@@ -29,29 +51,12 @@ compaction).  A partitioned append writes one file into EVERY
 partition its delta touches, and a small delta's keys spread across
 nearly all of them (measured r14: a 500-doc band delta touched all 256
 (band, bucket) combos; a 2 s-tick ANN stream fragmented all 256 cells
-per batch).  An L0 append is ONE file, whatever the spread.  The four
-helpers at the end of this module are the whole protocol:
-
-- :func:`append_delta` writes one append: ``repartition(1)`` into L0
-  (not ``coalesce(1)``, which would serialize the delta's encode
-  pipeline into the single write task), or ``combo_repartition`` +
-  ``partitionBy`` into the main table.
-- :func:`read_l0` is what probes union with the main table.  The
-  probe's partition restriction becomes a pushed-down Parquet
-  predicate on L0 instead of partition pruning — the right trade for a
-  table that is delta-sized by contract.  An absent L0 is the normal
-  steady state; the first-append window (directory made, nothing
-  committed yet) also reads as no L0.
-- :func:`delete_from_l0` rewrites L0 whole through :func:`swap_in`;
-  an L0 emptied entirely is removed, not left as a placeholder.
-- :func:`compact_with_l0` folds L0 into the partitioned layout in the
-  same pass as the dedupe (``compact_partitioned(extra_df=)``), then
-  removes L0.  A crash between the fold commit and the removal leaves
-  the folded rows in both places: exact duplicates that a probe-side
-  dedupe hides and a retried compaction removes durably.
-
-Appends into L0 refuse under a maintenance marker exactly like
-partitioned appends (the caller's check).  The text index has no L0.
+per batch).  An L0 append is ONE file, whatever the spread.  Probes
+union :func:`read_l0` with the main table: the probe's partition
+restriction becomes a pushed-down Parquet predicate on L0 instead of
+partition pruning — the right trade for a table that is delta-sized by
+contract.  Appends into L0 refuse under a maintenance marker exactly
+like partitioned appends (the caller's check).
 """
 
 from __future__ import annotations
@@ -62,7 +67,7 @@ import threading
 
 from pyspark.sql import functions as F
 
-from carbonapi_spark.datapipe import combo_repartition, local_df
+from carbonapi_spark.datapipe import combo_repartition, local_df, overlap_jobs
 
 
 def _hpath(spark, path: str):
@@ -193,10 +198,8 @@ def delete_rows_partitioned(spark, table_path: str, ids_df,
                                     partition_cols))
     keep = df.join(F.broadcast(ids_df), join_cols, "left_anti")
     tmp = f"{table_path}.deleting"
-    (combo_repartition(keep, partition_cols,
-                       df.sparkSession.sparkContext.defaultParallelism)
-     .write.mode("overwrite")
-     .partitionBy(*partition_cols).parquet(tmp))
+    write_partitioned(keep, tmp, partition_cols,
+                      spark.sparkContext.defaultParallelism, "overwrite")
     _ensure_readable(spark, tmp, df.schema)
     swap_in(spark, table_path, tmp, f"{table_path}.predelete",
             "delete_rows_partitioned")
@@ -453,21 +456,49 @@ def overwrite_partition_dirs(spark, table_path: str, stage: str,
     return moved
 
 
-def discard_failed_build(spark, path: str, subs: list[str]) -> None:
-    """Remove an index's sub-table directories after a FAILED overlapped
-    build (ADVICE r14): ``overlap_jobs`` runs the big data write and the
-    small metadata writes concurrently, so a failure of any one can
-    leave the others already committed — a half-built index whose stats
-    table reads as valid.  Deleting whatever landed makes a failed build
-    unambiguously absent, which is what the old serial form guaranteed
-    for the metadata tables.  Best-effort by design: it runs on the
-    failure path, and a cleanup error must not mask the build error."""
-    for s in subs:
-        try:
-            p, fs = _hpath(spark, f"{path}/{s}")
-            fs.delete(p, True)
-        except Exception:
-            pass
+def build_index(spark, path: str, subs: list[str], *writes) -> None:
+    """Failure-atomic index build: run the sub-table ``writes`` (thunks)
+    concurrently through ``overlap_jobs`` — the small metadata writes
+    ride the big data write's scheduling tail — and, if ANY of them
+    fails, remove every sub-table directory in ``subs`` before
+    re-raising.  A failure of one write can leave the others already
+    committed — a half-built index whose stats table reads as valid;
+    deleting whatever landed makes a failed build unambiguously absent
+    (ADVICE r14).  The cleanup is best-effort: it runs on the failure
+    path, and a cleanup error must not mask the build error."""
+    try:
+        overlap_jobs(*writes)
+    except BaseException:
+        for s in subs:
+            try:
+                p, fs = _hpath(spark, f"{path}/{s}")
+                fs.delete(p, True)
+            except Exception:
+                pass
+        raise
+
+
+def write_partitioned(df, table_path: str, partition_cols: list[str],
+                      n_combos: int, mode: str) -> None:
+    """The one-file-per-combo ``partitionBy`` write every index layout
+    uses (build, partitioned append, deletion rewrite):
+    :func:`combo_repartition` then ``partitionBy(partition_cols)``."""
+    (combo_repartition(df, partition_cols, n_combos)
+     .write.mode(mode).partitionBy(*partition_cols).parquet(table_path))
+
+
+def ids_frame(spark, ids, id_col: str, table, name: str | None = None):
+    """A delete request's id set as a one-column DataFrame named
+    ``name`` (default ``id_col``).  A list, tuple or set of ids becomes
+    a sorted local relation typed like column ``name`` of ``table()``
+    (a zero-arg callable, called only in this case); a DataFrame has
+    its ``id_col`` selected."""
+    name = name or id_col
+    if isinstance(ids, (list, tuple, set)):
+        dt = table().schema[name].dataType.simpleString()
+        return local_df(spark, [(i,) for i in sorted(ids)],
+                        f"`{name}` {dt}")
+    return ids.select(F.col(id_col).alias(name))
 
 
 def recover_staged_commit(spark, table_path: str, stage: str,
@@ -663,20 +694,23 @@ def read_l0(spark, path: str, name: str):
 def append_delta(delta, path: str, name: str, partition_cols: list[str],
                  n_combos: int, l0: bool) -> None:
     """Append ``delta`` to index table ``name``: ONE file into L0 when
-    ``l0``, else one file per touched combo of the partitioned table."""
+    ``l0`` (``repartition(1)``, not ``coalesce(1)``, which would
+    serialize the delta's encode pipeline into the single write task),
+    else one file per touched combo of the partitioned table."""
     if l0:
         delta.repartition(1).write.mode("append") \
             .parquet(f"{path}/{name}_l0")
     else:
-        (combo_repartition(delta, partition_cols, n_combos)
-         .write.mode("append").partitionBy(*partition_cols)
-         .parquet(f"{path}/{name}"))
+        write_partitioned(delta, f"{path}/{name}", partition_cols,
+                          n_combos, "append")
 
 
 def delete_from_l0(spark, path: str, name: str, ids_df,
                    id_col: str) -> int:
     """Drop the rows matching ``ids_df`` on ``id_col`` from L0, if there
-    is one; returns the rows deleted."""
+    is one, rewriting it whole through :func:`swap_in`; an L0 emptied
+    entirely is removed, not left as a placeholder.  Returns the rows
+    deleted."""
     l0 = read_l0(spark, path, name)
     if l0 is None:
         return 0
@@ -701,7 +735,10 @@ def compact_with_l0(spark, path: str, name: str, key_cols: list[str],
                     fragmented_only: bool) -> dict:
     """:func:`compact_partitioned` over ``{path}/{name}`` with L0 folded
     in, then L0 removed; adds ``l0_rows_folded`` when there was one.
-    The caller holds the :func:`maintenance_lock`."""
+    The caller holds the :func:`maintenance_lock`.  A crash between the
+    fold commit and the removal leaves the folded rows in both places:
+    exact duplicates that a probe-side dedupe hides and a retried
+    compaction removes durably."""
     live = f"{path}/{name}_l0"
     l0 = read_l0(spark, path, name)
     n_l0 = table_row_count(spark, live, l0) if l0 is not None else 0

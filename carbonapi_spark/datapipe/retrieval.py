@@ -20,8 +20,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from carbonapi_spark.datapipe import (combo_repartition, local_df,
-                                      read_small_table)
+from carbonapi_spark.datapipe import (local_df, read_small_table,
+                                      write_small_table)
 
 from carbonapi_spark.datapipe.text import token_count, tokens
 
@@ -104,50 +104,64 @@ def write_text_index(df: DataFrame, path: str, text_col: str = "text",
     scan touches only its terms' buckets (Catalyst partition pruning on
     the ``bucket=`` directory column), so probe cost scales with the
     query, not the corpus — the lexical sibling of the ANN index's
-    cell-pruned layout."""
-    tf = (df.select(F.col(id_col).alias("doc_id"),
-                    F.explode(tokens(F.lower(F.col(text_col))))
-                    .alias("term"))
-          .groupBy("doc_id", "term")
-          .agg(F.count(F.lit(1)).alias("tf")))
-    bucketed = tf.withColumn(
-        "bucket", F.pmod(F.xxhash64("term"), F.lit(n_buckets)).cast("int"))
-    # the stats totals ride the doclens write job as observed metrics
-    # (guide §2.4: the old separate agg was one more full corpus pass);
-    # the independent postings write overlaps the doclens+stats chain
-    # from a second driver thread (guide §2.6)
-    from pyspark.sql import Observation
-
-    from carbonapi_spark.datapipe import overlap_jobs
-    obs = Observation()
-    lengths = df.select(F.col(id_col).alias("doc_id"),
-                        token_count(F.col(text_col)).cast("long")
-                        .alias("dl")) \
-        .observe(obs, F.count(F.lit(1)).alias("n"),
-                 F.sum("dl").alias("s"))
+    cell-pruned layout.  Build, append, compaction and deletion run
+    through the shared lifecycle helpers of
+    :mod:`carbonapi_spark.datapipe.maintenance`."""
+    from carbonapi_spark.datapipe.maintenance import (build_index,
+                                                      write_partitioned)
+    spark = df.sparkSession
+    postings, lengths, obs = _text_rows(df, text_col, id_col, n_buckets)
 
     def _doclens_then_stats():
         lengths.write.mode("overwrite").parquet(f"{path}/doclens")
         got = obs.get
-        local_df(df.sparkSession, [(got["n"], got["s"], n_buckets)],
-                 "n_docs LONG, sum_dl LONG, n_buckets INT") \
-            .coalesce(1).write.mode("overwrite").parquet(f"{path}/stats")
+        _write_stats(spark, path, got["n"], got["s"], n_buckets)
 
-    try:
-        overlap_jobs(
-            lambda: (combo_repartition(bucketed, ["bucket"], n_buckets)
-                     .write.mode("overwrite").partitionBy("bucket")
-                     .parquet(f"{path}/postings")),
-            _doclens_then_stats)
-    except BaseException:
-        # the overlapped doclens/stats chain may have committed before
-        # the postings write failed — a failed build must be
-        # unambiguously absent (ADVICE r14)
-        from carbonapi_spark.datapipe.maintenance import \
-            discard_failed_build
-        discard_failed_build(df.sparkSession, path,
-                             ["postings", "doclens", "stats"])
-        raise
+    build_index(spark, path, ["postings", "doclens", "stats"],
+                lambda: write_partitioned(postings, f"{path}/postings",
+                                          ["bucket"], n_buckets,
+                                          "overwrite"),
+                _doclens_then_stats)
+
+
+def _text_rows(df: DataFrame, text_col: str, id_col: str,
+               n_buckets: int):
+    """(postings, doclens, observation) of ``df``'s documents — the rows
+    a build writes and an append adds.  ``postings`` are (doc_id, term,
+    tf, bucket) with bucket = pmod(xxhash64(term), n_buckets);
+    ``doclens`` are (doc_id, dl) and carry the (n, s) totals as observed
+    metrics, so the stats ride the doclens write job (guide §2.4: a
+    separate aggregate would be one more tokenize pass)."""
+    postings = (df.select(F.col(id_col).alias("doc_id"),
+                          F.explode(tokens(F.lower(F.col(text_col))))
+                          .alias("term"))
+                .groupBy("doc_id", "term")
+                .agg(F.count(F.lit(1)).alias("tf"))
+                .withColumn("bucket", F.pmod(F.xxhash64("term"),
+                                             F.lit(n_buckets)).cast("int")))
+    lengths, obs = _observed(df.select(
+        F.col(id_col).alias("doc_id"),
+        token_count(F.col(text_col)).cast("long").alias("dl")))
+    return postings, lengths, obs
+
+
+def _observed(lengths: DataFrame):
+    """``lengths`` (doc_id, dl) observing its row count ``n`` and dl sum
+    ``s``; SUM over zero rows is NULL, so ``s`` is coalesced to 0 — an
+    empty doclens records (0, 0), which :func:`bm25_query_index` treats
+    as match-nothing (ADVICE r13 #5)."""
+    from pyspark.sql import Observation
+    obs = Observation()
+    return (lengths.observe(obs, F.count(F.lit(1)).alias("n"),
+                            F.coalesce(F.sum("dl"), F.lit(0)).alias("s")),
+            obs)
+
+
+def _write_stats(spark, path: str, n_docs: int, sum_dl: int,
+                 n_buckets: int) -> None:
+    """The 1-row ``{path}/stats`` table of a text index."""
+    write_small_table(spark, f"{path}/stats", [(n_docs, sum_dl, n_buckets)],
+                      "n_docs LONG, sum_dl LONG, n_buckets INT")
 
 
 def bm25_query_index(spark: SparkSession, path: str, query: str,
@@ -320,49 +334,46 @@ def append_text_index(df: DataFrame, path: str, text_col: str = "text",
     equal a one-shot build over the union (idf/avgdl are pure functions
     of the merged postings and stats; pytest pins it).  Refuses loudly
     while a ``_MAINTENANCE`` marker is present."""
+    from carbonapi_spark.datapipe import overlap_jobs
     from carbonapi_spark.datapipe.maintenance import (
-        assert_not_under_maintenance)
+        append_delta, assert_not_under_maintenance)
     spark = df.sparkSession
     assert_not_under_maintenance(spark, path, "append_text_index")
     stats_row = read_small_table(spark, f"{path}/stats")[0]
     n_buckets = stats_row["n_buckets"]
-    bucketed = (df.select(F.col(id_col).alias("doc_id"),
-                          F.explode(tokens(F.lower(F.col(text_col))))
-                          .alias("term"))
-                .groupBy("doc_id", "term")
-                .agg(F.count(F.lit(1)).alias("tf"))
-                .withColumn("bucket", F.pmod(F.xxhash64("term"),
-                                             F.lit(n_buckets)).cast("int")))
-    # delta totals ride the doclens append job as observed metrics
-    # (guide §2.4: the old separate agg re-ran the tokenize pass); the
-    # independent postings append overlaps the doclens+stats chain
-    # from a second driver thread (guide §2.6).  The Observation is
-    # PER-APPEND: each append merges its delta into the stats it read.
-    from pyspark.sql import Observation
+    postings, lengths, obs = _text_rows(df, text_col, id_col, n_buckets)
 
-    from carbonapi_spark.datapipe import overlap_jobs
-    obs = Observation()
-    lengths = (df.select(F.col(id_col).alias("doc_id"),
-                         token_count(F.col(text_col)).cast("long")
-                         .alias("dl"))
-               .observe(obs, F.count(F.lit(1)).alias("n"),
-                        F.sum("dl").alias("s")))
-
+    # the postings append overlaps the doclens+stats chain from a second
+    # driver thread (guide §2.6); each append merges its own delta's
+    # observed totals into the stats it read
     def _doclens_then_stats():
         lengths.write.mode("append").parquet(f"{path}/doclens")
         delta = obs.get
-        merged = local_df(
-            spark, [(stats_row["n_docs"] + delta["n"],
-                     stats_row["sum_dl"] + (delta["s"] or 0), n_buckets)],
-            "n_docs LONG, sum_dl LONG, n_buckets INT")
-        merged.coalesce(1).write.mode("overwrite") \
-            .parquet(f"{path}/stats")
+        _write_stats(spark, path, stats_row["n_docs"] + delta["n"],
+                     stats_row["sum_dl"] + delta["s"], n_buckets)
 
     overlap_jobs(
-        lambda: (combo_repartition(bucketed, ["bucket"], n_buckets)
-                 .write.mode("append").partitionBy("bucket")
-                 .parquet(f"{path}/postings")),
+        lambda: append_delta(postings, path, "postings", ["bucket"],
+                             n_buckets, l0=False),
         _doclens_then_stats)
+
+
+def _rewrite_doclens(spark, path: str, lengths: DataFrame, op: str,
+                     stage: str, parked: str) -> None:
+    """Replace ``{path}/doclens`` with ``lengths`` (staged write +
+    :func:`~carbonapi_spark.datapipe.maintenance.swap_in`) and rewrite
+    the stats from its observed totals — the ground truth after a
+    compaction or deletion (r14: the totals ride the rewrite job; the
+    old shape re-read the swapped-in doclens for one more pass)."""
+    from carbonapi_spark.datapipe.maintenance import swap_in
+    lengths, obs = _observed(lengths)
+    lengths.coalesce(1).write.mode("overwrite") \
+        .parquet(f"{path}/doclens.{stage}")
+    swap_in(spark, f"{path}/doclens", f"{path}/doclens.{stage}",
+            f"{path}/doclens.{parked}", op)
+    n_buckets = read_small_table(spark, f"{path}/stats")[0]["n_buckets"]
+    got = obs.get
+    _write_stats(spark, path, got["n"], got["s"], n_buckets)
 
 
 def compact_text_index(spark, path: str,
@@ -381,31 +392,15 @@ def compact_text_index(spark, path: str,
     deduped doclens (the ground truth the merged totals drifted from).
     Single-writer maintenance, same caveats as the kernel."""
     from carbonapi_spark.datapipe.maintenance import (compact_partitioned,
-                                                      maintenance_lock,
-                                                      swap_in)
+                                                      maintenance_lock)
     with maintenance_lock(spark, path, "compact_text_index"):
         stats = compact_partitioned(spark, f"{path}/postings",
                                     ["doc_id", "term"], ["bucket"],
                                     fragmented_only)
-        from pyspark.sql import Observation
-        obs = Observation()
-        # the recomputed stats ride the doclens rewrite job as observed
-        # metrics (r14: the old shape re-read the swapped-in doclens
-        # for one more aggregation pass)
-        lens = spark.read.parquet(f"{path}/doclens") \
-            .dropDuplicates(["doc_id"]) \
-            .observe(obs, F.count(F.lit(1)).alias("n"),
-                     F.coalesce(F.sum("dl"), F.lit(0)).alias("s"))
-        stage = f"{path}/doclens.compacting"
-        lens.coalesce(1).write.mode("overwrite").parquet(stage)
-        swap_in(spark, f"{path}/doclens", stage,
-                f"{path}/doclens.precompact", "compact_text_index")
-        n_buckets = read_small_table(
-            spark, f"{path}/stats")[0]["n_buckets"]
-        got = obs.get
-        local_df(spark, [(got["n"], got["s"], n_buckets)],
-                 "n_docs LONG, sum_dl LONG, n_buckets INT") \
-            .coalesce(1).write.mode("overwrite").parquet(f"{path}/stats")
+        _rewrite_doclens(spark, path,
+                         spark.read.parquet(f"{path}/doclens")
+                         .dropDuplicates(["doc_id"]),
+                         "compact_text_index", "compacting", "precompact")
     return stats
 
 
@@ -424,38 +419,17 @@ def delete_from_text_index(spark, path: str, doc_ids,
     become (0, 0)); appends into an emptied index resume the
     partitioned layout only after a rebuild."""
     from carbonapi_spark.datapipe.maintenance import (
-        delete_rows_partitioned, maintenance_lock, swap_in)
-    if isinstance(doc_ids, (list, tuple, set)):
-        dt = spark.read.parquet(f"{path}/doclens") \
-            .schema["doc_id"].dataType.simpleString()
-        ids_df = local_df(spark, [(i,) for i in sorted(doc_ids)],
-                          f"doc_id {dt}")
-    else:
-        ids_df = doc_ids.select(F.col(id_col).alias("doc_id"))
+        delete_rows_partitioned, ids_frame, maintenance_lock)
+    ids_df = ids_frame(spark, doc_ids, id_col,
+                       lambda: spark.read.parquet(f"{path}/doclens"),
+                       "doc_id")
     with maintenance_lock(spark, path, "delete_from_text_index"):
         stats = delete_rows_partitioned(spark, f"{path}/postings",
                                         ids_df, ["doc_id"], ["bucket"])
-        from pyspark.sql import Observation
-        obs = Observation()
-        # SUM over zero rows is NULL — coalesce so deleting EVERY
-        # document leaves (0, 0), which bm25_query_index treats as
-        # match-nothing instead of crashing on float(None) (ADVICE
-        # r13 #5); the totals ride the doclens rewrite job as observed
-        # metrics (r14: one fewer pass over the survivors)
-        lens = (spark.read.parquet(f"{path}/doclens")
-                .join(F.broadcast(ids_df), "doc_id", "left_anti")
-                .observe(obs, F.count(F.lit(1)).alias("n"),
-                         F.coalesce(F.sum("dl"), F.lit(0)).alias("s")))
-        stage = f"{path}/doclens.deleting"
-        lens.coalesce(1).write.mode("overwrite").parquet(stage)
-        swap_in(spark, f"{path}/doclens", stage,
-                f"{path}/doclens.predelete", "delete_from_text_index")
-        n_buckets = read_small_table(
-            spark, f"{path}/stats")[0]["n_buckets"]
-        got = obs.get
-        local_df(spark, [(got["n"], got["s"], n_buckets)],
-                 "n_docs LONG, sum_dl LONG, n_buckets INT") \
-            .coalesce(1).write.mode("overwrite").parquet(f"{path}/stats")
+        _rewrite_doclens(spark, path,
+                         spark.read.parquet(f"{path}/doclens")
+                         .join(F.broadcast(ids_df), "doc_id", "left_anti"),
+                         "delete_from_text_index", "deleting", "predelete")
     return stats
 
 

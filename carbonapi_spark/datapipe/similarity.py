@@ -14,8 +14,8 @@ import math
 from pyspark.sql import Column, DataFrame, functions as F
 from pyspark.sql.window import Window
 
-from carbonapi_spark.datapipe import (combo_repartition, expr_cached,
-                                      local_df, selectx)
+from carbonapi_spark.datapipe import (expr_cached, local_df, selectx,
+                                      write_small_table)
 
 
 def dot(a: Column, b: Column) -> Column:
@@ -1157,47 +1157,31 @@ def write_ann_index(df: DataFrame, path: str,
     ``cell=`` partitions instead of re-scanning the full embedding
     corpus — at 100 TB that turns refine from a second corpus pass into
     a ~nprobe/n_centroids partition-pruned read, and parquet column
-    pruning keeps pure-ADC probes reading just (id, codes)."""
+    pruning keeps pure-ADC probes reading just (id, codes).  Build,
+    append, compaction and deletion run through the shared lifecycle
+    helpers of :mod:`carbonapi_spark.datapipe.maintenance`."""
     spark = df.sparkSession
     enc = ivfpq_encode_arrow if encoder == "arrow" else ivfpq_encode
     codes = enc(df, codebooks, centroids, id_col, vec_col,
                 l2_cells=l2_cells, residual=residual,
                 keep_vec=store_vectors)
-    # co-locate each cell before the partitioned write: without this
-    # every write task emits a file into every cell= directory
-    # (n_tasks x n_cells small files — metadata death at lake scale);
-    # with it each cell lands in exactly one shuffle partition
-    from carbonapi_spark.datapipe import overlap_jobs
-    try:
-        overlap_jobs(
-            lambda: combo_repartition(codes, ["cell"], len(centroids))
-            .write.mode("overwrite")
-            .partitionBy("cell").parquet(f"{path}/codes"),
-            lambda: local_df(
-                spark,
-                [(i + 1, c, l2_cells, residual)
-                 for i, c in enumerate(centroids)],
-                "cell INT, emb ARRAY<DOUBLE>, l2 BOOLEAN, residual BOOLEAN")
-            .coalesce(1).write.mode("overwrite")
-            .parquet(f"{path}/centroids"),
-            lambda: local_df(
-                spark,
-                [(j, cw, list(map(float, codebooks[j][cw])))
-                 for j in range(len(codebooks))
-                 for cw in range(len(codebooks[j]))],
-                "m INT, code INT, sub ARRAY<DOUBLE>")
-            .coalesce(1).write.mode("overwrite")
-            .parquet(f"{path}/codebooks"))
-    except BaseException:
-        # the overlapped metadata jobs may have committed before the
-        # codes write failed — a failed build must be unambiguously
-        # absent, not a half-index with valid-looking metadata (ADVICE
-        # r14)
-        from carbonapi_spark.datapipe.maintenance import \
-            discard_failed_build
-        discard_failed_build(spark, path,
-                             ["codes", "centroids", "codebooks"])
-        raise
+    from carbonapi_spark.datapipe.maintenance import (build_index,
+                                                      write_partitioned)
+    build_index(
+        spark, path, ["codes", "centroids", "codebooks"],
+        lambda: write_partitioned(codes, f"{path}/codes", ["cell"],
+                                  len(centroids), "overwrite"),
+        lambda: write_small_table(
+            spark, f"{path}/centroids",
+            [(i + 1, c, l2_cells, residual)
+             for i, c in enumerate(centroids)],
+            "cell INT, emb ARRAY<DOUBLE>, l2 BOOLEAN, residual BOOLEAN"),
+        lambda: write_small_table(
+            spark, f"{path}/codebooks",
+            [(j, cw, list(map(float, codebooks[j][cw])))
+             for j in range(len(codebooks))
+             for cw in range(len(codebooks[j]))],
+            "m INT, code INT, sub ARRAY<DOUBLE>"))
 
 
 def read_ann_index(spark, path: str):
@@ -1482,41 +1466,13 @@ def compact_ann_index(spark, path: str, id_col: str = "vec_id",
        a failure mode replays cannot produce (ADVICE r14 — documented
        instead of paid).
 
-    ``fragmented_only=True`` is the lake-scale mode: only cells holding
-    MORE THAN ONE file are rewritten (appends always create new files,
-    so a one-file cell can hold no duplicates), via a staged write +
-    dynamic partition overwrite — untouched cells keep their original
-    files byte-for-byte, and the rewrite cost scales with the
-    fragmented fraction instead of the index size.  A crash mid-commit
-    can leave a MIX of compacted and uncompacted cells; each cell is
-    individually old-or-new, and since dedupe is idempotent a retry
-    simply finishes the job.
-
-    The default full rewrite lands at ``{path}/codes.compacting``
-    first, then swaps in with two filesystem renames (old codes parked
-    at ``codes.precompact`` until the new directory is in place, then
-    removed).  No state ever mixes old and new files; a crash BETWEEN
-    the two renames leaves ``codes`` briefly absent with the old data
-    intact at ``codes.precompact`` (rename it back to recover) — the
-    full transactional story needs a table format (Delta/Iceberg) and
-    is out of scope.  NEITHER mode is safe to run concurrently with
-    appends or probes: single-writer maintenance, like Parquet
-    compaction generally — ENFORCED since r14 by the ``_MAINTENANCE``
-    marker (:func:`carbonapi_spark.datapipe.maintenance.
-    maintenance_lock`): concurrent appends fail loudly instead of
-    losing rows.  Returns row/file counts before/after (files
-    counted via ``input_file_name()`` — the fragmentation metric
-    appends accumulate) plus ``cells_rewritten``.
-
-    An L0 side table (``l0=True`` appends) is folded into the cell
-    layout in the same pass and removed (``l0_rows_folded``): in
-    ``fragmented_only`` mode every cell present in L0 is rewritten too.
-    The crash window between the fold and the L0 removal is described
-    with the L0 protocol in :mod:`carbonapi_spark.datapipe.maintenance`.
-
-    Delegates to :func:`carbonapi_spark.datapipe.maintenance.
-    compact_partitioned` — the shared kernel behind the band-index and
-    text-index compactors."""
+    The modes (full rewrite + rename swap, or ``fragmented_only=True``:
+    only cells holding more than one file), their crash semantics, the
+    single-writer ``_MAINTENANCE`` marker and the L0 fold are the shared
+    compaction step of :mod:`carbonapi_spark.datapipe.maintenance`
+    (:func:`~carbonapi_spark.datapipe.maintenance.compact_with_l0`).
+    Returns row/file counts before/after plus ``cells_rewritten`` (and
+    ``l0_rows_folded`` when an L0 side table was folded in)."""
     from carbonapi_spark.datapipe.maintenance import (compact_with_l0,
                                                       maintenance_lock)
     with maintenance_lock(spark, path, "compact_ann_index"):
@@ -1553,7 +1509,8 @@ def delete_from_ann_index(spark, path: str, ids, id_col: str = "vec_id",
     schema-bearing empty placeholder (probes return no candidates);
     appends into an emptied index resume the ``cell=`` layout only
     after a rebuild."""
-    from carbonapi_spark.datapipe.maintenance import (maintenance_lock,
+    from carbonapi_spark.datapipe.maintenance import (ids_frame,
+                                                      maintenance_lock,
                                                       read_index_table)
     with maintenance_lock(spark, path, "delete_from_ann_index"):
         # the codes read must happen INSIDE the lock: its eager file
@@ -1562,12 +1519,7 @@ def delete_from_ann_index(spark, path: str, ids, id_col: str = "vec_id",
         # silently erased by the cell rewrite — the exact lost-append
         # the lock exists to prevent
         codes = read_index_table(spark, f"{path}/codes")
-        if isinstance(ids, (list, tuple, set)):
-            id_dt = codes.schema[id_col].dataType.simpleString()
-            ids_df = local_df(spark, [(i,) for i in sorted(ids)],
-                              f"`{id_col}` {id_dt}")
-        else:
-            ids_df = ids.select(id_col)
+        ids_df = ids_frame(spark, ids, id_col, lambda: codes)
         return _delete_from_ann_index_locked(spark, path, codes,
                                              ids_df, id_col)
 
@@ -1575,7 +1527,8 @@ def delete_from_ann_index(spark, path: str, ids, id_col: str = "vec_id",
 def _delete_from_ann_index_locked(spark, path, codes, ids_df,
                                   id_col) -> dict:
     from carbonapi_spark.datapipe.maintenance import (
-        _hpath, delete_from_l0, read_index_table, recover_staged_commit)
+        _hpath, delete_from_l0, read_index_table, recover_staged_commit,
+        write_partitioned)
     # finish (or discard) a crashed prior deletion's staged cells before
     # planning this one — the codes read below must see the recovered
     # table, not one missing a half-moved cell (ADVICE r14)
@@ -1594,9 +1547,7 @@ def _delete_from_ann_index_locked(spark, path, codes, ids_df,
     keep = (codes.where(F.col("cell").isin(cells))
             .join(F.broadcast(ids_df), id_col, "left_anti"))
     stage = f"{path}/codes.deleting"
-    (combo_repartition(keep, ["cell"], len(cells))
-     .write.mode("overwrite")
-     .partitionBy("cell").parquet(stage))
+    write_partitioned(keep, stage, ["cell"], len(cells), "overwrite")
     # commit by MOVING the staged cell dirs into place (r14: the old
     # shape re-read the stage and re-shuffled it through a second
     # dynamic-partition-overwrite Spark write, and paid one more job

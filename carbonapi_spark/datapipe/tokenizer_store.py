@@ -14,9 +14,9 @@ Layout:
     {path}/vocab   BPE/WordPiece: (ord, lhs, rhs) in learned merge
                    order; unigram: (piece, score)
 
-Both tables are tokenizer-sized (KBs) and written coalesce(1); readers
-collect them to the driver — the same k-sized hop the trainers already
-make each iteration.
+Both tables are tokenizer-sized (KBs) and written as one file each
+(``write_small_table``); readers collect them to the driver — the same
+k-sized hop the trainers already make each iteration.
 """
 
 from __future__ import annotations
@@ -25,7 +25,7 @@ import json
 
 from pyspark.sql import SparkSession
 
-from carbonapi_spark.datapipe import local_df as _local_df
+from carbonapi_spark.datapipe import write_small_table
 
 KINDS = ("bpe", "wordpiece", "unigram")
 
@@ -39,10 +39,9 @@ def write_bpe(spark: SparkSession, path: str,
     if kind not in ("bpe", "wordpiece"):
         raise ValueError(f"merge-list kinds are bpe|wordpiece, got {kind!r}")
     _write_meta(spark, path, kind, params)
-    _local_df(spark, 
-        [(i + 1, l, r) for i, (l, r) in enumerate(merges)],
-        "ord INT, lhs STRING, rhs STRING") \
-        .coalesce(1).write.mode("overwrite").parquet(f"{path}/vocab")
+    write_small_table(spark, f"{path}/vocab",
+                      [(i + 1, l, r) for i, (l, r) in enumerate(merges)],
+                      "ord INT, lhs STRING, rhs STRING")
 
 
 def write_unigram(spark: SparkSession, path: str,
@@ -52,18 +51,16 @@ def write_unigram(spark: SparkSession, path: str,
     the count trainer or float log-probs from the EM trainer — the
     dtype rides in the score column either way)."""
     _write_meta(spark, path, "unigram", params)
-    _local_df(spark, 
-        sorted(((p, float(s)) for p, s in vocab.items())),
-        "piece STRING, score DOUBLE") \
-        .coalesce(1).write.mode("overwrite").parquet(f"{path}/vocab")
+    write_small_table(spark, f"{path}/vocab",
+                      sorted((p, float(s)) for p, s in vocab.items()),
+                      "piece STRING, score DOUBLE")
 
 
 def _write_meta(spark: SparkSession, path: str, kind: str,
                 params: dict | None) -> None:
-    _local_df(spark, 
-        [(kind, json.dumps(params or {}, sort_keys=True))],
-        "kind STRING, params STRING") \
-        .coalesce(1).write.mode("overwrite").parquet(f"{path}/meta")
+    write_small_table(spark, f"{path}/meta",
+                      [(kind, json.dumps(params or {}, sort_keys=True))],
+                      "kind STRING, params STRING")
 
 
 def read_tokenizer(spark: SparkSession, path: str):

@@ -653,7 +653,9 @@ def _series_geometry(series, opts_list, gp: GraphParams):
         specs.append({"name": s.name, "pts": pts, "color": color,
                       "alpha": alpha, "width": lwidth, "infinite": infinite,
                       "stacked": stacked, "dashed": dashed, "step": s.step,
-                      "right": right})
+                      "right": right,
+                      "filled": stacked or (gp.area_mode == "first"
+                                            and i == 0)})
         t0 = s.start if t0 is None else min(t0, s.start)
         t1 = s.stop if t1 is None else max(t1, s.stop)
     if any(sp["right"] for sp in specs):
@@ -1016,7 +1018,7 @@ def render_png(series, opts_list, params: dict) -> bytes:
                 prev = None
                 continue
             gap = 0
-            if sp["stacked"] or gp.area_mode == "first" and sp is specs[0]:
+            if sp["filled"]:
                 base_y = ssy(0.0 if blo <= 0 <= bhi else blo)
                 cv.vfill(x, py1 if base_y is None else base_y, yy,
                          sp["color"], fill_a * sp["alpha"])
@@ -1201,7 +1203,7 @@ def render_svg(series, opts_list, params: dict) -> str:
             else:
                 d = "M" + " L".join(f"{x:.1f} {y:.1f}" for x, y in seg)
             fill = "none"
-            if sp["stacked"] or gp.area_mode in ("all", "stacked"):
+            if sp["filled"]:
                 base_y = ssy(0.0 if blo <= 0 <= bhi else blo)
                 if base_y is None:
                     base_y = py1

@@ -4787,11 +4787,12 @@ def test_compaction_recovers_leftover_stage(spark, tmp_path):
 
 
 def test_failed_overlapped_build_leaves_no_index(spark, tmp_path):
-    """ADVICE r14: write_band_index/write_text_index run the data write
-    and the small metadata writes concurrently (overlap_jobs); if the
-    big write fails the metadata jobs may already have committed,
-    leaving a half-built index whose stats table reads as valid.  A
-    failed build must be unambiguously ABSENT."""
+    """ADVICE r14: write_band_index/write_text_index/write_ann_index run
+    the data write and the small metadata writes concurrently
+    (maintenance.build_index); if the big write fails the metadata jobs
+    may already have committed, leaving a half-built index whose stats
+    table reads as valid.  A failed build must be unambiguously
+    ABSENT."""
     import os
 
     import pytest
@@ -4815,6 +4816,47 @@ def test_failed_overlapped_build_leaves_no_index(spark, tmp_path):
     assert not os.path.exists(f"{p2}/stats")
     assert not os.path.exists(f"{p2}/postings")
     assert not os.path.exists(f"{p2}/doclens")
+    from carbonapi_spark.datapipe.similarity import (ivf_centroids,
+                                                     pq_codebooks,
+                                                     write_ann_index)
+    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
+    first = emb.agg(F.min("vec_id")).first()[0]
+    poisoned_emb = emb.withColumn(
+        "embedding", F.when(F.col("vec_id") != first, F.col("embedding"))
+        .otherwise(F.raise_error(F.lit("boom: poisoned vector"))))
+    p3 = str(tmp_path / "failed_ann")
+    with pytest.raises(Exception, match="boom"):
+        write_ann_index(poisoned_emb, p3, pq_codebooks(64, 8, 16, 44),
+                        ivf_centroids(64, 4, 43))
+    assert not os.path.exists(f"{p3}/codes")
+    assert not os.path.exists(f"{p3}/centroids")
+    assert not os.path.exists(f"{p3}/codebooks")
+
+
+def _all_job_ids(sc) -> set:
+    """Every job id in the status store, whatever its job group."""
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    jobs = sc._jsc.sc().statusStore().jobsList(None)
+    return {jobs.apply(i).jobId() for i in range(jobs.size())}
+
+
+def test_overlapped_build_jobs_carry_the_job_group(spark, tmp_path):
+    """``overlap_jobs`` runs the index writes from worker threads; their
+    jobs must carry the caller's job group, or cancelling the group
+    (a request deadline) would leave them running."""
+    from carbonapi_spark.datapipe.retrieval import write_text_index
+    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
+    sc = spark.sparkContext
+    group = "overlap-jobs-group-probe"
+    before = _all_job_ids(sc)
+    sc.setJobGroup(group, group)
+    try:
+        write_text_index(docs, str(tmp_path / "grouped_text"))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    ran = _all_job_ids(sc) - before
+    assert ran and set(sc.statusTracker().getJobIdsForGroup(group)) == ran
 
 
 def test_band_delete_rows_after_includes_l0_survivors(spark, tmp_path):

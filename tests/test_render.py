@@ -498,6 +498,38 @@ def test_render_png_stacks_by_timestamp(spark):
     assert hi == 3.0
 
 
+def test_area_mode_first_fills_only_the_first_series(spark, monkeypatch):
+    """areaMode=first fills the first series and no other, in PNG and
+    in SVG alike."""
+    import re
+
+    from carbonapi_spark.render import graph
+    lake = make_lake(spark, {"m.a": [1.0, 3.0, 2.0],
+                             "m.b": [2.0, 1.0, 3.0]}, 1, 0)
+    series = collect_series(_frame(spark, lake, "m.*", 0, 3))
+    params = {"areaMode": ["first"], "hideLegend": ["true"]}
+    specs = graph._series_geometry(series, [{}, {}],
+                                   graph.GraphParams(params))[0]
+    first, second = (sp["color"] for sp in specs)
+    assert first != second
+    filled = []
+    real_vfill = graph.Canvas.vfill
+
+    def vfill(self, x, y0, y1, color, alpha=1.0):
+        filled.append(color)
+        return real_vfill(self, x, y0, y1, color, alpha)
+
+    monkeypatch.setattr(graph.Canvas, "vfill", vfill)
+    graph.render_png(series, [{}, {}], params)
+    assert filled and set(filled) == {first}
+    svg = graph.render_svg(series, [{}, {}], params)
+    rgb = ["rgb({},{},{})".format(*c[:3]) for c in (first, second)]
+    paths = [(stroke, fill) for fill, stroke in re.findall(
+        r'<path d="[^"]*" fill="([^"]*)" fill-opacity="[^"]*" '
+        r'stroke="([^"]*)"', svg) if stroke in rgb]
+    assert paths == [(rgb[0], rgb[0]), (rgb[1], "none")]
+
+
 def test_render_png_log_base_and_null_as_zero(spark):
     # logBase: y mapping is logarithmic (cairo.go:2223-2228), so an
     # exponential series renders differently from the linear scale;
