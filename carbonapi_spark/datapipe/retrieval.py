@@ -451,35 +451,35 @@ def ranking_metrics(results: DataFrame, truth: DataFrame, k: int = 10,
     query with zero result rows still reports (hits 0, recall 0,
     ndcg 0) rather than silently vanishing and inflating the
     aggregate.  Returns (query, n_truth, hits, recall, ndcg),
-    rounded to 6."""
+    rounded to 6.
+
+    The truth side is read once: each truth row picks up its result
+    rank (NULL when missed) from the broadcast, top-k bounded results,
+    and one per-query aggregate counts both the truth and the hits.  A
+    truth built by a Python kernel (``brute_force_topk``) would
+    otherwise run twice, since Spark reuses no exchange above a
+    MapInPandas node."""
     from pyspark.sql.window import Window
     w = Window.partitionBy(query_col).orderBy(F.desc(score_col),
                                               F.col(id_col))
     res = (results.withColumn("__rk", F.row_number().over(w))
-           .where(F.col("__rk") <= k))
-    tr = truth.select(F.col(query_col), F.col(id_col),
-                      F.lit(1).alias("__rel"))
-    tcnt = (truth.groupBy(query_col)
-            .agg(F.count(F.lit(1)).alias("n_truth")))
-    joined = res.join(tr, [query_col, id_col], "left")
-    dcg = F.sum(F.when(F.col("__rel") == 1,
+           .where(F.col("__rk") <= k).select(query_col, id_col, "__rk"))
+    dcg = F.sum(F.when(F.col("__rk").isNotNull(),
                        F.lit(1.0) / F.log2(F.col("__rk") + 1))
                 .otherwise(F.lit(0.0)))
-    hits = F.sum(F.coalesce(F.col("__rel"), F.lit(0)))
-    per_q = (joined.groupBy(query_col)
-             .agg(hits.alias("hits"), dcg.alias("__dcg")))
+    per_q = (truth.select(query_col, id_col)
+             .join(F.broadcast(res), [query_col, id_col], "left")
+             .groupBy(query_col)
+             .agg(F.count(F.lit(1)).alias("n_truth"),
+                  F.count("__rk").alias("hits"), dcg.alias("__dcg")))
     idcg = F.aggregate(
         F.sequence(F.lit(1), F.least(F.col("n_truth"), F.lit(k))),
         F.lit(0.0),
         lambda acc, i: acc + F.lit(1.0) / F.log2(i.cast("double") + 1))
-    return (tcnt.join(per_q, query_col, "left")
-            .select(query_col, "n_truth",
-                    F.coalesce(F.col("hits"), F.lit(0)).cast("long")
-                    .alias("hits"),
-                    F.round(F.coalesce(F.col("hits"), F.lit(0))
-                            / F.col("n_truth"), 6).alias("recall"),
-                    F.round(F.coalesce(F.col("__dcg"), F.lit(0.0))
-                            / idcg, 6).alias("ndcg")))
+    return per_q.select(query_col, "n_truth", "hits",
+                        F.round(F.col("hits") / F.col("n_truth"), 6)
+                        .alias("recall"),
+                        F.round(F.col("__dcg") / idcg, 6).alias("ndcg"))
 
 
 def bm25_batch(df: DataFrame, queries: list[tuple[int, str]],

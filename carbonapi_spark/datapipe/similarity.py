@@ -1,10 +1,20 @@
-"""Similarity search over embedding columns (array<float>).
+"""Similarity search over embedding columns (array<float>): exact
+top-k, LSH and IVF probes, PQ / IVFADC encoding and ADC search, the
+durable ANN index, SemDeDup.
 
-- brute-force cosine top-k: exact baseline — a broadcast of the (tiny)
-  query set against a single pass over the corpus; dot products via
-  ``zip_with``/``aggregate`` higher-order functions (JVM-side, no Python),
-- LSH-bucketed variant (random hyperplane signatures) as the 100 TB path:
-  same idea as MinHash-LSH — only same-bucket vectors are compared.
+One implementation per kernel.  The dense kernels (exact top-k, the
+IVFADC encoder, the probe tables) are numpy, vectorized over Arrow
+batches or the collected query batch; the rest are SQL higher-order
+folds over constant-folded literals.  BLAS may rank rows or pick
+candidates, but every value that is returned, or that decides an
+argmax or argmin, is a left fold from 0.0 in element order
+(:func:`_fold_dot`) — the value of the SQL ``aggregate(zip_with(...),
+0.0D, (acc, x) -> acc + x)`` bit for bit.  The reference is that SQL
+fold: ``tests/test_ann_arrow.py`` rebuilds it from
+:func:`_cell_score_sql`, :func:`_pq_code_sql`, :func:`_sqdists_sql`
+and :func:`cosine` and compares bit for bit, and
+``tests/test_graphite_oracles.py`` replays the ANN catalog entries
+against their DuckDB oracles without rounding.
 """
 
 from __future__ import annotations
@@ -42,146 +52,150 @@ def _as_double(col: Column) -> Column:
     return col.cast("array<double>")
 
 
+_SCAN_CHUNK = 8192     # corpus rows per BLAS block in brute_force_topk
+_ENCODE_CHUNK = 4096   # rows per BLAS block in ivfpq_encode
+
+
+def _fold_dot(a, b):
+    """Sum of ``a_d * b_d`` over the last axis, leading axes broadcast,
+    as a left fold from 0.0 in element order: bit for bit the SQL
+    :func:`dot` (``aggregate(zip_with(a, b, (x, y) -> x * y), 0.0D,
+    (acc, x) -> acc + x)``).  numpy's pairwise ``sum`` and BLAS add in
+    other orders and differ in the last bits."""
+    import numpy as np
+    acc = np.zeros(np.broadcast_shapes(a.shape[:-1], b.shape[:-1]))
+    for d in range(a.shape[-1]):
+        acc += a[..., d] * b[..., d]
+    return acc
+
+
+def _fold_cell_scores(x, cents, n2=None):
+    """Fold-order cell scores of the rows of ``x``: the values of
+    :func:`_cell_score_sql` — plain dots, or ``2.0 * dot - n2`` for l2
+    cells, ``n2`` being its ``|c|^2`` literals (``_fold_dot(C, C)``)."""
+    s = _fold_dot(x[:, None, :], cents[None, :, :])
+    return s if n2 is None else 2.0 * s - n2
+
+
+def _fold_sqdists(sub, cb):
+    """Fold-order squared distances from each row of ``sub`` to each
+    codeword of ``cb``: the values of :func:`_sqdists_sql`."""
+    t = sub[:, None, :] - cb[None, :, :]
+    return _fold_dot(t, t)
+
+
+def _fold_tol(n: int, scale):
+    """A bound on |BLAS - fold| for length-``n`` dot products whose
+    sum of |a_d * b_d| is at most ``scale``.  Any summation order, with
+    or without FMA, lands within about ``n * eps / 2 * scale`` of the
+    exact value; the factor 4 covers both sides plus the scaling,
+    subtraction and division steps around the dot."""
+    import numpy as np
+    return 4.0 * (n + 2) * np.finfo(np.float64).eps * scale
+
+
+def _guarded_argmax(approx, tol, exact):
+    """Row-wise argmax of fold-order scores, ties to the lowest index
+    (as ``array_position(d, array_max(d))`` and the strict-``<`` argmin
+    fold of :func:`_pq_code_sql`).  The BLAS scores ``approx`` (which
+    this overwrites) decide every row whose top-2 gap exceeds
+    ``2 * tol``: no fold error can reorder those.  The rows within it
+    are re-scored by ``exact(rows)``, the fold formula."""
+    import numpy as np
+    best = approx.argmax(axis=1)
+    if approx.shape[1] < 2:
+        return best
+    rows = np.arange(len(approx))
+    top = approx[rows, best]
+    approx[rows, best] = -np.inf     # a max, not a partition: 20x cheaper
+    near = np.nonzero(top - approx.max(axis=1) <= 2.0 * tol)[0]
+    if len(near):
+        best[near] = exact(near).argmax(axis=1)
+    return best
+
+
 def brute_force_topk(corpus: DataFrame, query: DataFrame, k: int = 10,
-                     id_col: str = "vec_id", vec_col: str = "embedding",
-                     method: str = "auto") -> DataFrame:
-    """Exact top-k cosine neighbors for every query vector.
+                     id_col: str = "vec_id",
+                     vec_col: str = "embedding") -> DataFrame:
+    """Exact top-k cosine neighbors for every query vector: (query_id,
+    neighbor_id, cos_sim rounded to 6 dp), self excluded, ties to the
+    lowest neighbor_id.
 
-    Broadcast the query side; the corpus is scanned once. Output:
-    (query_id, neighbor_id, cos_sim), excluding self-matches.
+    Exact kNN is the ground truth every ANN evaluation needs.  The query
+    side is collected (it must be small); the corpus is scanned once by
+    an Arrow kernel.  Per chunk of corpus rows, one BLAS matmul against
+    the query matrix only PICKS candidates: every row within a margin of
+    the chunk's (k+1)-th best similarity.  The margin covers the
+    BLAS-vs-fold error plus one 6-dp rounding step, so every row that
+    could reach the global top-k, boundary ties included, survives.  The
+    candidates' cosine is then recomputed in fold order with the formula
+    of :func:`cosine` (``sqrt`` of the folded squares, ``dot / (|q| *
+    |c|)``), Spark rounds it HALF_UP to 6 dp, and a window takes the
+    exact global top-k.  Values are therefore bit-identical to the SQL
+    fold (SCALE.md r12: 13.0 s vs 587 s for the fold itself at 10M x
+    32d).
 
-    ``method`` (VERDICT r12 #4): ``"auto"`` (the default) routes to
-    :func:`brute_force_topk_arrow` — the vectorized kernel dominates
-    the SQL HOF fold at every measured size (13.0 s vs 587 s at
-    10M x 32d, ~3 array-fold evaluations per (row x query) replaced by
-    one numpy matmul per batch; SCALE.md r12) and is pinned
-    pair-identical including tie-breaks.  ``"sql"`` keeps the HOF fold
-    — the bit-replayable oracle twin (numpy sums pairwise, the fold
-    sequentially, so a 6-dp last-ulp flip is possible between the two;
-    catalog oracle entries pass method="sql" for that reason).
-    ``"arrow"`` forces the vectorized kernel explicitly."""
-    if method not in ("auto", "sql", "arrow"):
-        raise ValueError(f"method must be auto|sql|arrow, got {method!r}")
-    if method != "sql":
-        return brute_force_topk_arrow(corpus, query, k, id_col, vec_col)
-    from carbonapi_spark.datapipe import spread
-    corpus = spread(corpus, min_bytes=256 << 10)  # HOF dots: heavy/row
-    q = query.select(F.col(id_col).alias("query_id"),
-                     _as_double(F.col(vec_col)).alias("__qv"))
-    c = corpus.select(F.col(id_col).alias("neighbor_id"),
-                      _as_double(F.col(vec_col)).alias("__cv"))
-    sims = (c.crossJoin(F.broadcast(q))
-            .where(F.col("neighbor_id") != F.col("query_id"))
-            .select("query_id", "neighbor_id",
-                    F.round(cosine(F.col("__qv"), F.col("__cv")), 6).alias("cos_sim")))
-    w = Window.partitionBy("query_id").orderBy(F.col("cos_sim").desc(),
-                                               F.col("neighbor_id"))
-    return (sims.withColumn("__rk", F.row_number().over(w))
-            .where(F.col("__rk") <= k).drop("__rk"))
-
-
-def brute_force_topk_arrow(corpus: DataFrame, query: DataFrame,
-                           k: int = 10, id_col: str = "vec_id",
-                           vec_col: str = "embedding",
-                           chunk: int = 8192) -> DataFrame:
-    """Vectorized twin of :func:`brute_force_topk` — same output
-    contract (query_id, neighbor_id, cos_sim rounded to 6 dp, self
-    excluded, exact top-k with ties to the lowest neighbor_id).
-
-    Exact kNN is the ground-truth kernel every ANN evaluation needs
-    (recall@k has no meaning without it), and the SQL fold path pays
-    ~3 array-fold evaluations per (corpus row x query); here each
-    corpus batch is ONE numpy matmul against the collected query
-    matrix, a per-batch top-k preselection shrinks the shuffle to
-    ~k rows per (query, batch), and a final window takes the exact
-    global top-k.  Preselection thresholds on the ROUNDED similarity
-    and keeps every row tying the k-th value, so boundary ties resolve
-    in the global window exactly like the SQL twin (ties to the lowest
-    neighbor_id) even when a chunk holds duplicate vectors.  The query
-    side must be collect-small (it is broadcast in the SQL twin for
-    the same reason).
-
-    Degenerate-input caveat: rows with NULL or zero-norm embeddings
-    are omitted here on BOTH sides — corpus rows (the SQL twin carries
-    them with NULL cos_sim, ranked last; results differ only when fewer
-    than ``k`` well-defined candidates exist) and query rows (the SQL
-    twin emits k all-NULL-sim rows per degenerate query; emitting them
-    here would make the per-chunk kth threshold 0.0 and shuffle the
-    ENTIRE corpus per such query, so they are dropped instead).  Values
-    are the same 6-dp rounding of sums whose order differs between
-    numpy and the SQL fold, so a last-ulp boundary flip is possible in
-    principle.  Measured: see SCALE.md "Round-12 findings"."""
+    Rows with a NULL, zero-norm or non-finite embedding are dropped on
+    both sides: a degenerate query would make every corpus row a
+    candidate, and a degenerate corpus row has no cosine."""
     import numpy as np
     import pandas as pd
 
     from carbonapi_spark.datapipe import spread
 
-    qrows = (query.select(F.col(id_col), _as_double(F.col(vec_col))
-                          .alias("__qv")).collect())
-    # drop NULL / zero-norm / non-finite query vectors up front
-    # (docstring caveat): a zero-norm row would zero its kth threshold
-    # and emit every corpus row in every chunk — an unbounded shuffle
-    # at 10M scale.
     qids_l, qvecs = [], []
-    for r in qrows:
-        if r["__qv"] is None or any(v is None for v in r["__qv"]):
-            continue
-        v = np.asarray(r["__qv"], dtype=np.float64)
-        nrm = float(np.linalg.norm(v))
-        if nrm > 0.0 and math.isfinite(nrm):
+    for r in (query.select(F.col(id_col), _as_double(F.col(vec_col))
+                           .alias("__qv")).collect()):
+        if r["__qv"] is not None and all(v is not None for v in r["__qv"]):
             qids_l.append(r[id_col])
-            qvecs.append(v)
-    if not qvecs:
-        return local_df(
-            query.sparkSession,
-            [], f"query_id {query.schema[id_col].dataType.simpleString()},"
-                f" neighbor_id {corpus.schema[id_col].dataType.simpleString()},"
-                f" cos_sim double")
-    qids = np.array(qids_l)
-    Q = np.array(qvecs)
-    Qn = Q / np.linalg.norm(Q, axis=1, keepdims=True)
+            qvecs.append(r["__qv"])
     id_dt = corpus.schema[id_col].dataType.simpleString()
     q_dt = query.schema[id_col].dataType.simpleString()
     schema = (f"`query_id` {q_dt}, `neighbor_id` {id_dt}, "
               f"`cos_sim` double")
+    Q = np.array(qvecs, dtype=np.float64)
+    qss = _fold_dot(Q, Q) if qvecs else np.zeros(0)
+    ok = (qss > 0) & np.isfinite(qss)
+    if not ok.any():
+        return local_df(query.sparkSession, [], schema)
+    qids, Q, qn = np.array(qids_l)[ok], Q[ok], np.sqrt(qss[ok])
+    Qhat = Q / qn[:, None]
+    margin = 2.0 * _fold_tol(Q.shape[1], 1.0) + 1e-6
     kk = k + 1  # self may occupy one slot before the final filter
+    chunk = _SCAN_CHUNK
 
     def scan(batches):
         for pdf in batches:
-            # omit NULL embeddings (SQL twin: NULL cos_sim, ranked last)
             pdf = pdf[pdf[vec_col].notna()]
             for lo in range(0, len(pdf), chunk):
                 part = pdf.iloc[lo:lo + chunk]
                 ids = part[id_col].to_numpy()
                 X = np.array([np.asarray(v, dtype=np.float64)
                               for v in part[vec_col]])
-                norms = np.linalg.norm(X, axis=1, keepdims=True)
-                finite = norms[:, 0] > 0
-                if not finite.all():   # zero-norm: see docstring caveat
-                    X, ids, norms = X[finite], ids[finite], norms[finite]
+                xss = _fold_dot(X, X)
+                keep = (xss > 0) & np.isfinite(xss)
+                if not keep.all():
+                    X, ids, xss = X[keep], ids[keep], xss[keep]
                 if not len(ids):
                     continue
-                rsims = np.round((X / norms) @ Qn.T, 6)  # n x |Q|
+                xn = np.sqrt(xss)
+                sims = (X / xn[:, None]) @ Qhat.T   # n x |Q|, picks only
                 top = min(kk, len(ids))
-                kth = np.partition(rsims, len(ids) - top,
+                kth = np.partition(sims, len(ids) - top,
                                    axis=0)[len(ids) - top]
-                out_q, out_n, out_s = [], [], []
-                for j in range(len(qids)):
-                    # >= kth keeps every boundary tie; the global window
-                    # then breaks them by neighbor_id like the SQL twin
-                    rows = np.nonzero(rsims[:, j] >= kth[j])[0]
-                    out_q.extend([qids[j]] * len(rows))
-                    out_n.extend(ids[rows])
-                    out_s.extend(rsims[rows, j])
-                yield pd.DataFrame({"query_id": out_q,
-                                    "neighbor_id": out_n,
-                                    "cos_sim": out_s})
+                ri, qi = np.nonzero(sims >= kth - margin)
+                n = qn[qi] * xn[ri]
+                dots = _fold_dot(Q[qi], X[ri])
+                pos = n > 0         # the SQL NULLs the rest: drop them
+                yield pd.DataFrame({"query_id": qids[qi[pos]],
+                                    "neighbor_id": ids[ri[pos]],
+                                    "cos_sim": dots[pos] / n[pos]})
 
     cand = (spread(corpus, min_bytes=256 << 10)
-            .select(F.col(id_col),
-                    F.col(vec_col).cast("array<double>").alias(vec_col))
+            .select(F.col(id_col), _as_double(F.col(vec_col)).alias(vec_col))
             .mapInPandas(scan, schema)
-            .where(F.col("neighbor_id") != F.col("query_id")))
+            .where(F.col("neighbor_id") != F.col("query_id"))
+            .withColumn("cos_sim", F.round("cos_sim", 6)))
     w = Window.partitionBy("query_id").orderBy(F.col("cos_sim").desc(),
                                                F.col("neighbor_id"))
     return (cand.withColumn("__rk", F.row_number().over(w))
@@ -656,72 +670,29 @@ def ivfpq_encode(df: DataFrame, codebooks: list[list[list[float]]],
     """(id, cell, codes): the persisted IVFADC index table — coarse cell
     assignment (argmax cell score, ties to the lowest cell; dot for
     spherical cells, ``2 e.c - |c|^2`` for trained Voronoi centroids via
-    ``l2_cells=True``) plus PQ codes, one stateless projection over the
-    raw vectors. Write it once at ingest, partitioned by ``cell``, and
-    ``ivfpq_topk(codes=...)`` probes it without touching raw embeddings.
+    ``l2_cells=True``) plus PQ codes (per-subspace argmin squared
+    distance, 1-based, ties to the lowest codeword), one stateless pass
+    over the raw vectors.  Write it once at ingest, partitioned by
+    ``cell``, and ``ivfpq_topk(codes=...)`` probes it without touching
+    raw embeddings.
 
     ``residual=True`` is faithful FAISS IVFADC (Jegou 2011 eq. 13):
     codes quantize ``e - c_cell`` instead of ``e`` — residuals live in a
     much smaller ball than raw vectors, so the same codebook budget
     spends its codewords where the data actually is (the query side must
-    probe with the matching per-cell residual, see ``ivfpq_topk``).  The
-    residual rides as a named column computed once per row, so the m*ksub
-    codeword distances reuse it instead of re-deriving the subtraction."""
-    from carbonapi_spark.datapipe import spread
-    df = spread(df, min_bytes=256 << 10)  # cell-dot + argmin HOFs
-    v = f"cast({vec_col} as array<double>)"
-    keep = [f"{v} as {vec_col}"] if keep_vec else []
-    cell_dots = _cell_score_sql(v, centroids, l2=l2_cells)
-    if not residual:
-        return (selectx(df, id_col, f"{cell_dots} as __d",
-                        f"{_pq_code_sql(v, codebooks)} as {code_col}",
-                        *keep)
-                .withColumn(cell_col,
-                            F.array_position(F.col("__d"),
-                                             F.array_max("__d"))
-                            .cast("int"))
-                .select(id_col, cell_col, code_col,
-                        *([vec_col] if keep_vec else [])))
-    base = (selectx(df, id_col, f"{v} as __v", f"{cell_dots} as __d")
-            .withColumn(cell_col,
-                        F.array_position(F.col("__d"), F.array_max("__d"))
-                        .cast("int")))
-    base = selectx(base, id_col, cell_col, "__v",
-                   f"zip_with(__v, element_at({_cb_sql(centroids)}, "
-                   f"{cell_col}), (x, y) -> x - y) as __rv")
-    return selectx(base, id_col, cell_col,
-                   f"{_pq_code_sql('__rv', codebooks)} as {code_col}",
-                   *([f"__v as {vec_col}"] if keep_vec else []))
+    probe with the matching per-cell residual, see ``ivfpq_topk``).
 
-
-def ivfpq_encode_arrow(df: DataFrame, codebooks: list[list[list[float]]],
-                       centroids: list[list[float]],
-                       id_col: str = "vec_id", vec_col: str = "embedding",
-                       cell_col: str = "cell", code_col: str = "codes",
-                       l2_cells: bool = False, residual: bool = False,
-                       chunk: int = 4096,
-                       keep_vec: bool = False) -> DataFrame:
-    """Vectorized (Arrow/numpy) twin of :func:`ivfpq_encode` — same
-    output contract (1-based cell and codes, ties to the lowest index;
-    ``tests/test_ann_arrow.py`` pins row-for-row equality against the
-    SQL path over all four l2_cells x residual combinations).
-
-    Why it exists: encoding is a dense numerical kernel — m*ksub*dsub
-    (~16k at PQ8x8/dim 64) multiply-adds per row.  The SQL path spends
-    that in per-codeword ``zip_with`` folds (one small-array allocation
-    per codeword per row), which is the right shape for the
-    oracle-replayable catalog entries but ~2 orders of magnitude off
-    what the arithmetic costs; here the whole batch is three numpy
-    matmuls (cell scores, residual gather, per-subspace distances), so
-    ingest-time index builds at the 100 TB scale stay compute-bound
-    instead of interpreter-bound.  Measured: see SCALE.md "Round-12
-    findings" (tools/scale_smoke_ann.py).
-
-    Numeric caveat: numpy reduces sums pairwise/SIMD while the SQL fold
-    is sequential, so an argmin can differ when two codewords are within
-    float-rounding of each other — impossible for trained codebooks
-    short of duplicate codewords (the equality test runs at dim 16 where
-    margins are tightest)."""
+    The kernel is numpy over Arrow batches: per chunk, one BLAS matmul
+    scores the cells and one per subspace scores the codewords
+    (argmax ``2 sub.cw - |cw|^2`` is the argmin distance).  A row whose
+    top-2 gap is within the BLAS-vs-fold error bound is re-scored in
+    fold order with the SQL formula (:func:`_cell_score_sql`,
+    :func:`_sqdists_sql`), so every cell and code equals the SQL
+    fold's.  Encoding every row in
+    fold order measured 8x slower (626 vs 79 ms per 4096-row chunk at
+    64d, 256 cells, PQ8x256, one thread); near-ties are rare.  A NULL
+    embedding encodes to cell NULL and codes ``[0] * m``, as the SQL
+    fold does."""
     import numpy as np
     import pandas as pd
 
@@ -729,20 +700,42 @@ def ivfpq_encode_arrow(df: DataFrame, codebooks: list[list[list[float]]],
 
     C = np.asarray(centroids, dtype=np.float64)          # k x dim
     CB = [np.asarray(cb, dtype=np.float64) for cb in codebooks]
-    dsub = CB[0].shape[1]
-    cnorm = (C * C).sum(axis=1)
-    cbnorm = [(cb * cb).sum(axis=1) for cb in CB]        # ksub each
+    dim, dsub = C.shape[1], CB[0].shape[1]
+    n2 = _fold_dot(C, C)              # the |c|^2 literals of the SQL
+    cmax, n2max = float(np.sqrt(n2.max())), float(n2.max())
+    cbn = [(cb * cb).sum(axis=1) for cb in CB]
+    cwmax = [float(np.sqrt(n.max())) for n in cbn]
+    chunk = _ENCODE_CHUNK
     id_dt = df.schema[id_col].dataType.simpleString()
     schema = f"`{id_col}` {id_dt}, `{cell_col}` int, `{code_col}` array<int>"
     if keep_vec:
         schema += f", `{vec_col}` array<double>"
 
+    def cells(X):
+        s = X @ C.T
+        scale = np.linalg.norm(X, axis=1) * cmax
+        if l2_cells:
+            s *= 2.0
+            s -= n2
+            scale = 2.0 * scale + n2max
+        return _guarded_argmax(
+            s, _fold_tol(dim, scale),
+            lambda rows: _fold_cell_scores(X[rows], C,
+                                           n2 if l2_cells else None))
+
+    def code(sub, j):
+        # argmin |sub - cw|^2 == argmax 2 sub.cw - |cw|^2: one matmul
+        # instead of an n x ksub x dsub temp
+        s = sub @ CB[j].T
+        s *= 2.0
+        s -= cbn[j]
+        scale = (np.linalg.norm(sub, axis=1) + cwmax[j]) ** 2
+        return _guarded_argmax(
+            s, _fold_tol(dsub, scale),
+            lambda rows: -_fold_sqdists(sub[rows], CB[j]))
+
     def encode(batches):
         for pdf in batches:
-            # NULL embeddings: the SQL path emits cell=NULL and
-            # codes=[0]*m (its argmin fold keeps the (inf, 0) init
-            # struct under null comparisons) — match it instead of
-            # crashing the whole job on one row
             nulls = pdf[pdf[vec_col].isna()]
             if len(nulls):
                 out = {id_col: nulls[id_col].to_numpy(),
@@ -752,24 +745,15 @@ def ivfpq_encode_arrow(df: DataFrame, codebooks: list[list[list[float]]],
                     out[vec_col] = [None] * len(nulls)
                 yield pd.DataFrame(out)
                 pdf = pdf[pdf[vec_col].notna()]
-            n = len(pdf)
-            for lo in range(0, n, chunk):
+            for lo in range(0, len(pdf), chunk):
                 part = pdf.iloc[lo:lo + chunk]
                 X = np.array([np.asarray(v, dtype=np.float64)
                               for v in part[vec_col]])
-                scores = X @ C.T
-                if l2_cells:
-                    scores = 2.0 * scores - cnorm
-                cell = scores.argmax(axis=1)             # first max, like
-                R = X - C[cell] if residual else X       # array_position
+                cell = cells(X)
+                R = X - C[cell] if residual else X
                 codes = np.empty((len(X), len(CB)), dtype=np.int32)
-                for j, cb in enumerate(CB):
-                    sub = R[:, j * dsub:(j + 1) * dsub]
-                    # argmin ||sub-cw||^2 == argmin |cw|^2 - 2 sub.cw
-                    # (|sub|^2 is per-row constant): BLAS matmul instead
-                    # of an n x ksub x dsub broadcast temp
-                    d = cbnorm[j] - 2.0 * (sub @ cb.T)
-                    codes[:, j] = d.argmin(axis=1) + 1   # first min
+                for j in range(len(CB)):
+                    codes[:, j] = code(R[:, j * dsub:(j + 1) * dsub], j) + 1
                 out = {id_col: part[id_col].to_numpy(),
                        cell_col: (cell + 1).astype(np.int32),
                        code_col: list(codes)}
@@ -778,48 +762,40 @@ def ivfpq_encode_arrow(df: DataFrame, codebooks: list[list[list[float]]],
                 yield pd.DataFrame(out)
 
     src = spread(df, min_bytes=256 << 10)
-    return src.select(F.col(id_col),
-                      F.col(vec_col).cast("array<double>").alias(vec_col)) \
-        .mapInPandas(encode, schema)
+    return src.select(F.col(id_col), _as_double(F.col(vec_col))
+                      .alias(vec_col)).mapInPandas(encode, schema)
 
 
 def _driver_probe_rows(query: DataFrame, cents: list[list[float]],
                        cbs: list[list[list[float]]], nprobe: int,
                        id_col: str, vec_col: str, l2: bool,
-                       residual: bool, dsub: int) -> list[tuple]:
-    """(query_id, cell, dtab) probe rows computed driver-side in numpy
-    — ONE query collect serves both partition pruning and the ADC
-    distance tables.  Cell ranking matches the SQL path's convention
-    (score desc, ties to the lowest cell index: stable argsort on the
-    negated scores).  NULL query embeddings are skipped — the callers
-    (:func:`ivfpq_topk` / :func:`ann_index_topk`) also filter them on
-    the SQL path, so both paths agree on dropping such queries."""
+                       residual: bool) -> list[tuple]:
+    """(query_id, cell, dtab) probe rows from ONE query collect: each
+    query's ``nprobe`` best cells (score desc, ties to the lowest cell),
+    each with its ADC distance table, built from the query residual
+    ``q - c_cell`` when ``residual``.  Scores and table entries are
+    fold-order values, equal to :func:`_cell_score_sql` and
+    :func:`_sqdists_sql` bit for bit.  NULL query embeddings are
+    skipped."""
     import numpy as np
-    rows = query.select(F.col(id_col).alias("q"),
-                        F.col(vec_col).cast("array<double>")
-                        .alias("v")).collect()
+    rows = [r for r in query.select(F.col(id_col).alias("q"),
+                                    _as_double(F.col(vec_col)).alias("v"))
+            .collect() if r["v"] is not None]
+    if not rows:
+        return []
     C = np.asarray(cents, dtype=np.float64)
     CB = [np.asarray(cb, dtype=np.float64) for cb in cbs]
-    cn = (C * C).sum(axis=1)
-
-    def dtab_for(vec):
-        return [((vec[j * dsub:(j + 1) * dsub] - CB[j]) ** 2)
-                .sum(axis=1).tolist() for j in range(len(CB))]
-
-    out = []
-    for r in rows:
-        if r["v"] is None:   # NULL-embedding queries are dropped
-            continue
-        x = np.asarray(r["v"], dtype=np.float64)
-        s = C @ x
-        if l2:
-            s = 2.0 * s - cn
-        order = np.argsort(-s, kind="stable")[:nprobe]
-        shared = None if residual else dtab_for(x)
-        for cell0 in order:
-            dtab = dtab_for(x - C[cell0]) if residual else shared
-            out.append((r["q"], int(cell0) + 1, dtab))
-    return out
+    dsub = CB[0].shape[1]
+    X = np.array([r["v"] for r in rows], dtype=np.float64)
+    s = _fold_cell_scores(X, C, _fold_dot(C, C) if l2 else None)
+    order = np.argsort(-s, axis=1, kind="stable")[:, :nprobe]
+    qi = np.repeat(np.arange(len(rows)), order.shape[1])
+    cell0 = order.ravel()
+    R = X[qi] - C[cell0] if residual else X[qi]
+    dtab = np.stack([_fold_sqdists(R[:, j * dsub:(j + 1) * dsub], cb)
+                     for j, cb in enumerate(CB)], axis=1)
+    return [(rows[i]["q"], int(c) + 1, t)
+            for i, c, t in zip(qi, cell0, dtab.tolist())]
 
 
 def _probe_rows_df(spark, query: DataFrame, id_col: str,
@@ -828,46 +804,6 @@ def _probe_rows_df(spark, query: DataFrame, id_col: str,
     return local_df(
         spark, rows, f"`query_id` {q_dt}, `__cell` int, "
                      f"`__dtab` array<array<double>>")
-
-
-def _sql_probe_tables(query: DataFrame, cents: list[list[float]],
-                      cbs: list[list[list[float]]], nprobe: int,
-                      id_col: str, vec_col: str, l2: bool,
-                      residual: bool) -> DataFrame:
-    """(query_id, __cell, __dtab) probe rows as one SQL fold — the
-    default ``query_tables="sql"`` path: each query's ``nprobe``
-    best-scoring cells (ties to the lowest cell index), each with its
-    ADC distance table, built from the query residual ``q - c_cell``
-    when ``residual``.  :func:`ivfpq_topk` joins it; :func:`ann_index_topk`
-    collects it, so one query-side job serves both the pruning cell set
-    and the probe."""
-    qv = f"cast({vec_col} as array<double>)"
-    dsub = len(cbs[0][0])
-    wq = Window.partitionBy("query_id").orderBy(F.col("__dot").desc(),
-                                                F.col("__pos"))
-    head = (f"{qv} as __qv" if residual else "array(" + ",".join(
-        _sqdists_sql(qv, cbs[j], j, dsub) for j in range(len(cbs)))
-        + ") as __dtab")
-    carry = "__qv" if residual else "__dtab"
-    q = (selectx(query, f"{id_col} as query_id", head,
-                 f"{_cell_score_sql(qv, cents, l2=l2)} as __d")
-         .select("query_id", carry,
-                 F.posexplode("__d").alias("__pos", "__dot"))
-         .withColumn("__rk", F.row_number().over(wq))
-         .where(F.col("__rk") <= nprobe)
-         .select("query_id",
-                 (F.col("__pos") + 1).cast("int").alias("__cell"), carry))
-    if not residual:
-        return q
-    # probe cells FIRST, then one distance table per (query, cell) from
-    # the matching residual — computed once per probe row
-    rq = (f"zip_with(__qv, element_at({_cb_sql(cents)}, __cell), "
-          f"(x, y) -> x - y)")
-    q = selectx(q, "query_id", "__cell", f"{rq} as __rq")
-    dtab = "array(" + ",".join(
-        _sqdists_sql("__rq", cbs[j], j, dsub)
-        for j in range(len(cbs))) + ")"
-    return selectx(q, "query_id", "__cell", f"{dtab} as __dtab")
 
 
 def ivfpq_topk(corpus: DataFrame, query: DataFrame, k: int = 10,
@@ -880,7 +816,6 @@ def ivfpq_topk(corpus: DataFrame, query: DataFrame, k: int = 10,
                code_col: str = "codes", refine: int | None = None,
                centroids: list[list[float]] | None = None,
                residual: bool = False,
-               query_tables: str = "sql",
                probe_tables: DataFrame | None = None) -> DataFrame:
     """IVFADC — the FAISS ``IVFx,PQy`` composition (Jegou et al., TPAMI
     2011, sec. V): a coarse spherical quantizer (``ivf_centroids``)
@@ -913,25 +848,23 @@ def ivfpq_topk(corpus: DataFrame, query: DataFrame, k: int = 10,
     recall gain over raw-vector coding: see SCALE.md / the
     ``pq_ivf_residual`` catalog entry.
 
-    ``query_tables="driver"`` computes probe cells + ADC distance
-    tables in numpy and joins them as data (see the branch comment);
-    ``probe_tables=`` supplies those rows precomputed — the
-    ``ann_index_topk`` pass-through that lets one query collect serve
-    both partition pruning and the probe.
+    The query batch is small, so it is collected once and its probe
+    cells and ADC distance tables are computed on the driver
+    (:func:`_driver_probe_rows`, fold order) and joined as data.
+    Inlining them as SQL literals instead cost ~10 s of parse and
+    codegen per probe batch at 256 cells and PQ8x8.  ``probe_tables=``
+    supplies those rows precomputed: the :func:`ann_index_topk`
+    pass-through that lets one query collect serve both partition
+    pruning and the probe.
 
-    Deterministic for fixed seeds — the DuckDB oracle replays cell
-    assignment, encoding, probe ranking, and ADC bit-for-bit.
-
-    NULL-embedding queries are dropped up front on EVERY path (ADVICE
-    r12): before this guard the SQL path emitted k junk rows per such
-    query (all-NULL distance tables rank by ``asc`` nulls-first, so the
-    k lowest neighbor_ids in the probed cells came back with NULL
-    adc_dist) and the driver path crashed on ``np.asarray(None)``;
-    neither is an answer anyone wants."""
+    Deterministic for fixed seeds: cells, codes, probe ranking and ADC
+    distances are fold-order values, so the DuckDB oracle replays them
+    bit for bit.  NULL-embedding queries are dropped up front (ADVICE
+    r12): all-NULL distance tables would rank nulls-first and return k
+    junk rows per such query."""
     query = query.where(F.col(vec_col).isNotNull())
     cbs = codebooks if codebooks is not None else pq_codebooks(
         dim, m, ksub, seed)
-    dsub = len(cbs[0][0])
     l2_cells = centroids is not None
     cents = (centroids if centroids is not None
              else ivf_centroids(dim, n_centroids, cell_seed))
@@ -944,24 +877,10 @@ def ivfpq_topk(corpus: DataFrame, query: DataFrame, k: int = 10,
                           "__cell", "__codes", l2_cells=l2_cells,
                           residual=residual)
              .withColumnRenamed(id_col, "neighbor_id"))
-    if probe_tables is not None:
-        q = probe_tables  # precomputed (query_id, __cell, __dtab) rows
-    elif query_tables == "driver":
-        # deployment fast path: the query batch is tiny (it is collected
-        # for partition pruning anyway), so probe cells + ADC distance
-        # tables are computed in numpy and joined as DATA — the "sql"
-        # default instead inlines n_centroids*dim + m*ksub*dsub literal
-        # expressions, whose parse+codegen costs ~10s of fixed latency
-        # per probe batch at (256 cells, PQ8x8). Values can differ from
-        # the SQL fold in the last ulp (numpy sum order), so catalog
-        # oracle entries keep the default.
-        q = _probe_rows_df(
-            query.sparkSession, query, id_col,
-            _driver_probe_rows(query, cents, cbs, nprobe, id_col,
-                               vec_col, l2_cells, residual, dsub))
-    else:
-        q = _sql_probe_tables(query, cents, cbs, nprobe, id_col, vec_col,
-                              l2_cells, residual)
+    q = probe_tables if probe_tables is not None else _probe_rows_df(
+        query.sparkSession, query, id_col,
+        _driver_probe_rows(query, cents, cbs, nprobe, id_col, vec_col,
+                           l2_cells, residual))
     adc = F.aggregate(
         F.zip_with(F.col("__codes"), F.col("__dtab"),
                    lambda code, tab: F.element_at(tab, code)),
@@ -1134,7 +1053,6 @@ def write_ann_index(df: DataFrame, path: str,
                     id_col: str = "vec_id", vec_col: str = "embedding",
                     l2_cells: bool = False,
                     residual: bool = False,
-                    encoder: str = "sql",
                     store_vectors: bool = False) -> None:
     """Persist the IVFADC index as a partitioned Parquet layout:
 
@@ -1146,10 +1064,9 @@ def write_ann_index(df: DataFrame, path: str,
       {path}/codebooks          (m, code, sub)
 
     The ``write_training_shards`` analog for the ANN family: encode once
-    at ingest, then every query batch probes the durable artifact without
-    touching raw embeddings.  ``encoder="arrow"`` routes the encode pass
-    through :func:`ivfpq_encode_arrow` (identical codes, numpy-batched —
-    the ingest-scale path; "sql" stays the oracle-replayable default).
+    at ingest with :func:`ivfpq_encode` (numpy over Arrow batches, every
+    cell and code equal to the SQL fold's), then every query batch
+    probes the durable artifact without touching raw embeddings.
 
     ``store_vectors=True`` rides the raw vectors along in the codes
     table (FAISS keeps vectors in the IVF lists for IVFFlat/Refine for
@@ -1161,10 +1078,9 @@ def write_ann_index(df: DataFrame, path: str,
     append, compaction and deletion run through the shared lifecycle
     helpers of :mod:`carbonapi_spark.datapipe.maintenance`."""
     spark = df.sparkSession
-    enc = ivfpq_encode_arrow if encoder == "arrow" else ivfpq_encode
-    codes = enc(df, codebooks, centroids, id_col, vec_col,
-                l2_cells=l2_cells, residual=residual,
-                keep_vec=store_vectors)
+    codes = ivfpq_encode(df, codebooks, centroids, id_col, vec_col,
+                         l2_cells=l2_cells, residual=residual,
+                         keep_vec=store_vectors)
     from carbonapi_spark.datapipe.maintenance import (build_index,
                                                       write_partitioned)
     build_index(
@@ -1210,7 +1126,6 @@ def ann_index_topk(spark, path: str, query: DataFrame, k: int = 10,
                    corpus: DataFrame | None = None,
                    id_col: str = "vec_id",
                    vec_col: str = "embedding",
-                   query_tables: str = "sql",
                    dedupe: bool = False) -> DataFrame:
     """Probe a durable :func:`write_ann_index` artifact.
 
@@ -1222,21 +1137,22 @@ def ann_index_topk(spark, path: str, query: DataFrame, k: int = 10,
     :func:`compact_ann_index` to remove the duplicates durably instead
     of per-probe.
 
-    The query batch is small by definition, so its probe cells are
-    computed DRIVER-SIDE and applied to the codes scan as a literal
-    ``cell IN (...)`` predicate — STATIC Parquet partition pruning (the
-    plan shows PartitionFilters; only the probed cell directories are
-    read), which at 100 TB is the difference between scanning the whole
-    index and ~nprobe/n_centroids of it.  ``refine=`` needs raw vectors
+    The query batch is small by definition: ONE query collect yields
+    its probe rows (:func:`_driver_probe_rows` — probe cells and ADC
+    distance tables in fold order, bit-identical to the SQL fold).
+    They reach :func:`ivfpq_topk` as data, and their cell set reaches
+    the codes scan as a literal ``cell IN (...)`` predicate — STATIC
+    Parquet partition pruning (the plan shows PartitionFilters; only
+    the probed cell directories are read), which at 100 TB is the
+    difference between scanning the whole index and ~nprobe/n_centroids
+    of it.  ``refine=`` needs raw vectors
     for the exact rerank of the ADC top-``refine``: either ``corpus=``
     (full embedding table — a second scan) or an index built with
     ``store_vectors=True``, whose rerank reads only the probed
     partitions (preferred; ``corpus=`` then overrides if given).
 
     NULL-embedding queries are dropped up front (ADVICE r12, same
-    guard as :func:`ivfpq_topk`) — on the SQL path they would widen
-    the pruning cell set with junk cells picked by NULL-score
-    tie-break."""
+    guard as :func:`ivfpq_topk`)."""
     query = query.where(F.col(vec_col).isNotNull())
     codes, cents, cbs, l2_cells, residual = read_ann_index(spark, path)
     if refine is not None and corpus is None \
@@ -1245,21 +1161,8 @@ def ann_index_topk(spark, path: str, query: DataFrame, k: int = 10,
                          "index built with store_vectors=True, for the "
                          "exact rerank stage")
     dim = len(cents[0])
-    # ONE query-side job serves BOTH the pruning cell set and the ADC
-    # distance tables (r15): the tables travel to ivfpq_topk as DATA
-    # (nprobe x m x ksub doubles per query — query batches are small by
-    # the probe contract) instead of re-building the literal-heavy
-    # query pipeline there.  The SQL path's values come from the same
-    # fold ivfpq_topk would evaluate inline, so every ADC distance is
-    # bit-identical (oracle-pinned); "driver" computes them in numpy.
-    if query_tables == "driver":
-        rows = _driver_probe_rows(query, cents, cbs, nprobe, id_col,
-                                  vec_col, l2_cells, residual,
-                                  len(cbs[0][0]))
-    else:
-        rows = [tuple(r) for r in _sql_probe_tables(
-            query, cents, cbs, nprobe, id_col, vec_col, l2_cells,
-            residual).collect()]
+    rows = _driver_probe_rows(query, cents, cbs, nprobe, id_col, vec_col,
+                              l2_cells, residual)
     cells = sorted({cell for _q, cell, _d in rows})
     probe_df = _probe_rows_df(spark, query, id_col, rows)
     pruned = codes.where(F.col("cell").isin(cells))
@@ -1283,7 +1186,7 @@ def ann_index_topk(spark, path: str, query: DataFrame, k: int = 10,
                       codes=pruned, refine=refine, centroids=(
                           cents if l2_cells else None),
                       n_centroids=len(cents), residual=residual,
-                      query_tables=query_tables, probe_tables=probe_df)
+                      probe_tables=probe_df)
 
 
 def ivf_cell_stats(corpus: DataFrame, id_col: str = "vec_id",
@@ -1313,7 +1216,7 @@ def ivf_cell_stats(corpus: DataFrame, id_col: str = "vec_id",
 
 def append_ann_index(df: DataFrame, path: str, id_col: str = "vec_id",
                      vec_col: str = "embedding",
-                     encoder: str = "sql", l0: bool = False) -> None:
+                     l0: bool = False) -> None:
     """Add new vectors to an existing :func:`write_ann_index` layout
     WITHOUT rebuilding: encode the delta with the index's own stored
     centroids/codebooks (quantizers are frozen at build time — FAISS's
@@ -1345,21 +1248,20 @@ def append_ann_index(df: DataFrame, path: str, id_col: str = "vec_id",
     spark = df.sparkSession
     assert_not_under_maintenance(spark, path, "append_ann_index")
     _append_codes(df, path, read_ann_index(spark, path), id_col, vec_col,
-                  encoder, l0)
+                  l0)
 
 
 def _append_codes(df: DataFrame, path: str, index, id_col: str,
-                  vec_col: str, encoder: str, l0: bool) -> None:
+                  vec_col: str, l0: bool) -> None:
     """Encode ``df`` with the frozen quantizers of ``index`` (the
     :func:`read_ann_index` tuple) and append the codes — the one write
     behind :func:`append_ann_index` and every
     :func:`stream_append_ann_index` epoch."""
     from carbonapi_spark.datapipe.maintenance import append_delta
     codes, centroids, codebooks, l2_cells, residual = index
-    enc = ivfpq_encode_arrow if encoder == "arrow" else ivfpq_encode
-    delta = enc(df, codebooks, centroids, id_col, vec_col,
-                l2_cells=l2_cells, residual=residual,
-                keep_vec=vec_col in codes.columns)
+    delta = ivfpq_encode(df, codebooks, centroids, id_col, vec_col,
+                         l2_cells=l2_cells, residual=residual,
+                         keep_vec=vec_col in codes.columns)
     append_delta(delta, path, "codes", ["cell"], len(centroids), l0)
 
 
@@ -1369,12 +1271,11 @@ def ann_auto_topk(corpus: DataFrame, query: DataFrame, k: int = 10,
                   crossover: int = 6_000_000, nprobe: int = 2,
                   refine: int | None = None,
                   dedupe: bool = False,
-                  n: int | None = None,
-                  exact_method: str = "arrow") -> DataFrame:
+                  n: int | None = None) -> DataFrame:
     """Top-k cosine neighbors routed through the measured
-    exact-vs-index crossover (VERDICT r12 #4): the vectorized exact
-    kernel below ``crossover`` corpus rows, the durable IVFADC probe
-    above it.  Output contract is uniform either way: (query_id,
+    exact-vs-index crossover (VERDICT r12 #4): :func:`brute_force_topk`
+    below ``crossover`` corpus rows, the durable IVFADC probe
+    (:func:`ann_index_topk`) above it.  Output contract is uniform either way: (query_id,
     neighbor_id, cos_sim) ranked descending — the index route forces a
     ``refine`` exact rerank (default ``10*k``) so callers never see
     compressed-domain distances.
@@ -1407,10 +1308,8 @@ def ann_auto_topk(corpus: DataFrame, query: DataFrame, k: int = 10,
     it falls back to one ``corpus.count()`` — at lake scale prefer
     passing the row count you already track at ingest.
 
-    ``exact_method`` is forwarded to :func:`brute_force_topk` on the
-    exact route ("arrow" = the vectorized kernel, "sql" = the HOF fold
-    oracle twin — catalog entries use it for bit-replayability, same
-    as ann_topk)."""
+    Both routes return fold-order values (see the module docstring), so
+    either one replays bit for bit against the SQL fold."""
     v = _as_double(F.col(vec_col))
     sumsq = F.aggregate(F.transform(v, lambda x: x * x),
                         F.lit(0.0), lambda a, x: a + x)
@@ -1418,13 +1317,11 @@ def ann_auto_topk(corpus: DataFrame, query: DataFrame, k: int = 10,
                   & (sumsq < F.lit(float("inf"))))
     query = query.where(F.col(vec_col).isNotNull() & finite_pos)
     if index_path is None:
-        return brute_force_topk(corpus, query, k, id_col, vec_col,
-                                method=exact_method)
+        return brute_force_topk(corpus, query, k, id_col, vec_col)
     if n is None:
         n = corpus.count()
     if n < crossover:
-        return brute_force_topk(corpus, query, k, id_col, vec_col,
-                                method=exact_method)
+        return brute_force_topk(corpus, query, k, id_col, vec_col)
     spark = corpus.sparkSession
     # prefer the stored-vector rerank (reads only probed cells); fall
     # back to the full-corpus gather when the index lacks vectors
@@ -1435,7 +1332,7 @@ def ann_auto_topk(corpus: DataFrame, query: DataFrame, k: int = 10,
                           nprobe=nprobe, refine=refine or 10 * k,
                           corpus=None if stored else corpus,
                           id_col=id_col, vec_col=vec_col,
-                          query_tables="driver", dedupe=dedupe)
+                          dedupe=dedupe)
 
 
 def compact_ann_index(spark, path: str, id_col: str = "vec_id",
@@ -1580,7 +1477,6 @@ def _delete_from_ann_index_locked(spark, path, codes, ids_df,
 def stream_append_ann_index(stream_df: DataFrame, path: str,
                             id_col: str = "vec_id",
                             vec_col: str = "embedding",
-                            encoder: str = "sql",
                             checkpoint_dir: str | None = None,
                             trigger: dict | None = None,
                             l0: bool = False):
@@ -1626,7 +1522,7 @@ def stream_append_ann_index(stream_df: DataFrame, path: str,
             assert_not_under_maintenance)
         assert_not_under_maintenance(batch_df.sparkSession, path,
                                      "stream_append_ann_index")
-        _append_codes(batch_df, path, index, id_col, vec_col, encoder, l0)
+        _append_codes(batch_df, path, index, id_col, vec_col, l0)
 
     w = stream_df.writeStream.foreachBatch(_sink)
     if checkpoint_dir is not None:

@@ -408,9 +408,7 @@ def _q_ann_topk(spark, sf_dir):
     from carbonapi_spark.datapipe.similarity import brute_force_topk
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     query = emb.where(F.col("vec_id") < 5)
-    # method="sql": the HOF fold is the oracle-replayable twin (the
-    # arrow default sums pairwise — a 6-dp last-ulp flip is possible)
-    return brute_force_topk(emb, query, k=10, method="sql")
+    return brute_force_topk(emb, query, k=10)
 
 
 _register("ann_topk", _q_ann_topk, """
@@ -2273,8 +2271,7 @@ def _q_ann_auto_route(spark, sf_dir):
     """The exact-vs-index routing seam (VERDICT r13 #2a): ONE durable
     artifact, BOTH ann_auto_topk routes pinned in one result — the
     below-crossover call routes to the exact kernel (crossover above
-    corpus size; exact_method="sql" is the bit-replayable fold, same
-    as ann_topk), the above-crossover call routes to the index probe
+    corpus size, same kernel as ann_topk), the above-crossover call routes to the index probe
     with exact refine (crossover=0 plus an ``n=`` hint, pinning the
     zero-job hint routing too).  The two legs are tagged and unioned;
     the oracle replays each leg independently."""
@@ -2290,7 +2287,7 @@ def _q_ann_auto_route(spark, sf_dir):
         p = f"{tmp}/ann"
         write_ann_index(emb, p, cbs, cents, store_vectors=True)
         exact = ann_auto_topk(emb, query, k=10, index_path=p,
-                              crossover=10 ** 9, exact_method="sql") \
+                              crossover=10 ** 9) \
             .withColumn("route", F.lit("exact"))
         probe = ann_auto_topk(emb, query, k=10, index_path=p,
                               crossover=0, nprobe=3, refine=40, n=1) \
@@ -4792,8 +4789,7 @@ def _q_rrf_fuse(spark, sf_dir):
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     lex = bm25_topk(docs, "hash join order", k=25)
-    dense = (brute_force_topk(emb, emb.where(F.col("vec_id") == 0), k=25,
-                              method="sql")   # oracle-replayable twin
+    dense = (brute_force_topk(emb, emb.where(F.col("vec_id") == 0), k=25)
              .select(F.col("neighbor_id").alias("doc_id"),
                      F.col("cos_sim").alias("score")))
     return rrf_fuse([lex, dense], k=60, n=15)

@@ -189,6 +189,8 @@ class GraphiteAPI:
             limit = int(params.get("limit", ["100"])[0])
         except ValueError:
             return 400, "text/plain", b"limit must be an integer"
+        if limit < 0:
+            return 400, "text/plain", b"limit must not be negative"
         exprs = params.get("expr", [])
         if values:
             tag = params.get("tag", [""])[0]

@@ -64,8 +64,9 @@ def _parse_tags(name: str) -> dict:
 def consolidate_for_points(frame: SeriesFrame, max_data_points: int) -> SeriesFrame:
     """maxDataPoints consolidation in-plan (ConsolidateJSON, types.go:87-117):
     if the frame would yield more than maxDataPoints per series, re-bucket by
-    ceil(n/mdp)*step using the frame's consolidation function."""
-    if not max_data_points:
+    ceil(n/mdp)*step using the frame's consolidation function.  A cap of
+    0 or less means no cap."""
+    if max_data_points <= 0:
         return frame
     n = frame.n_points()
     if n <= max_data_points:

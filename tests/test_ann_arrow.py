@@ -1,24 +1,32 @@
-"""ivfpq_encode_arrow == ivfpq_encode, row for row.
+"""The ANN kernels equal the SQL fold they replaced, bit for bit.
 
-The Arrow encoder is the ingest-scale path (numpy matmuls instead of
-per-codeword zip_with folds); its whole contract is that it produces THE
-SAME index — 1-based cell and codes, ties to the lowest index — so a
-lake built with either encoder probes identically.  Pinned here over all
-four l2_cells x residual combinations at dim 16 (small dims = tightest
-argmin margins), plus the write_ann_index(encoder="arrow") round trip.
+``ivfpq_encode``, ``_driver_probe_rows`` and ``brute_force_topk`` are
+numpy kernels; every value they return, or that decides an argmax or
+argmin, is a left fold from 0.0 in element order.  Each test here builds
+the SQL-fold reference from the helpers the SQL paths keep
+(``_cell_score_sql``, ``_pq_code_sql``, ``_sqdists_sql``, ``cosine``)
+and compares exactly: over all four l2_cells x residual combinations at
+dim 16 (small dims = tightest argmin margins), the probe tables at dim
+64 / dsub 8, a constructed near-tie row for the encoder guard, chunk
+boundaries, ties, NULL and degenerate rows.  The rest of the file pins
+the durable-index lifecycle (build, append, stream, compact, delete).
 """
 
 import random
 
+import numpy as np
 import pytest
-from pyspark.sql import functions as F
+from pyspark.sql import Window, functions as F
 
+from carbonapi_spark.datapipe import selectx
+from carbonapi_spark.datapipe import similarity
 from carbonapi_spark.datapipe.similarity import (
-    ann_index_topk, brute_force_topk, brute_force_topk_arrow,
-    ivf_centroids, ivfpq_encode, ivfpq_encode_arrow, pq_codebooks,
-    write_ann_index)
+    _cb_sql, _cell_score_sql, _driver_probe_rows, _pq_code_sql,
+    _sqdists_sql, ann_index_topk, brute_force_topk, cosine, ivf_centroids,
+    ivfpq_encode, ivfpq_topk, pq_codebooks, write_ann_index)
 
 DIM, M, KSUB, K_CELLS, N = 16, 4, 8, 6, 300
+V = "cast(embedding as array<double>)"
 
 
 @pytest.fixture(scope="module")
@@ -30,111 +38,70 @@ def vecs(spark):
                                        "embedding ARRAY<DOUBLE>")
 
 
-def _centroids(l2):
+def _centroids(l2, dim=DIM):
     if not l2:
-        return ivf_centroids(DIM, K_CELLS, seed=43)
+        return ivf_centroids(dim, K_CELLS, seed=43)
     # off-sphere centroids so the l2 scoring branch actually differs
     rng = random.Random(11)
-    return [[round(rng.uniform(-1.5, 1.5), 6) for _ in range(DIM)]
+    return [[round(rng.uniform(-1.5, 1.5), 6) for _ in range(dim)]
             for _ in range(K_CELLS)]
 
 
-@pytest.mark.parametrize("l2_cells", [False, True])
-@pytest.mark.parametrize("residual", [False, True])
-def test_arrow_encoder_matches_sql(vecs, l2_cells, residual):
-    cbs = pq_codebooks(DIM, M, KSUB, seed=44)
-    cents = _centroids(l2_cells)
-    want = {r["vec_id"]: (r["cell"], list(r["codes"]))
-            for r in ivfpq_encode(vecs, cbs, cents, l2_cells=l2_cells,
-                                  residual=residual).collect()}
-    got = {r["vec_id"]: (r["cell"], list(r["codes"]))
-           for r in ivfpq_encode_arrow(vecs, cbs, cents,
-                                       l2_cells=l2_cells,
-                                       residual=residual).collect()}
-    assert got == want
+def _encoded(df):
+    return {r["vec_id"]: (r["cell"], None if r["codes"] is None
+                          else list(r["codes"]))
+            for r in df.collect()}
 
 
-def test_arrow_encoder_chunking(vecs):
-    """Internal chunk boundaries must not change the output."""
-    cbs = pq_codebooks(DIM, M, KSUB, seed=44)
-    cents = _centroids(False)
-    big = {r["vec_id"]: (r["cell"], list(r["codes"]))
-           for r in ivfpq_encode_arrow(vecs, cbs, cents).collect()}
-    small = {r["vec_id"]: (r["cell"], list(r["codes"]))
-             for r in ivfpq_encode_arrow(vecs, cbs, cents,
-                                         chunk=17).collect()}
-    assert small == big
+def _sql_encode(df, cbs, cents, l2_cells=False, residual=False):
+    """The SQL-fold encoder: argmax cell score, codes by the strict-<
+    argmin fold, from the residual ``e - c_cell`` when ``residual``."""
+    base = selectx(selectx(df, "vec_id", f"{V} as __v",
+                           f"{_cell_score_sql(V, cents, l2_cells)} as __d"),
+                   "vec_id", "__v",
+                   "cast(array_position(__d, array_max(__d)) as int)"
+                   " as cell")
+    src = "__v"
+    if residual:
+        base = selectx(base, "vec_id", "cell",
+                       f"zip_with(__v, element_at({_cb_sql(cents)}, cell),"
+                       f" (x, y) -> x - y) as __r")
+        src = "__r"
+    return _encoded(selectx(base, "vec_id", "cell",
+                            f"{_pq_code_sql(src, cbs)} as codes"))
 
 
-def test_write_ann_index_arrow_round_trip(vecs, spark, tmp_path):
-    """An index built with encoder="arrow" is byte-for-byte probe-
-    compatible: same codes table as the SQL build, same top-k."""
-    cbs = pq_codebooks(DIM, M, KSUB, seed=44)
-    cents = _centroids(True)
-    p_sql, p_arw = str(tmp_path / "sql"), str(tmp_path / "arrow")
-    write_ann_index(vecs, p_sql, cbs, cents, l2_cells=True, residual=True)
-    write_ann_index(vecs, p_arw, cbs, cents, l2_cells=True, residual=True,
-                    encoder="arrow")
-    read = lambda p: {r["vec_id"]: (r["cell"], list(r["codes"]))
-                      for r in spark.read.parquet(f"{p}/codes").collect()}
-    assert read(p_arw) == read(p_sql)
-
-    query = vecs.where(F.col("vec_id") % 97 == 3)
-    topk = lambda p: {(r["query_id"], r["neighbor_id"])
-                      for r in ann_index_topk(spark, p, query, k=5,
-                                              nprobe=2, refine=20,
-                                              corpus=vecs).collect()}
-    assert topk(p_arw) == topk(p_sql)
-
-
-def test_store_vectors_refine_without_corpus(vecs, spark, tmp_path):
-    """store_vectors=True rides raw vectors in the cell partitions;
-    refine then needs no corpus= and returns the same top-k as the
-    full-corpus rerank (candidates only ever come from probed cells).
-    Both encoders produce the same stored-vector layout."""
-    cbs = pq_codebooks(DIM, M, KSUB, seed=44)
-    cents = _centroids(True)
-    p_sql, p_arw = str(tmp_path / "sv_sql"), str(tmp_path / "sv_arw")
-    write_ann_index(vecs, p_sql, cbs, cents, l2_cells=True, residual=True,
-                    store_vectors=True)
-    write_ann_index(vecs, p_arw, cbs, cents, l2_cells=True, residual=True,
-                    store_vectors=True, encoder="arrow")
-    rows = {r["vec_id"]: (r["cell"], list(r["codes"]),
-                          tuple(round(x, 9) for x in r["embedding"]))
-            for r in spark.read.parquet(f"{p_sql}/codes").collect()}
-    rows_a = {r["vec_id"]: (r["cell"], list(r["codes"]),
-                            tuple(round(x, 9) for x in r["embedding"]))
-              for r in spark.read.parquet(f"{p_arw}/codes").collect()}
-    assert rows_a == rows
-
-    query = vecs.where(F.col("vec_id") % 97 == 3)
-    stored = {(r["query_id"], r["neighbor_id"])
-              for r in ann_index_topk(spark, p_sql, query, k=5, nprobe=2,
-                                      refine=20).collect()}
-    full = {(r["query_id"], r["neighbor_id"])
-            for r in ann_index_topk(spark, p_sql, query, k=5, nprobe=2,
-                                    refine=20, corpus=vecs).collect()}
-    assert stored == full
+def _sql_probe_rows(query, cents, cbs, nprobe, l2, residual):
+    """The SQL-fold probe tables: each query's ``nprobe`` best cells by
+    ``_cell_score_sql`` (ties to the lowest cell), each with its
+    ``_sqdists_sql`` distance table."""
+    dsub = len(cbs[0][0])
+    w = Window.partitionBy("query_id").orderBy(F.col("__s").desc(),
+                                               F.col("__pos"))
+    probes = (selectx(query, "vec_id as query_id", f"{V} as __v",
+                      f"{_cell_score_sql(V, cents, l2)} as __d")
+              .select("query_id", "__v",
+                      F.posexplode("__d").alias("__pos", "__s"))
+              .withColumn("__rk", F.row_number().over(w))
+              .where(F.col("__rk") <= nprobe)
+              .select("query_id", "__v",
+                      (F.col("__pos") + 1).cast("int").alias("cell")))
+    src = "__v"
+    if residual:
+        probes = selectx(probes, "query_id", "cell",
+                         f"zip_with(__v, element_at({_cb_sql(cents)}, "
+                         f"cell), (x, y) -> x - y) as __r")
+        src = "__r"
+    dtab = "array(" + ",".join(_sqdists_sql(src, cbs[j], j, dsub)
+                               for j in range(len(cbs))) + ")"
+    return sorted((r["query_id"], r["cell"], [list(t) for t in r["dtab"]])
+                  for r in selectx(probes, "query_id", "cell",
+                                   f"{dtab} as dtab").collect())
 
 
-@pytest.mark.parametrize("residual", [False, True])
-def test_driver_probe_tables_match_sql(vecs, spark, tmp_path, residual):
-    """query_tables="driver" (numpy probe cells + ADC distance tables
-    joined as data) returns the same top-k as the literal-SQL default,
-    with and without residual coding and with refine."""
-    cbs = pq_codebooks(DIM, M, KSUB, seed=44)
-    cents = _centroids(True)
-    p = str(tmp_path / "qt")
-    write_ann_index(vecs, p, cbs, cents, l2_cells=True, residual=residual,
-                    store_vectors=True)
-    query = vecs.where(F.col("vec_id") % 97 == 3)
-    run = lambda qt, refine: {(r["query_id"], r["neighbor_id"])
-                              for r in ann_index_topk(
-                                  spark, p, query, k=5, nprobe=2,
-                                  refine=refine,
-                                  query_tables=qt).collect()}
-    assert run("driver", None) == run("sql", None)
-    assert run("driver", 20) == run("sql", 20)
+def _probe_rows(query, cents, cbs, nprobe, l2, residual):
+    return sorted(_driver_probe_rows(query, cents, cbs, nprobe, "vec_id",
+                                     "embedding", l2, residual))
 
 
 def _pairs(df):
@@ -142,27 +109,162 @@ def _pairs(df):
             for r in df.collect()}
 
 
-def test_brute_force_arrow_matches_sql(vecs):
-    """The exact-kNN ground-truth kernel: the Arrow twin returns the
-    same (query_id, neighbor_id) pairs as the SQL fold path, with
-    values equal to within one 6-dp ulp (numpy sums pairwise, the SQL
-    fold sequentially — a last-bit difference can straddle a rounding
-    boundary on some BLAS builds, so exact float equality would be a
-    platform pin, not a contract)."""
+def _sql_topk(corpus, query, k):
+    """The SQL-fold exact top-k: ``cosine()`` rounded HALF_UP to 6 dp,
+    ties to the lowest neighbor_id, NULL similarities (NULL or
+    zero-norm rows) dropped."""
+    q = query.select(F.col("vec_id").alias("query_id"),
+                     F.col("embedding").cast("array<double>").alias("__qv"))
+    c = corpus.select(F.col("vec_id").alias("neighbor_id"),
+                      F.col("embedding").cast("array<double>")
+                      .alias("__cv"))
+    sims = (c.crossJoin(q)
+            .where(F.col("neighbor_id") != F.col("query_id"))
+            .select("query_id", "neighbor_id",
+                    F.round(cosine(F.col("__qv"), F.col("__cv")), 6)
+                    .alias("cos_sim"))
+            .where(F.col("cos_sim").isNotNull()))
+    w = Window.partitionBy("query_id").orderBy(F.col("cos_sim").desc(),
+                                               F.col("neighbor_id"))
+    return _pairs(sims.withColumn("__rk", F.row_number().over(w))
+                  .where(F.col("__rk") <= k).drop("__rk"))
+
+
+@pytest.mark.parametrize("l2_cells", [False, True])
+@pytest.mark.parametrize("residual", [False, True])
+def test_arrow_encoder_matches_sql(vecs, l2_cells, residual):
+    cbs = pq_codebooks(DIM, M, KSUB, seed=44)
+    cents = _centroids(l2_cells)
+    got = _encoded(ivfpq_encode(vecs, cbs, cents, l2_cells=l2_cells,
+                                residual=residual))
+    assert got == _sql_encode(vecs, cbs, cents, l2_cells, residual)
+
+
+def test_arrow_encoder_chunking(vecs, monkeypatch):
+    """Internal chunk boundaries must not change the output."""
+    cbs = pq_codebooks(DIM, M, KSUB, seed=44)
+    cents = _centroids(False)
+    big = _encoded(ivfpq_encode(vecs, cbs, cents))
+    monkeypatch.setattr(similarity, "_ENCODE_CHUNK", 17)
+    assert _encoded(ivfpq_encode(vecs, cbs, cents)) == big
+
+
+def test_encoder_guard_resolves_near_ties(spark):
+    """Constructed near-ties, where BLAS and the fold can disagree.
+
+    Row 1, cells: the fold of x.c0 = 1 + 2^-53 + 2^-53 rounds twice to
+    1.0, while x.c1 = 1 + 2^-52 is exact; the exact dots tie.  The fold
+    picks cell 2, any other summation order may pick cell 1.
+
+    Row 2, codes: |sub - cw|^2 folds to 1.0 for both codewords of
+    subspace 0, so the fold's argmin is code 1; BLAS's |cw|^2 - 2 sub.cw
+    is exact here and picks code 2.  Only the guard's fold re-score gets
+    both rows right."""
+    t = 2.0 ** -53
+    h = 2.0 ** -27
+    cents = [[1.0, 1.0, 1.0, 0.0, 0.0, 0.0],
+             [1.0, 2.0, 0.0, 0.0, 0.0, 0.0]]
+    cbs = [[[0.0, 0.0, 0.0], [0.0, h, h]],
+           [[1.0, 0.0, 0.0], [0.0, 1.0, 0.0]]]
+    df = spark.createDataFrame(
+        [(1, [1.0, t, t, 0.5, 0.25, 0.125]),
+         (2, [1.0, h, h, 0.0, 0.0, 0.0])],
+        "vec_id BIGINT, embedding ARRAY<DOUBLE>")
+    sub = np.array([[1.0, h, h]])
+    cb = np.array(cbs[0])
+    blas = ((cb * cb).sum(axis=1) - 2.0 * (sub @ cb.T)).argmin(axis=1)
+    assert blas[0] + 1 == 2            # what the unguarded kernel picks
+    got = _encoded(ivfpq_encode(df, cbs, cents))
+    assert got == _sql_encode(df, cbs, cents)
+    assert got[1][0] == 2 and got[2][1][0] == 1
+
+
+def test_write_ann_index_arrow_round_trip(vecs, spark, tmp_path):
+    """write_ann_index persists exactly the SQL-fold codes, and probing
+    the durable artifact equals the in-memory ivfpq_topk."""
+    cbs = pq_codebooks(DIM, M, KSUB, seed=44)
+    cents = _centroids(True)
+    p = str(tmp_path / "idx")
+    write_ann_index(vecs, p, cbs, cents, l2_cells=True, residual=True)
+    assert _encoded(spark.read.parquet(f"{p}/codes")) == _sql_encode(
+        vecs, cbs, cents, l2_cells=True, residual=True)
+
+    query = vecs.where(F.col("vec_id") % 97 == 3)
+    got = ann_index_topk(spark, p, query, k=5, nprobe=2, refine=20,
+                         corpus=vecs)
+    want = ivfpq_topk(vecs, query, k=5, nprobe=2, codebooks=cbs,
+                      centroids=cents, residual=True, refine=20)
+    assert _pairs(got) == _pairs(want)
+
+
+def test_store_vectors_refine_without_corpus(vecs, spark, tmp_path):
+    """store_vectors=True rides raw vectors in the cell partitions;
+    refine then needs no corpus= and returns the same top-k as the
+    full-corpus rerank (candidates only ever come from probed cells)."""
+    cbs = pq_codebooks(DIM, M, KSUB, seed=44)
+    cents = _centroids(True)
+    p = str(tmp_path / "sv")
+    write_ann_index(vecs, p, cbs, cents, l2_cells=True, residual=True,
+                    store_vectors=True)
+    rows = {r["vec_id"]: (r["cell"], list(r["codes"]), list(r["embedding"]))
+            for r in spark.read.parquet(f"{p}/codes").collect()}
+    want = _sql_encode(vecs, cbs, cents, l2_cells=True, residual=True)
+    assert {i: v[:2] for i, v in rows.items()} == want
+    assert {i: v[2] for i, v in rows.items()} == {
+        r["vec_id"]: list(r["embedding"]) for r in vecs.collect()}
+
+    query = vecs.where(F.col("vec_id") % 97 == 3)
+    stored = {(r["query_id"], r["neighbor_id"])
+              for r in ann_index_topk(spark, p, query, k=5, nprobe=2,
+                                      refine=20).collect()}
+    full = {(r["query_id"], r["neighbor_id"])
+            for r in ann_index_topk(spark, p, query, k=5, nprobe=2,
+                                    refine=20, corpus=vecs).collect()}
+    assert stored == full
+
+
+@pytest.mark.parametrize("residual", [False, True])
+def test_driver_probe_tables_match_sql(vecs, residual):
+    """The probe rows ivfpq_topk and ann_index_topk join: same cells,
+    same ADC tables as the SQL fold, bit for bit."""
+    cbs = pq_codebooks(DIM, M, KSUB, seed=44)
+    cents = _centroids(True)
+    query = vecs.where(F.col("vec_id") % 23 == 3)
+    assert _probe_rows(query, cents, cbs, 3, True, residual) == \
+        _sql_probe_rows(query, cents, cbs, 3, True, residual)
+
+
+@pytest.mark.parametrize("l2", [False, True])
+@pytest.mark.parametrize("residual", [False, True])
+def test_probe_tables_equal_sql_fold_at_dim64(spark, l2, residual):
+    """At dsub 8 numpy's pairwise sum adds in another order than the
+    fold, so a kernel summing with ``.sum`` differs in the last bits on
+    most table entries; the fold-order kernel equals the SQL exactly."""
+    dim = 64
+    rng = random.Random(5)
+    query = spark.createDataFrame(
+        [(i, [round(rng.uniform(-1, 1), 6) for _ in range(dim)])
+         for i in range(30)], "vec_id BIGINT, embedding ARRAY<DOUBLE>")
+    cents = _centroids(l2, dim)
+    cbs = pq_codebooks(dim, 8, 16, seed=44)
+    assert _probe_rows(query, cents, cbs, 3, l2, residual) == \
+        _sql_probe_rows(query, cents, cbs, 3, l2, residual)
+
+
+def test_brute_force_arrow_matches_sql(vecs, monkeypatch):
+    """The exact-kNN ground-truth kernel returns the SQL fold's pairs
+    and values exactly, whatever the chunk boundaries."""
     query = vecs.where(F.col("vec_id") % 41 == 5)
-    want = _pairs(brute_force_topk(vecs, query, k=7, method="sql"))
-    for chunk in (4096, 17):   # chunk boundaries must not matter
-        got = _pairs(brute_force_topk_arrow(vecs, query, k=7,
-                                            chunk=chunk))
-        assert got.keys() == want.keys()
-        assert all(abs(got[p] - want[p]) <= 1.000001e-6 for p in want)
+    want = _sql_topk(vecs, query, 7)
+    assert _pairs(brute_force_topk(vecs, query, k=7)) == want
+    monkeypatch.setattr(similarity, "_SCAN_CHUNK", 17)
+    assert _pairs(brute_force_topk(vecs, query, k=7)) == want
 
 
-def test_brute_force_arrow_tie_break_on_duplicates(spark):
+def test_brute_force_arrow_tie_break_on_duplicates(spark, monkeypatch):
     """15 duplicate vectors nearest the query, k=10: the preselection
     must keep ALL boundary ties so the global window resolves them to
-    the lowest neighbor_ids, exactly like the SQL twin."""
-    import random
+    the lowest neighbor_ids, exactly like the SQL fold."""
     rng = random.Random(9)
     target = [round(rng.uniform(-1, 1), 6) for _ in range(DIM)]
     far = [[round(rng.uniform(-1, 1), 6) for _ in range(DIM)]
@@ -173,19 +275,17 @@ def test_brute_force_arrow_tie_break_on_duplicates(spark):
     df = spark.createDataFrame(rows, "vec_id BIGINT, "
                                      "embedding ARRAY<DOUBLE>")
     query = df.where(F.col("vec_id") == 999)
-    want = _pairs(brute_force_topk(df, query, k=10, method="sql"))
-    got = _pairs(brute_force_topk_arrow(df, query, k=10, chunk=7))
-    assert got.keys() == want.keys()
+    monkeypatch.setattr(similarity, "_SCAN_CHUNK", 7)
+    got = _pairs(brute_force_topk(df, query, k=10))
+    assert got == _sql_topk(df, query, 10)
     # the ten duplicates with the LOWEST ids win
-    assert {n for _, n in got} >= set(range(10))
+    assert {n for _, n in got} == set(range(10))
 
 
 def test_arrow_kernels_handle_null_embeddings(spark):
-    """One NULL embedding must not abort a 10M-row job: the Arrow
-    encoder emits the SQL path's exact (cell=NULL, codes=[0]*m) rows,
-    and the Arrow brute-force kernel omits null/zero rows (the SQL twin
-    ranks them last with NULL cos_sim — see docstring caveat)."""
-    import random
+    """One NULL embedding must not abort a 10M-row job: the encoder
+    emits the SQL fold's exact (cell=NULL, codes=[0]*m) rows, and
+    brute_force_topk omits NULL and zero-norm rows."""
     rng = random.Random(3)
     rows = [(i, [round(rng.uniform(-1, 1), 6) for _ in range(DIM)])
             for i in range(40)]
@@ -195,20 +295,13 @@ def test_arrow_kernels_handle_null_embeddings(spark):
     cbs = pq_codebooks(DIM, M, KSUB, seed=44)
     cents = _centroids(True)
     for residual in (False, True):
-        want = {r["vec_id"]: (r["cell"],
-                              None if r["codes"] is None
-                              else list(r["codes"]))
-                for r in ivfpq_encode(df, cbs, cents, l2_cells=True,
-                                      residual=residual).collect()}
-        got = {r["vec_id"]: (r["cell"],
-                             None if r["codes"] is None
-                             else list(r["codes"]))
-               for r in ivfpq_encode_arrow(df, cbs, cents, l2_cells=True,
-                                           residual=residual).collect()}
-        assert got == want
-        assert want[98][0] is None
+        got = _encoded(ivfpq_encode(df, cbs, cents, l2_cells=True,
+                                    residual=residual))
+        assert got == _sql_encode(df, cbs, cents, True, residual)
+        assert got[98] == (None, [0] * M)
     query = df.where(F.col("vec_id") == 5)
-    got = _pairs(brute_force_topk_arrow(df, query, k=7))
+    got = _pairs(brute_force_topk(df, query, k=7))
+    assert got == _sql_topk(df, query, 7)
     assert len(got) == 7 and all(n not in (98, 99) for _, n in got)
 
 
@@ -307,19 +400,18 @@ def test_brute_force_arrow_drops_degenerate_queries(vecs, spark):
     good = vecs.where(F.col("vec_id") % 41 == 5)
     bad = spark.createDataFrame([(901, None), (902, [0.0] * DIM)],
                                 "vec_id BIGINT, embedding ARRAY<DOUBLE>")
-    got = _pairs(brute_force_topk_arrow(vecs, good.unionAll(bad), k=7))
-    want = _pairs(brute_force_topk_arrow(vecs, good, k=7))
+    got = _pairs(brute_force_topk(vecs, good.unionAll(bad), k=7))
+    want = _pairs(brute_force_topk(vecs, good, k=7))
     assert got == want                      # degenerates emit nothing
-    only_bad = brute_force_topk_arrow(vecs, bad, k=7)
+    only_bad = brute_force_topk(vecs, bad, k=7)
     assert only_bad.count() == 0            # and an all-bad set is empty
 
 
 def test_driver_probe_rows_skip_null_query(vecs, spark, tmp_path):
-    """ADVICE r12: a NULL query embedding must not crash the
-    query_tables="driver" path (np.asarray(None) @ C).  Investigating
-    showed the SQL path was ALSO wrong — it emitted k junk rows per
-    NULL query (all-NULL distance tables rank nulls-first under asc) —
-    so both paths now drop NULL-embedding queries up front and agree."""
+    """ADVICE r12: a NULL query embedding must neither crash the probe
+    tables (np.asarray(None) @ C) nor emit k junk rows (all-NULL
+    distance tables rank nulls-first under asc): NULL-embedding
+    queries are dropped up front."""
     cbs = pq_codebooks(DIM, M, KSUB, seed=44)
     cents = _centroids(True)
     p = str(tmp_path / "nullq")
@@ -327,12 +419,10 @@ def test_driver_probe_rows_skip_null_query(vecs, spark, tmp_path):
     good = vecs.where(F.col("vec_id") % 97 == 3)
     bad = spark.createDataFrame([(903, None)],
                                 "vec_id BIGINT, embedding ARRAY<DOUBLE>")
-    run = lambda q, qt: {(r["query_id"], r["neighbor_id"])
-                         for r in ann_index_topk(
-                             spark, p, q, k=5, nprobe=2,
-                             query_tables=qt).collect()}
-    mixed = good.unionAll(bad)
-    assert run(mixed, "driver") == run(mixed, "sql") == run(good, "sql")
+    run = lambda q: {(r["query_id"], r["neighbor_id"])
+                     for r in ann_index_topk(spark, p, q, k=5,
+                                             nprobe=2).collect()}
+    assert run(good.unionAll(bad)) == run(good)
 
 
 def test_stream_append_trigger_param(vecs, spark, tmp_path):
@@ -439,7 +529,7 @@ def test_compact_ann_index_after_replayed_epoch(vecs, spark, tmp_path):
 def test_ann_auto_topk_crossover_routing(vecs, spark, tmp_path):
     """VERDICT r12 #4: ann_auto_topk routes by the measured crossover —
     exact vectorized kernel below it (and always without an index),
-    driver-tables index probe + exact refine above it — with the SAME
+    index probe + exact refine above it — with the SAME
     (query_id, neighbor_id, cos_sim) contract on both routes."""
     from carbonapi_spark.datapipe.similarity import ann_auto_topk
     cbs = pq_codebooks(DIM, M, KSUB, seed=44)
@@ -451,13 +541,12 @@ def test_ann_auto_topk_crossover_routing(vecs, spark, tmp_path):
 
     below = ann_auto_topk(vecs, query, k=5, index_path=p,
                           crossover=10**9)
-    exact = brute_force_topk_arrow(vecs, query, k=5)
+    exact = brute_force_topk(vecs, query, k=5)
     assert _pairs(below) == _pairs(exact)
 
     above = ann_auto_topk(vecs, query, k=5, index_path=p, crossover=0,
                           nprobe=2, refine=20)
-    want = ann_index_topk(spark, p, query, k=5, nprobe=2, refine=20,
-                          query_tables="driver")
+    want = ann_index_topk(spark, p, query, k=5, nprobe=2, refine=20)
     assert _pairs(above) == _pairs(want)
     assert below.columns == above.columns == ["query_id", "neighbor_id",
                                               "cos_sim"]
@@ -686,8 +775,6 @@ def test_l0_append_probe_equals_cell_append(vecs, spark, tmp_path):
     assert topk(p_l0) == topk(p_cell)
     # stored-vector refine reads L0 vectors through the same union
     assert topk(p_l0, refine=20) == topk(p_cell, refine=20)
-    # driver probe-tables path sees the same union
-    assert topk(p_l0, query_tables="driver") == topk(p_cell)
 
 
 def test_stream_append_l0_one_file_per_batch(vecs, spark, tmp_path):

@@ -1,4 +1,4 @@
-"""The catalog's graphite oracles, replayed in the default run.
+"""The catalog's graphite and ANN oracles, replayed in the default run.
 
 Every entry built by ``graphite_query`` — the render engine's frame read
 the way a client gets it, densified — plus ``tiered_fetch`` runs on Spark
@@ -9,6 +9,11 @@ count, values order-insensitive at 6 dp.
 Unit-test lakes store gaps as NULL rows; the testdata events series have
 missing rows, so this is where a frame that treats a missing row unlike a
 NULL row shows up.
+
+The ANN entries (exact top-k, IVFADC encode and probe, the durable-index
+lifecycle) are compared without rounding, as ``check_oracles.py
+--strict`` compares them: their kernels fold in SQL order, so every
+value equals the oracle's bit for bit.
 """
 
 import duckdb
@@ -22,6 +27,10 @@ from tools.check_oracles import normalize
 
 GRAPHITE = [name for name, q in QUERIES.items()
             if q.__name__.startswith("graphite[")]
+ANN = ["ann_topk", "ann_quality", "rrf_fuse", "pq_ivf_topk",
+       "pq_ivf_refine", "pq_ivf_residual", "ann_compact_probe",
+       "ann_l0_probe", "stream_ann_replay", "ann_delete_probe",
+       "ann_auto_route"]
 
 
 def test_graphite_catalog_size():
@@ -37,13 +46,12 @@ def duck():
     con.close()
 
 
-def _sorted_rows(cols, rows):
+def _sorted_rows(cols, rows, strict):
     idx = [cols.index(c) for c in sorted(cols)]
-    return normalize([tuple(r[i] for i in idx) for r in rows])
+    return normalize([tuple(r[i] for i in idx) for r in rows], strict)
 
 
-@pytest.mark.parametrize("name", GRAPHITE + ["tiered_fetch"])
-def test_graphite_oracle(spark, duck, name):
+def _replay(spark, duck, name, strict):
     try:
         sdf = QUERIES[name](spark, SF_DIR)
         got_cols, got = sdf.columns, [tuple(r) for r in sdf.collect()]
@@ -53,7 +61,18 @@ def test_graphite_oracle(spark, duck, name):
     want_cols = [d[0] for d in cur.description]
     want = cur.fetchall()
     assert sorted(got_cols) == sorted(want_cols)
-    got, want = _sorted_rows(got_cols, got), _sorted_rows(want_cols, want)
+    got = _sorted_rows(got_cols, got, strict)
+    want = _sorted_rows(want_cols, want, strict)
     assert len(got) == len(want)
     bad = [(a, b) for a, b in zip(got, want) if a != b]
     assert not bad, f"{len(bad)} mismatched rows; first: {bad[0]}"
+
+
+@pytest.mark.parametrize("name", GRAPHITE + ["tiered_fetch"])
+def test_graphite_oracle(spark, duck, name):
+    _replay(spark, duck, name, strict=False)
+
+
+@pytest.mark.parametrize("name", ANN)
+def test_ann_oracle_bit_exact(spark, duck, name):
+    _replay(spark, duck, name, strict=True)

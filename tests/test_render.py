@@ -1306,6 +1306,27 @@ def test_http_metadata_param_fuzz_never_500(server):
             assert code in (200, 400), (url, code, body[:200])
 
 
+def test_http_nonpositive_max_data_points_means_no_cap(server):
+    """maxDataPoints of 0 or less means no cap: a negative value used to
+    become a negative consolidation step and empty every series."""
+    base = (f"{server}/render?target=web.*.cpu&from=0&until=4"
+            "&format=json&noCache=1")
+    _, body0 = _get(base + "&maxDataPoints=0")
+    assert all(s["datapoints"] for s in json.loads(body0))
+    for mdp in ("-1", "-5"):
+        assert _get(base + f"&maxDataPoints={mdp}") == (200, body0)
+
+
+def test_http_negative_autocomplete_limit_is_400(server):
+    """A negative tag-autocomplete limit is a client error, answered
+    before any Spark work (it used to reach df.limit(-1) and 500)."""
+    for route in ("tags?tagPrefix=", "values?tag=host&valuePrefix="):
+        url = f"{server}/tags/autoComplete/{route}"
+        code, body = _get_no_raise(url + "&limit=-1")
+        assert code == 400, body
+        assert _get_no_raise(url + "&limit=0")[0] == 200
+
+
 def test_http_trailing_slash_and_usage(server):
     """The reference registers every route with and without a trailing
     slash (init.go:15-36) and serves a usage page at /

@@ -48,14 +48,15 @@ def boundary_values(rows) -> list:
     return hits[:3]
 
 
-def normalize(rows):
-    """rows: tuples already in sorted-column order."""
+def normalize(rows, strict=STRICT):
+    """rows: tuples already in sorted-column order.  Doubles are
+    compared at 6 dp, or bit-exactly when ``strict``."""
     out = []
     for r in rows:
         vals = []
         for v in r:
             if isinstance(v, float):
-                if STRICT:
+                if strict:
                     v = None if math.isnan(v) else v
                 else:
                     v = None if math.isnan(v) else round(v, 6)

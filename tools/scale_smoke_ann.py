@@ -9,9 +9,9 @@ deployment path:
   * kmeans_train_sample 256-cell coarse quantizer + pq_train PQ8x8
     codebooks trained on RESIDUALS, both from one 100k driver sample
     (Jegou TPAMI 2011 / FAISS practice: train small, encode big),
-  * write_ann_index(encoder="arrow", store_vectors=True) -> durable
+  * write_ann_index(store_vectors=True) -> durable
     cell-partitioned IVFADC artifact, one file per cell,
-  * SQL-vs-Arrow encoder head-to-head on a warm 100k slice,
+  * the encoder timed alone on a warm 100k slice,
   * nprobe sweep {1,2,4,8,16} + refine sweep {50,200,500} via
     ann_index_topk: probe latency + recall@10 vs brute_force_topk
     ground truth on 32 queries,
@@ -125,40 +125,28 @@ def main():
          kmeans_sec=round(t_kmeans, 2), pq_sec=round(t_pq, 2),
          n_centroids=N_CENTROIDS, m=M, ksub=KSUB)
 
-    # ---- encoder paths head-to-head on a 100k slice: the SQL path is
-    # the oracle-replayable catalog shape; the Arrow path (numpy
-    # matmuls, pinned bit-equal in tests/test_ann_arrow.py) is the
-    # ingest-scale shape.  Count() forces the full encode.
+    # ---- the encoder alone on a 100k slice (numpy matmuls with the
+    # fold-order near-tie guard, pinned equal to the SQL fold in
+    # tests/test_ann_arrow.py); the aggregate forces the full encode.
     slice_df = corpus.where(F.col("vec_id") < 100_000)
-    from carbonapi_spark.datapipe.similarity import (ivfpq_encode,
-                                                     ivfpq_encode_arrow)
-    # force the full encode: count() alone lets Catalyst prune the
-    # entire projection on the SQL path (measured: 2.2s "encode")
+    from carbonapi_spark.datapipe.similarity import ivfpq_encode
     force = lambda d: d.agg(F.sum(F.xxhash64("cell", "codes")
                                   .cast("double"))).collect()
-    # spawn+warm the Python workers so the Arrow timing is the steady
+    # spawn+warm the Python workers so the timing is the steady
     # state, not 32 interpreter startups (measured: 6.7s cold vs 1.2s
     # warm at 100k rows)
-    force(ivfpq_encode_arrow(slice_df.limit(2048), cbs, cents,
-                             l2_cells=True, residual=True))
+    force(ivfpq_encode(slice_df.limit(2048), cbs, cents, l2_cells=True,
+                       residual=True))
     t = time.time()
     force(ivfpq_encode(slice_df, cbs, cents, l2_cells=True,
                        residual=True))
-    t_sql = time.time() - t
-    t = time.time()
-    force(ivfpq_encode_arrow(slice_df, cbs, cents, l2_cells=True,
-                             residual=True))
-    t_arw = time.time() - t
-    emit(case="encode_100k_sql_vs_arrow", sql_sec=round(t_sql, 2),
-         arrow_sec=round(t_arw, 2), speedup=round(t_sql / t_arw, 1))
+    emit(case="encode_100k", sec=round(time.time() - t, 2))
 
-    # ---- index build (Arrow encoder): encode the full corpus + write
-    # the durable cell-partitioned layout (residual=True = faithful
-    # FAISS IVFADC).
+    # ---- index build: encode the full corpus + write the durable
+    # cell-partitioned layout (residual=True = faithful FAISS IVFADC).
     t = time.time()
     write_ann_index(corpus, f"{WORK}/index", cbs, cents,
-                    l2_cells=True, residual=True, encoder="arrow",
-                    store_vectors=True)
+                    l2_cells=True, residual=True, store_vectors=True)
     t_build = time.time() - t
     codes = spark.read.parquet(f"{WORK}/index/codes")
     emit(case="index_build", sec=round(t_build, 2),
@@ -185,23 +173,15 @@ def main():
         "vec_id BIGINT, embedding ARRAY<DOUBLE>")
     nq = query.count()
 
-    # ---- ground truth: exact brute-force cosine top-10 via the Arrow
-    # kernel (pinned row+value-identical to the SQL twin in
-    # tests/test_ann_arrow.py).  SMOKE_ANN_SQL_BRUTE=1 also times the
-    # SQL fold path for the twin head-to-head (10 extra minutes at
-    # 10M; measured once: 587s vs the Arrow kernel below).
-    from carbonapi_spark.datapipe.similarity import brute_force_topk_arrow
+    # ---- ground truth: exact brute-force cosine top-10 (pinned
+    # pair- and value-identical to the SQL fold in
+    # tests/test_ann_arrow.py).
     t = time.time()
     truth = {(r["query_id"], r["neighbor_id"])
-             for r in brute_force_topk_arrow(corpus, query,
-                                             k=K).collect()}
+             for r in brute_force_topk(corpus, query, k=K).collect()}
     t_brute = time.time() - t
-    emit(case="brute_force_arrow", sec=round(t_brute, 2), queries=nq,
+    emit(case="brute_force", sec=round(t_brute, 2), queries=nq,
          pairs=len(truth))
-    if os.environ.get("SMOKE_ANN_SQL_BRUTE"):
-        t = time.time()
-        brute_force_topk(corpus, query, k=K).count()
-        emit(case="brute_force_sql", sec=round(time.time() - t, 2))
 
     # ---- partition-pruning evidence at nprobe=4: the probed scan's
     # plan must carry PartitionFilters on cell, and inputFiles() must
@@ -222,37 +202,28 @@ def main():
 
     # ---- warmup probe (index read + plan compile) so sweep timings
     # compare probe work, not first-touch overhead.
-    ann_index_topk(spark, f"{WORK}/index", query, k=K, nprobe=1,
-                   query_tables="driver").collect()
+    ann_index_topk(spark, f"{WORK}/index", query, k=K,
+                   nprobe=1).collect()
 
     # ---- nprobe sweep: durable-index probe with exact top-200 refine.
     for nprobe in NPROBES:
         t = time.time()
         got = {(r["query_id"], r["neighbor_id"])
                for r in ann_index_topk(spark, f"{WORK}/index", query,
-                                       k=K, nprobe=nprobe, refine=REFINE,
-                                       query_tables="driver").collect()}
+                                       k=K, nprobe=nprobe,
+                                       refine=REFINE).collect()}
         sec = time.time() - t
         emit(case=f"ivfadc_nprobe_{nprobe}", sec=round(sec, 2),
              nprobe=nprobe, recall_at_10=round(len(got & truth)
                                                / max(len(truth), 1), 4),
              speedup_vs_brute=round(t_brute / sec, 2))
 
-    # ---- literal-SQL query tables at nprobe=2 for contrast: the
-    # default path inlines n_centroids*dim + m*ksub*dsub literals,
-    # whose parse+codegen is fixed latency per probe batch.
-    t = time.time()
-    ann_index_topk(spark, f"{WORK}/index", query, k=K, nprobe=2,
-                   refine=REFINE).collect()
-    emit(case="probe_sql_tables_nprobe_2", sec=round(time.time() - t, 2))
-
     # ---- stored-vector vs full-corpus rerank at nprobe=4: the
     # store_vectors layout turns refine's vector gather into a
     # partition-pruned read instead of a second corpus scan.
     t = time.time()
     ann_index_topk(spark, f"{WORK}/index", query, k=K, nprobe=4,
-                   refine=REFINE, corpus=corpus,
-                   query_tables="driver").collect()
+                   refine=REFINE, corpus=corpus).collect()
     emit(case="refine_via_corpus_scan", sec=round(time.time() - t, 2))
 
     # ---- refine sweep at nprobe=4: with cluster-shaped corpora the
@@ -262,8 +233,8 @@ def main():
         t = time.time()
         got = {(r["query_id"], r["neighbor_id"])
                for r in ann_index_topk(spark, f"{WORK}/index", query,
-                                       k=K, nprobe=4, refine=refine,
-                                       query_tables="driver").collect()}
+                                       k=K, nprobe=4,
+                                       refine=refine).collect()}
         emit(case=f"ivfadc_refine_{refine}", sec=round(time.time() - t, 2),
              refine=refine, recall_at_10=round(len(got & truth)
                                                / max(len(truth), 1), 4))
@@ -273,8 +244,7 @@ def main():
     t = time.time()
     adc = {(r["query_id"], r["neighbor_id"])
            for r in ann_index_topk(spark, f"{WORK}/index", query,
-                                   k=K, nprobe=8,
-                                   query_tables="driver").collect()}
+                                   k=K, nprobe=8).collect()}
     emit(case="adc_only_nprobe_8", sec=round(time.time() - t, 2),
          recall_at_10=round(len(adc & truth) / max(len(truth), 1), 4))
 

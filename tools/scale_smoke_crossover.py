@@ -2,9 +2,9 @@
 derived 4M default to a measurement).
 
 At each corpus size N in the sweep: build the durable IVFADC artifact
-(arrow encoder, store_vectors, 256 cells — the scale_smoke_ann.py
+(store_vectors, 256 cells — the scale_smoke_ann.py
 recipe), then time (warm, min-of-2) the two routes ann_auto_topk picks
-between — the vectorized exact kernel vs the driver-tables index probe
+between — the vectorized exact kernel vs the index probe
 with exact refine — on the same 32 queries.  The crossover is the N
 where the index route first wins.
 
@@ -44,7 +44,7 @@ def main():
     from pyspark.sql import SparkSession, functions as F
 
     from carbonapi_spark.datapipe.similarity import (
-        ann_index_topk, brute_force_topk_arrow, kmeans_train_sample,
+        ann_index_topk, brute_force_topk, kmeans_train_sample,
         pq_train, write_ann_index)
 
     spark = (SparkSession.builder.master("local[32]")
@@ -105,15 +105,14 @@ def main():
         sub = spark.read.parquet(sub_path)
         t = time.time()
         write_ann_index(sub, f"{WORK}/index_{n}", cbs, cents,
-                        l2_cells=True, residual=True, encoder="arrow",
-                        store_vectors=True)
+                        l2_cells=True, residual=True, store_vectors=True)
         t_build = round(time.time() - t, 2)
         exact_sec = best_of_2(
-            lambda: brute_force_topk_arrow(sub, query, k=K).count())
+            lambda: brute_force_topk(sub, query, k=K).count())
         index_sec = best_of_2(
             lambda: ann_index_topk(spark, f"{WORK}/index_{n}", query,
-                                   k=K, nprobe=NPROBE, refine=REFINE,
-                                   query_tables="driver").count())
+                                   k=K, nprobe=NPROBE,
+                                   refine=REFINE).count())
         emit(n=n, build_sec=t_build, exact_sec=exact_sec,
              index_sec=index_sec,
              winner="index" if index_sec < exact_sec else "exact")

@@ -3,7 +3,7 @@
 The batch build and the probe are measured at 10M (scale_smoke_ann.py);
 this measures the STREAMING ingest twin on the same corpus shape:
 
-  * 9M-vector durable IVFADC index (arrow encoder, store_vectors),
+  * 9M-vector durable IVFADC index (store_vectors),
   * a 1M-vector delta written as 8 parquet files and replayed through
     ``stream_append_ann_index`` with maxFilesPerTrigger=1 — 8 real
     micro-batches under availableNow; sustained append throughput from
@@ -103,7 +103,7 @@ def main():
 
     t = time.time()
     write_ann_index(base, f"{WORK}/index", cbs, cents, l2_cells=True,
-                    residual=True, encoder="arrow", store_vectors=True)
+                    residual=True, store_vectors=True)
     emit(case="index_build_9m", sec=round(time.time() - t, 2))
 
     codes = lambda: spark.read.parquet(f"{WORK}/index/codes")
@@ -125,8 +125,7 @@ def main():
         "vec_id BIGINT, embedding ARRAY<DOUBLE>")
 
     probe = lambda: ann_index_topk(spark, f"{WORK}/index", query, k=K,
-                                   nprobe=NPROBE, refine=REFINE,
-                                   query_tables="driver")
+                                   nprobe=NPROBE, refine=REFINE)
     probe().collect()                      # warm plan/index read
     tot0, mx0, avg0 = files_per_cell()
     t = time.time()
@@ -144,7 +143,6 @@ def main():
               .option("maxFilesPerTrigger", 1).parquet(f"{WORK}/delta_src"))
     t = time.time()
     q = stream_append_ann_index(stream, f"{WORK}/index",
-                                encoder="arrow",
                                 checkpoint_dir=f"{WORK}/ckpt")
     q.awaitTermination()
     t_stream = time.time() - t

@@ -123,7 +123,7 @@ def main():
 
     t = time.time()
     write_ann_index(base, f"{WORK}/index", cbs, cents, l2_cells=True,
-                    residual=True, encoder="arrow", store_vectors=True)
+                    residual=True, store_vectors=True)
     emit(case="index_build", sec=round(time.time() - t, 2),
          rows=N - DELTA)
 
@@ -171,7 +171,6 @@ def main():
     stream = (spark.readStream.schema(delta.schema)
               .option("maxFilesPerTrigger", 1).parquet(src))
     q = stream_append_ann_index(stream, f"{WORK}/index",
-                                encoder="arrow",
                                 checkpoint_dir=f"{WORK}/ckpt",
                                 trigger={"processingTime": TICK},
                                 l0=L0)
@@ -238,8 +237,8 @@ def main():
     t = time.time()
     hits = {(r["query_id"], r["neighbor_id"])
             for r in ann_index_topk(spark, f"{WORK}/index", query, k=K,
-                                    nprobe=NPROBE, refine=REFINE,
-                                    query_tables="driver").collect()}
+                                    nprobe=NPROBE,
+                                    refine=REFINE).collect()}
     delta_hits = sum(1 for _, n in hits if n >= N - DELTA)
     emit(case="final_verdict", rows=n_rows, distinct=n_distinct,
          expected=N, complete=(n_distinct == N),
