@@ -453,29 +453,44 @@ def ranking_metrics(results: DataFrame, truth: DataFrame, k: int = 10,
     aggregate.  Returns (query, n_truth, hits, recall, ndcg),
     rounded to 6.
 
-    The truth side is read once: each truth row picks up its result
-    rank (NULL when missed) from the broadcast, top-k bounded results,
-    and one per-query aggregate counts both the truth and the hits.  A
-    truth built by a Python kernel (``brute_force_topk``) would
-    otherwise run twice, since Spark reuses no exchange above a
-    MapInPandas node."""
+    Both inputs are read once and never joined: the truth rows (rank
+    NULL) and the top-k result rows are unioned and grouped by query,
+    and array folds over each query's k-bounded lists count the truth,
+    the hits and the DCG, in rank order.  A truth built by a Python
+    kernel (``brute_force_topk``) is therefore computed once, since
+    Spark reuses no exchange above a MapInPandas node, and no side is
+    broadcast, since the number of queries is unbounded.  A join on
+    (query, id) would re-shuffle both sides, each already clustered by
+    query after its top-k window; the union keeps that clustering, so
+    the grouping adds no exchange (ann_quality at sf0.1: 9 jobs, 12
+    with the join)."""
     from pyspark.sql.window import Window
     w = Window.partitionBy(query_col).orderBy(F.desc(score_col),
                                               F.col(id_col))
     res = (results.withColumn("__rk", F.row_number().over(w))
            .where(F.col("__rk") <= k).select(query_col, id_col, "__rk"))
-    dcg = F.sum(F.when(F.col("__rk").isNotNull(),
-                       F.lit(1.0) / F.log2(F.col("__rk") + 1))
-                .otherwise(F.lit(0.0)))
-    per_q = (truth.select(query_col, id_col)
-             .join(F.broadcast(res), [query_col, id_col], "left")
-             .groupBy(query_col)
-             .agg(F.count(F.lit(1)).alias("n_truth"),
-                  F.count("__rk").alias("hits"), dcg.alias("__dcg")))
+    rows = (truth.select(query_col, id_col,
+                         F.lit(None).cast("int").alias("__rk"))
+            .unionByName(res)
+            .groupBy(query_col)
+            .agg(F.collect_list(F.when(F.col("__rk").isNull(),
+                                       F.col(id_col))).alias("__t"),
+                 F.array_sort(F.collect_list(
+                     F.when(F.col("__rk").isNotNull(),
+                            F.struct("__rk", id_col)))).alias("__r")))
+    hit = F.filter("__r", lambda x: F.array_contains("__t", x[id_col]))
+    dcg = F.aggregate(
+        hit, F.lit(0.0),
+        lambda acc, x: acc + F.lit(1.0) / F.log2(x["__rk"] + 1))
     idcg = F.aggregate(
         F.sequence(F.lit(1), F.least(F.col("n_truth"), F.lit(k))),
         F.lit(0.0),
         lambda acc, i: acc + F.lit(1.0) / F.log2(i.cast("double") + 1))
+    per_q = (rows.where(F.size("__t") > 0)
+             .select(query_col,
+                     F.size("__t").cast("long").alias("n_truth"),
+                     F.size(hit).cast("long").alias("hits"),
+                     dcg.alias("__dcg")))
     return per_q.select(query_col, "n_truth", "hits",
                         F.round(F.col("hits") / F.col("n_truth"), 6)
                         .alias("recall"),

@@ -172,26 +172,31 @@ def brute_force_topk(corpus: DataFrame, query: DataFrame, k: int = 10,
                 ids = part[id_col].to_numpy()
                 X = np.array([np.asarray(v, dtype=np.float64)
                               for v in part[vec_col]])
-                xss = _fold_dot(X, X)
+                # picks only: whether a sum of squares is 0 or non-finite
+                # does not depend on its order (bar overflow near the
+                # double max); the candidates' norms are folded below
+                xss = np.einsum("ij,ij->i", X, X)
                 keep = (xss > 0) & np.isfinite(xss)
                 if not keep.all():
                     X, ids, xss = X[keep], ids[keep], xss[keep]
                 if not len(ids):
                     continue
-                xn = np.sqrt(xss)
-                sims = (X / xn[:, None]) @ Qhat.T   # n x |Q|, picks only
+                sims = (X / np.sqrt(xss)[:, None]) @ Qhat.T   # n x |Q|
                 top = min(kk, len(ids))
                 kth = np.partition(sims, len(ids) - top,
                                    axis=0)[len(ids) - top]
                 ri, qi = np.nonzero(sims >= kth - margin)
-                n = qn[qi] * xn[ri]
-                dots = _fold_dot(Q[qi], X[ri])
+                Xc = X[ri]
+                n = qn[qi] * np.sqrt(_fold_dot(Xc, Xc))
+                dots = _fold_dot(Q[qi], Xc)
                 pos = n > 0         # the SQL NULLs the rest: drop them
                 yield pd.DataFrame({"query_id": qids[qi[pos]],
                                     "neighbor_id": ids[ri[pos]],
                                     "cos_sim": dots[pos] / n[pos]})
 
-    cand = (spread(corpus, min_bytes=256 << 10)
+    # BLAS leaves little per-row work to parallelize: below the default
+    # gate one task beats the exchange (sf0.1 ann_topk 0.74 -> 0.60 s).
+    cand = (spread(corpus)
             .select(F.col(id_col), _as_double(F.col(vec_col)).alias(vec_col))
             .mapInPandas(scan, schema)
             .where(F.col("neighbor_id") != F.col("query_id"))

@@ -899,3 +899,23 @@ def test_l0_first_append_window_is_invisible(vecs, spark, tmp_path):
     assert read_l0(spark, p, "codes") is None
     query = vecs.where(F.col("vec_id") % 97 == 3)
     assert ann_index_topk(spark, p, query, k=5, nprobe=2).count() > 0
+
+
+def test_ranking_metrics_reads_a_python_truth_once(spark):
+    """A truth built by a Python kernel is planned once (Spark reuses no
+    exchange above a MapInPandas node), and no side is broadcast: the
+    number of queries is unbounded."""
+    from carbonapi_spark.datapipe.retrieval import ranking_metrics
+    base = spark.createDataFrame(
+        [(1, 10, 1.0), (1, 11, 0.9), (2, 20, 1.0)],
+        "query_id long, neighbor_id long, cos_sim double")
+    truth = base.mapInPandas(lambda it: it, base.schema)
+    res = spark.createDataFrame(
+        [(1, 10, 0.8), (2, 21, 0.7)],
+        "query_id long, neighbor_id long, cos_sim double")
+    out = ranking_metrics(res, truth)
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("MapInPandas") == 1, plan
+    assert "BroadcastExchange" not in plan, plan
+    got = {r["query_id"]: (r["n_truth"], r["hits"]) for r in out.collect()}
+    assert got == {1: (2, 1), 2: (1, 0)}
