@@ -4,9 +4,12 @@ multimodal plumbing. All DataFrame-native; Python only in clearly-marked
 kernels."""
 
 import logging
-import threading
 
 from pyspark.sql import DataFrame, functions as F
+
+from carbonapi_spark.sqltext import (  # noqa: F401 - re-exported
+    expr_cached, local_df, selectx, sql_dlit,
+)
 
 _log = logging.getLogger(__name__)
 # Diagnostic counter: how often the Catalyst size-estimate probe failed and
@@ -102,37 +105,6 @@ def spread(df: DataFrame, min_bytes: int = 8 << 20) -> DataFrame:
     if df.rdd.getNumPartitions() < target:
         return df.repartition(target)
     return df
-
-
-def local_df(spark, data, schema) -> DataFrame:
-    """Driver-local rows -> DataFrame via an ARROW local relation.
-
-    The classic list-of-tuples ``createDataFrame`` builds a Python-RDD-
-    backed relation with ``defaultParallelism`` partitions: EVERY action
-    on it round-trips each partition through a Python worker, and a
-    ``coalesce(1)`` (the natural shape for tiny metadata writes) chains
-    those round-trips SERIALLY — measured ~5.5 s of fixed cost per
-    8-row parquet write at r14, ~30x the actual work.  Routing the same
-    rows through a ``pyarrow.Table`` instead yields a JVM-local relation
-    (no Python workers at action time, one partition): identical values,
-    schema, and xxhash64 stream (pinned by tests), ~0.2 s for the same
-    write.  Falls back to the classic path for anything the Arrow
-    converter rejects (exotic nested types, tz-bearing datetimes), so
-    call sites can adopt it unconditionally."""
-    from pyspark.sql.types import StructType
-    st = StructType.fromDDL(schema) if isinstance(schema, str) else schema
-    try:
-        import pyarrow as pa
-        from pyspark.sql.pandas.types import to_arrow_schema
-        pa_schema = to_arrow_schema(st)
-        rows = [tuple(r) for r in data]
-        cols = list(zip(*rows)) if rows else [() for _ in pa_schema]
-        arrays = [pa.array(list(c), type=f.type, from_pandas=False)
-                  for c, f in zip(cols, pa_schema)]
-        tbl = pa.Table.from_arrays(arrays, schema=pa_schema)
-        return spark.createDataFrame(tbl, schema=st)
-    except Exception:
-        return spark.createDataFrame(data, st)
 
 
 def combo_repartition(df: DataFrame, partition_cols, n_combos: int) -> DataFrame:
@@ -234,70 +206,6 @@ def overlap_jobs(*thunks) -> list:
         if err is not None:
             raise err
         return done
-
-
-def sql_dlit(v: float) -> str:
-    """Exact Spark-SQL DOUBLE literal for ``v``: repr round-trips the
-    IEEE value and the 'D' suffix stops the parser reading a bare
-    decimal as DECIMAL.  Lets hot driver loops build constant-heavy
-    expressions as ONE ``F.expr`` parse instead of a py4j round-trip
-    per ``F.lit`` (measured r14: ~0.4 s per viterbi_expr build, ~2.4 s
-    of cumulative k_center distance-expression builds)."""
-    import math as _math
-    v = float(v)
-    if _math.isnan(v):
-        return "cast('NaN' as double)"
-    if _math.isinf(v):
-        return f"cast('{'-' if v < 0 else ''}Infinity' as double)"
-    return repr(v) + "D"
-
-
-_EXPR_CACHE: dict = {}
-_EXPR_CACHE_MAX = 256
-_EXPR_CACHE_LOCK = threading.Lock()
-
-
-def expr_cached(s: str):
-    """``F.expr(s)`` with the PARSED expression memoized per py4j
-    gateway (VERDICT r14 #1, the 'prepared-plan registry': construction
-    caching only — never data).  The constant-heavy probe expressions
-    (centroid matrices, PQ codebooks, viterbi folds) are deterministic
-    functions of frozen index parameters, so the same SQL text is
-    re-parsed on every probe call: ~0.2-0.4 s per ANN probe at bench
-    scale (measured r15,
-    ``git show 34ba022:tools/opt_probe_profile.py``).  An unresolved
-    parsed expression carries no data, no plan state and no column
-    bindings — reusing the Column object across DataFrames is exactly
-    what a repeated ``selectExpr`` produces, so plans are byte-identical.
-    Keyed on the live gateway (a restarted JVM invalidates cached
-    JavaObjects); FIFO-capped so pathological literal churn (per-step
-    k_center distances over unbounded inputs) cannot grow it without
-    bound.  The eviction runs under a lock: request threads share the
-    cache, and two threads at the cap would otherwise pop the same oldest
-    key."""
-    from pyspark import SparkContext
-    sc = SparkContext._active_spark_context
-    gw = getattr(sc, "_gateway", None) if sc is not None else None
-    if gw is None:
-        return F.expr(s)
-    key = (id(gw), s)
-    col = _EXPR_CACHE.get(key)
-    if col is None:
-        col = F.expr(s)
-        with _EXPR_CACHE_LOCK:
-            if key not in _EXPR_CACHE and len(_EXPR_CACHE) >= _EXPR_CACHE_MAX:
-                _EXPR_CACHE.pop(next(iter(_EXPR_CACHE)))
-            col = _EXPR_CACHE.setdefault(key, col)
-    return col
-
-
-def selectx(df: DataFrame, *exprs: str) -> DataFrame:
-    """``df.selectExpr(*exprs)`` through :func:`expr_cached` — the
-    drop-in for hot constant-heavy projection sites.  ``selectExpr``
-    is definitionally ``select(expr(e) for e)``, aliases included, so
-    the unresolved plan is identical; only the redundant re-parse of
-    an already-seen expression string is skipped."""
-    return df.select(*[expr_cached(e) for e in exprs])
 
 
 def pin(df: DataFrame) -> DataFrame:

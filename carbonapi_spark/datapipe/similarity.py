@@ -1738,7 +1738,7 @@ def k_center_select(vecs: DataFrame, k: int = 8,
                         f"rank INT, {id_col} LONG, dist2 DOUBLE")
     picked = [(1, seed[0]["__id"], 0.0)]
     center_vecs = [seed[0]["__v"]]
-    from carbonapi_spark.datapipe import sql_dlit
+    from carbonapi_spark.sqltext import sql_dlit
     for step in range(2, k + 1):
         # one F.expr parse per step instead of dim x centers F.lit
         # py4j calls (r14: the Column-builder form spent ~2.4 s of

@@ -116,7 +116,7 @@ def _viterbi_sql(col: str, vocab: dict[str, int | float],
     training round plus once at encode, so 3x per fertility entry).
     Takes a bare column NAME; semantics are pinned identical to the
     Column path by ``test_viterbi_sql_path_matches_column_path``."""
-    from carbonapi_spark.datapipe import sql_dlit
+    from carbonapi_spark.sqltext import sql_dlit
     mdl = objective == "mdl"
     lit = (lambda s: f"{int(s)}L") if mdl else sql_dlit
     scores = "map(" + ",".join(

@@ -10,15 +10,16 @@ fuses the pre-agg projection into the scan stage.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, functions as F
+from pyspark.sql import functions as F
 
 from carbonapi_spark.functions import register
 from carbonapi_spark.evaluator import eval_expr
-from carbonapi_spark.functions.helper import agg_key_expr, series_args
+from carbonapi_spark.functions.helper import agg_key_sql, nodes_sql, series_args
 from carbonapi_spark.model.consolidation import (
     agg_column, percentile_column, skips_nulls,
 )
 from carbonapi_spark.model.series import NAME, ORD, TS, VALUE, SeriesFrame
+from carbonapi_spark.sqltext import expr_cached, selectx, sql_lit
 
 
 # ...Series aliases -> consolidation callback (aggregate/function.go:23-37)
@@ -38,12 +39,12 @@ SERIES_ALIASES = {
 }
 
 
-def _fold(frame: SeriesFrame, key: Column | str, func: str,
-          xff: float = 0.0) -> SeriesFrame:
+def _fold(frame: SeriesFrame, func: str, xff: float = 0.0, *,
+          key: str | None = None, name: str | None = None) -> SeriesFrame:
     """Fold the series of *frame* pointwise: one output series per value of
-    *key*, a Column over the input rows, named by that value; or, for a
-    str *key*, all into one series of that name. (A str rather than a
-    literal Column, which Catalyst would keep as a grouping key.)
+    *key*, SQL text over the input rows, named by that value; or, given
+    *name* instead, all into one series of that name. (Not a literal key,
+    which Catalyst would keep as a grouping key.)
 
     A NULL-skipping fold reads the frame as it is, so the densify shuffle
     of a sparse input is skipped; the folded output (one row per key and
@@ -53,13 +54,14 @@ def _fold(frame: SeriesFrame, key: Column | str, func: str,
     frame."""
     if not skips_nulls(func, xff):
         frame = frame.densify()
-    agg = agg_column(func, F.col(VALUE), F.col(ORD), xff).cast("double").alias(VALUE)
-    if isinstance(key, str):
-        df, name = frame.df.groupBy(TS).agg(agg), F.lit(key)
+    agg = agg_column(func, VALUE, ORD, xff, alias=VALUE)
+    if key is None:
+        df = frame.df.groupBy(expr_cached(TS)).agg(agg).selectExpr(
+            f"{sql_lit(name)} AS {NAME}", f"{sql_lit(name)} AS {ORD}", TS, VALUE)
     else:
-        df = frame.df.withColumn("__key", key).groupBy("__key", TS).agg(agg)
-        name = F.col("__key")
-    df = df.select(name.alias(NAME), name.alias(ORD), F.col(TS), F.col(VALUE))
+        df = selectx(frame.df.withColumn("__key", F.expr(key))
+                     .groupBy(expr_cached("__key"), expr_cached(TS)).agg(agg),
+                     f"__key AS {NAME}", f"__key AS {ORD}", TS, VALUE)
     return frame.with_df(df).densify()
 
 
@@ -85,8 +87,8 @@ def aggregate(ctx, exp, f, u):
         frame = series_args(ctx, exp, f, u)
         xff = -1.0
         raw = exp.arg_string
-    return _fold(frame, f"{callback}Series({raw})", callback,
-                 xff if xff and xff > 0 else 0.0)
+    return _fold(frame, callback, xff if xff and xff > 0 else 0.0,
+                 name=f"{callback}Series({raw})")
 
 
 @register("percentileOfSeries")
@@ -119,8 +121,7 @@ def group_by_node(ctx, exp, f, u):
         keys = exp.get_node_or_tag_args(2)
         if not keys:
             raise ValueError("groupByNodes: at least one node required")
-    key = agg_key_expr(F.col(NAME), keys)
-    return _fold(frame, key, callback)
+    return _fold(frame, callback, key=agg_key_sql(keys))
 
 
 @register("aggregateWithWildcards", "averageSeriesWithWildcards",
@@ -137,11 +138,10 @@ def aggregate_with_wildcards(ctx, exp, f, u):
                     "sumSeriesWithWildcards": "sum",
                     "multiplySeriesWithWildcards": "multiply"}[exp.target]
         positions = [exp.get_int(i) for i in range(1, len(exp.args))]
-    base = F.split_part(F.col(NAME), F.lit(";"), F.lit(1))
-    parts = F.split(base, "\\.")
-    kept = F.filter(parts, lambda x, i: ~i.isin([p for p in positions]))
-    key = F.array_join(kept, ".")
-    return _fold(frame, key, callback)
+    dropped = (f"NOT i IN ({', '.join(str(p) for p in positions)})"
+               if positions else "true")
+    key = f"array_join(filter({nodes_sql()}, (x, i) -> {dropped}), '.')"
+    return _fold(frame, callback, key=key)
 
 
 @register("groupByTags")
@@ -162,13 +162,12 @@ def group_by_tags(ctx, exp, f, u):
     tag_names = [exp.get_string(i) for i in range(2, len(exp.args))]
     if not tag_names:
         raise ValueError("groupByTags: at least one tag required")
-    parts = [F.split_part(F.col(NAME), F.lit(";"), F.lit(1))]
+    parts = [f"split_part({NAME}, ';', 1)"]
     for t in tag_names:
         if t != "name":
-            val = F.regexp_extract(F.col(NAME), ";" + _re.escape(t) + "=([^;]*)", 1)
-            parts.append(F.concat(F.lit(f";{t}="), val))
-    key = F.concat(*parts)
-    return _fold(frame, key, callback)
+            rx = sql_lit(";" + _re.escape(t) + "=([^;]*)")
+            parts.append(f"concat({sql_lit(f';{t}=')}, regexp_extract({NAME}, {rx}, 1))")
+    return _fold(frame, callback, key=f"concat({', '.join(parts)})")
 
 
 @register("countValues")

@@ -2,11 +2,10 @@
 
 from __future__ import annotations
 
-from pyspark.sql import functions as F
-
 from carbonapi_spark.evaluator import eval_expr
 from carbonapi_spark.functions import register
-from carbonapi_spark.functions.helper import agg_key_expr
+from carbonapi_spark.functions.helper import agg_key_sql, node_sql
+from carbonapi_spark.sqltext import sql_lit
 
 import re
 
@@ -15,23 +14,20 @@ import re
 def alias(ctx, exp, f, u):
     """rename every series — alias/function.go:28."""
     new = exp.get_string(1)
-    return eval_expr(ctx, exp.args[0], f, u).map_name(lambda n: F.lit(new))
+    return eval_expr(ctx, exp.args[0], f, u).map_name(sql_lit(new))
 
 
 @register("aliasByMetric")
 def alias_by_metric(ctx, exp, f, u):
     """last dot-node (tags stripped) — aliasByMetric/function.go:29."""
-    def fn(n):
-        base = F.split_part(n, F.lit(";"), F.lit(1))
-        return F.element_at(F.split(base, "\\."), -1)
-    return eval_expr(ctx, exp.args[0], f, u).map_name(fn)
+    return eval_expr(ctx, exp.args[0], f, u).map_name(node_sql(-1))
 
 
 @register("aliasByNode", "aliasByTags")
 def alias_by_node(ctx, exp, f, u):
     """join selected nodes/tags (mixed int/str args) — aliasByNode/function.go:27."""
     keys = exp.get_node_or_tag_args(1)
-    return eval_expr(ctx, exp.args[0], f, u).map_name(lambda n: agg_key_expr(n, keys))
+    return eval_expr(ctx, exp.args[0], f, u).map_name(agg_key_sql(keys))
 
 
 @register("aliasSub")
@@ -42,11 +38,11 @@ def alias_sub(ctx, exp, f, u):
     # Graphite uses python/Go-style \1 backrefs; Spark regexp_replace wants $1
     replace_j = re.sub(r"\\(\d+)", r"$\1", replace)
     return eval_expr(ctx, exp.args[0], f, u).map_name(
-        lambda n: F.regexp_replace(n, search, replace_j))
+        f"regexp_replace(name, {sql_lit(search)}, {sql_lit(replace_j)})")
 
 
 @register("aliasByBase64")
 def alias_by_base64(ctx, exp, f, u):
     """base64-decode the name (carbonapi ext) — aliasByBase64/function.go:30."""
     return eval_expr(ctx, exp.args[0], f, u).map_name(
-        lambda n: F.unbase64(n).cast("string"))
+        "CAST(unbase64(name) AS STRING)")

@@ -8,11 +8,13 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import functions as F
 
-from carbonapi_spark.datapipe import local_df as _local_df
+from carbonapi_spark.sqltext import local_df as _local_df, sql_lit
 from pyspark.sql.window import Window
 
 from carbonapi_spark.evaluator import EvalError, eval_expr
-from carbonapi_spark.functions import register
+from carbonapi_spark.functions import (
+    built_step, first_arg_step, interval_step, register,
+)
 from carbonapi_spark.model.series import (
     NAME, ORD, TS, VALUE, SERIES_SCHEMA, SeriesFrame, align, combine,
 )
@@ -25,7 +27,7 @@ _SLO_METHODS = {
 }
 
 
-@register("slo", "sloErrorBudget")
+@register("slo", "sloErrorBudget", step=interval_step)
 def slo(ctx, exp, f, u):
     """per-bucket fraction of points meeting the predicate; error budget =
     (fraction - objective) * bucketSize — slo/function.go:29-230."""
@@ -159,7 +161,7 @@ def _ks_stat(a: np.ndarray, b: np.ndarray) -> float:
     return float(np.max(np.abs(cdf_a - cdf_b)))
 
 
-@register("applyByNode")
+@register("applyByNode", step=built_step)
 def apply_by_node(ctx, exp, f, u):
     """for each node-prefix, instantiate the template ('%' -> prefix),
     evaluate it, optionally alias — rewrite/applyByNode/function.go:31
@@ -184,7 +186,7 @@ def apply_by_node(ctx, exp, f, u):
         sub = eval_expr(ctx, parse(sub_target), f, u)
         if new_name:
             label = new_name.replace("%", p)
-            sub = sub.map_name(lambda n, label=label: F.lit(label))
+            sub = sub.map_name(sql_lit(label))
         frames.append(sub)
     if not frames:
         return SeriesFrame.empty(ctx.spark, frame.step, frame.start, frame.stop)
@@ -297,7 +299,7 @@ def alias_by_postgres(ctx, exp, f, u):
     return _rename_map(frame, rename, drop_unmatched=True)
 
 
-@register("graphiteWeb")
+@register("graphiteWeb", step=built_step)
 def graphite_web(ctx, exp, f, u):
     """graphiteWeb(target): proxy the raw target to a real graphite-web
     /render and graft the result into the plan — graphiteWeb/function.go:77
@@ -318,7 +320,7 @@ def area_between(ctx, exp, f, u):
     """graph decorator: band between two series; values unchanged, names
     wrapped — cairo areaBetween semantics."""
     frame = eval_expr(ctx, exp.args[0], f, u)
-    return frame.map_name(lambda n: F.format_string("areaBetween(%s)", n))
+    return frame.map_name("format_string('areaBetween(%s)', name)")
 
 
 @register("compressPeriodicGaps")
@@ -369,7 +371,7 @@ def compress_periodic_gaps(ctx, exp, f, u):
     return frame.with_df(df, dense=False)
 
 
-@register("timeShiftByMetric")
+@register("timeShiftByMetric", step=first_arg_step)
 def time_shift_by_metric(ctx, exp, f, u):
     """align 'version' series to the newest version by shifting time per
     marker metrics — timeShiftByMetric/function.go:33-215.

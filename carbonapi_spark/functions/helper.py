@@ -2,12 +2,13 @@
 
 from __future__ import annotations
 
-from pyspark.sql import Column, functions as F
+from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from carbonapi_spark.evaluator import EvalContext, eval_expr
-from carbonapi_spark.model.series import ORD, TS, SeriesFrame, combine
+from carbonapi_spark.model.series import NAME, ORD, TS, SeriesFrame, combine
 from carbonapi_spark.parser import Expr
+from carbonapi_spark.sqltext import sql_lit
 
 
 def series_args(ctx: EvalContext, exp: Expr, from_ts: int, until_ts: int,
@@ -28,41 +29,41 @@ def series_window(order_desc: bool = False) -> Window:
 
 
 def wrap_name(fname: str, frame: SeriesFrame, *suffix_args: str) -> SeriesFrame:
-    """name -> fname(name[,args]) — per-series name synthesis as a Column."""
-    if suffix_args:
-        tail = "," + ",".join(suffix_args)
-    else:
-        tail = ""
-    return frame.map_name(lambda n: F.concat(F.lit(fname + "("), n, F.lit(tail + ")")))
+    """name -> fname(name[,args]) — per-series name synthesis."""
+    tail = "".join("," + a for a in suffix_args)
+    return frame.map_name(f"concat({sql_lit(fname + '(')}, {NAME}, {sql_lit(tail + ')')})")
 
 
-def node_expr(name: Column, idx: int) -> Column:
-    """Dot-node *idx* of a name (negative from the end) — tags stripped first.
+_DOT = sql_lit(r"\.")
+
+
+def nodes_sql() -> str:
+    """SQL text of the array of dot-nodes of a name's base (before ';')."""
+    return f"split(split_part({NAME}, ';', 1), {_DOT}, -1)"
+
+
+def node_sql(idx: int) -> str:
+    """SQL text of dot-node *idx* of a name (negative from the end) — tags
+    stripped first.
 
     helper.AggKey semantics (expr/helper/helper.go:85-109): node indexing is
-    over the base name (before ';'). Returns NULL when out of range.
+    over the base name (before ';'). NULL when out of range.
     """
-    base = F.split_part(name, F.lit(";"), F.lit(1))
-    parts = F.split(base, "\\.")
     # element_at supports negative indexes; convert 0-based node to 1-based
     i = idx + 1 if idx >= 0 else idx
-    return F.try_element_at(parts, F.lit(i))
+    return f"try_element_at({nodes_sql()}, {i})"
 
 
-def agg_key_expr(name: Column, keys: list[int | str]) -> Column:
-    """Group key from node indexes and/or tag names, dot-joined
-    (helper.go:85-109; tags via expr/tags/helper.go:160)."""
-    from carbonapi_spark.sources.lake import tags_expr
+def agg_key_sql(keys: list[int | str]) -> str:
+    """SQL text of the group key from node indexes and/or tag names,
+    dot-joined (helper.go:85-109; tags via expr/tags/helper.go:160)."""
+    from carbonapi_spark.sources.lake import tags_sql
 
-    parts = []
-    for k in keys:
-        if isinstance(k, int):
-            parts.append(node_expr(name, k))
-        else:
-            parts.append(tags_expr(name).getItem(k))
+    parts = [node_sql(k) if isinstance(k, int)
+             else f"{tags_sql()}[{sql_lit(k)}]" for k in keys]
     if not parts:
-        return name
-    return F.concat_ws(".", *[F.coalesce(p, F.lit("")) for p in parts])
+        return NAME
+    return "concat_ws('.', " + ", ".join(f"coalesce({p}, '')" for p in parts) + ")"
 
 
 def float_str(v: float) -> str:

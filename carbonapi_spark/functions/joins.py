@@ -17,8 +17,9 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from carbonapi_spark.evaluator import eval_expr
-from carbonapi_spark.functions import register
-from carbonapi_spark.functions.helper import agg_key_expr
+from carbonapi_spark.functions import built_step, register
+from carbonapi_spark.sqltext import expr_cached, selectx, sql_lit
+from carbonapi_spark.functions.helper import agg_key_sql
 from carbonapi_spark.model.series import NAME, ORD, TS, VALUE, align
 
 
@@ -29,21 +30,19 @@ def divide_series(ctx, exp, f, u):
 
     With 2+ args and a wildcard-multi divisor the reference errors; a single
     divisor is broadcast-joined on ts."""
-    V = F.col(VALUE)
     dividend = eval_expr(ctx, exp.args[0], f, u)
     if len(exp.args) == 1:
         raise ValueError("divideSeries: divisor required")
     divisor = eval_expr(ctx, exp.args[1], f, u)
     dividend, divisor = align([dividend, divisor])
-    den = divisor.df.select(F.col(TS).alias("__dts"), F.col(VALUE).alias("__den"))
+    den = selectx(divisor.df, f"{TS} AS __dts", f"{VALUE} AS __den")
     df = (dividend.df
-          .join(F.broadcast(den), F.col(TS) == F.col("__dts"), "left")
-          .withColumn(VALUE, F.when(F.col("__den") != 0, V / F.col("__den")))
+          .join(den.hint("broadcast"), expr_cached(f"{TS} = __dts"), "left")
+          .withColumn(VALUE, expr_cached(f"CASE WHEN __den != 0 THEN {VALUE} / __den END"))
           .drop("__dts", "__den"))
-    divisor_name = exp.args[1].to_string()
-    df = df.withColumn(NAME, F.format_string("divideSeries(%s,%s)",
-                                             F.col(NAME), F.lit(divisor_name)))
-    return dividend.with_df(df)
+    return dividend.with_df(df).map_name(
+        f"format_string('divideSeries(%s,%s)', {NAME}, "
+        f"{sql_lit(exp.args[1].to_string())})")
 
 
 _LIST_OPS = {
@@ -120,8 +119,7 @@ def as_percent(ctx, exp, f, u):
         n = total_arg.val
         nstr = total_arg.val_str
         out = frame.map_value(lambda v: v / F.lit(n) * 100 if n != 0 else F.lit(None))
-        return out.map_name(lambda nm: F.format_string(
-            "asPercent(%s,%s)", nm, F.lit(nstr)))
+        return out.map_name(f"format_string('asPercent(%s,%s)', name, {sql_lit(nstr)})")
 
     if total_arg is None or (total_arg.is_name() and total_arg.target.lower() == "none"):
         # total = per-ts sum of the list itself
@@ -155,7 +153,7 @@ def _as_percent_by_nodes(ctx, exp, frame, total_arg, nodes, f, u):
     """asPercent grouped by node key, with MISSING padding on both sides
     (asPercent/function.go:400-430)."""
     V = F.col(VALUE)
-    key = agg_key_expr(F.col(NAME), nodes)
+    key = F.expr(agg_key_sql(nodes))
     if total_arg is None or (total_arg.is_name() and total_arg.target.lower() == "none"):
         tot = (frame.df.withColumn("__key", key)
                .groupBy("__key", TS).agg(F.sum(V).alias("__tot")))
@@ -170,7 +168,7 @@ def _as_percent_by_nodes(ctx, exp, frame, total_arg, nodes, f, u):
     total = eval_expr(ctx, total_arg, f, u)
     # dense sides: the full join below pads a missing row as MISSING
     frame2, total = (fr.densify() for fr in align([frame, total]))
-    tkey = agg_key_expr(F.col(NAME), nodes)
+    tkey = F.expr(agg_key_sql(nodes))
     tot = (total.df.withColumn("__key", tkey)
            .groupBy("__key", TS).agg(F.sum(V).alias("__tot"),
                                      F.min(NAME).alias("__tname")))
@@ -207,7 +205,7 @@ def weighted_average(ctx, exp, f, u):
     nodes = exp.get_node_or_tag_args(2)
     # dense sides: over sparse ones no two rows may meet in the join below
     favg, fwgt = (fr.densify() for fr in align([favg, fwgt]))
-    key = agg_key_expr(F.col(NAME), nodes)
+    key = F.expr(agg_key_sql(nodes))
     a = favg.df.select(key.alias("__key"), F.col(TS), V.alias("__a"))
     w = fwgt.df.select(key.alias("__key"), F.col(TS), V.alias("__w"))
     prod = (a.join(w, ["__key", TS])
@@ -221,7 +219,7 @@ def weighted_average(ctx, exp, f, u):
     return favg.with_df(df)
 
 
-@register("fallbackSeries")
+@register("fallbackSeries", step=built_step)
 def fallback_series(ctx, exp, f, u):
     """if the first list is empty use the fallback — fallbackSeries/function.go:29.
 

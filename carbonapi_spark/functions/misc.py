@@ -4,14 +4,16 @@ map/reduce structural ops, meta setters, legend decorators (SURVEY §2.3/2.4/
 
 from __future__ import annotations
 
+import math
+
 from pyspark.sql import functions as F
 
-from carbonapi_spark.datapipe import local_df as _local_df
+from carbonapi_spark.sqltext import local_df as _local_df, sql_lit
 from pyspark.sql.window import Window
 
-from carbonapi_spark.evaluator import EvalError, eval_expr
-from carbonapi_spark.functions import register
-from carbonapi_spark.functions.helper import series_args, wrap_name
+from carbonapi_spark.evaluator import EvalError, eval_expr, static_step
+from carbonapi_spark.functions import built_step, register
+from carbonapi_spark.functions.helper import nodes_sql, series_args, wrap_name
 from carbonapi_spark.model.consolidation import is_valid_consolidation
 from carbonapi_spark.model.series import (
     NAME, ORD, TS, VALUE, SeriesFrame, align, union,
@@ -28,29 +30,25 @@ def substr(ctx, exp, f, u):
     stop = exp.get_int(2, 0)
     frame = eval_expr(ctx, exp.args[0], f, u)
 
-    def fn(n):
-        base = F.split_part(n, F.lit(";"), F.lit(1))
-        parts = F.split(base, "\\.")
-        cnt = F.size(parts)
-        s = F.lit(start) + F.when(F.lit(start) < 0, cnt).otherwise(F.lit(0))
-        e_ = (F.lit(stop) + F.when(F.lit(stop) < 0, cnt).otherwise(F.lit(0)))
-        e_ = F.when(F.lit(stop) == 0, cnt).otherwise(e_)
-        length = F.greatest(e_ - s, F.lit(0))
-        return F.array_join(F.slice(parts, s + 1, length), ".")
-
-    return frame.map_name(fn)
+    parts = nodes_sql()
+    cnt = f"size({parts})"
+    s = f"{start} + CASE WHEN {start} < 0 THEN {cnt} ELSE 0 END"
+    e_ = f"{stop} + CASE WHEN {stop} < 0 THEN {cnt} ELSE 0 END"
+    e_ = f"CASE WHEN {stop} = 0 THEN {cnt} ELSE {e_} END"
+    return frame.map_name(
+        f"array_join(slice({parts}, ({s}) + 1, greatest(({e_}) - ({s}), 0)), '.')")
 
 
 @register("toLowerCase", "lower")
 def to_lower(ctx, exp, f, u):
     """lowercase the name — toLowerCase/function.go:30."""
-    return eval_expr(ctx, exp.args[0], f, u).map_name(F.lower)
+    return eval_expr(ctx, exp.args[0], f, u).map_name("lower(name)")
 
 
 @register("toUpperCase", "upper")
 def to_upper(ctx, exp, f, u):
     """uppercase the name — toUpperCase/function.go:30."""
-    return eval_expr(ctx, exp.args[0], f, u).map_name(F.upper)
+    return eval_expr(ctx, exp.args[0], f, u).map_name("upper(name)")
 
 
 # ------------------------------------------------------- meta setters
@@ -108,11 +106,11 @@ def integral_with_reset(ctx, exp, f, u):
         .when(V.isNotNull(), F.sum(F.when(is_reset == 0, V)).over(w_epoch))
     df = joined.withColumn(VALUE, val).drop("__rts", "__rv")
     out = frame2.with_df(df)
-    return out.map_name(lambda n: F.format_string(
-        "integralWithReset(%s,%s)", n, F.lit(exp.args[1].to_string())))
+    return out.map_name(f"format_string('integralWithReset(%s,%s)', name, "
+                        f"{sql_lit(exp.args[1].to_string())})")
 
 
-@register("verticalLine")
+@register("verticalLine", step=lambda ctx, exp, f, u: 1)
 def vertical_line(ctx, exp, f, u):
     """zero-length marker series at ts — verticalLine/function.go:35."""
     from carbonapi_spark.parser.dates import date_param_to_epoch
@@ -146,7 +144,16 @@ def pow_series(ctx, exp, f, u):
 
 # ------------------------------------------------------- set operations
 
-@register("join")
+def _join_step(ctx, exp, f, u) -> int:
+    """AND/SUB keep the first list as it is; OR/XOR align both."""
+    a = static_step(ctx, exp.args[0], f, u)
+    if exp.get_string(2, "AND", names=("type",)).upper() in ("AND", "SUB"):
+        return a
+    b = static_step(ctx, exp.args[1], f, u)
+    return a * b // math.gcd(a, b)
+
+
+@register("join", step=_join_step)
 def join_series(ctx, exp, f, u):
     """AND/OR/XOR/SUB of two seriesLists by name — join/function.go:78-173."""
     fa = eval_expr(ctx, exp.args[0], f, u)
@@ -167,7 +174,7 @@ def join_series(ctx, exp, f, u):
     raise ValueError(f"join: unknown join type {join_type}")
 
 
-@register("useSeriesAbove")
+@register("useSeriesAbove", step=built_step)
 def use_series_above(ctx, exp, f, u):
     """for series with max > value, regex-rewrite the name and fetch that
     metric instead — rewrite/aboveSeries/function.go:33.

@@ -17,8 +17,9 @@ import pandas as pd
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from carbonapi_spark.evaluator import eval_expr
+from carbonapi_spark.evaluator import eval_expr, static_step
 from carbonapi_spark.functions import register
+from carbonapi_spark.sqltext import sql_lit
 from carbonapi_spark.functions.helper import wrap_name
 from carbonapi_spark.model.series import (
     NAME, ORD, TS, VALUE, SERIES_SCHEMA, SeriesFrame, align, ranked,
@@ -63,9 +64,9 @@ def exponential_moving_average(ctx, exp, f, u):
     if arg1.is_const():
         wp = abs(exp.get_int(1))
         argstr = arg1.val_str
-        # build the argument once over the request window to learn its
-        # step; an interval window needs no step
-        preview = wp * eval_expr(ctx, exp.args[0], f, u).step
+        # the argument's step from the static step pass; an interval
+        # window needs no step
+        preview = wp * static_step(ctx, exp.args[0], f, u)
         constant = 2.0 / (wp + 1)
     else:
         preview = abs(exp.get_interval(1))
@@ -127,7 +128,7 @@ def holt_winters_forecast(ctx, exp, f, u):
         return ts, pred
 
     out = _kernel(frame, fn, frame.start + bootstrap, frame.stop)
-    return out.map_name(lambda n: F.format_string("holtWintersForecast(%s)", n))
+    return out.map_name("format_string('holtWintersForecast(%s)', name)")
 
 
 def _hw_bands(frame, bootstrap, seasonality, delta):
@@ -210,7 +211,7 @@ def holt_winters_aberration(ctx, exp, f, u):
         return ts2, out
 
     out = _kernel(frame, fn, frame.start + bootstrap, frame.stop)
-    return out.map_name(lambda n: F.format_string("holtWintersAberration(%s)", n))
+    return out.map_name("format_string('holtWintersAberration(%s)', name)")
 
 
 # ------------------------------------------------------------- polyfit
@@ -312,8 +313,8 @@ def pearson(ctx, exp, f, u):
     df = (joined.withColumn(VALUE, F.corr(V, F.col("__v2")).over(w))
           .drop("__ts2", "__v2"))
     out = s1.with_df(df)
-    return out.map_name(lambda nm: F.format_string(
-        "pearson(%s,%s,{})".format(n), nm, F.lit(exp.args[1].to_string())))
+    return out.map_name(f"format_string('pearson(%s,%s,{n})', name, "
+                        f"{sql_lit(exp.args[1].to_string())})")
 
 
 @register("pearsonClosest")
@@ -330,6 +331,5 @@ def pearson_closest(ctx, exp, f, u):
     b = ref.densify().df.select(F.col(TS).alias("__ts2"), V.alias("__v2"))
     joined = frame.df.join(F.broadcast(b), F.col(TS) == F.col("__ts2"))
     per = frame.with_df(joined).per_series(__c=F.corr(V, F.col("__v2")))
-    metric = {"pos": F.col("__c"), "neg": -F.col("__c")}.get(
-        direction, F.abs(F.col("__c")))
-    return frame.keep(ranked(per, metric.desc_nulls_last(), n=n))
+    metric = {"pos": "__c", "neg": "-__c"}.get(direction, "abs(__c)")
+    return frame.keep(ranked(per, f"{metric} DESC NULLS LAST", n=n))

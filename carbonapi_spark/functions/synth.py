@@ -5,12 +5,22 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from carbonapi_spark.datapipe import local_df as _local_df
+from carbonapi_spark.sqltext import local_df as _local_df, sql_lit
 from pyspark.sql.window import Window
 
 from carbonapi_spark.functions import register
 from carbonapi_spark.functions.helper import float_str
 from carbonapi_spark.model.series import NAME, ORD, TS, VALUE, SeriesFrame
+
+
+def _half_range(ctx, exp, f, u) -> int:
+    """Step rule of the three-point constant lines."""
+    return max((u - f) // 2, 1)
+
+
+def _step_arg(i: int):
+    """Step rule: the ``step`` argument at position *i*, 60 by default."""
+    return lambda ctx, exp, f, u: exp.get_int(i, 60, names=("step",))
 
 
 def _spine_frame(ctx, name: str, f: int, u: int, step: int) -> SeriesFrame:
@@ -20,7 +30,7 @@ def _spine_frame(ctx, name: str, f: int, u: int, step: int) -> SeriesFrame:
     return SeriesFrame(df, step, f, u, dense=True)
 
 
-@register("constantLine")
+@register("constantLine", step=_half_range)
 def constant_line(ctx, exp, f, u):
     """flat synthetic series at value — constantLine/function.go:29
     (three points: from, midpoint, until)."""
@@ -32,16 +42,16 @@ def constant_line(ctx, exp, f, u):
     return SeriesFrame(df, max((u - f) // 2, 1), f, u + 1, dense=True)
 
 
-@register("threshold")
+@register("threshold", step=_half_range)
 def threshold(ctx, exp, f, u):
     """constantLine with optional alias — cairo threshold semantics."""
     value = exp.get_float(0)
     label = exp.get_string(1, float_str(value), names=("label",))
     frame = constant_line(ctx, exp, f, u)
-    return frame.map_name(lambda n: F.lit(label))
+    return frame.map_name(sql_lit(label))
 
 
-@register("timeFunction", "time")
+@register("timeFunction", "time", step=_step_arg(1))
 def time_function(ctx, exp, f, u):
     """value = its own timestamp — timeFunction/function.go:29."""
     name = exp.get_string(0)
@@ -50,16 +60,16 @@ def time_function(ctx, exp, f, u):
     return frame.map_value(lambda v: F.col(TS).cast("double"))
 
 
-@register("identity")
+@register("identity", step=lambda ctx, exp, f, u: 60)
 def identity(ctx, exp, f, u):
     """identity(name): value = ts at 60s step — identity/function.go:29."""
     name = exp.get_string(0)
     frame = _spine_frame(ctx, name, f, u, 60)
     frame = frame.map_value(lambda v: F.col(TS).cast("double"))
-    return frame.map_name(lambda n: F.format_string("identity(%s)", n))
+    return frame.map_name("format_string('identity(%s)', name)")
 
 
-@register("sin", "sinFunction")
+@register("sin", "sinFunction", step=_step_arg(2))
 def sin_function(ctx, exp, f, u):
     """synthetic sine — sinFunction/function.go:31."""
     name = exp.get_string(0)
@@ -69,7 +79,7 @@ def sin_function(ctx, exp, f, u):
     return frame.map_value(lambda v: F.lit(amplitude) * F.sin(F.col(TS).cast("double")))
 
 
-@register("randomWalk", "randomWalkFunction")
+@register("randomWalk", "randomWalkFunction", step=_step_arg(1))
 def random_walk(ctx, exp, f, u):
     """random walk: cumulative sum of U(-0.5, 0.5) steps
     — randomWalk/function.go:30."""

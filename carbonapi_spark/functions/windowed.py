@@ -17,11 +17,11 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from carbonapi_spark.evaluator import eval_expr
-from carbonapi_spark.functions import register
+from carbonapi_spark.evaluator import eval_expr, static_step
+from carbonapi_spark.functions import interval_step, register
 from carbonapi_spark.functions.helper import series_window, wrap_name
 from carbonapi_spark.model.consolidation import (
-    _PERCENTILE_RE, agg_column, percentile_column,
+    _PERCENTILE_RE, agg_column, agg_sql, percentile_column,
 )
 from carbonapi_spark.model.series import (NAME, ORD, TS, VALUE, SERIES_SCHEMA,
                                           SeriesFrame)
@@ -30,7 +30,7 @@ from carbonapi_spark.model.series import (NAME, ORD, TS, VALUE, SERIES_SCHEMA,
 
 # ------------------------------------------------------------- summarize
 
-@register("summarize")
+@register("summarize", step=interval_step)
 def summarize(ctx, exp, f, u):
     """re-bucket to interval — summarize/function.go:33-145.
 
@@ -66,7 +66,7 @@ def summarize(ctx, exp, f, u):
     if align_given:
         suffix += f",{'true' if align else 'false'}"
 
-    agg = agg_column(func, V, F.col(TS), frame.xff).cast("double").alias(VALUE)
+    agg = agg_column(func, xff=frame.xff, alias=VALUE)
     df = (frame.df.groupBy(NAME, ORD, bucket.alias(TS)).agg(agg)
           .withColumn(NAME, F.concat(F.lit("summarize("), F.col(NAME),
                                      F.lit(suffix + ")"))))
@@ -75,7 +75,7 @@ def summarize(ctx, exp, f, u):
     return out.densify()
 
 
-@register("smartSummarize")
+@register("smartSummarize", step=interval_step)
 def smart_summarize(ctx, exp, f, u):
     """summarize without gap padding; optional fetch-start alignment to
     s/min/h/d/w/mon/y boundary — smartSummarize/function.go:32
@@ -92,7 +92,7 @@ def smart_summarize(ctx, exp, f, u):
     bucket = F.col(TS) - ((F.col(TS) - frame.start) % bucket_size)
     interval_str = exp.args[1].val_str or exp.args[1].target
     suffix = f",'{interval_str}','{func}'"
-    agg = agg_column(func, V, F.col(TS), frame.xff).cast("double").alias(VALUE)
+    agg = agg_column(func, xff=frame.xff, alias=VALUE)
     df = (frame.df.groupBy(NAME, ORD, bucket.alias(TS)).agg(agg)
           .withColumn(NAME, F.concat(F.lit("smartSummarize("), F.col(NAME),
                                      F.lit(suffix + ")"))))
@@ -131,7 +131,7 @@ def _align_start(start: int, align_to: str) -> int:
     return int(d.timestamp())
 
 
-@register("hitcount")
+@register("hitcount", step=interval_step)
 def hitcount(ctx, exp, f, u):
     """sum(v*step) per bucket, spreading points that straddle bucket
     boundaries proportionally — hitcount/function.go:33-155."""
@@ -251,15 +251,13 @@ def moving(ctx, exp, f, u):
     extended series (the reference's skip-first-value loop reduces to
     exactly rowsBetween(-(N-1), 0); its first extended point never falls in
     any output window)."""
-    V = F.col(VALUE)
     arg1 = exp.args[1]
     # the history to fetch before f: an interval window gives it; a point
-    # count needs the step, known only per frame, so the argument is built
-    # over the request window once to learn it (the reference does the same
-    # double take)
+    # count needs the argument's step, which the static step pass reads
+    # off the AST without building the argument
     if arg1.is_const():
         argstr = arg1.val_str
-        preview = exp.get_int(1) * eval_expr(ctx, exp.args[0], f, u).step
+        preview = exp.get_int(1) * static_step(ctx, exp.args[0], f, u)
     else:
         argstr = f"'{arg1.val_str or arg1.target}'"
         preview = abs(exp.get_interval(1))
@@ -274,7 +272,7 @@ def moving(ctx, exp, f, u):
     frame = eval_expr(ctx, exp.args[0], f - preview, u).densify()
     wp = preview // frame.step
     if wp <= 0:
-        out = frame.with_df(frame.df.where(F.lit(False)))
+        out = frame.with_df(frame.df.where("false"))
         return wrap_name(exp.target, out, argstr)
 
     if cons == "median" or _PERCENTILE_RE.match(cons):
@@ -284,17 +282,18 @@ def moving(ctx, exp, f, u):
         p = 0.5 if cons == "median" else float(cons[1:]) / 100.0
         if wp <= _LAG_WINDOW_MAX:
             df = frame.df.withColumn(
-                VALUE, _lag_percentile(V, wp, p, xff).cast("double"))
+                VALUE, _lag_percentile(F.col(VALUE), wp, p, xff).cast("double"))
         else:
             df = _pandas_rolling_percentile(frame.df, wp, p, xff)
-        df = df.where(F.col(TS) >= f)
     else:
-        w = series_window().rowsBetween(-(wp - 1), 0)
-        agg = agg_column(cons, V, F.col(TS), xff)
-        # agg_column builds grouping aggregates; simple folds are valid
-        # (codegen'd) window functions too.
-        df = (frame.df.withColumn(VALUE, agg.over(w).cast("double"))
-              .where(F.col(TS) >= f))
+        # every aggregate of the fold becomes a window function over the
+        # trailing wp rows of its series
+        lo = f"{wp - 1} PRECEDING" if wp > 1 else "CURRENT ROW"
+        over = (f" OVER (PARTITION BY {ORD} ORDER BY {TS} ASC "
+                f"ROWS BETWEEN {lo} AND CURRENT ROW)")
+        df = frame.df.withColumn(
+            VALUE, F.expr(f"CAST({agg_sql(cons, xff=xff, over=over)} AS DOUBLE)"))
+    df = df.where(f"{TS} >= {f}")
     out = SeriesFrame(df, frame.step, f, frame.stop, frame.consolidation,
                       frame.xff, dense=True)
     return wrap_name(exp.target, out, argstr)

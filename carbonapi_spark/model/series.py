@@ -29,6 +29,12 @@ DataFrame
   frames of different steps goes through LCM re-consolidation
   (``expr/helper/align.go:76-189`` semantics).
 
+Every expression a frame method adds is SQL text
+(:mod:`carbonapi_spark.sqltext`): text that is the same for every request
+is parsed once and cached, text that carries request literals (bounds,
+steps, names) is parsed where it is used. Sort keys handed to
+:meth:`SeriesFrame.rank` and :func:`ranked` are SQL sort keys.
+
 Per-series folds (one row per series, keyed by ``ord``) go through
 :meth:`SeriesFrame.per_series`, which holds the NULL rule for them: it
 reads the sparse frame only when every fold skips NULLs
@@ -51,11 +57,9 @@ from dataclasses import dataclass, replace
 from functools import reduce
 
 from pyspark.sql import Column, DataFrame, functions as F
-from pyspark.sql.window import Window
-
-from carbonapi_spark.datapipe import local_df as _local_df
 
 from carbonapi_spark.model.consolidation import agg_column, skips_nulls
+from carbonapi_spark.sqltext import expr_cached, local_df as _local_df, selectx
 
 NAME, ORD, TS, VALUE = "name", "ord", "ts", "value"
 RANK = "__rank"
@@ -96,9 +100,11 @@ class SeriesFrame:
         a NULL-to-value map (``fn(NULL)`` not NULL) needs a dense frame."""
         return self.with_df(self.df.withColumn(VALUE, fn(F.col(VALUE)).cast("double")))
 
-    def map_name(self, fn) -> "SeriesFrame":
-        """Name rewrite (``ord`` untouched — series identity survives)."""
-        return self.with_df(self.df.withColumn(NAME, fn(F.col(NAME))))
+    def map_name(self, sql: str) -> "SeriesFrame":
+        """Name rewrite to the SQL expression *sql* over the frame's
+        columns (``ord`` untouched — series identity survives). The text
+        usually carries request literals, so it is parsed, not cached."""
+        return self.with_df(self.df.withColumn(NAME, F.expr(sql)))
 
     def n_points(self) -> int:
         return max(0, (self.stop - self.start) // self.step)
@@ -114,6 +120,10 @@ class SeriesFrame:
         window pipeline runs with no further exchange. Map size per series
         is bounded by the request's point count. Two rows for one bucket
         of one series fail the map build (``DUPLICATED_MAP_KEY``).
+
+        Built from SQL text in three Dataset steps: the aggregate's
+        expressions are the same for every request and are cached; the
+        spine carries the request's bounds and is parsed per call.
         """
         start = self.start if start is None else start
         stop = self.stop if stop is None else stop
@@ -121,17 +131,13 @@ class SeriesFrame:
             return self
         if stop <= start:
             return replace(self, start=start, stop=stop, dense=True)
-        per_series = (self.df
-                      .groupBy(ORD)
-                      .agg(F.first(NAME, ignorenulls=True).alias(NAME),
-                           F.map_from_entries(
-                               F.collect_list(F.struct(F.col(TS),
-                                                       F.col(VALUE)))).alias("__pts")))
-        spine = F.sequence(F.lit(start), F.lit(stop - self.step), F.lit(self.step))
-        df = (per_series
-              .select(NAME, ORD, F.explode(spine).alias(TS), F.col("__pts"))
-              .select(NAME, ORD, F.col(TS).cast("long"),
-                      F.try_element_at(F.col("__pts"), F.col(TS)).alias(VALUE)))
+        per_series = self.df.groupBy(expr_cached(ORD)).agg(
+            expr_cached(f"first({NAME}, true) AS {NAME}"),
+            expr_cached(f"map_from_entries(collect_list(struct({TS}, {VALUE}))) AS __pts"))
+        spine = f"sequence({start}, {stop - self.step}, {self.step})"
+        df = selectx(per_series.selectExpr(NAME, ORD, f"explode({spine}) AS {TS}", "__pts"),
+                     NAME, ORD, f"CAST({TS} AS BIGINT) AS {TS}",
+                     f"try_element_at(__pts, {TS}) AS {VALUE}")
         return replace(self, df=df, start=start, stop=stop, dense=True)
 
     # ------------------------------------------------------------------
@@ -146,24 +152,24 @@ class SeriesFrame:
         one, so that a fold which counts rows counts the missing ones."""
         named = [f for f in folds.values() if isinstance(f, str)]
         src = self if all(skips_nulls(f, xff) for f in named) else self.densify()
-        aggs = [(agg_column(f, F.col(VALUE), F.col(TS), xff).cast("double")
-                 if isinstance(f, str) else f).alias(alias)
+        aggs = [agg_column(f, xff=xff, alias=alias)
+                if isinstance(f, str) else f.alias(alias)
                 for alias, f in folds.items()]
-        return src.df.groupBy(ORD).agg(*aggs)
+        return src.df.groupBy(expr_cached(ORD)).agg(*aggs)
 
     def keep(self, ords: DataFrame) -> "SeriesFrame":
         """The series whose ``ord`` is in *ords* (a DataFrame with an
         ``ord`` column), ``ord`` unchanged: a broadcast left-semi join."""
-        return self.with_df(self.df.join(F.broadcast(ords.select(ORD)), ORD,
-                                         "left_semi"))
+        return self.with_df(self.df.join(
+            selectx(ords, ORD).hint("broadcast"), ORD, "left_semi"))
 
-    def rank(self, per: DataFrame, *order: Column, n: int | None = None) -> "SeriesFrame":
+    def rank(self, per: DataFrame, *order: str, n: int | None = None) -> "SeriesFrame":
         """Reorder the series by *per* (one row per ``ord``) sorted on
-        *order* (see :func:`ranked`), keeping the first *n* if given:
-        ``ord`` becomes the zero-padded rank."""
-        ranks = ranked(per, *order, n=n).select(ORD, RANK)
-        df = (self.df.join(F.broadcast(ranks), ORD)
-              .withColumn(ORD, F.format_string("%010d", F.col(RANK)))
+        *order* (SQL sort keys, see :func:`ranked`), keeping the first *n*
+        if given: ``ord`` becomes the zero-padded rank."""
+        ranks = selectx(ranked(per, *order, n=n), ORD, RANK)
+        df = (self.df.join(ranks.hint("broadcast"), ORD)
+              .withColumn(ORD, expr_cached(f"format_string('%010d', {RANK})"))
               .drop(RANK))
         return self.with_df(df)
 
@@ -181,21 +187,22 @@ class SeriesFrame:
         func = consolidation or self.consolidation
         factor = xff if xff is not None else self.xff
         src = self if skips_nulls(func, factor) else self.densify()
-        bucket = (F.col(TS) - (F.col(TS) % F.lit(step))).alias(TS)
-        agg = agg_column(func, F.col(VALUE), F.col(TS), factor).cast("double").alias(VALUE)
-        df = src.df.groupBy(NAME, ORD, bucket).agg(agg)
+        df = src.df.groupBy(expr_cached(NAME), expr_cached(ORD),
+                            F.expr(f"{TS} - {TS} % {step} AS {TS}")).agg(
+            agg_column(func, xff=factor, alias=VALUE))
         start = self.start - self.start % step
         stop_last = (self.stop - 1) - (self.stop - 1) % step
         return replace(src, df=df, step=step, start=start, stop=stop_last + step)
 
 
-def ranked(per: DataFrame, *order: Column, n: int | None = None) -> DataFrame:
+def ranked(per: DataFrame, *order: str, n: int | None = None) -> DataFrame:
     """*per* (one row per ``ord``) with its 1-based row number ``__rank``
-    by ``(*order, ord)``, the first *n* rows if given. ``ord`` breaks ties,
-    so the order is total. The window is unpartitioned: *per* is small."""
-    w = Window.orderBy(*order, F.col(ORD))
-    out = per.withColumn(RANK, F.row_number().over(w))
-    return out if n is None else out.where(F.col(RANK) <= n)
+    by ``(*order, ord)`` (SQL sort keys), the first *n* rows if given.
+    ``ord`` breaks ties, so the order is total. The window is
+    unpartitioned: *per* is small."""
+    keys = ", ".join((*order, ORD))
+    out = per.withColumn(RANK, expr_cached(f"row_number() OVER (ORDER BY {keys})"))
+    return out if n is None else out.where(f"{RANK} <= {n}")
 
 
 # ----------------------------------------------------------------------
@@ -231,7 +238,7 @@ def union(frames: list[SeriesFrame]) -> SeriesFrame:
     with its zero-padded position (``0000|``…). The result spans all the
     frames' bounds, and is dense only if they all are over the same
     bounds; step and metadata are the first frame's."""
-    dfs = [f.df.withColumn(ORD, F.concat(F.lit(f"{i:04d}|"), F.col(ORD)))
+    dfs = [f.df.withColumn(ORD, expr_cached(f"concat('{i:04d}|', {ORD})"))
            for i, f in enumerate(frames)]
     start = min(f.start for f in frames)
     stop = max(f.stop for f in frames)

@@ -15,7 +15,7 @@ from pyspark.sql import functions as F
 from carbonapi_spark.model.series import NAME
 from carbonapi_spark.parser.globs import glob_to_java_regex
 from carbonapi_spark.sources.lake import (SeriesLake, by_name, glob_prefix,
-                                          tags_expr)
+                                          tags_sql)
 
 
 def _name_prefixes(lake: SeriesLake, query: str):
@@ -80,7 +80,7 @@ def tag_names(lake: SeriesLake, prefix: str = "", limit: int = 100,
     proxies them verbatim to the backend's /tags endpoints,
     zipper/types/interface.go:29-30). Tags are parsed once per distinct
     name, not per row."""
-    tags = tags_expr(F.col(NAME))
+    tags = F.expr(tags_sql())
     df = (by_name(lake.df, exprs or [])
           .select(F.explode(F.map_keys(tags)).alias("k")).distinct())
     if prefix:
@@ -91,7 +91,7 @@ def tag_names(lake: SeriesLake, prefix: str = "", limit: int = 100,
 def tag_values(lake: SeriesLake, tag: str, value_prefix: str = "",
                limit: int = 100, exprs: list[str] | None = None) -> list[str]:
     """Values of *tag* over the series matching *exprs* (see tag_names)."""
-    tags = tags_expr(F.col(NAME))
+    tags = F.expr(tags_sql())
     df = (by_name(lake.df, exprs or [])
           .select(tags.getItem(tag).alias("v"))
           .where(F.col("v").isNotNull()).distinct())

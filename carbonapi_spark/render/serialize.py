@@ -33,6 +33,7 @@ import numpy as np
 import pyarrow as pa
 
 from carbonapi_spark.model.series import NAME, ORD, TS, VALUE, SeriesFrame
+from carbonapi_spark.sqltext import selectx
 
 
 @dataclass
@@ -125,7 +126,7 @@ def collect_series(frame: SeriesFrame, max_data_points: int = 0) -> list[SeriesR
     Reads ``frame.df``, dense or not, and fills the gaps on the driver
     (:func:`_dense_vectors`)."""
     frame = consolidate_for_points(frame, max_data_points)
-    table = frame.df.select(NAME, ORD, TS, VALUE).toArrow()
+    table = selectx(frame.df, NAME, ORD, TS, VALUE).toArrow()
     return _dense_vectors(table, frame.start, frame.stop, frame.step)
 
 

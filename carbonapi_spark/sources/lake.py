@@ -23,6 +23,14 @@ fetches, we own a long Parquet table
   A ``name=`` term is plain string ops on both sides, with a pushed-down
   ``StartsWith`` guard.
 
+Every predicate and projection of a fetch is SQL text with quoted
+literals (:func:`~carbonapi_spark.sqltext.sql_lit`): the name predicate and
+the window are ONE ``where`` and the projection ONE ``selectExpr``, so a
+fetch costs about ten py4j round trips, where assembling the same plan from
+Columns cost hundreds. The conjunctions nest as Column ``&`` nests them
+(:func:`~carbonapi_spark.sqltext.sql_all`), so the optimized plan and the
+pushed filters are the ones the Column form gave.
+
 A fetch returns the sparse scan (``dense=False``): a point the lake does
 not hold is a missing row, which means a gap just as a NULL row does.
 Operators that must tell the two apart call ``SeriesFrame.densify()``.
@@ -30,7 +38,6 @@ Operators that must tell the two apart call ``SeriesFrame.densify()``.
 
 from __future__ import annotations
 
-import functools
 import math
 import re
 
@@ -41,31 +48,31 @@ from carbonapi_spark.model.series import NAME, ORD, TS, VALUE, SeriesFrame
 from carbonapi_spark.parser.globs import (
     expand_braces, glob_to_java_regex, has_wildcard,
 )
+from carbonapi_spark.sqltext import expr_cached, sql_all, sql_lit
 
 
-def tags_expr(name: Column) -> Column:
-    """MAP<STRING,STRING> of graphite tags from ``base;k=v;k2=v2`` names.
+def tags_sql() -> str:
+    """SQL text of the MAP<STRING,STRING> of graphite tags of
+    ``base;k=v;k2=v2`` names.
 
     The ``name`` tag always exists and holds the base (tags/helper.go:160).
     A tag splits at its first ``=``: the value of ``k=a=b`` is ``a=b``.
     """
-    parts = F.split(name, ";")
-    kvs = F.filter(F.slice(parts, 2, F.greatest(F.size(parts) - 1, F.lit(0))),
-                   lambda s: s.contains("="))
-    entries = F.transform(
-        F.transform(kvs, lambda s: F.split(s, "=", 2)),
-        lambda kv: F.struct(kv[0].alias("key"), kv[1].alias("value")))
-    base_entry = F.array(F.struct(F.lit("name").alias("key"),
-                                  F.element_at(parts, 1).alias("value")))
-    return F.map_from_entries(F.concat(base_entry, entries))
+    parts = f"split({NAME}, ';', -1)"
+    kvs = (f"filter(slice({parts}, 2, greatest(size({parts}) - 1, 0)), "
+           f"s -> contains(s, '='))")
+    entries = (f"transform(transform({kvs}, s -> split(s, '=', 2)), "
+               f"kv -> struct(kv[0] AS key, kv[1] AS value))")
+    base = f"array(struct('name' AS key, element_at({parts}, 1) AS value))"
+    return f"map_from_entries(concat({base}, {entries}))"
 
 
 _TAG_TERM = re.compile(r"^\s*'([^']+)'\s*$|^\s*\"([^\"]+)\"\s*$")
 _TAG_EXPR = re.compile(r"^([^=!~]+)\s*(=~|!=~|!=|=)\s*(.*)$")
 
 
-def tag_predicate(spec: str, tags: Column) -> Column:
-    """One seriesByTag term -> boolean Column.
+def tag_predicate(spec: str) -> str:
+    """One seriesByTag term -> SQL boolean text over :func:`tags_sql`.
 
     Grammar per ``expr/functions/seriesByTag/function.go:40``:
     ``tag=value`` exact (empty value matches missing tag), ``tag!=value``,
@@ -75,33 +82,31 @@ def tag_predicate(spec: str, tags: Column) -> Column:
     if not m:
         raise ValueError(f"bad seriesByTag term {spec!r}")
     key, op, val = m.group(1).strip(), m.group(2), m.group(3).strip()
-    tag = tags.getItem(key)
+    tag = f"{tags_sql()}[{sql_lit(key)}]"
     if op == "=":
         if val == "":
-            return tag.isNull() | (tag == "")
-        return tag == val
+            return f"{tag} IS NULL OR {tag} = ''"
+        return f"{tag} = {sql_lit(val)}"
     if op == "!=":
-        return tag.isNull() | (tag != val)
-    rx = val if val.startswith("^") else "^" + val
+        return f"{tag} IS NULL OR {tag} != {sql_lit(val)}"
+    rx = sql_lit(val if val.startswith("^") else "^" + val)
     if op == "=~":
-        return tag.isNotNull() & tag.rlike(rx)
-    return tag.isNull() | ~tag.rlike(rx)
+        return f"{tag} IS NOT NULL AND {tag} RLIKE {rx}"
+    return f"{tag} IS NULL OR NOT {tag} RLIKE {rx}"
 
 
 def by_name(df: DataFrame, terms: list[str], *aggs: Column) -> DataFrame:
     """One row per distinct ``name`` of *df* matching every seriesByTag
     term in *terms*, with *aggs* computed per name.
 
-    The terms read ``tags_expr`` once per distinct name instead of once
+    The terms read the tag map once per distinct name instead of once
     per scanned row. They filter the name as the aggregate's result,
     ``first(name)``: Catalyst pushes a filter on a grouping key below the
     aggregate, back onto every row."""
-    out = (df.groupBy(F.col(NAME).alias("__key"))
-           .agg(F.first(NAME).alias(NAME), *aggs).drop("__key"))
+    out = (df.groupBy(expr_cached(f"{NAME} AS __key"))
+           .agg(expr_cached(f"first({NAME}, false) AS {NAME}"), *aggs).drop("__key"))
     if terms:
-        tags = tags_expr(F.col(NAME))
-        out = out.where(functools.reduce(
-            Column.__and__, [tag_predicate(t, tags) for t in terms]))
+        out = out.where(sql_all(tag_predicate(t) for t in terms))
     return out
 
 
@@ -139,47 +144,46 @@ class SeriesLake:
             time_partition_col in df.columns else None)
         self.time_partition_seconds = time_partition_seconds
 
-    def _name_filter(self, pattern: str) -> tuple[Column, list[str]]:
-        """(row predicate, seriesByTag terms left for :func:`by_name`).
+    def _name_filter(self, pattern: str) -> tuple[str, list[str]]:
+        """(SQL row predicate, seriesByTag terms left for :func:`by_name`).
 
         A glob has no terms. Of a seriesByTag query only the ``name=``
         terms become row predicates: the name tag IS the pre-';' base, so
         plain string ops with a prefix guard that pushes down to Parquet
         as StringStartsWith (the tag map never would)."""
-        name = F.col(NAME)
         if pattern.startswith("seriesByTag(") and pattern.endswith(")"):
             args = _split_quoted_args(pattern[len("seriesByTag("):-1])
             if not args:
                 raise ValueError("seriesByTag needs at least one term")
-            pred, terms = F.lit(True), []
+            preds, terms = [], []
             for raw in args:
                 m = _TAG_TERM.match(raw)
                 term = (m.group(1) or m.group(2)) if m else raw.strip()
                 tm = _TAG_EXPR.match(term)
                 if (tm and tm.group(1).strip() == "name"
                         and tm.group(2) == "=" and tm.group(3).strip()):
-                    val = tm.group(3).strip()
-                    pred = pred & name.startswith(val) & (
-                        F.split_part(name, F.lit(";"), F.lit(1)) == val)
+                    val = sql_lit(tm.group(3).strip())
+                    preds += [f"startswith({NAME}, {val})",
+                              f"split_part({NAME}, ';', 1) = {val}"]
                 else:
                     terms.append(term)
-            return pred, terms
+            return sql_all(preds), terms
         if not has_wildcard(pattern):
-            return name == pattern, []
+            return f"{NAME} = {sql_lit(pattern)}", []
         exact = expand_braces(pattern)
         if exact is not None:
             # brace-only alternation -> IN, which (unlike rlike) reaches the
             # Parquet row-group filters as an In pushed filter
-            return name.isin(exact), []
-        pred = name.rlike(glob_to_java_regex(pattern))
+            return f"{NAME} IN ({', '.join(map(sql_lit, exact))})", []
+        pred = f"{NAME} RLIKE {sql_lit(glob_to_java_regex(pattern))}"
         prefix = glob_prefix(pattern)
         if prefix:
             # startswith IS pushed to Parquet (StringStartsWith filter);
             # rlike is evaluated post-scan, so this prunes row groups.
-            pred = name.startswith(prefix) & pred
+            pred = f"startswith({NAME}, {sql_lit(prefix)}) AND {pred}"
         return pred, []
 
-    def _name_predicate(self, pattern: str, window: Column) -> Column:
+    def _name_predicate(self, pattern: str, window: str) -> str:
         """Row predicate selecting the series of *pattern*. Tag terms are
         resolved first: one job collects the distinct names inside
         *window* that match them, and the predicate reads ``name IN``
@@ -187,13 +191,18 @@ class SeriesLake:
         pred, terms = self._name_filter(pattern)
         if not terms:
             return pred
-        names = [r[0] for r in by_name(self.df.where(pred & window), terms)
-                 .collect() if r[0] is not None]
-        return pred & F.col(NAME).isin(names)
+        names = [r[0] for r in by_name(self.df.where(f"({pred}) AND ({window})"),
+                                       terms).collect() if r[0] is not None]
+        listed = (f"{NAME} IN ({', '.join(map(sql_lit, names))})"
+                  if names else "false")
+        return f"({pred}) AND {listed}"
 
     def fetch(self, spark, pattern: str, from_ts: int, until_ts: int) -> SeriesFrame:
         """Series matching *pattern* with buckets covering [from, until):
-        the rows the lake holds on those buckets, undensified."""
+        the rows the lake holds on those buckets, undensified.
+
+        The scan's filter and projection are SQL text, one Dataset step
+        each: the whole fetch is a few py4j round trips."""
         step = self.step
         if self.per_series_step:
             step = self._common_step(pattern, until_ts)
@@ -201,28 +210,33 @@ class SeriesLake:
         stop = until_ts + (-until_ts) % step
         if stop <= start:
             stop = start + step
-        window = (F.col(TS) >= start) & (F.col(TS) < stop)
+        window = [f"{TS} >= {start}", f"{TS} < {stop}"]
         if self.time_partition_col:
-            w = self.time_partition_seconds
-            window = window & F.col(self.time_partition_col).between(
-                start - start % w, stop - 1)
-        df = self.df.where(self._name_predicate(pattern, window)).where(window)
+            w, col = self.time_partition_seconds, self.time_partition_col
+            window += [f"{col} >= {start - start % w}", f"{col} <= {stop - 1}"]
+        window = sql_all(window)
+        df = self.df.where(f"({self._name_predicate(pattern, window)}) AND ({window})")
         if self.per_series_step:
             # rescale every series to the LCM step: bucket each raw point
             # and fold with the default consolidation (average, NULL-skipped
             # — ScaleToCommonStep semantics, align.go:176-189)
-            bucket = (F.col(TS) - F.col(TS) % F.lit(step)).cast("long").alias(TS)
-            df = (df.groupBy(F.col(NAME), F.col(NAME).alias(ORD), bucket)
-                  .agg(agg_column("average", F.col(VALUE), F.col(TS), 0.0)
-                       .cast("double").alias(VALUE)))
+            df = (df.groupBy(expr_cached(NAME), expr_cached(f"{NAME} AS {ORD}"),
+                             F.expr(f"CAST({TS} - {TS} % {step} AS BIGINT) AS {TS}"))
+                  .agg(agg_column("average", alias=VALUE)))
         else:
             # a point off the bucket grid is no bucket's value (densify
             # never picks it); its row keeps the series in the frame
-            ts = F.col(TS).cast("long")
-            df = df.select(F.col(NAME), F.col(NAME).alias(ORD), ts.alias(TS),
-                           F.when((ts - start) % step == 0,
-                                  F.col(VALUE).cast("double")).alias(VALUE))
+            ts = f"CAST({TS} AS BIGINT)"
+            df = df.selectExpr(NAME, f"{NAME} AS {ORD}", f"{ts} AS {TS}",
+                               f"CASE WHEN ({ts} - {start}) % {step} = 0 THEN "
+                               f"CAST({VALUE} AS DOUBLE) END AS {VALUE}")
         return SeriesFrame(df, step, start, stop)
+
+    def fetch_step(self, pattern: str, from_ts: int, until_ts: int) -> int:
+        """The step :meth:`fetch` gives *pattern* over [from, until)."""
+        if self.per_series_step:
+            return self._common_step(pattern, until_ts)
+        return self.step
 
     def _common_step(self, pattern: str, until_ts: int) -> int:
         """LCM of the steps of the series matching *pattern*.
@@ -234,7 +248,7 @@ class SeriesLake:
         (scan → per-name aggregate → distinct steps) is the same either way.
         """
         pred, terms = self._name_filter(pattern)
-        rows = (by_name(self.df.where(pred & (F.col(TS) < until_ts)), terms,
+        rows = (by_name(self.df.where(f"({pred}) AND {TS} < {until_ts}"), terms,
                         F.collect_set("step").alias("steps"))
                 .select(F.explode("steps")).distinct().collect())
         step = 1
@@ -288,8 +302,7 @@ def write_rollups(df: DataFrame, path: str, steps: list[int],
     for s in steps:
         bucket = (F.col(TS) - F.col(TS) % F.lit(s)).cast("long")
         agged = (df.groupBy(F.col(NAME), bucket.alias(TS))
-                 .agg(*[agg_column(f, F.col(VALUE), F.col(TS))
-                        .cast("double").alias(f"__{f}") for f in funcs]))
+                 .agg(*[agg_column(f, alias=f"__{f}") for f in funcs]))
         value = F.col(f"__{default_method}")
         for pat, f in reversed(methods or []):
             value = F.when(F.col(NAME).rlike(glob_to_java_regex(pat)),
@@ -381,3 +394,7 @@ class TieredLake:
               *, now: int | None = None):
         _step, _ret, lake = self.tiers[self.select_tier(from_ts, now)]
         return lake.fetch(spark, pattern, from_ts, until_ts)
+
+    def fetch_step(self, pattern: str, from_ts: int, until_ts: int) -> int:
+        _step, _ret, lake = self.tiers[self.select_tier(from_ts)]
+        return lake.fetch_step(pattern, from_ts, until_ts)

@@ -67,7 +67,7 @@ def stream_summarize(series: DataFrame, interval: int, func: str = "sum",
     from carbonapi_spark.model.consolidation import agg_column
 
     win = F.window(F.col("ts"), f"{interval} seconds")
-    agg = agg_column(func, F.col("value"), F.col("ts").cast("long"), 0.0)
+    agg = agg_column(func, "value", "CAST(ts AS BIGINT)")
     return (series
             .withWatermark("ts", watermark)
             .groupBy("name", win)
@@ -117,9 +117,8 @@ def stream_rollups(series: DataFrame, path: str, checkpoint_root: str,
         win = F.window(F.col("ts"), f"{s} seconds")
         agged = (series.withWatermark("ts", watermark)
                  .groupBy("name", win)
-                 .agg(*[agg_column(f, F.col("value"),
-                                   F.col("ts").cast("long"))
-                        .cast("double").alias(f"__{f}") for f in funcs]))
+                 .agg(*[agg_column(f, "value", "CAST(ts AS BIGINT)", alias=f"__{f}")
+                        for f in funcs]))
         value = F.col(f"__{default_method}")
         for pat, f in reversed(methods or []):
             value = F.when(F.col("name").rlike(glob_to_java_regex(pat)),

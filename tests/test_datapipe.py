@@ -5026,7 +5026,7 @@ def test_expr_cached_concurrent_eviction(spark, monkeypatch):
     import sys
     import threading
 
-    import carbonapi_spark.datapipe as dp
+    import carbonapi_spark.sqltext as dp
     monkeypatch.setattr(dp, "_EXPR_CACHE", {})
     n_threads, per_thread = 8, dp._EXPR_CACHE_MAX // 2
     start, errors = threading.Barrier(n_threads), []

@@ -249,6 +249,19 @@ def test_moving_median_xff(spark):
     approx_list(values_of(res, "movingMedian(m,3)"), [None, 7, 5])
 
 
+def test_moving_window_compound_folds(spark):
+    """A fold made of several aggregate calls (an xFilesFactor gate, count,
+    range) is a window function too: each of its aggregates takes the
+    trailing frame."""
+    lake = make_lake(spark, {"m": [1, None, 9, 5, 7, 3]}, 1, 0)
+    res = run(spark, lake, "movingAverage(m, 3, 0.7)", 3, 6)
+    approx_list(values_of(res, "movingAverage(m,3)"), [None, 7, 5])
+    res = run(spark, lake, "movingWindow(m, 3, 'range')", 3, 6)
+    approx_list(values_of(res, "movingWindow(m,3)"), [4, 4, 4])
+    res = run(spark, lake, "movingWindow(m, 3, 'count')", 3, 6)
+    approx_list(values_of(res, "movingWindow(m,3)"), [2, 3, 3])
+
+
 def test_moving_median_wide_window_pandas_path(spark):
     # wp > _LAG_WINDOW_MAX exercises the applyInPandas rolling kernel;
     # must agree with the lag-array path's semantics

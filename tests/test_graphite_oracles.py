@@ -76,3 +76,25 @@ def test_graphite_oracle(spark, duck, name):
 @pytest.mark.parametrize("name", ANN)
 def test_ann_oracle_bit_exact(spark, duck, name):
     _replay(spark, duck, name, strict=True)
+
+
+@pytest.mark.parametrize("name", GRAPHITE)
+def test_static_step_matches_build(spark, name):
+    """The static step pass reads every catalog target's step off its AST
+    exactly as building the target gives it."""
+    from carbonapi_spark.entry_queries import _cached_lake
+    from carbonapi_spark.evaluator import EvalContext, eval_expr, static_step
+    from carbonapi_spark.parser import parse
+    q = QUERIES[name]
+    cells = dict(zip(q.__code__.co_freevars,
+                     (c.cell_contents for c in q.__closure__)))
+    lake = _cached_lake(spark, SF_DIR)
+    exp = parse(cells["target"])
+    step = static_step(EvalContext(spark, lake, cells["from_ts"],
+                                   cells["until_ts"]), exp)
+    try:
+        built = eval_expr(EvalContext(spark, lake, cells["from_ts"],
+                                      cells["until_ts"]), exp).step
+    finally:
+        scratch.release()
+    assert step == built

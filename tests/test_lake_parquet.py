@@ -1,6 +1,8 @@
 """Parquet-backed lake: pushdown + partition-pruning behavior (the 100 TB
 path, exercised at toy scale)."""
 
+import re
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -23,11 +25,23 @@ def parquet_lake(spark, tmp_path_factory):
     return SeriesLake(spark.read.parquet(path), 3600, time_partition_col="day")
 
 
+def _scan_filters(frame) -> tuple[str, str]:
+    """(PushedFilters, PartitionFilters) of the frame's Parquet scan."""
+    plan = frame.df._jdf.queryExecution().executedPlan().toString()
+    # the plan string cuts a long filter list short with "..."
+    return (re.search(r"PushedFilters: \[(.*?)(?:\], |\.\.\.)", plan).group(1),
+            re.search(r"PartitionFilters: \[(.*?)\], ", plan).group(1))
+
+
 def test_fetch_prunes_and_pushes(spark, parquet_lake):
     frame = parquet_lake.fetch(spark, "web.*.cpu", 86400, 2 * 86400)
     plan = frame.df._jdf.queryExecution().executedPlan().toString()
     assert "PartitionFilters" in plan
     assert "StringStartsWith(name,web.)" in plan
+    # the day bounds of the request window prune the partitions
+    _pushed, parts = _scan_filters(frame)
+    assert re.search(r"\(day#\d+ >= 86400\)", parts), parts
+    assert re.search(r"\(day#\d+ <= 172799\)", parts), parts
     rows = frame.df.collect()
     assert len(rows) == 2 * 24
     assert all(86400 <= r["ts"] < 2 * 86400 for r in rows)
@@ -65,6 +79,20 @@ def test_series_by_tag_name_term_pushes_prefix(spark, tmp_path_factory):
     assert "StringStartsWith(name,cpu.load)" in plan
     got = {r["name"] for r in frame.df.select("name").distinct().collect()}
     assert got == {"cpu.load;host=a"}
+
+
+def test_exact_and_brace_fetches_push_name_filters(spark, parquet_lake):
+    """An exact name reaches the Parquet reader as EqualTo and a brace
+    list as In, next to the ts bounds and the day partition filter."""
+    exact = parquet_lake.fetch(spark, "web.h1.cpu", 0, 86400)
+    pushed, parts = _scan_filters(exact)
+    assert "EqualTo(name,web.h1.cpu)" in pushed, pushed
+    assert "GreaterThanOrEqual(ts,0)" in pushed, pushed
+    assert re.search(r"\(day#\d+ <= 86399\)", parts), parts
+    brace = parquet_lake.fetch(spark, "{web.h1.cpu,db.h1.io}", 0, 86400)
+    pushed, parts = _scan_filters(brace)
+    assert re.search(r"In\(name, \[[^\]]*db\.h1\.io", pushed), pushed
+    assert re.search(r"\(day#\d+ >= 0\)", parts), parts
 
 
 def test_fetch_densify_from_parquet(spark, parquet_lake):

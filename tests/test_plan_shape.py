@@ -981,7 +981,7 @@ def _nodes(plan):
 
 
 def _tag_map_rows(plan) -> list[str]:
-    """Plan nodes that build the tag map (``tags_expr``'s map_from_entries)
+    """Plan nodes that build the tag map (``tags_sql``'s map_from_entries)
     with a path to a leaf that crosses no Aggregate: nodes that evaluate
     it once per scanned row rather than once per distinct name."""
     def unaggregated(node) -> bool:
@@ -1099,10 +1099,12 @@ def test_sparse_renders_never_densify(spark, tmp_path, monkeypatch):
 
 def test_sort_limit_render_job_count(spark, tmp_path):
     """The dashboard's sortByMaxima(...)|limit(3): max skips NULLs, so the
-    per-series ranking reads the sparse scan — 6 jobs / 10 stages, where
-    ranking a densified fetch ran 8 / 15."""
+    per-series ranking reads the sparse scan, and the limit keeps the
+    sort's first three ranks instead of ranking the distinct ords again —
+    3 jobs / 4 stages, where ranking twice ran 6 / 10 and ranking a
+    densified fetch 8 / 15."""
     assert _render_jobs(spark, tmp_path,
-                        ["sortByMaxima(events.*.click)|limit(3)"]) == (6, 10)
+                        ["sortByMaxima(events.*.click)|limit(3)"]) == (3, 4)
 
 
 @pytest.mark.parametrize("target, jobs_stages", [
@@ -1119,9 +1121,10 @@ def test_panel_render_job_count(spark, tmp_path, target, jobs_stages):
 
 def test_interval_window_builds_its_argument_once(spark, tmp_path,
                                                   monkeypatch):
-    """movingAverage over an interval needs no step to size its history,
-    so a tagged argument resolves its names once; a point-count window
-    builds the argument a second time to learn the step."""
+    """A trailing window builds its argument once: over an interval it
+    needs no step to size its history, and over a point count it reads
+    the step from the static step pass, so a tagged argument resolves its
+    names once either way."""
     from carbonapi_spark.sources import lake as lake_mod
     lake = _tagged_lake(spark, tmp_path)
     calls = []
@@ -1132,15 +1135,12 @@ def test_interval_window_builds_its_argument_once(spark, tmp_path,
         return real(*a, **kw)
 
     monkeypatch.setattr(lake_mod, "by_name", by_name)
-    for window, builds in (("'2min'", 1), ("2", 2)):
-        calls.clear()
-        eval_target(EvalContext(spark, lake, 0, 240),
-                    f"movingAverage(seriesByTag('name=app.req','dc=dc0'),{window})")
-        assert len(calls) == builds, window
-    calls.clear()
-    eval_target(EvalContext(spark, lake, 0, 240),
-                "exponentialMovingAverage(seriesByTag('name=app.req','dc=dc0'),'2min')")
-    assert len(calls) == 1
+    for fn in ("movingAverage", "exponentialMovingAverage"):
+        for window in ("'2min'", "2"):
+            calls.clear()
+            eval_target(EvalContext(spark, lake, 0, 240),
+                        f"{fn}(seriesByTag('name=app.req','dc=dc0'),{window})")
+            assert len(calls) == 1, (fn, window)
 
 
 def test_tagged_max_data_points_consolidates_sparse_plan(spark, tmp_path,
@@ -1188,3 +1188,119 @@ def test_metadata_name_scans_push_glob_prefix(spark, tmp_path, monkeypatch):
     for plan in plans:
         pushed = re.search(r"PushedFilters: \[([^\]]*)\]", plan).group(1)
         assert "StringStartsWith(name,events.u1.)" in pushed, plan
+
+
+# ---------------------------------------------------------------- py4j
+
+
+def _day_lake(spark, tmp_path, rows):
+    """A SeriesLake over *rows* written partitioned by day, hourly step,
+    as the service reads its lake."""
+    from pyspark.sql import functions as F
+
+    from carbonapi_spark.sources.lake import SeriesLake
+    path = str(tmp_path / "daylake")
+    (spark.createDataFrame(rows, "name STRING, ts BIGINT, value DOUBLE")
+     .withColumn("day", F.col("ts") - F.col("ts") % 86400)
+     .write.mode("overwrite").partitionBy("day").parquet(path))
+    return SeriesLake(spark.read.parquet(path), 3600, time_partition_col="day")
+
+
+def _build_round_trips(spark, lake, target, until=2 * 86400) -> int:
+    """py4j round trips one build of *target* makes on the calling
+    thread, counted at ``ClientServerConnection.send_command``; the build
+    runs once beforehand, so cached expressions are warm, and the garbage
+    collector is held so no finalizer's delete command lands in the
+    count."""
+    import gc
+    import threading
+
+    import py4j.clientserver as cs
+    assert isinstance(spark.sparkContext._gateway, cs.ClientServer)
+    me, count = threading.get_ident(), [0]
+    real = cs.ClientServerConnection.send_command
+
+    def send_command(self, command):
+        if threading.get_ident() == me:
+            count[0] += 1
+        return real(self, command)
+
+    eval_target(EvalContext(spark, lake, 0, until), target)
+    gc.collect()
+    gc.disable()
+    cs.ClientServerConnection.send_command = send_command
+    try:
+        eval_target(EvalContext(spark, lake, 0, until), target)
+    finally:
+        cs.ClientServerConnection.send_command = real
+        gc.enable()
+    return count[0]
+
+
+@pytest.mark.parametrize("target, bound", [
+    ("events.u*.click", 30),
+    ("movingAverage(sumSeries(events.u*.click),'6h')", 150),
+])
+def test_build_round_trip_budget(spark, tmp_path, target, bound):
+    """Building a render plan is SQL text in a few Dataset steps: a glob
+    fetch and a windowed fold stay inside a small py4j budget (a glob
+    made ~350 round trips and the window ~1000 when every predicate and
+    projection was assembled from Columns)."""
+    rows = [(f"events.u{u}.{e}", 3600 * h, float(u * h))
+            for u in (1, 2) for e in ("click", "view") for h in range(48)]
+    lake = _day_lake(spark, tmp_path, rows)
+    assert _build_round_trips(spark, lake, target) <= bound
+
+
+@pytest.mark.parametrize("target, trips", [
+    ("{events.u1.click,events.u2.view}", 10),
+    ("events.u1.click", 10),
+    ("seriesByTag('name=app.req','dc=dc0')", 36),
+])
+def test_fetch_round_trips_pinned(spark, tmp_path, target, trips):
+    """The brace, exact-name and tagged fetch shapes, pinned at their
+    round-trip counts (the tagged one includes its names job)."""
+    rows = [(f"events.u{u}.{e}", 3600 * h, float(u * h))
+            for u in (1, 2) for e in ("click", "view") for h in range(48)]
+    rows += [(f"app.req;dc=dc{d}", 3600 * h, 1.0) for d in (0, 1)
+             for h in range(48)]
+    lake = _day_lake(spark, tmp_path, rows)
+    assert _build_round_trips(spark, lake, target) == trips
+
+
+def test_render_path_does_not_import_datapipe():
+    """The render API imports the shared SQL-text helpers, not the
+    datapipe operator package."""
+    import os
+    import subprocess
+    import sys
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    code = ("import sys, carbonapi_spark.render.api; "
+            "print('carbonapi_spark.datapipe' in sys.modules)")
+    out = subprocess.run([sys.executable, "-c", code], capture_output=True,
+                         text=True, check=True, cwd=root)
+    assert out.stdout.strip() == "False", out.stderr
+
+
+@pytest.mark.parametrize("pattern, names", [
+    ("it's.a", ["it's.a"]),
+    ("back\\slash.b", ["back\\slash.b"]),
+    ("{it's.a,back\\slash.b}", ["back\\slash.b", "it's.a"]),
+    ("it's.*", ["it's.a"]),
+    ("back\\slash.*", ["back\\slash.b"]),
+    ("a') OR (1=1", []),
+    ("{a') OR (1=1,x}", []),
+    ("a') OR (1=1.*", []),
+])
+def test_fetch_quotes_names(spark, pattern, names):
+    """Names holding ``'`` and ``\\`` are fetched by exact name, brace
+    list and glob with their own rows; a pattern that would close the
+    string literal matches nothing."""
+    from carbonapi_spark.sources.lake import SeriesLake
+    rows = [(n, 60 * t, float(t))
+            for n in ("it's.a", "back\\slash.b", "plain.c") for t in range(3)]
+    lake = SeriesLake(spark.createDataFrame(
+        rows, "name STRING, ts BIGINT, value DOUBLE"), 60)
+    got = lake.fetch(spark, pattern, 0, 180).df.collect()
+    assert sorted({r["name"] for r in got}) == names
+    assert len(got) == 3 * len(names)

@@ -104,11 +104,12 @@ def main():
     # ---- training: one collected 100k sample feeds both the coarse
     # quantizer (kmeans_train_sample — FAISS practice; the distributed
     # kmeans_centroids is the full-corpus alternative) and the PQ
-    # codebooks — model-sized driver state only.
+    # codebooks — model-sized driver state only. It is the lowest vec_ids
+    # of a hash-picked 1/101, so every run trains on the same rows.
     t = time.time()
     sample = [list(r["embedding"]) for r in
               (corpus.where(F.pmod(F.xxhash64("vec_id"), F.lit(101)) == 0)
-               .limit(100_000).collect())]
+               .orderBy("vec_id").limit(100_000).collect())]
     cents = kmeans_train_sample(sample, k=N_CENTROIDS, iters=10)
     t_kmeans = time.time() - t
     t = time.time()
@@ -167,7 +168,7 @@ def main():
     # ---- 32 queries sampled from the corpus (exact self is excluded by
     # the operators); collected once so probes don't rescan the lake.
     qrows = (corpus.where(F.pmod(F.xxhash64("vec_id"), F.lit(4096)) == 7)
-             .limit(N_QUERIES).collect())
+             .orderBy("vec_id").limit(N_QUERIES).collect())
     query = spark.createDataFrame(
         [(r["vec_id"], list(r["embedding"])) for r in qrows],
         "vec_id BIGINT, embedding ARRAY<DOUBLE>")
