@@ -7,9 +7,7 @@ import logging
 
 from pyspark.sql import DataFrame, functions as F
 
-from carbonapi_spark.sqltext import (  # noqa: F401 - re-exported
-    expr_cached, local_df, selectx, sql_dlit,
-)
+from carbonapi_spark.sqltext import local_df
 
 _log = logging.getLogger(__name__)
 # Diagnostic counter: how often the Catalyst size-estimate probe failed and

@@ -22,7 +22,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-from carbonapi_spark.datapipe import local_df as _local_df
+from carbonapi_spark.sqltext import local_df as _local_df
 
 __all__ = ["connected_components", "core_numbers", "dedup_clusters",
            "dedup_keep_best", "label_propagation", "pagerank",

@@ -18,8 +18,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, functions as F
 from pyspark.sql.window import Window
 
-from carbonapi_spark.datapipe import (local_df, read_small_table,
-                                      write_small_table)
+from carbonapi_spark.datapipe import read_small_table, write_small_table
+from carbonapi_spark.sqltext import local_df
 
 from carbonapi_spark.datapipe.text import tokens, _poly_hash
 

@@ -34,7 +34,7 @@ import math
 
 from pyspark.sql import Column, DataFrame, functions as F
 
-from carbonapi_spark.datapipe import local_df as _local_df
+from carbonapi_spark.sqltext import local_df as _local_df
 
 # fixed-point scales (contract constants, see module docstring)
 PROJ_SCALE = 10**6

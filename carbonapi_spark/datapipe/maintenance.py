@@ -67,7 +67,8 @@ import threading
 
 from pyspark.sql import functions as F
 
-from carbonapi_spark.datapipe import combo_repartition, local_df, overlap_jobs
+from carbonapi_spark.datapipe import combo_repartition, overlap_jobs
+from carbonapi_spark.sqltext import local_df
 
 
 def _hpath(spark, path: str):

@@ -30,7 +30,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
-from carbonapi_spark.datapipe import local_df as _local_df
+from carbonapi_spark.sqltext import local_df as _local_df
 from pyspark.sql.types import (
     ArrayType, BinaryType, DoubleType, IntegerType, LongType, StringType,
     StructField, StructType,

@@ -20,8 +20,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from carbonapi_spark.datapipe import (local_df, read_small_table,
-                                      write_small_table)
+from carbonapi_spark.datapipe import read_small_table, write_small_table
+from carbonapi_spark.sqltext import local_df
 
 from carbonapi_spark.datapipe.text import token_count, tokens
 

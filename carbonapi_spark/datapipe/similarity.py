@@ -24,8 +24,8 @@ import math
 from pyspark.sql import Column, DataFrame, functions as F
 from pyspark.sql.window import Window
 
-from carbonapi_spark.datapipe import (expr_cached, local_df, selectx,
-                                      write_small_table)
+from carbonapi_spark.datapipe import write_small_table
+from carbonapi_spark.sqltext import expr_cached, local_df, selectx
 
 
 def dot(a: Column, b: Column) -> Column:

@@ -10,7 +10,7 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, functions as F
 
-from carbonapi_spark.datapipe import local_df as _local_df
+from carbonapi_spark.sqltext import local_df as _local_df
 
 # A tiny per-language marker lexicon for the n-gram/stopword heuristic.
 # Deterministic and SQL-expressible (same lists are inlined in the DuckDB

@@ -51,7 +51,7 @@ import math
 
 from pyspark.sql import Column, DataFrame, functions as F
 
-from carbonapi_spark.datapipe import local_df as _local_df
+from carbonapi_spark.sqltext import local_df as _local_df
 from pyspark.sql.window import Window
 
 from carbonapi_spark.datapipe.bpe import SEP, ascii_word, word_counts
@@ -159,7 +159,7 @@ def _viterbi_sql(col: str, vocab: dict[str, int | float],
         f"'p{l}', {null_k}" for l in range(2, max_piece_len + 1)) + ")"
     folded = (f"aggregate(sequence(1, length({col})), {init}, "
               f"(acc, i) -> {step}, acc -> {finish})")
-    from carbonapi_spark.datapipe import expr_cached
+    from carbonapi_spark.sqltext import expr_cached
     return expr_cached(
         f"if(length({col}) >= 1 and length({col}) <= {max_word_len}, "
         f"{folded}, cast(null as {state_t}))")

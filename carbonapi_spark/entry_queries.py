@@ -12,7 +12,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from carbonapi_spark.datapipe import local_df as _local_df
+from carbonapi_spark.sqltext import local_df as _local_df
 
 from carbonapi_spark.evaluator import EvalContext, eval_target
 from carbonapi_spark.model.series import NAME, TS, VALUE

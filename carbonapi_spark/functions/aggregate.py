@@ -15,9 +15,7 @@ from pyspark.sql import functions as F
 from carbonapi_spark.functions import register
 from carbonapi_spark.evaluator import eval_expr
 from carbonapi_spark.functions.helper import agg_key_sql, nodes_sql, series_args
-from carbonapi_spark.model.consolidation import (
-    agg_column, percentile_column, skips_nulls,
-)
+from carbonapi_spark.model.consolidation import agg_column, percentile_sql, skips_nulls
 from carbonapi_spark.model.series import NAME, ORD, TS, VALUE, SeriesFrame
 from carbonapi_spark.sqltext import expr_cached, selectx, sql_lit
 
@@ -94,15 +92,12 @@ def aggregate(ctx, exp, f, u):
 @register("percentileOfSeries")
 def percentile_of_series(ctx, exp, f, u):
     """per-ts n-th percentile across series — percentileOfSeries/function.go:37."""
-    V = F.col(VALUE)
     frame = eval_expr(ctx, exp.args[0], f, u)
-    n = exp.get_float(1)
-    interpolate = exp.get_bool(2, False, names=("interpolate",))
-    out_name = f"percentileOfSeries({exp.arg_string})"
-    agg = percentile_column(V, n, interpolate).cast("double").alias(VALUE)
-    df = (frame.df.groupBy(TS).agg(agg)
-          .select(F.lit(out_name).alias(NAME), F.lit(out_name).alias(ORD),
-                  F.col(TS), F.col(VALUE)))
+    fold = percentile_sql(VALUE, exp.get_float(1),
+                          exp.get_bool(2, False, names=("interpolate",)))
+    out_name = sql_lit(f"percentileOfSeries({exp.arg_string})")
+    df = (frame.df.groupBy(TS).agg(F.expr(f"CAST({fold} AS DOUBLE) AS {VALUE}"))
+          .selectExpr(f"{out_name} AS {NAME}", f"{out_name} AS {ORD}", TS, VALUE))
     return frame.with_df(df)
 
 
@@ -174,19 +169,17 @@ def group_by_tags(ctx, exp, f, u):
 def count_values(ctx, exp, f, u):
     """histogram-as-series: one series per distinct int(value)
     — countValues/function.go:38 (carbonapi extension)."""
-    V = F.col(VALUE)
     frame = eval_expr(ctx, exp.args[0], f, u)
     limit = exp.get_int(1, 50, names=("valuesLimit",))
-    bucket = F.floor(V).cast("long")
-    df = (frame.df.where(V.isNotNull())
-          .groupBy(bucket.alias("__v"), F.col(TS))
-          .agg(F.count(F.lit(1)).cast("double").alias(VALUE)))
+    df = (frame.df.where(f"{VALUE} IS NOT NULL")
+          .groupBy(expr_cached(f"CAST(floor({VALUE}) AS BIGINT) AS __v"), expr_cached(TS))
+          .agg(expr_cached(f"CAST(count(1) AS DOUBLE) AS {VALUE}")))
     n_distinct = df.select("__v").distinct().limit(limit + 1).count()
     if n_distinct > limit:
         raise ValueError("countValues: valuesLimit reached")
-    name = F.concat(F.lit("value_"), F.col("__v").cast("string"))
-    out = df.select(name.alias(NAME), name.alias(ORD), F.col(TS), F.col(VALUE))
-    return frame.with_df(out, dense=False)
+    name = "concat('value_', CAST(__v AS STRING))"
+    return frame.with_df(selectx(df, f"{name} AS {NAME}", f"{name} AS {ORD}", TS, VALUE),
+                         dense=False)
 
 
 @register("group")
@@ -200,7 +193,7 @@ def unique(ctx, exp, f, u):
     """keep the first series (by list order) per distinct name
     — unique/function.go:29."""
     frame = series_args(ctx, exp, f, u)
-    first_ord = frame.df.groupBy(NAME).agg(F.min(ORD).alias("__fo"))
-    df = (frame.df.join(F.broadcast(first_ord), NAME)
-          .where(F.col(ORD) == F.col("__fo")).drop("__fo"))
+    first_ord = frame.df.groupBy(NAME).agg(expr_cached(f"min({ORD}) AS __fo"))
+    df = (frame.df.join(first_ord.hint("broadcast"), NAME)
+          .where(f"{ORD} = __fo").drop("__fo"))
     return frame.with_df(df)

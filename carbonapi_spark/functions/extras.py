@@ -8,30 +8,25 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import functions as F
 
-from carbonapi_spark.sqltext import local_df as _local_df, sql_lit
-from pyspark.sql.window import Window
-
 from carbonapi_spark.evaluator import EvalError, eval_expr
 from carbonapi_spark.functions import (
     built_step, first_arg_step, interval_step, register,
 )
+from carbonapi_spark.functions.helper import node_sql, nodes_sql
 from carbonapi_spark.model.series import (
     NAME, ORD, TS, VALUE, SERIES_SCHEMA, SeriesFrame, align, combine,
 )
+from carbonapi_spark.sqltext import (
+    expr_cached, local_df as _local_df, selectx, sql_dlit, sql_lit,
+)
 
-_SLO_METHODS = {
-    "above": lambda v, x: v > x,
-    "aboveOrEqual": lambda v, x: v >= x,
-    "below": lambda v, x: v < x,
-    "belowOrEqual": lambda v, x: v <= x,
-}
+_SLO_METHODS = {"above": ">", "aboveOrEqual": ">=", "below": "<", "belowOrEqual": "<="}
 
 
 @register("slo", "sloErrorBudget", step=interval_step)
 def slo(ctx, exp, f, u):
     """per-bucket fraction of points meeting the predicate; error budget =
     (fraction - objective) * bucketSize — slo/function.go:29-230."""
-    V = F.col(VALUE)
     frame = eval_expr(ctx, exp.args[0], f, u).densify()
     bucket_size = exp.get_interval(1)
     method = exp.get_string(2)
@@ -41,75 +36,56 @@ def slo(ctx, exp, f, u):
     is_budget = exp.target == "sloErrorBudget"
     objective = exp.get_float(4) if is_budget else 0.0
 
-    op = {"above": V > value, "aboveOrEqual": V >= value,
-          "below": V < value, "belowOrEqual": V <= value}[method]
-    bucket = F.col(TS) - ((F.col(TS) - frame.start) % bucket_size)
-    matched = F.count(F.when(op, 1))
-    notnull = F.count(V)
-    frac = F.when(notnull > 0, matched.cast("double") / notnull)
-    out_val = (frac - objective) * bucket_size if is_budget else frac
+    frac = (f"CASE WHEN count({VALUE}) > 0 THEN CAST(count(CASE WHEN {VALUE} "
+            f"{_SLO_METHODS[method]} {sql_dlit(value)} THEN 1 END) AS DOUBLE) "
+            f"/ count({VALUE}) END")
+    out_val = f"({frac} - {sql_dlit(objective)}) * {bucket_size}" if is_budget else frac
 
     interval_str = exp.args[1].val_str or exp.args[1].target
     if is_budget:
         suffix = f", {interval_str}, {method}, {exp.args[3].val_str}, {exp.args[4].val_str})"
     else:
         suffix = f", {interval_str}, {method}, {exp.args[3].val_str})"
-    df = (frame.df.groupBy(NAME, ORD, bucket.alias(TS))
-          .agg(out_val.cast("double").alias(VALUE))
-          .withColumn(NAME, F.concat(F.lit(exp.target + "("), F.col(NAME),
-                                     F.lit(suffix))))
+    df = frame.df.groupBy(NAME, ORD, F.expr(
+        f"{TS} - ({TS} - {frame.start}) % {bucket_size} AS {TS}")).agg(
+        F.expr(f"CAST({out_val} AS DOUBLE) AS {VALUE}"))
     n_buckets = (frame.stop - frame.start + bucket_size - 1) // bucket_size
     out = SeriesFrame(df, bucket_size, frame.start,
                       frame.start + n_buckets * bucket_size,
                       frame.consolidation, frame.xff, dense=False)
-    return out.densify()
+    return out.map_name(f"concat({sql_lit(exp.target + '(')}, {NAME}, "
+                        f"{sql_lit(suffix)})").densify()
 
 
 @register("baseline", "baselineAberration")
 def baseline(ctx, exp, f, u):
     """median across N same-time-previous-period windows; aberration is the
     ratio of current to that baseline — baselines/function.go:30-160."""
-    V = F.col(VALUE)
     unit = exp.get_interval(1, default_sign=-1)
     start_i = exp.get_int(2)
     end_i = exp.get_int(3)
     is_aberration = exp.target == "baselineAberration"
 
     current = eval_expr(ctx, exp.args[0], f, u).densify()
-    shifted = []
-    for i in range(start_i, end_i):
-        if i == 0:
-            continue
-        offs = i * unit
-        sub = eval_expr(ctx, exp.args[0], f + offs, u + offs)
-        df = sub.df.withColumn(TS, (F.col(TS) - offs).cast("long"))
-        shifted.append(SeriesFrame(df, sub.step, sub.start - offs,
-                                   sub.stop - offs, sub.consolidation,
-                                   sub.xff, sub.dense))
+    shifted = [eval_expr(ctx, exp.args[0], f + i * unit, u + i * unit).shift(i * unit)
+               for i in range(start_i, end_i) if i != 0]
     if not shifted:
         raise EvalError("baseline: empty window range")
     union = shifted[0].df
     for s in shifted[1:]:
         union = union.unionByName(s.df)
-    med = (union.groupBy(NAME, TS)
-           .agg(F.percentile(V, F.lit(0.5)).alias("__med")))
-    prefix = exp.target
+    med = union.groupBy(NAME, TS).agg(expr_cached(f"percentile({VALUE}, 0.5D, 1) AS __med"))
     if is_aberration:
-        cur = current.df
-        df = (cur.join(med, [NAME, TS], "left")
-              .withColumn(VALUE,
-                          F.when(F.col("__med").isNull(), None)
-                          .when(V.isNull(), None)
-                          .when(F.col("__med") != 0, V / F.col("__med"))
-                          .otherwise(V))
-              .drop("__med")
-              .withColumn(NAME, F.format_string(f"{prefix}(%s)", F.col(NAME))))
-        return current.with_df(df)
-    grid = current.df.select(NAME, ORD, TS)
-    df = (grid.join(med, [NAME, TS], "left")
-          .withColumn(VALUE, F.col("__med")).drop("__med")
-          .withColumn(NAME, F.format_string(f"{prefix}(%s)", F.col(NAME))))
-    return current.with_df(df)
+        df = (current.df.join(med, [NAME, TS], "left")
+              .withColumn(VALUE, expr_cached(
+                  f"CASE WHEN __med IS NULL THEN NULL WHEN {VALUE} IS NULL THEN NULL "
+                  f"WHEN __med != 0 THEN {VALUE} / __med ELSE {VALUE} END"))
+              .drop("__med"))
+    else:
+        df = (current.df.select(NAME, ORD, TS).join(med, [NAME, TS], "left")
+              .withColumnRenamed("__med", VALUE))
+    return current.with_df(df).map_name(
+        f"format_string({sql_lit(exp.target + '(%s)')}, {NAME})")
 
 
 @register("kolmogorovSmirnovTest2", "ksTest2")
@@ -121,9 +97,8 @@ def ks_test2(ctx, exp, f, u):
     s2 = eval_expr(ctx, exp.args[1], f, u)
     n = exp.get_int(2)
     s1, s2 = (s.densify() for s in align([s1, s2]))
-    b = s2.df.select(F.col(TS).alias("__ts2"), F.col(VALUE).alias("__v2"),
-                     F.col(NAME).alias("__n2"))
-    joined = s1.df.join(F.broadcast(b), F.col(TS) == F.col("__ts2"), "left")
+    b = selectx(s2.df, f"{TS} AS __ts2", f"{VALUE} AS __v2", f"{NAME} AS __n2")
+    joined = s1.df.join(b.hint("broadcast"), expr_cached(f"{TS} = __ts2"), "left")
 
     n_str = exp.args[2].val_str
 
@@ -173,12 +148,9 @@ def apply_by_node(ctx, exp, f, u):
     template = exp.get_string(2)
     new_name = exp.get_string(3, "", names=("newName",))
 
-    base = F.split_part(F.col(NAME), F.lit(";"), F.lit(1))
-    parts = F.split(base, "\\.")
-    cnt = F.size(parts)
-    end = F.lit(node) + F.when(F.lit(node) < 0, cnt).otherwise(F.lit(0)) + 1
-    prefix = F.array_join(F.slice(parts, 1, end), ".")
-    prefixes = sorted(r[0] for r in frame.df.select(prefix).distinct().collect())
+    end = node + 1 if node >= 0 else f"{node} + size({nodes_sql()}) + 1"
+    prefixes = sorted(r[0] for r in frame.df.selectExpr(
+        f"array_join(slice({nodes_sql()}, 1, {end}), '.')").distinct().collect())
 
     frames = []
     for p in prefixes:
@@ -197,15 +169,14 @@ def apply_by_node(ctx, exp, f, u):
 def remove_between_percentile(ctx, exp, f, u):
     """keep series that stray outside the [n, 100-n] band of the per-ts
     cross-series percentiles — removeBetweenPercentile/function.go:32."""
-    V = F.col(VALUE)
     frame = eval_expr(ctx, exp.args[0], f, u).densify()
     n = exp.get_float(1)
     lo_p, hi_p = min(n, 100 - n) / 100, max(n, 100 - n) / 100
-    bands = (frame.df.groupBy(TS)
-             .agg(F.percentile(V, F.lit(lo_p)).alias("__lo"),
-                  F.percentile(V, F.lit(hi_p)).alias("__hi")))
+    bands = frame.df.groupBy(TS).agg(
+        F.expr(f"percentile({VALUE}, {sql_dlit(lo_p)}, 1) AS __lo"),
+        F.expr(f"percentile({VALUE}, {sql_dlit(hi_p)}, 1) AS __hi"))
     return frame.keep(frame.df.join(bands, TS)
-                      .where((V < F.col("__lo")) | (V > F.col("__hi")))
+                      .where(f"{VALUE} < __lo OR {VALUE} > __hi")
                       .select(ORD).distinct())
 
 
@@ -228,13 +199,11 @@ def _rename_map(frame, rename: dict, drop_unmatched: bool):
     series was collected to build it — the aliasQuery batching shape)."""
     if not rename and not drop_unmatched:
         return frame
-    pairs = [F.lit(x) for kv in rename.items() for x in kv]
-    m = F.create_map(*pairs) if pairs else F.create_map()
-    new = m.getItem(F.col(NAME))
+    new = f"map({', '.join(sql_lit(x) for kv in rename.items() for x in kv)})[{NAME}]"
     df = frame.df
     if drop_unmatched:
-        df = df.where(new.isNotNull())
-    return frame.with_df(df.withColumn(NAME, F.coalesce(new, F.col(NAME))))
+        df = df.where(f"{new} IS NOT NULL")
+    return frame.with_df(df.withColumn(NAME, F.expr(f"coalesce({new}, {NAME})")))
 
 
 @register("aliasByRedis")
@@ -387,8 +356,8 @@ def time_shift_by_metric(ctx, exp, f, u):
     version_rank = exp.get_int(2)
     step = metrics.step
 
-    mark_rows = (marks.df.where(F.col(VALUE).isNotNull())
-                 .groupBy(NAME).agg(F.max(TS).alias("__last")))
+    mark_rows = (marks.df.where(f"{VALUE} IS NOT NULL")
+                 .groupBy(NAME).agg(expr_cached(f"max({TS}) AS __last")))
     versions: dict[str, int] = {}
     for r in mark_rows.collect():
         mv = r[NAME].split(";")[0].split(".")[-1]
@@ -416,15 +385,10 @@ def time_shift_by_metric(ctx, exp, f, u):
         rows.append((mv, off))
     off_df = _local_df(ctx.spark, rows, "ver STRING, off BIGINT")
 
-    base = F.split_part(F.col(NAME), F.lit(";"), F.lit(1))
-    parts = F.split(base, "\\.")
-    ver = F.try_element_at(parts, F.lit(version_rank + 1))
-    tagged = metrics.df.withColumn("__ver", ver)
-    joined = tagged.join(F.broadcast(off_df),
-                         F.col("ver").startswith(F.col("__ver")), "inner")
-    df = (joined
-          .withColumn(TS, (F.col(TS) + F.col("off")).cast("long"))
-          .withColumn(NAME, F.format_string("timeShiftByMetric(%s)", F.col(NAME)))
+    tagged = metrics.df.withColumn("__ver", F.expr(node_sql(version_rank)))
+    df = (tagged.join(off_df.hint("broadcast"), expr_cached("startswith(ver, __ver)"))
+          .withColumn(TS, expr_cached(f"CAST({TS} + off AS BIGINT)"))
+          .withColumn(NAME, expr_cached(f"format_string('timeShiftByMetric(%s)', {NAME})"))
           .drop("__ver", "ver", "off"))
     return metrics.with_df(df, dense=False)
 
@@ -453,18 +417,18 @@ def alias_query(ctx, exp, f, u):
     for i, n in enumerate(names):
         target = _re.sub(search, replace_py, n)
         sub = eval_expr(ctx, _parse(target), f, u)
-        subs.append(sub.df.where(F.col(VALUE).isNotNull())
-                    .select(F.lit(i).alias("__q"), F.col(TS), F.col(VALUE)))
+        subs.append(sub.df.where(f"{VALUE} IS NOT NULL")
+                    .selectExpr(f"{i} AS __q", TS, VALUE))
     lasts: dict[int, float] = {}
     if subs:
         union = reduce(lambda a, b: a.unionByName(b), subs)
-        w = Window.partitionBy("__q").orderBy(F.col(TS).desc())
-        rows = (union.withColumn("__rn", F.row_number().over(w))
-                .where(F.col("__rn") == 1).select("__q", VALUE).collect())
+        rows = (union.withColumn("__rn", expr_cached(
+                    f"row_number() OVER (PARTITION BY __q ORDER BY {TS} DESC)"))
+                .where("__rn = 1").select("__q", VALUE).collect())
         lasts = {r["__q"]: r[VALUE] for r in rows}
     mapping = [(n, new_name % lasts.get(i, float("nan")))
                for i, n in enumerate(names)]
     map_df = _local_df(ctx.spark, mapping, "name STRING, __new STRING")
-    df = (frame.df.join(F.broadcast(map_df), NAME)
-          .withColumn(NAME, F.col("__new")).drop("__new"))
+    df = (frame.df.join(map_df.hint("broadcast"), NAME)
+          .withColumn(NAME, expr_cached("__new")).drop("__new"))
     return frame.with_df(df)

@@ -14,25 +14,18 @@ from pyspark.sql import functions as F
 from carbonapi_spark.functions import register
 from carbonapi_spark.evaluator import eval_expr
 from carbonapi_spark.functions.helper import wrap_name
-from carbonapi_spark.model.consolidation import percentile_column
+from carbonapi_spark.model.consolidation import consolidation_name, percentile_sql
 from carbonapi_spark.model.series import NAME, ORD, VALUE, SeriesFrame
+from carbonapi_spark.sqltext import sql_dlit, sql_lit
 
-
-_OPS = {
-    "=": lambda c, n: c == n,
-    "!=": lambda c, n: c != n,
-    ">": lambda c, n: c > n,
-    ">=": lambda c, n: c >= n,
-    "<": lambda c, n: c < n,
-    "<=": lambda c, n: c <= n,
-}
+_OPS = frozenset({"=", "!=", ">", ">=", "<", "<="})
 
 
 def _filter_by_agg(frame: SeriesFrame, func: str, op: str, threshold: float) -> SeriesFrame:
     if op not in _OPS:
         raise ValueError(f"unsupported operator {op!r}")
-    per = frame.per_series(__agg=func)
-    return frame.keep(per.where(_OPS[op](F.col("__agg"), F.lit(threshold))))
+    per = frame.per_series(__agg=consolidation_name(func))
+    return frame.keep(per.where(f"__agg {op} {sql_dlit(threshold)}"))
 
 
 @register("filterSeries")
@@ -68,7 +61,7 @@ def exclude(ctx, exp, f, u):
     """drop series whose name matches regex — exclude/function.go:30."""
     pattern = exp.get_string(1)
     frame = eval_expr(ctx, exp.args[0], f, u)
-    return frame.with_df(frame.df.where(~F.col(NAME).rlike(pattern)))
+    return frame.with_df(frame.df.where(f"NOT {NAME} RLIKE {sql_lit(pattern)}"))
 
 
 @register("grep")
@@ -76,33 +69,28 @@ def grep(ctx, exp, f, u):
     """keep series whose name matches regex — grep/function.go:30."""
     pattern = exp.get_string(1)
     frame = eval_expr(ctx, exp.args[0], f, u)
-    return frame.with_df(frame.df.where(F.col(NAME).rlike(pattern)))
+    return frame.with_df(frame.df.where(f"{NAME} RLIKE {sql_lit(pattern)}"))
 
 
 @register("removeAboveValue", "removeBelowValue")
 def remove_value(ctx, exp, f, u):
     """pointwise: value -> NaN beyond threshold — removeBelowSeries pkg."""
-    n = exp.get_float(1)
+    op = "<=" if exp.target == "removeAboveValue" else ">="
     frame = eval_expr(ctx, exp.args[0], f, u)
-    if exp.target == "removeAboveValue":
-        fn = lambda v: F.when(v <= n, v)  # noqa: E731
-    else:
-        fn = lambda v: F.when(v >= n, v)  # noqa: E731
-    return wrap_name(exp.target, frame.map_value(fn), exp.raw_arg(1))
+    return wrap_name(exp.target, frame.map_value(
+        f"CASE WHEN {VALUE} {op} {sql_dlit(exp.get_float(1))} THEN {VALUE} END"),
+        exp.raw_arg(1))
 
 
 @register("removeAbovePercentile", "removeBelowPercentile")
 def remove_percentile(ctx, exp, f, u):
     """per-series percentile threshold then pointwise NaN."""
-    V = F.col(VALUE)
-    n = exp.get_float(1)
+    op = "<=" if exp.target == "removeAbovePercentile" else ">="
     frame = eval_expr(ctx, exp.args[0], f, u)
-    per = frame.per_series(__thr=percentile_column(V, n, False).cast("double"))
-    df = frame.df.join(F.broadcast(per), ORD)
-    if exp.target == "removeAbovePercentile":
-        df = df.withColumn(VALUE, F.when(V <= F.col("__thr"), V))
-    else:
-        df = df.withColumn(VALUE, F.when(V >= F.col("__thr"), V))
+    per = frame.per_series(
+        __thr=f"CAST({percentile_sql(VALUE, exp.get_float(1), False)} AS DOUBLE)")
+    df = (frame.df.join(per.hint("broadcast"), ORD)
+          .withColumn(VALUE, F.expr(f"CASE WHEN {VALUE} {op} __thr THEN {VALUE} END")))
     return wrap_name(exp.target, frame.with_df(df.drop("__thr")), exp.raw_arg(1))
 
 
@@ -114,16 +102,15 @@ def remove_empty_series(ctx, exp, f, u):
     xff = exp.get_float(1, 0.0, names=("xFilesFactor",))
     # count is NULL for a series with no value, or too few for xff
     per = frame.per_series(__nn="count", xff=max(xff, 0.0))
-    return frame.keep(per.where(F.col("__nn").isNotNull()))
+    return frame.keep(per.where("__nn IS NOT NULL"))
 
 
 @register("removeZeroSeries")
 def remove_zero_series(ctx, exp, f, u):
     """drop series whose every non-null value is 0 (carbonapi ext)."""
-    V = F.col(VALUE)
     frame = eval_expr(ctx, exp.args[0], f, u)
-    per = frame.per_series(__nz=F.count(F.when(V != 0, 1)))
-    return frame.keep(per.where(F.col("__nz") > 0))
+    per = frame.per_series(__nz=f"count(CASE WHEN {VALUE} != 0 THEN 1 END)")
+    return frame.keep(per.where("__nz > 0"))
 
 
 @register("averageOutsidePercentile")
@@ -134,26 +121,23 @@ def average_outside_percentile(ctx, exp, f, u):
     n = exp.get_float(1)
     lo_p, hi_p = min(n, 100 - n), max(n, 100 - n)
     per = frame.per_series(__avg="average")
-    bounds = per.agg(F.percentile(F.col("__avg"), F.lit(lo_p / 100)).alias("__lo"),
-                     F.percentile(F.col("__avg"), F.lit(hi_p / 100)).alias("__hi"))
-    return frame.keep(per.crossJoin(F.broadcast(bounds))
-                      .where((F.col("__avg") < F.col("__lo"))
-                             | (F.col("__avg") > F.col("__hi"))))
+    bounds = per.selectExpr(f"percentile(__avg, {sql_dlit(lo_p / 100)}, 1) AS __lo",
+                            f"percentile(__avg, {sql_dlit(hi_p / 100)}, 1) AS __hi")
+    return frame.keep(per.crossJoin(bounds.hint("broadcast"))
+                      .where("__avg < __lo OR __avg > __hi"))
 
 
 @register("tukeyAbove", "tukeyBelow")
 def tukey(ctx, exp, f, u):
     """Tukey-fence outlier series by IQR rule — tukey/function.go:34."""
     frame = eval_expr(ctx, exp.args[0], f, u)
-    basis = exp.get_string(1)
-    n = exp.get_float(2, 1.5)
+    basis = consolidation_name(exp.get_string(1))
+    n = sql_dlit(exp.get_float(2, 1.5))
     per = frame.per_series(__agg=basis)
-    q = per.agg(F.percentile(F.col("__agg"), F.lit(0.25)).alias("__q1"),
-                F.percentile(F.col("__agg"), F.lit(0.75)).alias("__q3"))
-    joined = per.crossJoin(F.broadcast(q))
-    iqr = F.col("__q3") - F.col("__q1")
+    q = per.selectExpr("percentile(__agg, 0.25D, 1) AS __q1",
+                       "percentile(__agg, 0.75D, 1) AS __q3")
     if exp.target == "tukeyAbove":
-        cond = F.col("__agg") >= F.col("__q3") + F.lit(n) * iqr
+        cond = f"__agg >= __q3 + {n} * (__q3 - __q1)"
     else:
-        cond = F.col("__agg") <= F.col("__q1") - F.lit(n) * iqr
-    return frame.keep(joined.where(cond))
+        cond = f"__agg <= __q1 - {n} * (__q3 - __q1)"
+    return frame.keep(per.crossJoin(q.hint("broadcast")).where(cond))

@@ -2,11 +2,8 @@
 
 from __future__ import annotations
 
-from pyspark.sql import functions as F
-from pyspark.sql.window import Window
-
 from carbonapi_spark.evaluator import EvalContext, eval_expr
-from carbonapi_spark.model.series import NAME, ORD, TS, SeriesFrame, combine
+from carbonapi_spark.model.series import NAME, SeriesFrame, combine
 from carbonapi_spark.parser import Expr
 from carbonapi_spark.sqltext import sql_lit
 
@@ -20,12 +17,6 @@ def series_args(ctx: EvalContext, exp: Expr, from_ts: int, until_ts: int,
         raise ValueError(f"{exp.target}: missing series arguments")
     frames = [eval_expr(ctx, a, from_ts, until_ts) for a in args]
     return combine(frames)
-
-
-def series_window(order_desc: bool = False) -> Window:
-    """Per-series window ordered by time."""
-    o = F.col(TS).desc() if order_desc else F.col(TS).asc()
-    return Window.partitionBy(ORD).orderBy(o)
 
 
 def wrap_name(fname: str, frame: SeriesFrame, *suffix_args: str) -> SeriesFrame:

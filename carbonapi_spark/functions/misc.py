@@ -8,15 +8,15 @@ import math
 
 from pyspark.sql import functions as F
 
-from carbonapi_spark.sqltext import local_df as _local_df, sql_lit
-from pyspark.sql.window import Window
-
 from carbonapi_spark.evaluator import EvalError, eval_expr, static_step
 from carbonapi_spark.functions import built_step, register
-from carbonapi_spark.functions.helper import nodes_sql, series_args, wrap_name
+from carbonapi_spark.functions.helper import node_sql, nodes_sql, series_args, wrap_name
 from carbonapi_spark.model.consolidation import is_valid_consolidation
 from carbonapi_spark.model.series import (
-    NAME, ORD, TS, VALUE, SeriesFrame, align, union,
+    NAME, ORD, RUNNING, TS, VALUE, SeriesFrame, align, union,
+)
+from carbonapi_spark.sqltext import (
+    expr_cached, local_df as _local_df, selectx, sql_all, sql_dlit, sql_lit,
 )
 
 
@@ -90,21 +90,19 @@ def cumulative(ctx, exp, f, u):
 def integral_with_reset(ctx, exp, f, u):
     """running sum that resets where the companion series is non-zero
     — integralWithReset/function.go:32."""
-    V = F.col(VALUE)
     frame = eval_expr(ctx, exp.args[0], f, u)
     reset = eval_expr(ctx, exp.args[1], f, u)
     frame2, reset = (fr.densify() for fr in align([frame, reset]))
-    r = reset.df.select(F.col(TS).alias("__rts"), V.alias("__rv"))
-    joined = frame2.df.join(F.broadcast(r), F.col(TS) == F.col("__rts"), "left")
-    is_reset = F.coalesce(F.col("__rv") != 0, F.lit(False)).cast("int")
-    w_ord = Window.partitionBy(ORD).orderBy(TS)
-    epoch = F.sum(is_reset).over(w_ord.rowsBetween(Window.unboundedPreceding, 0))
-    w_epoch = Window.partitionBy(ORD, epoch).orderBy(TS) \
-        .rowsBetween(Window.unboundedPreceding, 0)
+    r = selectx(reset.df, f"{TS} AS __rts", f"{VALUE} AS __rv")
+    joined = frame2.df.join(r.hint("broadcast"), expr_cached(f"{TS} = __rts"), "left")
+    is_reset = "CAST(coalesce(__rv != 0, false) AS INT)"
+    epoch = f"sum({is_reset}) {RUNNING}"
     # the reset point itself outputs 0 and its value is discarded
-    val = F.when(is_reset == 1, F.lit(0.0)) \
-        .when(V.isNotNull(), F.sum(F.when(is_reset == 0, V)).over(w_epoch))
-    df = joined.withColumn(VALUE, val).drop("__rts", "__rv")
+    df = joined.withColumn(VALUE, expr_cached(
+        f"CASE WHEN {is_reset} = 1 THEN 0.0D WHEN {VALUE} IS NOT NULL THEN "
+        f"sum(CASE WHEN {is_reset} = 0 THEN {VALUE} END) OVER (PARTITION BY {ORD}, "
+        f"{epoch} ORDER BY {TS} ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) END")
+    ).drop("__rts", "__rv")
     out = frame2.with_df(df)
     return out.map_name(f"format_string('integralWithReset(%s,%s)', name, "
                         f"{sql_lit(exp.args[1].to_string())})")
@@ -126,19 +124,15 @@ def vertical_line(ctx, exp, f, u):
 def pow_series(ctx, exp, f, u):
     """left-fold pow across series per ts (±Inf -> NaN)
     — powSeries/function.go:31."""
-    V = F.col(VALUE)
     frame = series_args(ctx, exp, f, u)
-    vals = F.array_sort(F.collect_list(F.struct(F.col(ORD).alias("o"),
-                                                V.alias("v"))))
-    folded = F.aggregate(
-        F.transform(vals, lambda s: s["v"]),
-        F.lit(None).cast("double"),
-        lambda acc, x: F.when(acc.isNull(), x).otherwise(F.pow(acc, x)))
-    out = F.when(F.abs(folded) == float("inf"), None).otherwise(folded)
-    name = f"powSeries({exp.arg_string})"
-    df = (frame.df.groupBy(TS).agg(out.cast("double").alias(VALUE))
-          .select(F.lit(name).alias(NAME), F.lit(name).alias(ORD),
-                  F.col(TS), F.col(VALUE)))
+    vals = f"array_sort(collect_list(struct({ORD} AS o, {VALUE} AS v)))"
+    folded = (f"aggregate(transform({vals}, s -> s.v), CAST(NULL AS DOUBLE), "
+              f"(acc, x) -> CASE WHEN acc IS NULL THEN x ELSE power(acc, x) END)")
+    name = sql_lit(f"powSeries({exp.arg_string})")
+    df = (frame.df.groupBy(TS).agg(expr_cached(
+        f"CAST(CASE WHEN abs({folded}) = {sql_dlit(float('inf'))} THEN NULL "
+        f"ELSE {folded} END AS DOUBLE) AS {VALUE}"))
+          .selectExpr(f"{name} AS {NAME}", f"{name} AS {ORD}", TS, VALUE))
     return frame.with_df(df)
 
 
@@ -162,14 +156,14 @@ def join_series(ctx, exp, f, u):
     names_a = fa.df.select(NAME).distinct()
     names_b = fb.df.select(NAME).distinct()
     if join_type == "AND":
-        return fa.with_df(fa.df.join(F.broadcast(names_b), NAME, "left_semi"))
+        return fa.with_df(fa.df.join(names_b.hint("broadcast"), NAME, "left_semi"))
     if join_type == "SUB":
-        return fa.with_df(fa.df.join(F.broadcast(names_b), NAME, "left_anti"))
+        return fa.with_df(fa.df.join(names_b.hint("broadcast"), NAME, "left_anti"))
     if join_type in ("OR", "XOR"):
         fa2, fb2 = align([fa, fb])
         if join_type == "XOR":
-            fa2 = fa2.with_df(fa2.df.join(F.broadcast(names_b), NAME, "left_anti"))
-        fb2 = fb2.with_df(fb2.df.join(F.broadcast(names_a), NAME, "left_anti"))
+            fa2 = fa2.with_df(fa2.df.join(names_b.hint("broadcast"), NAME, "left_anti"))
+        fb2 = fb2.with_df(fb2.df.join(names_a.hint("broadcast"), NAME, "left_anti"))
         return union([fa2, fb2])
     raise ValueError(f"join: unknown join type {join_type}")
 
@@ -182,15 +176,14 @@ def use_series_above(ctx, exp, f, u):
     All plain rewritten names go out as ONE brace-alternation fetch (a
     single IN-pushed scan) instead of a per-name driver fetch loop; only
     rewrites that themselves contain wildcards fetch separately."""
-    V = F.col(VALUE)
     import re as _re
     from carbonapi_spark.parser.globs import has_wildcard
     frame = eval_expr(ctx, exp.args[0], f, u)
     value = exp.get_float(1)
     search = exp.get_string(2)
     replace = exp.get_string(3)
-    per = frame.df.groupBy(NAME).agg(F.max(V).alias("__mx"))
-    names = [r[NAME] for r in per.where(F.col("__mx") > value)
+    per = frame.df.groupBy(NAME).agg(expr_cached(f"max({VALUE}) AS __mx"))
+    names = [r[NAME] for r in per.where(f"__mx > {sql_dlit(value)}")
              .select(NAME).collect()]
     rewritten = sorted({_re.sub(search, replace, n) for n in names})
     plain = [n for n in rewritten if not has_wildcard(n)]
@@ -220,22 +213,24 @@ def map_series(ctx, exp, f, u):
     return eval_expr(ctx, exp.args[0], f, u)
 
 
+def _sum_nn(cols: list[str]) -> str:
+    return " + ".join(f"coalesce({c}, 0.0D)" for c in cols)
+
+
+def _divide(c: list[str]) -> str:
+    return f"CASE WHEN {c[1]} != 0 THEN {c[0]} / {c[1]} END"
+
+
+def _diff(c: list[str]) -> str:
+    return f"{c[0]} - ({_sum_nn(c[1:])})"
+
+
 _REDUCERS = {
-    "asPercent": lambda cols: F.when(cols[1] != 0, cols[0] / cols[1] * 100),
-    "divide": lambda cols: F.when(cols[1] != 0, cols[0] / cols[1]),
-    "divideSeries": lambda cols: F.when(cols[1] != 0, cols[0] / cols[1]),
-    "diff": lambda cols: cols[0] - sum_nn(cols[1:]),
-    "diffSeries": lambda cols: cols[0] - sum_nn(cols[1:]),
-    "sum": lambda cols: sum_nn(cols),
-    "sumSeries": lambda cols: sum_nn(cols),
+    "asPercent": lambda c: f"CASE WHEN {c[1]} != 0 THEN {c[0]} / {c[1]} * 100 END",
+    "divide": _divide, "divideSeries": _divide,
+    "diff": _diff, "diffSeries": _diff,
+    "sum": _sum_nn, "sumSeries": _sum_nn,
 }
-
-
-def sum_nn(cols):
-    out = F.coalesce(cols[0], F.lit(0.0))
-    for c in cols[1:]:
-        out = out + F.coalesce(c, F.lit(0.0))
-    return out
 
 
 @register("reduceSeries", "reduce")
@@ -251,19 +246,12 @@ def reduce_series(ctx, exp, f, u):
     if reducer is None:
         raise ValueError(f"reduceSeries: unsupported function {fn_name!r}")
 
-    base = F.split_part(F.col(NAME), F.lit(";"), F.lit(1))
-    parts = F.split(base, "\\.")
-    cnt = F.size(parts)
-    idx = F.lit(node) + F.when(F.lit(node) < 0, cnt).otherwise(F.lit(0))
-    matcher = F.try_element_at(parts, idx + 1)
-    alias_name = F.array_join(
-        F.transform(parts, lambda x, i: F.when(i == idx, F.lit(f"reduce.{fn_name}"))
-                    .otherwise(x)), ".")
-
-    tagged = (frame.df
-              .withColumn("__key", alias_name)
-              .withColumn("__m", matcher)
-              .where(F.col("__m").isin(matchers)))
+    idx = str(node) if node >= 0 else f"{node} + size({nodes_sql()})"
+    key = (f"array_join(transform({nodes_sql()}, (x, i) -> CASE WHEN i = {idx} "
+           f"THEN {sql_lit(f'reduce.{fn_name}')} ELSE x END), '.')")
+    tagged = (frame.df.withColumn("__key", F.expr(key))
+              .withColumn("__m", F.expr(node_sql(node)))
+              .where(f"__m IN ({', '.join(map(sql_lit, matchers))})"))
     # only groups holding every matcher participate (AliasLoop `continue`).
     # The frame is dense (every series carries every ts), so per-cell row
     # presence == series presence: a count alongside the value in the SAME
@@ -271,15 +259,11 @@ def reduce_series(ctx, exp, f, u):
     # with no separate distinct+join subplan re-evaluating the pipeline.
     pivoted = (tagged.groupBy("__key", TS)
                .pivot("__m", matchers)
-               .agg(F.first(VALUE).alias("v"), F.count(F.lit(1)).alias("n")))
-    present = [F.col(f"{m}_n") > 0 for m in matchers]
-    for p in present[1:]:
-        present[0] = present[0] & p
-    pivoted = pivoted.where(present[0])
-    cols = [F.col(f"{m}_v") for m in matchers]
-    df = pivoted.select(F.col("__key").alias(NAME), F.col("__key").alias(ORD),
-                        F.col(TS),
-                        reducer(cols).cast("double").alias(VALUE))
+               .agg(expr_cached(f"first({VALUE}) AS v"), expr_cached("count(1) AS n")))
+    cols = {a: ["`" + f"{m}_{a}".replace("`", "``") + "`" for m in matchers] for a in "vn"}
+    df = pivoted.where(sql_all(f"{c} > 0" for c in cols["n"])).selectExpr(
+        f"__key AS {NAME}", f"__key AS {ORD}", TS,
+        f"CAST({reducer(cols['v'])} AS DOUBLE) AS {VALUE}")
     return frame.with_df(df, dense=True)
 
 
@@ -288,13 +272,12 @@ def reduce_series(ctx, exp, f, u):
 _SI = [(1e12, "T"), (1e9, "G"), (1e6, "M"), (1e3, "K")]
 
 
-def _si_format(col):
-    out = F.format_number(col, 2)
+def _si_format(c: str) -> str:
+    out = f"format_number({c}, 2)"
     for thresh, suffix in _SI:
-        out = F.when(F.abs(col) >= thresh,
-                     F.concat(F.round(col / thresh, 2).cast("string"),
-                              F.lit(suffix))).otherwise(out)
-    return F.when(col.isNull(), F.lit("nan")).otherwise(out)
+        out = (f"CASE WHEN abs({c}) >= {sql_dlit(thresh)} THEN concat(CAST(round("
+               f"{c} / {sql_dlit(thresh)}, 2) AS STRING), '{suffix}') ELSE {out} END")
+    return f"CASE WHEN {c} IS NULL THEN 'nan' ELSE {out} END"
 
 
 @register("legendValue")
@@ -309,16 +292,16 @@ def legend_value(ctx, exp, f, u):
     names = [vt for vt in value_types if is_valid_consolidation(vt)]
     if not names:
         return frame
-    per = frame.per_series(**{f"__lv_{vt}": vt for vt in names})
-    df = frame.df.join(F.broadcast(per), ORD)
-    suffix = F.lit("")
-    for vt in names:
-        col = F.col(f"__lv_{vt}")
-        shown = _si_format(col) if system == "si" else \
-            F.when(col.isNull(), F.lit("nan")).otherwise(col.cast("string"))
-        suffix = F.concat(suffix, F.lit(f" ({vt}: "), shown, F.lit(")"))
-    df = df.withColumn(NAME, F.concat(F.col(NAME), suffix)) \
-           .drop(*[f"__lv_{vt}" for vt in names])
+    per = frame.per_series(**{f"__lv{i}": vt for i, vt in enumerate(names)})
+    suffix = "''"
+    for i, vt in enumerate(names):
+        c = f"__lv{i}"
+        shown = _si_format(c) if system == "si" else \
+            f"CASE WHEN {c} IS NULL THEN 'nan' ELSE CAST({c} AS STRING) END"
+        suffix = f"concat({suffix}, {sql_lit(f' ({vt}: ')}, {shown}, ')')"
+    df = (frame.df.join(per.hint("broadcast"), ORD)
+          .withColumn(NAME, F.expr(f"concat({NAME}, {suffix})"))
+          .drop(*[f"__lv{i}" for i in range(len(names))]))
     return frame.with_df(df)
 
 
@@ -327,14 +310,13 @@ def cacti_style(ctx, exp, f, u):
     """Cacti-style 'Current/Max/Min' legend — cactiStyle/function.go:33."""
     frame = eval_expr(ctx, exp.args[0], f, u)
     per = frame.per_series(__cur="current", __max="max", __min="min")
-    df = frame.df.join(F.broadcast(per), ORD)
-    fmt = lambda c: F.when(c.isNull(), F.lit("nan")).otherwise(  # noqa: E731
-        F.format_number(c, 2))
-    df = df.withColumn(NAME, F.concat(
-        F.col(NAME),
-        F.lit(" Current:"), fmt(F.col("__cur")),
-        F.lit(" Max:"), fmt(F.col("__max")),
-        F.lit(" Min:"), fmt(F.col("__min")))).drop("__cur", "__max", "__min")
+    shown = [f"CASE WHEN {c} IS NULL THEN 'nan' ELSE format_number({c}, 2) END"
+             for c in ("__cur", "__max", "__min")]
+    df = (frame.df.join(per.hint("broadcast"), ORD)
+          .withColumn(NAME, expr_cached(
+              f"concat({NAME}, ' Current:', {shown[0]}, ' Max:', {shown[1]}, "
+              f"' Min:', {shown[2]})"))
+          .drop("__cur", "__max", "__min"))
     return frame.with_df(df)
 
 
@@ -342,17 +324,14 @@ def cacti_style(ctx, exp, f, u):
 def heat_map(ctx, exp, f, u):
     """pairwise diff of adjacent series (sorted by name)
     — heatMap/function.go:28."""
-    V = F.col(VALUE)
     frame = eval_expr(ctx, exp.args[0], f, u).densify()
     # ord becomes the series' position in list order
     tagged = frame.rank(frame.df.select(ORD).distinct()).df
-    idx = F.col(ORD).cast("long")
-    cur = tagged.select(idx.alias("__idx"), F.col(ORD), F.col(NAME), F.col(TS),
-                        V.alias("__cv"))
-    prev = tagged.select((idx + 1).alias("__idx"), F.col(TS),
-                         V.alias("__pv"), F.col(NAME).alias("__pn"))
-    df = (cur.join(prev, ["__idx", TS])
-          .select(F.format_string("heatMap(%s,%s)", F.col(NAME), F.col("__pn")).alias(NAME),
-                  F.col(ORD), F.col(TS),
-                  (F.col("__cv") - F.col("__pv")).cast("double").alias(VALUE)))
+    cur = selectx(tagged, f"CAST({ORD} AS BIGINT) AS __idx", ORD, NAME, TS,
+                  f"{VALUE} AS __cv")
+    prev = selectx(tagged, f"CAST({ORD} AS BIGINT) + 1 AS __idx", TS,
+                   f"{VALUE} AS __pv", f"{NAME} AS __pn")
+    df = selectx(cur.join(prev, ["__idx", TS]),
+                 f"format_string('heatMap(%s,%s)', {NAME}, __pn) AS {NAME}", ORD, TS,
+                 f"CAST(__cv - __pv AS DOUBLE) AS {VALUE}")
     return frame.with_df(df)

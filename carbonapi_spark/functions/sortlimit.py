@@ -15,8 +15,9 @@ from __future__ import annotations
 
 from carbonapi_spark.evaluator import eval_expr
 from carbonapi_spark.functions import register
+from carbonapi_spark.model.consolidation import consolidation_name
 from carbonapi_spark.model.series import NAME, ORD, ranked
-from carbonapi_spark.sqltext import expr_cached, selectx, sql_lit
+from carbonapi_spark.sqltext import selectx, sql_lit
 
 
 def _by_agg(descending: bool) -> str:
@@ -33,7 +34,7 @@ def sort_by(ctx, exp, f, u, n: int | None = None):
     sort) only the first n ranks are kept."""
     frame = eval_expr(ctx, exp.args[0], f, u)
     if exp.target == "sortBy":
-        func = exp.get_string(1, "average", names=("func",))
+        func = consolidation_name(exp.get_string(1, "average", names=("func",)))
         reverse = exp.get_bool(2, False, names=("reverse",))
     else:
         func = {"sortByTotal": "sum", "sortByMaxima": "max",
@@ -84,7 +85,7 @@ def highest_lowest(ctx, exp, f, u):
     frame = eval_expr(ctx, exp.args[0], f, u)
     if exp.target in ("highest", "lowest"):
         n = exp.get_int(1, 1)
-        func = exp.get_string(2, "average")
+        func = consolidation_name(exp.get_string(2, "average"))
         ascending = exp.target == "lowest"
     else:
         n = exp.get_int(1, 1)
@@ -103,7 +104,7 @@ def most_deviant(ctx, exp, f, u):
     else:
         n, series_idx = exp.get_int(1), 0
     frame = eval_expr(ctx, exp.args[series_idx], f, u)
-    per = frame.per_series(__agg=expr_cached("var_pop(value)"))
+    per = frame.per_series(__agg="var_pop(value)")
     return frame.rank(per, _by_agg(True), n=n)
 
 

@@ -15,14 +15,13 @@ import math
 import numpy as np
 import pandas as pd
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
 
 from carbonapi_spark.evaluator import eval_expr, static_step
 from carbonapi_spark.functions import register
-from carbonapi_spark.sqltext import sql_lit
+from carbonapi_spark.sqltext import expr_cached, selectx, sql_lit
 from carbonapi_spark.functions.helper import wrap_name
 from carbonapi_spark.model.series import (
-    NAME, ORD, TS, VALUE, SERIES_SCHEMA, SeriesFrame, align, ranked,
+    NAME, ORD, TS, VALUE, SERIES_SCHEMA, SeriesFrame, align, ranked, trailing,
 )
 
 
@@ -301,16 +300,14 @@ def ifft_(ctx, exp, f, u):
 def pearson(ctx, exp, f, u):
     """rolling Pearson correlation of two series — pearson/function.go:31.
     JVM-side: join on ts + corr window aggregate."""
-    V = F.col(VALUE)
     s1 = eval_expr(ctx, exp.args[0], f, u)
     s2 = eval_expr(ctx, exp.args[1], f, u)
     n = exp.get_int(2)
     # the window counts rows: both sides dense
     s1, s2 = (s.densify() for s in align([s1, s2]))
-    b = s2.df.select(F.col(TS).alias("__ts2"), V.alias("__v2"))
-    joined = s1.df.join(F.broadcast(b), F.col(TS) == F.col("__ts2"), "left")
-    w = Window.partitionBy(ORD).orderBy(TS).rowsBetween(-(n - 1), 0)
-    df = (joined.withColumn(VALUE, F.corr(V, F.col("__v2")).over(w))
+    b = selectx(s2.df, f"{TS} AS __ts2", f"{VALUE} AS __v2")
+    joined = s1.df.join(b.hint("broadcast"), expr_cached(f"{TS} = __ts2"), "left")
+    df = (joined.withColumn(VALUE, F.expr(f"corr({VALUE}, __v2) {trailing(n)}"))
           .drop("__ts2", "__v2"))
     out = s1.with_df(df)
     return out.map_name(f"format_string('pearson(%s,%s,{n})', name, "
@@ -321,15 +318,14 @@ def pearson(ctx, exp, f, u):
 def pearson_closest(ctx, exp, f, u):
     """top-n series most correlated with the reference
     — pearsonClosest/function.go:33."""
-    V = F.col(VALUE)
     frame = eval_expr(ctx, exp.args[0], f, u)
     ref = eval_expr(ctx, exp.args[1], f, u)
     n = exp.get_int(2)
     direction = exp.get_string(3, "abs", names=("direction",))
     frame, ref = align([frame, ref])
     # a dense reference gives every series its (maybe NULL) correlation
-    b = ref.densify().df.select(F.col(TS).alias("__ts2"), V.alias("__v2"))
-    joined = frame.df.join(F.broadcast(b), F.col(TS) == F.col("__ts2"))
-    per = frame.with_df(joined).per_series(__c=F.corr(V, F.col("__v2")))
+    b = selectx(ref.densify().df, f"{TS} AS __ts2", f"{VALUE} AS __v2")
+    joined = frame.df.join(b.hint("broadcast"), expr_cached(f"{TS} = __ts2"))
+    per = frame.with_df(joined).per_series(__c=f"corr({VALUE}, __v2)")
     metric = {"pos": "__c", "neg": "-__c"}.get(direction, "abs(__c)")
     return frame.keep(ranked(per, f"{metric} DESC NULLS LAST", n=n))

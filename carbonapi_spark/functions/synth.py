@@ -3,14 +3,10 @@ randomWalk, identity — generated distributed via ``spark.range`` spines."""
 
 from __future__ import annotations
 
-from pyspark.sql import functions as F
-
-from carbonapi_spark.sqltext import local_df as _local_df, sql_lit
-from pyspark.sql.window import Window
-
 from carbonapi_spark.functions import register
 from carbonapi_spark.functions.helper import float_str
-from carbonapi_spark.model.series import NAME, ORD, TS, VALUE, SeriesFrame
+from carbonapi_spark.model.series import NAME, ORD, RUNNING, TS, VALUE, SeriesFrame
+from carbonapi_spark.sqltext import local_df as _local_df, sql_dlit, sql_lit
 
 
 def _half_range(ctx, exp, f, u) -> int:
@@ -24,9 +20,9 @@ def _step_arg(i: int):
 
 
 def _spine_frame(ctx, name: str, f: int, u: int, step: int) -> SeriesFrame:
-    df = (ctx.spark.range(f, u, step).withColumnRenamed("id", TS)
-          .select(F.lit(name).alias(NAME), F.lit(name).alias(ORD),
-                  F.col(TS).cast("long"), F.lit(None).cast("double").alias(VALUE)))
+    df = ctx.spark.range(f, u, step).selectExpr(
+        f"{sql_lit(name)} AS {NAME}", f"{sql_lit(name)} AS {ORD}",
+        f"CAST(id AS BIGINT) AS {TS}", f"CAST(NULL AS DOUBLE) AS {VALUE}")
     return SeriesFrame(df, step, f, u, dense=True)
 
 
@@ -57,7 +53,7 @@ def time_function(ctx, exp, f, u):
     name = exp.get_string(0)
     step = exp.get_int(1, 60, names=("step",))
     frame = _spine_frame(ctx, name, f, u, step)
-    return frame.map_value(lambda v: F.col(TS).cast("double"))
+    return frame.map_value(f"CAST({TS} AS DOUBLE)")
 
 
 @register("identity", step=lambda ctx, exp, f, u: 60)
@@ -65,7 +61,7 @@ def identity(ctx, exp, f, u):
     """identity(name): value = ts at 60s step — identity/function.go:29."""
     name = exp.get_string(0)
     frame = _spine_frame(ctx, name, f, u, 60)
-    frame = frame.map_value(lambda v: F.col(TS).cast("double"))
+    frame = frame.map_value(f"CAST({TS} AS DOUBLE)")
     return frame.map_name("format_string('identity(%s)', name)")
 
 
@@ -76,7 +72,7 @@ def sin_function(ctx, exp, f, u):
     amplitude = exp.get_float(1, 1.0, names=("amplitude",))
     step = exp.get_int(2, 60, names=("step",))
     frame = _spine_frame(ctx, name, f, u, step)
-    return frame.map_value(lambda v: F.lit(amplitude) * F.sin(F.col(TS).cast("double")))
+    return frame.map_value(f"{sql_dlit(amplitude)} * sin(CAST({TS} AS DOUBLE))")
 
 
 @register("randomWalk", "randomWalkFunction", step=_step_arg(1))
@@ -86,6 +82,4 @@ def random_walk(ctx, exp, f, u):
     name = exp.get_string(0, "randomWalk")
     step = exp.get_int(1, 60, names=("step",))
     frame = _spine_frame(ctx, name, f, u, step)
-    w = Window.partitionBy(ORD).orderBy(TS).rowsBetween(Window.unboundedPreceding, 0)
-    df = frame.df.withColumn(VALUE, F.sum(F.rand() - 0.5).over(w))
-    return frame.with_df(df)
+    return frame.map_value(f"sum(rand() - 0.5D) {RUNNING}")

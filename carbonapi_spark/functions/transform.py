@@ -1,10 +1,12 @@
-"""Per-point scalar transforms (SURVEY §2.3) — pure Column expressions.
+"""Per-point scalar transforms (SURVEY §2.3) — SQL text over the frame's
+columns.
 
-Every function here is a 1:1 value map (plus a name rewrite), so Catalyst
+Every function here is a value map (plus a name rewrite), so Catalyst
 fuses arbitrarily long chains of them into one whole-stage-codegen project
-over the scan: zero shuffles, zero Python in the hot path. All expressions
-are ANSI-safe (guarded division/log/sqrt), mirroring Graphite's
-NaN-out-of-domain behavior with NULLs.
+over the scan: zero shuffles, zero Python in the hot path. The
+window-based maps read one series in time order (``SERIES_WINDOW``). All
+expressions are ANSI-safe (guarded division/log/sqrt), mirroring
+Graphite's NaN-out-of-domain behavior with NULLs.
 
 Reference files cited per function under ``expr/functions/``.
 """
@@ -12,17 +14,19 @@ Reference files cited per function under ``expr/functions/``.
 from __future__ import annotations
 
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
 
 from carbonapi_spark.evaluator import eval_expr
 from carbonapi_spark.functions import register
-from carbonapi_spark.functions.helper import (
-    float_str,
-    series_window,
-    wrap_name,
-)
-from carbonapi_spark.model.series import ORD, TS, VALUE
+from carbonapi_spark.functions.helper import float_str, wrap_name
+from carbonapi_spark.model.series import ORD, RUNNING, SERIES_WINDOW, TS, VALUE
+from carbonapi_spark.sqltext import sql_all, sql_dlit
 
+_PREV = f"lag({VALUE}) OVER ({SERIES_WINDOW})"
+
+
+def _map(ctx, exp, f, u, fname: str, sql: str, *suffix: str):
+    """wrap_name(fname, arg0 with value -> *sql*, *suffix)."""
+    return wrap_name(fname, eval_expr(ctx, exp.args[0], f, u).map_value(sql), *suffix)
 
 
 # ---------------------------------------------------------------- pure maps
@@ -30,23 +34,21 @@ from carbonapi_spark.model.series import ORD, TS, VALUE
 @register("absolute")
 def absolute(ctx, exp, f, u):
     """abs(v) — absolute/function.go:28."""
-    return wrap_name("absolute", eval_expr(ctx, exp.args[0], f, u).map_value(F.abs))
+    return _map(ctx, exp, f, u, "absolute", f"abs({VALUE})")
 
 
 @register("offset", "add")
 def offset(ctx, exp, f, u):
     """v + c — offset/function.go:30."""
-    c = exp.get_float(1)
-    return wrap_name(exp.target, eval_expr(ctx, exp.args[0], f, u).map_value(lambda v: v + c),
-                     exp.raw_arg(1))
+    return _map(ctx, exp, f, u, exp.target, f"{VALUE} + {sql_dlit(exp.get_float(1))}",
+                exp.raw_arg(1))
 
 
 @register("scale")
 def scale(ctx, exp, f, u):
     """v * c — scale/function.go:30."""
-    c = exp.get_float(1)
-    return wrap_name("scale", eval_expr(ctx, exp.args[0], f, u).map_value(lambda v: v * c),
-                     exp.raw_arg(1))
+    return _map(ctx, exp, f, u, "scale", f"{VALUE} * {sql_dlit(exp.get_float(1))}",
+                exp.raw_arg(1))
 
 
 @register("scaleToSeconds")
@@ -54,94 +56,81 @@ def scale_to_seconds(ctx, exp, f, u):
     """v * seconds/step — scaleToSeconds/function.go:30."""
     sec = exp.get_float(1)
     frame = eval_expr(ctx, exp.args[0], f, u)
-    k = sec / frame.step
-    return wrap_name("scaleToSeconds", frame.map_value(lambda v: v * k),
+    return wrap_name("scaleToSeconds",
+                     frame.map_value(f"{VALUE} * {sql_dlit(sec / frame.step)}"),
                      float_str(sec))
 
 
 @register("invert")
 def invert(ctx, exp, f, u):
     """1/v, 0 -> NaN — invert/function.go:30."""
-    return wrap_name("invert",
-                     eval_expr(ctx, exp.args[0], f, u).map_value(
-                         lambda v: F.when(v != 0, F.lit(1.0) / v)))
+    return _map(ctx, exp, f, u, "invert",
+                f"CASE WHEN {VALUE} != 0 THEN 1.0D / {VALUE} END")
 
 
 @register("pow")
 def pow_(ctx, exp, f, u):
     """v^c — pow/function.go:31."""
-    c = exp.get_float(1)
-    return wrap_name("pow", eval_expr(ctx, exp.args[0], f, u).map_value(lambda v: F.pow(v, c)),
-                     exp.raw_arg(1))
+    return _map(ctx, exp, f, u, "pow", f"power({VALUE}, {sql_dlit(exp.get_float(1))})",
+                exp.raw_arg(1))
 
 
 @register("squareRoot")
 def square_root(ctx, exp, f, u):
     """sqrt(v), negative -> NaN — squareRoot/function.go:30."""
-    return wrap_name("squareRoot",
-                     eval_expr(ctx, exp.args[0], f, u).map_value(
-                         lambda v: F.when(v >= 0, F.sqrt(v))))
+    return _map(ctx, exp, f, u, "squareRoot",
+                f"CASE WHEN {VALUE} >= 0 THEN sqrt({VALUE}) END")
 
 
 @register("exp")
 def exp_(ctx, exp, f, u):
     """e^v — exp/function.go:29."""
-    return wrap_name("exp", eval_expr(ctx, exp.args[0], f, u).map_value(F.exp))
+    return _map(ctx, exp, f, u, "exp", f"exp({VALUE})")
 
 
 @register("sigmoid")
 def sigmoid(ctx, exp, f, u):
     """1/(1+e^-v) — sigmoid/function.go:30."""
-    return wrap_name("sigmoid",
-                     eval_expr(ctx, exp.args[0], f, u).map_value(
-                         lambda v: F.lit(1.0) / (F.lit(1.0) + F.exp(-v))))
+    return _map(ctx, exp, f, u, "sigmoid", f"1.0D / (1.0D + exp(-{VALUE}))")
 
 
 @register("logit")
 def logit(ctx, exp, f, u):
     """ln(v/(1-v)), domain (0,1) — logit/function.go:32."""
-    def fn(v):
-        ratio = F.when(v != 1.0, v / (F.lit(1.0) - v))
-        return F.when(ratio > 0, F.log(ratio))
-    return wrap_name("logit", eval_expr(ctx, exp.args[0], f, u).map_value(fn))
+    ratio = f"CASE WHEN {VALUE} != 1.0D THEN {VALUE} / (1.0D - {VALUE}) END"
+    return _map(ctx, exp, f, u, "logit", f"CASE WHEN {ratio} > 0 THEN ln({ratio}) END")
 
 
 @register("log", "logarithm")
 def logarithm(ctx, exp, f, u):
     """log_base(v), v<=0 -> NaN — logarithm/function.go:32."""
     base = exp.get_float(1, 10.0, names=("base",))
-    def fn(v):
-        return F.when(v > 0, F.log(float(base), v))
-    frame = eval_expr(ctx, exp.args[0], f, u).map_value(fn)
+    suffix = []
     if len(exp.args) > 1 or "base" in exp.named_args:
-        return wrap_name("logarithm", frame, exp.raw_arg(1) if len(exp.args) > 1
-                         else f"base={float_str(base)}")
-    return wrap_name("logarithm", frame)
+        suffix = [exp.raw_arg(1) if len(exp.args) > 1 else f"base={float_str(base)}"]
+    return _map(ctx, exp, f, u, "logarithm",
+                f"CASE WHEN {VALUE} > 0 THEN log({sql_dlit(base)}, {VALUE}) END", *suffix)
 
 
 @register("round")
 def round_(ctx, exp, f, u):
     """half-even rounding like helper.SafeRound (helper.go:225-231)."""
     precision = exp.get_int(1, 0, names=("precision",))
-    frame = eval_expr(ctx, exp.args[0], f, u).map_value(lambda v: F.bround(v, precision))
-    if len(exp.args) > 1 or "precision" in exp.named_args:
-        return wrap_name("round", frame, str(precision))
-    return wrap_name("round", frame)
+    suffix = [str(precision)] if len(exp.args) > 1 or "precision" in exp.named_args else []
+    return _map(ctx, exp, f, u, "round", f"bround({VALUE}, {precision})", *suffix)
 
 
 @register("isNonNull", "isNotNull")
 def is_non_null(ctx, exp, f, u):
     """1 if value present else 0 — isNotNull/function.go:31."""
-    return wrap_name(exp.target,
-                     eval_expr(ctx, exp.args[0], f, u).densify().map_value(
-                         lambda v: v.isNotNull().cast("double")))
+    frame = eval_expr(ctx, exp.args[0], f, u).densify()
+    return wrap_name(exp.target, frame.map_value(f"{VALUE} IS NOT NULL"))
 
 
 @register("transformNull")
 def transform_null(ctx, exp, f, u):
     """NaN -> default — transformNull/function.go:35 (referenceSeries form
     joins against a mask of the reference's non-null points)."""
-    V = F.col(VALUE)
     default = exp.get_float(1, 0.0, names=("default",))
     frame = eval_expr(ctx, exp.args[0], f, u).densify()
     ref_exp = exp.named_args.get("referenceSeries")
@@ -149,30 +138,28 @@ def transform_null(ctx, exp, f, u):
         float_str(default) if ("default" in exp.named_args or ref_exp) else None)
     if ref_exp is not None:
         ref = eval_expr(ctx, ref_exp, f, u)
-        mask = (ref.df.groupBy(TS)
-                .agg(F.max(V.isNotNull().cast("int")).alias("__ref_ok")))
-        df = (frame.df.join(F.broadcast(mask), TS, "left")
-              .withColumn(VALUE, F.when(V.isNull() & (F.col("__ref_ok") == 1),
-                                        F.lit(default)).otherwise(V))
+        mask = ref.df.groupBy(TS).agg(
+            F.expr(f"max(CAST({VALUE} IS NOT NULL AS INT)) AS __ref_ok"))
+        df = (frame.df.join(mask.hint("broadcast"), TS, "left")
+              .withColumn(VALUE, F.expr(f"CASE WHEN {VALUE} IS NULL AND __ref_ok = 1 "
+                                        f"THEN {sql_dlit(default)} ELSE {VALUE} END"))
               .drop("__ref_ok"))
         out = frame.with_df(df)
     else:
-        out = frame.map_value(lambda v: F.coalesce(v, F.lit(default)))
-    return wrap_name("transformNull", out, *( [suffix] if suffix else [] ))
+        out = frame.map_value(f"coalesce({VALUE}, {sql_dlit(default)})")
+    return wrap_name("transformNull", out, *([suffix] if suffix else []))
 
 
 @register("timeSlice")
 def time_slice(ctx, exp, f, u):
     """NULL outside [start, end] — timeSlice/function.go:44."""
-    V = F.col(VALUE)
     start = exp.get_interval(1, default_sign=-1)
     end = exp.get_interval(2, default_sign=-1, default=0)
     now = int(ctx.now.timestamp()) if ctx.now else u
     lo, hi = now + start, (now + end if end else u)
-    frame = eval_expr(ctx, exp.args[0], f, u)
-    out = frame.with_df(frame.df.withColumn(
-        VALUE, F.when((F.col(TS) >= lo) & (F.col(TS) <= hi), V)))
-    return wrap_name("timeSlice", out, str(start), str(end or u - now))
+    return _map(ctx, exp, f, u, "timeSlice",
+                f"CASE WHEN {TS} >= {lo} AND {TS} <= {hi} THEN {VALUE} END",
+                str(start), str(end or u - now))
 
 
 # ------------------------------------------------------- window-based maps
@@ -180,49 +167,37 @@ def time_slice(ctx, exp, f, u):
 @register("offsetToZero")
 def offset_to_zero(ctx, exp, f, u):
     """v - min(series) — offsetToZero/function.go:31."""
-    V = F.col(VALUE)
-    frame = eval_expr(ctx, exp.args[0], f, u)
-    w = Window.partitionBy(ORD)
-    df = frame.df.withColumn(VALUE, V - F.min(V).over(w))
-    return wrap_name("offsetToZero", frame.with_df(df))
+    return _map(ctx, exp, f, u, "offsetToZero",
+                f"{VALUE} - min({VALUE}) OVER (PARTITION BY {ORD})")
 
 
 @register("minMax")
 def min_max(ctx, exp, f, u):
     """(v-min)/(max-min), degenerate -> 0 — minMax/function.go:32."""
-    V = F.col(VALUE)
-    frame = eval_expr(ctx, exp.args[0], f, u)
-    w = Window.partitionBy(ORD)
-    lo, hi = F.min(V).over(w), F.max(V).over(w)
-    df = frame.df.withColumn(
-        VALUE,
-        F.when(V.isNull(), None)
-         .when(hi - lo != 0, (V - lo) / (hi - lo))
-         .otherwise(F.lit(0.0)))
-    return wrap_name("minMax", frame.with_df(df))
+    lo, hi = (f"{a}({VALUE}) OVER (PARTITION BY {ORD})" for a in ("min", "max"))
+    return _map(ctx, exp, f, u, "minMax",
+                f"CASE WHEN {VALUE} IS NULL THEN NULL WHEN {hi} - {lo} != 0 THEN "
+                f"({VALUE} - {lo}) / ({hi} - {lo}) ELSE 0.0D END")
 
 
 @register("derivative")
 def derivative(ctx, exp, f, u):
     """v - prev, first point NaN — derivative/function.go:30."""
-    V = F.col(VALUE)
     frame = eval_expr(ctx, exp.args[0], f, u).densify()
-    df = frame.df.withColumn(VALUE, V - F.lag(V).over(series_window()))
-    return wrap_name("derivative", frame.with_df(df))
+    return wrap_name("derivative", frame.map_value(f"{VALUE} - {_PREV}"))
 
 
-def _nn_derivative_value(max_value: float | None, min_value: float | None):
-    V = F.col(VALUE)
-    prev = F.lag(V).over(series_window())
-    diff = V - prev
-    out = F.when(diff >= 0, diff)
+def _nn_derivative_sql(max_value: float | None, min_value: float | None) -> str:
+    diff = f"({VALUE} - {_PREV})"
+    out = f"CASE WHEN {diff} >= 0 THEN {diff}"
     # counter-wrap semantics: nonNegativeDerivative/function.go:97-110
-    lo = min_value if min_value is not None else 0.0
+    lo = sql_dlit(min_value if min_value is not None else 0.0)
     if max_value is not None:
-        out = out.when(F.lit(max_value) >= V, (F.lit(max_value) - prev) + (V - F.lit(lo)) + 1)
+        mx = sql_dlit(max_value)
+        out += f" WHEN {mx} >= {VALUE} THEN ({mx} - {_PREV}) + ({VALUE} - {lo}) + 1"
     if min_value is not None:
-        out = out.when(F.lit(min_value) <= V, V - F.lit(min_value))
-    return out
+        out += f" WHEN {lo} <= {VALUE} THEN {VALUE} - {lo}"
+    return out + " END"
 
 
 @register("nonNegativeDerivative")
@@ -233,119 +208,104 @@ def non_negative_derivative(ctx, exp, f, u):
     min_v = exp.get_float(2, float("nan"), names=("minValue",))
     has_max = max_v == max_v
     has_min = min_v == min_v
-    frame = eval_expr(ctx, exp.args[0], f, u).densify()
-    df = frame.df.withColumn(
-        VALUE, _nn_derivative_value(max_v if has_max else None,
-                                    min_v if has_min else None))
     suffix = []
     if has_max:
         suffix.append(float_str(max_v))
     if has_min:
         suffix.append(float_str(min_v) if has_max else f"minValue={float_str(min_v)}")
-    return wrap_name("nonNegativeDerivative", frame.with_df(df), *suffix)
+    frame = eval_expr(ctx, exp.args[0], f, u).densify()
+    return wrap_name("nonNegativeDerivative", frame.map_value(
+        _nn_derivative_sql(max_v if has_max else None, min_v if has_min else None)), *suffix)
 
 
 @register("perSecond")
 def per_second(ctx, exp, f, u):
     """nonNegativeDerivative / step — perSecond/function.go:33."""
     max_v = exp.get_float(1, float("nan"), names=("maxValue",))
-    has_max = max_v == max_v
     frame = eval_expr(ctx, exp.args[0], f, u).densify()
-    step = frame.step
-    val = _nn_derivative_value(max_v if has_max else None, None) / F.lit(float(step))
-    df = frame.df.withColumn(VALUE, val)
-    return wrap_name("perSecond", frame.with_df(df),
-                     *( [exp.raw_arg(1)] if len(exp.args) > 1 else [] ))
+    val = _nn_derivative_sql(max_v if max_v == max_v else None, None)
+    return wrap_name("perSecond", frame.map_value(f"{val} / {sql_dlit(float(frame.step))}"),
+                     *([exp.raw_arg(1)] if len(exp.args) > 1 else []))
 
 
 @register("delay")
 def delay(ctx, exp, f, u):
     """shift values by n steps — delay/function.go:30."""
-    V = F.col(VALUE)
     steps = exp.get_int(1)
     frame = eval_expr(ctx, exp.args[0], f, u).densify()
-    df = frame.df.withColumn(VALUE, F.lag(V, steps).over(series_window()))
+    # a bare window function is already DOUBLE: set without map_value's
+    # cast, so the Window node itself yields ``value``
+    df = frame.df.withColumn(VALUE, F.expr(f"lag({VALUE}, {steps}) OVER ({SERIES_WINDOW})"))
     return wrap_name("delay", frame.with_df(df), str(steps))
 
 
 @register("integral")
 def integral(ctx, exp, f, u):
     """running sum; NULL points stay NULL but don't reset — integral/function.go:30."""
-    V = F.col(VALUE)
     frame = eval_expr(ctx, exp.args[0], f, u).densify()
-    w = series_window().rowsBetween(Window.unboundedPreceding, 0)
-    df = frame.df.withColumn(VALUE, F.when(V.isNotNull(), F.sum(V).over(w)))
-    return wrap_name("integral", frame.with_df(df))
+    return wrap_name("integral", frame.map_value(
+        f"CASE WHEN {VALUE} IS NOT NULL THEN sum({VALUE}) {RUNNING} END"))
 
 
 @register("integralByInterval")
 def integral_by_interval(ctx, exp, f, u):
     """running sum resetting each bucket; NULL counts as 0 inside a bucket
     — integralByInterval/function.go:30."""
-    V = F.col(VALUE)
-    interval = exp.get_interval(1)
     frame = eval_expr(ctx, exp.args[0], f, u).densify()
-    bucket = F.col(TS) - ((F.col(TS) - f) % F.lit(interval))
-    w = (Window.partitionBy(ORD, bucket).orderBy(TS)
-         .rowsBetween(Window.unboundedPreceding, 0))
-    df = frame.df.withColumn(VALUE, F.sum(F.coalesce(V, F.lit(0.0))).over(w))
+    bucket = f"{TS} - ({TS} - {f}) % {exp.get_interval(1)}"
+    # a DOUBLE window result, set directly as in delay
+    df = frame.df.withColumn(VALUE, F.expr(
+        f"sum(coalesce({VALUE}, 0.0D)) OVER (PARTITION BY {ORD}, {bucket} "
+        f"ORDER BY {TS} ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)"))
     return wrap_name("integralByInterval", frame.with_df(df), exp.raw_arg(1))
+
+
+_LAST_TS = f"last(CASE WHEN {VALUE} IS NOT NULL THEN {TS} END, true)"
 
 
 @register("keepLastValue")
 def keep_last_value(ctx, exp, f, u):
     """forward-fill up to *limit* consecutive gaps — keepLastValue/function.go:31-88
     (fills the first `limit` points of longer gaps, carbonapi behavior)."""
-    V = F.col(VALUE)
     limit = exp.get_float(1, float("inf"), names=("limit",))
     frame = eval_expr(ctx, exp.args[0], f, u).densify()
-    w = series_window().rowsBetween(Window.unboundedPreceding, 0)
-    last_v = F.last(V, ignorenulls=True).over(w)
-    last_ts = F.last(F.when(V.isNotNull(), F.col(TS)), ignorenulls=True).over(w)
-    gap_ok = ((F.col(TS) - last_ts) / frame.step) <= F.lit(limit)
-    df = frame.df.withColumn(VALUE, F.when(V.isNotNull(), V)
-                             .when(last_ts.isNotNull() & gap_ok, last_v))
+    last_ts = f"{_LAST_TS} {RUNNING}"
+    gap_ok = f"({TS} - {last_ts}) / {frame.step} <= {sql_dlit(limit)}"
+    df = frame.map_value(
+        f"CASE WHEN {VALUE} IS NOT NULL THEN {VALUE} WHEN {last_ts} IS NOT NULL "
+        f"AND {gap_ok} THEN last({VALUE}, true) {RUNNING} END")
     suffix = []
     if len(exp.args) > 1 or "limit" in exp.named_args:
         suffix.append("inf" if limit == float("inf") else str(int(limit)))
-    return wrap_name("keepLastValue", frame.with_df(df), *suffix)
+    return wrap_name("keepLastValue", df, *suffix)
 
 
 @register("interpolate")
 def interpolate(ctx, exp, f, u):
     """linear interpolation across gaps <= limit — interpolate/function.go:26."""
-    V = F.col(VALUE)
     limit = exp.get_float(1, float("inf"), names=("limit",))
     frame = eval_expr(ctx, exp.args[0], f, u).densify()
-    w_back = series_window().rowsBetween(Window.unboundedPreceding, 0)
-    w_fwd = series_window().rowsBetween(0, Window.unboundedFollowing)
-    prev_v = F.last(V, ignorenulls=True).over(w_back)
-    prev_ts = F.last(F.when(V.isNotNull(), F.col(TS)), ignorenulls=True).over(w_back)
-    next_v = F.first(V, ignorenulls=True).over(w_fwd)
-    next_ts = F.first(F.when(V.isNotNull(), F.col(TS)), ignorenulls=True).over(w_fwd)
-    gap_len = (next_ts - prev_ts) / frame.step - 1
-    frac = (F.col(TS) - prev_ts) / (next_ts - prev_ts)
-    blended = prev_v + (next_v - prev_v) * frac
-    df = frame.df.withColumn(
-        VALUE,
-        F.when(V.isNotNull(), V)
-         .when(prev_ts.isNotNull() & next_ts.isNotNull() & (gap_len <= F.lit(limit)),
-               blended))
-    return wrap_name("interpolate", frame.with_df(df))
+    fwd = f"OVER ({SERIES_WINDOW} ROWS BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING)"
+    prev_v, prev_ts = f"last({VALUE}, true) {RUNNING}", f"{_LAST_TS} {RUNNING}"
+    next_v = f"first({VALUE}, true) {fwd}"
+    next_ts = f"first(CASE WHEN {VALUE} IS NOT NULL THEN {TS} END, true) {fwd}"
+    gap_len = f"({next_ts} - {prev_ts}) / {frame.step} - 1"
+    frac = f"({TS} - {prev_ts}) / ({next_ts} - {prev_ts})"
+    near = sql_all([f"{prev_ts} IS NOT NULL", f"{next_ts} IS NOT NULL",
+                    f"{gap_len} <= {sql_dlit(limit)}"])
+    return wrap_name("interpolate", frame.map_value(
+        f"CASE WHEN {VALUE} IS NOT NULL THEN {VALUE} WHEN {near} THEN "
+        f"{prev_v} + ({next_v} - {prev_v}) * ({frac}) END"))
 
 
 @register("changed")
 def changed(ctx, exp, f, u):
     """1 when value differs from previous else 0 — changed/function.go:30."""
-    V = F.col(VALUE)
     frame = eval_expr(ctx, exp.args[0], f, u).densify()
-    prev = F.lag(V).over(series_window())
-    df = frame.df.withColumn(
-        VALUE,
-        F.when(prev.isNull() & V.isNull(), F.lit(0.0))
-         .when(prev.isNull() | V.isNull(), F.lit(1.0))
-         .when(prev != V, F.lit(1.0)).otherwise(F.lit(0.0)))
-    return wrap_name("changed", frame.with_df(df))
+    return wrap_name("changed", frame.map_value(
+        f"CASE WHEN {_PREV} IS NULL AND {VALUE} IS NULL THEN 0.0D "
+        f"WHEN {_PREV} IS NULL OR {VALUE} IS NULL THEN 1.0D "
+        f"WHEN {_PREV} != {VALUE} THEN 1.0D ELSE 0.0D END"))
 
 
 @register("drawAsInfinite", "lineWidth", "dashed", "color", "alpha",

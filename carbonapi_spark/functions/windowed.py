@@ -6,8 +6,8 @@ Two physical shapes, both shuffle-light:
   (series, bucket) — Spark's map-side partial agg does the heavy lifting, and
   the bucket key is derived arithmetic on ``ts`` so no extra exchange beyond
   the single groupBy,
-- trailing windows (moving*/stdev): ``Window.partitionBy(series).orderBy(ts)``
-  row-frame aggregates — one shuffle by series, then a linear scan per
+- trailing windows (moving*/stdev): ``OVER (PARTITION BY ord ORDER BY ts
+  ROWS ...)`` row-frame aggregates — one shuffle by series, then a linear scan per
   partition; the window history extension widens the *fetch* instead of
   shifting results (parser.go:255-268 semantics), which our recursive
   evaluator does by fetching arg0 over [from - preview, until).
@@ -15,17 +15,19 @@ Two physical shapes, both shuffle-light:
 
 from __future__ import annotations
 
+from dataclasses import replace
+
 from pyspark.sql import functions as F
 
 from carbonapi_spark.evaluator import eval_expr, static_step
 from carbonapi_spark.functions import interval_step, register
-from carbonapi_spark.functions.helper import series_window, wrap_name
+from carbonapi_spark.functions.helper import wrap_name
 from carbonapi_spark.model.consolidation import (
-    _PERCENTILE_RE, agg_column, agg_sql, percentile_column,
+    _PERCENTILE_RE, agg_sql, consolidation_name, percentile_sql,
 )
-from carbonapi_spark.model.series import (NAME, ORD, TS, VALUE, SERIES_SCHEMA,
-                                          SeriesFrame)
-
+from carbonapi_spark.model.series import (NAME, ORD, SERIES_SCHEMA, SERIES_WINDOW,
+                                          TS, VALUE, SeriesFrame, trailing)
+from carbonapi_spark.sqltext import expr_cached, sql_dlit
 
 
 # ------------------------------------------------------------- summarize
@@ -39,40 +41,23 @@ def summarize(ctx, exp, f, u):
     unconditional `newStop += bucketSize`); alignToFrom=true buckets start
     at the series start. Point->bucket assignment is by timestamp
     (function.go:112-135's ceil arithmetic reduces to floor((ts-start)/sz))."""
-    V = F.col(VALUE)
-    frame = eval_expr(ctx, exp.args[0], f, u).densify()
+    frame = eval_expr(ctx, exp.args[0], f, u)
     bucket_size = exp.get_interval(1)
     func = exp.get_string(2, "sum", names=("func",))
     func_given = "func" in exp.named_args or len(exp.args) > 2
     align = exp.get_bool(3, False, names=("alignToFrom",))
     align_given = "alignToFrom" in exp.named_args or len(exp.args) > 3
 
-    if align:
-        new_start = frame.start
-        new_stop = frame.stop
-        bucket = F.col(TS) - ((F.col(TS) - new_start) % bucket_size)
-    else:
-        new_start = frame.start - frame.start % bucket_size
-        new_stop = frame.stop - frame.stop % bucket_size
-        if new_stop != frame.stop:
-            new_stop += bucket_size
-        new_stop += bucket_size  # unconditional extra bucket (function.go:74-77)
-        bucket = F.col(TS) - (F.col(TS) % bucket_size)
-
-    interval_str = exp.args[1].val_str or exp.args[1].target
-    suffix = f",'{interval_str}'"
+    out = frame.consolidate_to(bucket_size, func, origin=frame.start if align else 0)
+    # unconditional extra bucket (function.go:74-77); aligned to from, the
+    # buckets end at the series' stop
+    stop = frame.stop if align else out.stop + bucket_size
+    suffix = [f"'{exp.args[1].val_str or exp.args[1].target}'"]
     if func_given or align_given:
-        suffix += f",'{func}'"
+        suffix.append(f"'{func}'")
     if align_given:
-        suffix += f",{'true' if align else 'false'}"
-
-    agg = agg_column(func, xff=frame.xff, alias=VALUE)
-    df = (frame.df.groupBy(NAME, ORD, bucket.alias(TS)).agg(agg)
-          .withColumn(NAME, F.concat(F.lit("summarize("), F.col(NAME),
-                                     F.lit(suffix + ")"))))
-    out = SeriesFrame(df, bucket_size, new_start, new_stop,
-                      frame.consolidation, frame.xff, dense=False)
-    return out.densify()
+        suffix.append("true" if align else "false")
+    return wrap_name("summarize", replace(out, stop=stop, dense=False), *suffix).densify()
 
 
 @register("smartSummarize", step=interval_step)
@@ -80,27 +65,16 @@ def smart_summarize(ctx, exp, f, u):
     """summarize without gap padding; optional fetch-start alignment to
     s/min/h/d/w/mon/y boundary — smartSummarize/function.go:32
     (+ parser.go:300-330 start adjustment)."""
-    V = F.col(VALUE)
     bucket_size = exp.get_interval(1)
     func = exp.get_string(2, "sum", names=("func",))
     align_to = exp.get_string(3, "", names=("alignTo", "alignToFrom"))
     start = f
     if align_to:
         start = _align_start(f, align_to)
-    frame = eval_expr(ctx, exp.args[0], start, u).densify()
-
-    bucket = F.col(TS) - ((F.col(TS) - frame.start) % bucket_size)
-    interval_str = exp.args[1].val_str or exp.args[1].target
-    suffix = f",'{interval_str}','{func}'"
-    agg = agg_column(func, xff=frame.xff, alias=VALUE)
-    df = (frame.df.groupBy(NAME, ORD, bucket.alias(TS)).agg(agg)
-          .withColumn(NAME, F.concat(F.lit("smartSummarize("), F.col(NAME),
-                                     F.lit(suffix + ")"))))
-    new_stop = frame.start + ((frame.stop - frame.start + bucket_size - 1)
-                              // bucket_size) * bucket_size
-    out = SeriesFrame(df, bucket_size, frame.start, new_stop,
-                      frame.consolidation, frame.xff, dense=False)
-    return out.densify()
+    frame = eval_expr(ctx, exp.args[0], start, u)
+    out = frame.consolidate_to(bucket_size, func, origin=frame.start)
+    return wrap_name("smartSummarize", replace(out, dense=False),
+                     f"'{exp.args[1].val_str or exp.args[1].target}'", f"'{func}'").densify()
 
 
 def _align_start(start: int, align_to: str) -> int:
@@ -135,7 +109,6 @@ def _align_start(start: int, align_to: str) -> int:
 def hitcount(ctx, exp, f, u):
     """sum(v*step) per bucket, spreading points that straddle bucket
     boundaries proportionally — hitcount/function.go:33-155."""
-    V = F.col(VALUE)
     bucket_size = exp.get_interval(1)
     align = exp.get_bool(2, False, names=("alignToInterval",))
     start = f
@@ -152,28 +125,24 @@ def hitcount(ctx, exp, f, u):
     new_start = stop - n_buckets * bucket_size
 
     step = frame.step
-    ts = F.col(TS)
+    b0 = f"CAST(floor(({TS} - {new_start}) / {bucket_size}) AS BIGINT)"
+    b1 = f"CAST(floor(({TS} + {step} - 1 - {new_start}) / {bucket_size}) AS BIGINT)"
     # overlap of [ts, ts+step) with each bucket it touches; clamp to range
-    b0 = F.floor((ts - new_start) / bucket_size).cast("long")
-    b1 = F.floor((ts + step - 1 - new_start) / bucket_size).cast("long")
-    b1 = F.least(b1, F.lit(int(n_buckets - 1)))
-    df = (frame.df.where(V.isNotNull())
-          .withColumn("__b", F.explode(F.sequence(F.greatest(b0, F.lit(0)), b1)))
-          .withColumn("__bstart", F.lit(new_start) + F.col("__b") * bucket_size)
-          .withColumn("__overlap",
-                      F.least(ts + step, F.col("__bstart") + bucket_size,
-                              F.lit(stop)) - F.greatest(ts, F.col("__bstart")))
-          .where(F.col("__overlap") > 0)
-          .groupBy(NAME, ORD, F.col("__bstart").alias(TS))
-          .agg(F.sum(V * F.col("__overlap")).cast("double").alias(VALUE)))
-
-    interval_str = exp.args[1].val_str or exp.args[1].target
-    suffix = f",'{interval_str}'" + (",true" if align else "")
-    df = df.withColumn(NAME, F.concat(F.lit("hitcount("), F.col(NAME),
-                                      F.lit(suffix + ")")))
+    df = (frame.df.where(f"{VALUE} IS NOT NULL")
+          .withColumn("__b", F.expr(f"explode(sequence(greatest({b0}, 0), "
+                                    f"least({b1}, {n_buckets - 1})))"))
+          .withColumn("__bstart", F.expr(f"{new_start} + __b * {bucket_size}"))
+          .withColumn("__overlap", F.expr(
+              f"least({TS} + {step}, __bstart + {bucket_size}, {stop}) "
+              f"- greatest({TS}, __bstart)"))
+          .where("__overlap > 0")
+          .groupBy(NAME, ORD, expr_cached(f"__bstart AS {TS}"))
+          .agg(expr_cached(f"CAST(sum({VALUE} * __overlap) AS DOUBLE) AS {VALUE}")))
     out = SeriesFrame(df, bucket_size, new_start, stop,
                       frame.consolidation, frame.xff, dense=False)
-    return out.densify()
+    interval_str = exp.args[1].val_str or exp.args[1].target
+    return wrap_name("hitcount", out, f"'{interval_str}'",
+                     *(["true"] if align else [])).densify()
 
 
 # ------------------------------------------------------------- moving*
@@ -188,18 +157,19 @@ _MOVING_CONS = {"movingAverage": "average", "movingSum": "sum",
 _LAG_WINDOW_MAX = 128
 
 
-def _lag_percentile(v, wp: int, p: float, xff: float):
-    """Exact interpolated percentile over the trailing *wp* rows, codegen'd.
+def _lag_percentile(wp: int, p: float, xff: float) -> str:
+    """SQL text of the exact interpolated percentile over the trailing *wp*
+    rows, codegen'd.
 
     Spark's exact ``percentile`` is an interpreted ObjectAggregate; as a
     window function its buffer is rebuilt per output row (the round-2 bench
-    showed movingMedian at 9x the catalog mean because of it). This builds
+    showed movingMedian at 9x the catalog mean because of it). This is
     the same answer as scalar expressions inside whole-stage codegen:
-    ``array(v, lag(v,1), .., lag(v,wp-1))`` -> drop NULLs -> ``array_sort``
-    -> linear interpolation at rank (n-1)*p — the identical arithmetic to
-    ``F.percentile`` / DuckDB ``quantile_cont``. All lags share one window
-    spec, so WindowExec makes a single per-series pass with O(1) offset
-    frames.
+    ``array(value, lag(value, 1), .., lag(value, wp-1))`` -> drop NULLs ->
+    ``array_sort`` -> linear interpolation at rank (n-1)*p — the identical
+    arithmetic to ``percentile`` / DuckDB ``quantile_cont``. All lags share
+    one window spec, so WindowExec makes a single per-series pass with O(1)
+    offset frames.
 
     NULL semantics match the aggregate form exactly: a lag that reaches
     beyond the partition head is NULL and is filtered like a NULL value —
@@ -207,19 +177,18 @@ def _lag_percentile(v, wp: int, p: float, xff: float):
     output rows (ts >= from) always have a full frame (total = wp, which is
     what the xff gate divides by).
     """
-    ow = series_window()
-    lags = [v] + [F.lag(v, i).over(ow) for i in range(1, wp)]
-    vals = F.array_sort(F.filter(F.array(*lags), lambda x: x.isNotNull()))
-    n = F.size(vals)
-    k = (n - 1).cast("double") * F.lit(p)
-    lo = F.floor(k).cast("int")
-    frac = k - lo.cast("double")
-    vlo = F.try_element_at(vals, lo + 1)
-    vhi = F.coalesce(F.try_element_at(vals, lo + 2), vlo)
-    out = F.when(n > 0,
-                 F.when(frac > 0, vlo + frac * (vhi - vlo)).otherwise(vlo))
+    lags = [VALUE] + [f"lag({VALUE}, {i}) OVER ({SERIES_WINDOW})" for i in range(1, wp)]
+    vals = f"array_sort(filter(array({', '.join(lags)}), x -> x IS NOT NULL))"
+    n = f"size({vals})"
+    k = f"CAST({n} - 1 AS DOUBLE) * {sql_dlit(p)}"
+    lo = f"CAST(floor({k}) AS INT)"
+    frac = f"({k} - CAST({lo} AS DOUBLE))"
+    vlo = f"try_element_at({vals}, {lo} + 1)"
+    vhi = f"coalesce(try_element_at({vals}, {lo} + 2), {vlo})"
+    out = (f"CASE WHEN {n} > 0 THEN CASE WHEN {frac} > 0 THEN "
+           f"{vlo} + {frac} * ({vhi} - {vlo}) ELSE {vlo} END END")
     if xff and xff > 0:
-        out = F.when(n.cast("double") / wp >= xff, out)
+        out = f"CASE WHEN CAST({n} AS DOUBLE) / {wp} >= {sql_dlit(xff)} THEN {out} END"
     return out
 
 
@@ -281,18 +250,13 @@ def moving(ctx, exp, f, u):
         # a per-series pandas rolling kernel (large wp)
         p = 0.5 if cons == "median" else float(cons[1:]) / 100.0
         if wp <= _LAG_WINDOW_MAX:
-            df = frame.df.withColumn(
-                VALUE, _lag_percentile(F.col(VALUE), wp, p, xff).cast("double"))
+            df = frame.map_value(_lag_percentile(wp, p, xff)).df
         else:
             df = _pandas_rolling_percentile(frame.df, wp, p, xff)
     else:
         # every aggregate of the fold becomes a window function over the
         # trailing wp rows of its series
-        lo = f"{wp - 1} PRECEDING" if wp > 1 else "CURRENT ROW"
-        over = (f" OVER (PARTITION BY {ORD} ORDER BY {TS} ASC "
-                f"ROWS BETWEEN {lo} AND CURRENT ROW)")
-        df = frame.df.withColumn(
-            VALUE, F.expr(f"CAST({agg_sql(cons, xff=xff, over=over)} AS DOUBLE)"))
+        df = frame.map_value(agg_sql(cons, xff=xff, over=" " + trailing(wp))).df
     df = df.where(f"{TS} >= {f}")
     out = SeriesFrame(df, frame.step, f, frame.stop, frame.consolidation,
                       frame.xff, dense=True)
@@ -303,19 +267,17 @@ def moving(ctx, exp, f, u):
 def stdev(ctx, exp, f, u):
     """rolling population stddev of last N points (partial head windows
     allowed) — stdev/function.go:29-77."""
-    V = F.col(VALUE)
     frame = eval_expr(ctx, exp.args[0], f, u).densify()
     points = exp.get_int(1)
     tolerance = exp.get_float(2, 0.1)
     min_len = int((1 - tolerance) * points)
 
-    w = series_window().rowsBetween(-(points - 1), 0)
-    idx = F.row_number().over(series_window()) - 1
-    nn = F.count(V).over(w)
-    sd = F.stddev_pop(V).over(w)
-    valid = V.isNotNull() & ~((idx >= min_len) & (nn < min_len))
-    df = frame.df.withColumn(VALUE, F.when(valid, F.coalesce(sd, F.lit(0.0))))
-    return wrap_name("stdev", frame.with_df(df), exp.args[1].val_str)
+    idx = f"row_number() OVER ({SERIES_WINDOW}) - 1"
+    nn = f"count({VALUE}) {trailing(points)}"
+    sd = f"stddev_pop({VALUE}) {trailing(points)}"
+    valid = f"{VALUE} IS NOT NULL AND NOT ({idx} >= {min_len} AND {nn} < {min_len})"
+    return wrap_name("stdev", frame.map_value(f"CASE WHEN {valid} THEN coalesce({sd}, 0.0D) END"),
+                     exp.args[1].val_str)
 
 
 # ------------------------------------------------------- flat-line aggs
@@ -326,7 +288,7 @@ def n_percentile(ctx, exp, f, u):
     — nPercentile/function.go:32."""
     frame = eval_expr(ctx, exp.args[0], f, u).densify()
     n = exp.get_float(1)
-    per = frame.per_series(value=percentile_column(F.col(VALUE), n, False).cast("double"))
+    per = frame.per_series(value=f"CAST({percentile_sql(VALUE, n, False)} AS DOUBLE)")
     df = frame.df.drop(VALUE).join(per, ORD)
     return wrap_name("nPercentile", frame.with_df(df), exp.raw_arg(1))
 
@@ -335,7 +297,7 @@ def n_percentile(ctx, exp, f, u):
 def aggregate_line(ctx, exp, f, u):
     """flat line at the per-series aggregate — aggregateLine/function.go:32."""
     frame = eval_expr(ctx, exp.args[0], f, u).densify()
-    func = exp.get_string(1, "average")
+    func = consolidation_name(exp.get_string(1, "average"))
     df = frame.df.drop(VALUE).join(frame.per_series(value=func), ORD)
     return wrap_name("aggregateLine", frame.with_df(df), f"'{func}'")
 
@@ -345,7 +307,6 @@ def linear_regression(ctx, exp, f, u):
     """least-squares line fit projected over the request range
     — linearRegression/function.go:33 (gonum polyfit deg 1 == regr_slope/
     regr_intercept, JVM-side)."""
-    V = F.col(VALUE)
     source_from = f
     source_until = u
     if len(exp.args) > 1:
@@ -356,13 +317,11 @@ def linear_regression(ctx, exp, f, u):
             int(ctx.now.timestamp()) if ctx.now else u)
     source = eval_expr(ctx, exp.args[0], source_from, source_until)
     frame = eval_expr(ctx, exp.args[0], f, u).densify()
-    fit = (source.df
-           .groupBy(NAME, ORD)
-           .agg(F.regr_slope(V, F.col(TS).cast("double")).alias("__m"),
-                F.regr_intercept(V, F.col(TS).cast("double")).alias("__b")))
-    df = (frame.df.drop(VALUE)
-          .join(fit, [NAME, ORD])
-          .withColumn(VALUE, (F.col("__m") * F.col(TS) + F.col("__b")).cast("double"))
+    fit = source.df.groupBy(NAME, ORD).agg(
+        expr_cached(f"regr_slope({VALUE}, CAST({TS} AS DOUBLE)) AS __m"),
+        expr_cached(f"regr_intercept({VALUE}, CAST({TS} AS DOUBLE)) AS __b"))
+    df = (frame.df.drop(VALUE).join(fit, [NAME, ORD])
+          .withColumn(VALUE, expr_cached(f"CAST(__m * {TS} + __b AS DOUBLE)"))
           .drop("__m", "__b"))
     suffix = [exp.raw_arg(i) for i in range(1, len(exp.args))]
     return wrap_name("linearRegression", frame.with_df(df), *suffix)

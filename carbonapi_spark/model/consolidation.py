@@ -1,4 +1,4 @@
-"""Graphite consolidation functions as Spark aggregate Column expressions.
+"""Graphite consolidation functions as Spark SQL aggregate text.
 
 Re-expresses the semantics of the reference's value folds
 (``expr/consolidations/consolidations.go:132-290`` ``SummarizeValues`` and
@@ -6,12 +6,13 @@ the ``Agg*`` family at ``consolidations.go:293-440``) as JVM-side aggregate
 expressions usable in ``groupBy(...).agg(...)`` — no Python UDFs, so the
 whole fold stays inside whole-stage codegen / hash aggregation at 100 TB.
 
-Each fold is SQL text (:func:`agg_sql`), parsed once per distinct
-text; :func:`agg_column` wraps it as a Column.
+Each fold is SQL text (:func:`agg_sql`, :func:`percentile_sql`), parsed
+where it is used; :func:`agg_column` parses an :func:`agg_sql` fold once
+per distinct text.
 
 Graphite's NaN-skipping folds map onto SQL NULL-skipping aggregates; the
 "all-NaN -> NaN" rule is SQL's "all-NULL -> NULL" for sum/max/min/avg and
-is made explicit (``when(count > 0, ...)``) where SQL would return a
+is made explicit (``CASE WHEN count > 0 ...``) where SQL would return a
 non-NULL zero (count) or needs ordering (first/last/diff/median).
 
 All expressions are ANSI-mode safe (guarded divisions, ``try_element_at``).
@@ -25,8 +26,7 @@ from __future__ import annotations
 
 import re
 
-from pyspark.sql import Column
-from pyspark.sql import functions as F
+from pyspark.sql import Column, functions as F
 
 from carbonapi_spark.sqltext import expr_cached, sql_dlit
 
@@ -41,6 +41,14 @@ VALID_CONSOLIDATIONS = frozenset({
 
 def is_valid_consolidation(name: str) -> bool:
     return name in VALID_CONSOLIDATIONS or bool(_PERCENTILE_RE.match(name))
+
+
+def consolidation_name(name: str) -> str:
+    """*name*, a user-given fold name, if it is a consolidation function;
+    ValueError otherwise (a per-series fold reads other text as SQL)."""
+    if not is_valid_consolidation(name):
+        raise ValueError(f"invalid consolidation function {name!r}")
+    return name
 
 
 # folds that skip NULL values: over a bucket they give the same result
@@ -147,16 +155,16 @@ def agg_column(func: str, v: str = "value", order: str = "ts",
     return (F.expr if xff and xff > 0 else expr_cached)(sql)
 
 
-def percentile_column(v: Column, percent: float, interpolate: bool) -> Column:
-    """Graphite Percentile (consolidations.go:92-130).
+def percentile_sql(v: str, percent: float, interpolate: bool) -> str:
+    """SQL text of Graphite Percentile (consolidations.go:92-130) of the
+    value expression *v* over a group.
 
     interpolate=True is linear interpolation at rank k=(n-1)*p/100 — exactly
     Spark's ``percentile``. interpolate=False picks the element at
     ceil(k) (0-indexed) of the sorted non-null values.
     """
     if interpolate:
-        return F.percentile(v, F.lit(percent / 100.0))
-    vals = F.array_sort(F.collect_list(v))  # collect_list drops NULLs
-    n = F.size(vals)
-    k = F.ceil((n - 1).cast("double") * F.lit(percent) / 100.0).cast("int")
-    return F.when(n > 0, F.try_element_at(vals, k + 1))
+        return f"percentile({v}, {sql_dlit(percent / 100.0)}, 1)"
+    vals = f"array_sort(collect_list({v}))"  # collect_list drops NULLs
+    k = f"CAST(ceil(CAST(size({vals}) - 1 AS DOUBLE) * {sql_dlit(percent)} / 100.0D) AS INT)"
+    return f"CASE WHEN size({vals}) > 0 THEN try_element_at({vals}, {k} + 1) END"

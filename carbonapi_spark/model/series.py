@@ -56,14 +56,28 @@ import math
 from dataclasses import dataclass, replace
 from functools import reduce
 
-from pyspark.sql import Column, DataFrame, functions as F
+from pyspark.sql import DataFrame, functions as F
 
-from carbonapi_spark.model.consolidation import agg_column, skips_nulls
+from carbonapi_spark.model.consolidation import (
+    agg_column, is_valid_consolidation, skips_nulls,
+)
 from carbonapi_spark.sqltext import expr_cached, local_df as _local_df, selectx
 
 NAME, ORD, TS, VALUE = "name", "ord", "ts", "value"
 RANK = "__rank"
 SERIES_SCHEMA = "name STRING, ord STRING, ts BIGINT, value DOUBLE"
+# the window of one series in time order, ``OVER ({SERIES_WINDOW})``;
+# RUNNING and trailing(n) add a frame of rows to it
+SERIES_WINDOW = f"PARTITION BY {ORD} ORDER BY {TS} ASC"
+# ``OVER`` clause of the rows of a series up to this one
+RUNNING = f"OVER ({SERIES_WINDOW} ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)"
+
+
+def trailing(n: int) -> str:
+    """``OVER`` clause of the trailing *n* rows of a series, this one
+    included."""
+    lo = f"{n - 1} PRECEDING" if n > 1 else "CURRENT ROW"
+    return f"OVER ({SERIES_WINDOW} ROWS BETWEEN {lo} AND CURRENT ROW)"
 
 
 def _lcm(a: int, b: int) -> int:
@@ -95,16 +109,24 @@ class SeriesFrame:
     def with_df(self, df: DataFrame, *, dense: bool | None = None) -> "SeriesFrame":
         return replace(self, df=df, dense=self.dense if dense is None else dense)
 
-    def map_value(self, fn) -> "SeriesFrame":
-        """Pointwise value transform: value -> fn(col). Keeps the rows, so
-        a NULL-to-value map (``fn(NULL)`` not NULL) needs a dense frame."""
-        return self.with_df(self.df.withColumn(VALUE, fn(F.col(VALUE)).cast("double")))
+    def map_value(self, sql: str) -> "SeriesFrame":
+        """Pointwise value transform to the SQL expression *sql* over the
+        frame's columns, cast to DOUBLE. Keeps the rows, so a NULL-to-value
+        map (*sql* not NULL where ``value`` is) needs a dense frame."""
+        return self.with_df(self.df.withColumn(VALUE, F.expr(f"CAST({sql} AS DOUBLE)")))
 
     def map_name(self, sql: str) -> "SeriesFrame":
         """Name rewrite to the SQL expression *sql* over the frame's
         columns (``ord`` untouched — series identity survives). The text
         usually carries request literals, so it is parsed, not cached."""
         return self.with_df(self.df.withColumn(NAME, F.expr(sql)))
+
+    def shift(self, offset: int) -> "SeriesFrame":
+        """The frame moved *offset* seconds earlier: ``ts`` and the bounds
+        together (a fetch of a displaced window relabelled to the
+        request's)."""
+        df = self.df.withColumn(TS, F.expr(f"CAST({TS} - {offset} AS BIGINT)"))
+        return replace(self, df=df, start=self.start - offset, stop=self.stop - offset)
 
     def n_points(self) -> int:
         return max(0, (self.stop - self.start) // self.step)
@@ -116,7 +138,7 @@ class SeriesFrame:
         One hash aggregation by series (``ord``) collecting a ts->value
         map, then an inline spine explode with map lookup. Exactly ONE
         shuffle — and its partitioning (hash(ord)) is what downstream
-        ``Window.partitionBy(ord)`` operators need, so a fetch → densify →
+        ``PARTITION BY ord`` windows need, so a fetch → densify →
         window pipeline runs with no further exchange. Map size per series
         is bounded by the request's point count. Two rows for one bucket
         of one series fail the map build (``DUPLICATED_MAP_KEY``).
@@ -141,20 +163,20 @@ class SeriesFrame:
         return replace(self, df=df, start=start, stop=stop, dense=True)
 
     # ------------------------------------------------------------------
-    def per_series(self, *, xff: float = 0.0, **folds: str | Column) -> DataFrame:
+    def per_series(self, *, xff: float = 0.0, **folds: str) -> DataFrame:
         """One row per series: ``(ord, <alias>…)``, one fold per alias.
 
-        A fold is a consolidation name, folded by :func:`agg_column` in
-        time order and gated by *xff*, or an aggregate Column over the
-        frame's columns that skips NULLs, as every SQL aggregate of a
-        column does (``count(*)`` does not). The sparse frame is read only
-        when every named fold :func:`skips_nulls`; otherwise the densified
-        one, so that a fold which counts rows counts the missing ones."""
-        named = [f for f in folds.values() if isinstance(f, str)]
-        src = self if all(skips_nulls(f, xff) for f in named) else self.densify()
-        aggs = [agg_column(f, xff=xff, alias=alias)
-                if isinstance(f, str) else f.alias(alias)
-                for alias, f in folds.items()]
+        A fold is a consolidation name (:func:`is_valid_consolidation`),
+        folded by :func:`agg_column` in time order and gated by *xff*, or
+        else aggregate SQL text over the frame's columns that skips NULLs,
+        as every SQL aggregate of a column does (``count(*)`` does not).
+        The sparse frame is read only when every named fold
+        :func:`skips_nulls`; otherwise the densified one, so that a fold
+        which counts rows counts the missing ones."""
+        named = {a: f for a, f in folds.items() if is_valid_consolidation(f)}
+        src = self if all(skips_nulls(f, xff) for f in named.values()) else self.densify()
+        aggs = [agg_column(f, xff=xff, alias=a) if a in named
+                else F.expr(f"{f} AS {a}") for a, f in folds.items()]
         return src.df.groupBy(expr_cached(ORD)).agg(*aggs)
 
     def keep(self, ords: DataFrame) -> "SeriesFrame":
@@ -175,23 +197,24 @@ class SeriesFrame:
 
     # ------------------------------------------------------------------
     def consolidate_to(self, step: int, consolidation: str | None = None,
-                       xff: float | None = None) -> "SeriesFrame":
-        """Re-bucket to a coarser step using the series' consolidation
-        function (ScaleToCommonStep semantics, align.go:76-189).
+                       xff: float | None = None, *, origin: int) -> "SeriesFrame":
+        """Re-bucket to the coarser *step* using the series' consolidation
+        function (ScaleToCommonStep semantics, align.go:76-189). Buckets
+        start at *origin* plus a multiple of *step*; the bounds widen to
+        whole buckets.
 
         A fold that counts the bucket's rows (xFilesFactor > 0, or a
         count-sensitive function, see :func:`skips_nulls`) reads the
         densified frame; a NULL-skipping fold reads the frame as it is."""
-        if step == self.step:
-            return self
         func = consolidation or self.consolidation
         factor = xff if xff is not None else self.xff
         src = self if skips_nulls(func, factor) else self.densify()
+        bucket = f"{TS} - ({TS} - {origin}) % {step}" if origin else f"{TS} - {TS} % {step}"
         df = src.df.groupBy(expr_cached(NAME), expr_cached(ORD),
-                            F.expr(f"{TS} - {TS} % {step} AS {TS}")).agg(
+                            F.expr(f"{bucket} AS {TS}")).agg(
             agg_column(func, xff=factor, alias=VALUE))
-        start = self.start - self.start % step
-        stop_last = (self.stop - 1) - (self.stop - 1) % step
+        start = self.start - (self.start - origin) % step
+        stop_last = (self.stop - 1) - (self.stop - 1 - origin) % step
         return replace(src, df=df, step=step, start=start, stop=stop_last + step)
 
 
@@ -226,7 +249,7 @@ def align(frames: list[SeriesFrame]) -> list[SeriesFrame]:
     if not frames:
         return []
     step = common_step(frames)
-    frames = [f.consolidate_to(step) for f in frames]
+    frames = [f if f.step == step else f.consolidate_to(step, origin=0) for f in frames]
     start = min(f.start for f in frames)
     stop = max(f.stop for f in frames)
     return [f if (f.start, f.stop) == (start, stop)

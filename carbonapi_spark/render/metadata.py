@@ -10,30 +10,29 @@ scan reads a single column's pages).
 
 from __future__ import annotations
 
-from pyspark.sql import functions as F
-
+from carbonapi_spark.functions.helper import nodes_sql
 from carbonapi_spark.model.series import NAME
 from carbonapi_spark.parser.globs import glob_to_java_regex
 from carbonapi_spark.sources.lake import (SeriesLake, by_name, glob_prefix,
                                           tags_sql)
+from carbonapi_spark.sqltext import expr_cached, selectx, sql_lit
 
 
 def _name_prefixes(lake: SeriesLake, query: str):
     """(rows, ``p``, ``deeper``) for a one-level glob expansion: ``p`` is
-    each name's first len(query.split('.')) components, ``deeper`` says
-    the name has more.  ``p`` matching the glob implies the name starts
+    the SQL text of each name's first len(query.split('.')) components,
+    ``deeper`` of whether the name has more.  ``p`` matching the glob implies the name starts
     with the glob's literal prefix, so that prefix guards the scan: the
     same ``startswith`` a fetch uses, which Parquet receives as a
     pushed ``StringStartsWith`` filter (``rlike`` is evaluated only
     after the scan)."""
     depth = len(query.split("."))
-    parts = F.split(F.split_part(F.col(NAME), F.lit(";"), F.lit(1)), "\\.")
     rows = lake.df
     literal = glob_prefix(query)
     if literal:
-        rows = rows.where(F.col(NAME).startswith(literal))
-    return (rows, F.array_join(F.slice(parts, 1, depth), ".").alias("p"),
-            F.size(parts) > depth)
+        rows = rows.where(f"startswith({NAME}, {sql_lit(literal)})")
+    return (rows, f"array_join(slice({nodes_sql()}, 1, {depth}), '.') AS p",
+            f"size({nodes_sql()}) > {depth}")
 
 
 def find(lake: SeriesLake, query: str) -> list[dict]:
@@ -41,11 +40,11 @@ def find(lake: SeriesLake, query: str) -> list[dict]:
     len(query.split('.')), flagged leaf/branch (find_handlers.go:41-174)."""
     rows, prefix, deeper = _name_prefixes(lake, query)
     rows = (rows
-            .select(prefix, deeper.alias("deeper"))
-            .where(F.col("p").rlike(glob_to_java_regex(query)))
+            .selectExpr(prefix, f"{deeper} AS deeper")
+            .where(f"p RLIKE {sql_lit(glob_to_java_regex(query))}")
             .groupBy("p")
-            .agg(F.max(F.col("deeper").cast("int")).alias("has_children"),
-                 F.max((~F.col("deeper")).cast("int")).alias("is_leaf"))
+            .agg(expr_cached("max(CAST(deeper AS INT)) AS has_children"),
+                 expr_cached("max(CAST(NOT deeper AS INT)) AS is_leaf"))
             .orderBy("p")
             .collect())
     return [{"text": r["p"].rsplit(".", 1)[-1],
@@ -67,8 +66,8 @@ def find_completer(entries: list[dict]) -> dict:
 def expand(lake: SeriesLake, query: str) -> list[str]:
     """Flat glob expansion to full depth of the pattern (expand_handler.go)."""
     rows, prefix, _ = _name_prefixes(lake, query)
-    rows = (rows.select(prefix)
-            .where(F.col("p").rlike(glob_to_java_regex(query)))
+    rows = (rows.selectExpr(prefix)
+            .where(f"p RLIKE {sql_lit(glob_to_java_regex(query))}")
             .distinct().orderBy("p").collect())
     return [r["p"] for r in rows]
 
@@ -80,23 +79,21 @@ def tag_names(lake: SeriesLake, prefix: str = "", limit: int = 100,
     proxies them verbatim to the backend's /tags endpoints,
     zipper/types/interface.go:29-30). Tags are parsed once per distinct
     name, not per row."""
-    tags = F.expr(tags_sql())
-    df = (by_name(lake.df, exprs or [])
-          .select(F.explode(F.map_keys(tags)).alias("k")).distinct())
+    df = selectx(by_name(lake.df, exprs or []),
+                 f"explode(map_keys({tags_sql()})) AS k").distinct()
     if prefix:
-        df = df.where(F.col("k").startswith(prefix))
+        df = df.where(f"startswith(k, {sql_lit(prefix)})")
     return [r["k"] for r in df.orderBy("k").limit(limit).collect()]
 
 
 def tag_values(lake: SeriesLake, tag: str, value_prefix: str = "",
                limit: int = 100, exprs: list[str] | None = None) -> list[str]:
     """Values of *tag* over the series matching *exprs* (see tag_names)."""
-    tags = F.expr(tags_sql())
     df = (by_name(lake.df, exprs or [])
-          .select(tags.getItem(tag).alias("v"))
-          .where(F.col("v").isNotNull()).distinct())
+          .selectExpr(f"{tags_sql()}[{sql_lit(tag)}] AS v")
+          .where("v IS NOT NULL").distinct())
     if value_prefix:
-        df = df.where(F.col("v").startswith(value_prefix))
+        df = df.where(f"startswith(v, {sql_lit(value_prefix)})")
     return [r["v"] for r in df.orderBy("v").limit(limit).collect()]
 
 
@@ -110,9 +107,7 @@ def info(lake: SeriesLake, target: str) -> dict:
     """
     pred, terms = lake._name_filter(target)
     has_step = lake.per_series_step
-    aggs = [F.min("ts").alias("lo"), F.max("ts").alias("hi")]
-    if has_step:
-        aggs.append(F.max("step").alias("step"))
+    aggs = ["min(ts) AS lo", "max(ts) AS hi"] + (["max(step) AS step"] if has_step else [])
     rows = by_name(lake.df.where(pred), terms, *aggs).orderBy(NAME).collect()
     out = {}
     for r in rows:

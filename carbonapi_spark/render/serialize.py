@@ -73,7 +73,7 @@ def consolidate_for_points(frame: SeriesFrame, max_data_points: int) -> SeriesFr
     if n <= max_data_points:
         return frame
     vpp = math.ceil(n / max_data_points)
-    return frame.consolidate_to(frame.step * vpp)
+    return frame.consolidate_to(frame.step * vpp, origin=0)
 
 
 def _dense_vectors(table: pa.Table, start: int, stop: int,

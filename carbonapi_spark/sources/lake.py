@@ -27,9 +27,9 @@ Every predicate and projection of a fetch is SQL text with quoted
 literals (:func:`~carbonapi_spark.sqltext.sql_lit`): the name predicate and
 the window are ONE ``where`` and the projection ONE ``selectExpr``, so a
 fetch costs about ten py4j round trips, where assembling the same plan from
-Columns cost hundreds. The conjunctions nest as Column ``&`` nests them
-(:func:`~carbonapi_spark.sqltext.sql_all`), so the optimized plan and the
-pushed filters are the ones the Column form gave.
+Columns cost hundreds. The conjunctions nest to the left
+(:func:`~carbonapi_spark.sqltext.sql_all`), the predicate tree the
+Parquet filter pushdown is pinned on.
 
 A fetch returns the sparse scan (``dense=False``): a point the lake does
 not hold is a missing row, which means a gap just as a NULL row does.
@@ -41,7 +41,7 @@ from __future__ import annotations
 import math
 import re
 
-from pyspark.sql import Column, DataFrame, functions as F
+from pyspark.sql import DataFrame, functions as F
 
 from carbonapi_spark.model.consolidation import agg_column
 from carbonapi_spark.model.series import NAME, ORD, TS, VALUE, SeriesFrame
@@ -95,16 +95,18 @@ def tag_predicate(spec: str) -> str:
     return f"{tag} IS NULL OR NOT {tag} RLIKE {rx}"
 
 
-def by_name(df: DataFrame, terms: list[str], *aggs: Column) -> DataFrame:
+def by_name(df: DataFrame, terms: list[str], *aggs: str) -> DataFrame:
     """One row per distinct ``name`` of *df* matching every seriesByTag
-    term in *terms*, with *aggs* computed per name.
+    term in *terms*, with the aggregates *aggs* (SQL text) computed per
+    name.
 
     The terms read the tag map once per distinct name instead of once
     per scanned row. They filter the name as the aggregate's result,
     ``first(name)``: Catalyst pushes a filter on a grouping key below the
     aggregate, back onto every row."""
     out = (df.groupBy(expr_cached(f"{NAME} AS __key"))
-           .agg(expr_cached(f"first({NAME}, false) AS {NAME}"), *aggs).drop("__key"))
+           .agg(expr_cached(f"first({NAME}, false) AS {NAME}"),
+                *map(expr_cached, aggs)).drop("__key"))
     if terms:
         out = out.where(sql_all(tag_predicate(t) for t in terms))
     return out
@@ -249,8 +251,8 @@ class SeriesLake:
         """
         pred, terms = self._name_filter(pattern)
         rows = (by_name(self.df.where(f"({pred}) AND {TS} < {until_ts}"), terms,
-                        F.collect_set("step").alias("steps"))
-                .select(F.explode("steps")).distinct().collect())
+                        "collect_set(step) AS steps")
+                .selectExpr("explode(steps)").distinct().collect())
         step = 1
         for r in rows:
             step = step * int(r[0]) // math.gcd(step, int(r[0]))
@@ -299,17 +301,15 @@ def write_rollups(df: DataFrame, path: str, steps: list[int],
     a CASE over the (broadcast-literal) patterns — no per-method
     re-scan."""
     funcs = sorted({f for _p, f in (methods or [])} | {default_method})
+    value = f"__{default_method}"
+    for pat, f in reversed(methods or []):
+        value = (f"CASE WHEN {NAME} RLIKE {sql_lit(glob_to_java_regex(pat))} "
+                 f"THEN __{f} ELSE {value} END")
     for s in steps:
-        bucket = (F.col(TS) - F.col(TS) % F.lit(s)).cast("long")
-        agged = (df.groupBy(F.col(NAME), bucket.alias(TS))
-                 .agg(*[agg_column(f, alias=f"__{f}") for f in funcs]))
-        value = F.col(f"__{default_method}")
-        for pat, f in reversed(methods or []):
-            value = F.when(F.col(NAME).rlike(glob_to_java_regex(pat)),
-                           F.col(f"__{f}")).otherwise(value)
-        (agged.select(NAME, TS, value.alias(VALUE))
-         .withColumn("day", (F.col(TS) - F.col(TS)
-                             % F.lit(time_partition_seconds)).cast("long"))
+        (df.groupBy(expr_cached(NAME), F.expr(f"CAST({TS} - {TS} % {s} AS BIGINT) AS {TS}"))
+         .agg(*[agg_column(f, alias=f"__{f}") for f in funcs])
+         .selectExpr(NAME, TS, f"{value} AS {VALUE}",
+                     f"CAST({TS} - {TS} % {time_partition_seconds} AS BIGINT) AS day")
          .write.mode("overwrite").partitionBy("day")
          .parquet(f"{path}/step={s}"))
 

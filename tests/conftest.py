@@ -52,6 +52,38 @@ def run(spark, lake: SeriesLake, target: str, from_ts: int, until_ts: int):
     return out
 
 
+def build_round_trips(spark, lake, target: str, from_ts: int = 0,
+                      until_ts: int = 2 * 86400) -> int:
+    """py4j round trips one build of *target* over [from_ts, until_ts)
+    makes on the calling thread, counted at
+    ``ClientServerConnection.send_command``; the build runs once
+    beforehand, so cached expressions are warm, and the garbage collector
+    is held so no finalizer's delete command lands in the count."""
+    import gc
+    import threading
+
+    import py4j.clientserver as cs
+    assert isinstance(spark.sparkContext._gateway, cs.ClientServer)
+    me, count = threading.get_ident(), [0]
+    real = cs.ClientServerConnection.send_command
+
+    def send_command(self, command):
+        if threading.get_ident() == me:
+            count[0] += 1
+        return real(self, command)
+
+    eval_target(EvalContext(spark, lake, from_ts, until_ts), target)
+    gc.collect()
+    gc.disable()
+    cs.ClientServerConnection.send_command = send_command
+    try:
+        eval_target(EvalContext(spark, lake, from_ts, until_ts), target)
+    finally:
+        cs.ClientServerConnection.send_command = real
+        gc.enable()
+    return count[0]
+
+
 def values_of(result: dict, name: str) -> list:
     return [v for _, v in result[name]]
 

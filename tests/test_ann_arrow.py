@@ -18,12 +18,12 @@ import numpy as np
 import pytest
 from pyspark.sql import Window, functions as F
 
-from carbonapi_spark.datapipe import selectx
 from carbonapi_spark.datapipe import similarity
 from carbonapi_spark.datapipe.similarity import (
     _cb_sql, _cell_score_sql, _driver_probe_rows, _pq_code_sql,
     _sqdists_sql, ann_index_topk, brute_force_topk, cosine, ivf_centroids,
     ivfpq_encode, ivfpq_topk, pq_codebooks, write_ann_index)
+from carbonapi_spark.sqltext import selectx
 
 DIM, M, KSUB, K_CELLS, N = 16, 4, 8, 6, 300
 V = "cast(embedding as array<double>)"

@@ -20,8 +20,9 @@ import duckdb
 import pytest
 
 from carbonapi_spark import scratch
-from carbonapi_spark.entry_queries import ORACLES, QUERIES
+from carbonapi_spark.entry_queries import ORACLES, QUERIES, _cached_lake
 from carbonapi_spark.sources.testdata import TABLES
+from tests.conftest import build_round_trips
 from tests.test_strict_oracles import SF_DIR
 from tools.check_oracles import normalize
 
@@ -78,16 +79,20 @@ def test_ann_oracle_bit_exact(spark, duck, name):
     _replay(spark, duck, name, strict=True)
 
 
+def _cells(name):
+    """The target and window a ``graphite_query`` entry closes over."""
+    q = QUERIES[name]
+    return dict(zip(q.__code__.co_freevars,
+                    (c.cell_contents for c in q.__closure__)))
+
+
 @pytest.mark.parametrize("name", GRAPHITE)
 def test_static_step_matches_build(spark, name):
     """The static step pass reads every catalog target's step off its AST
     exactly as building the target gives it."""
-    from carbonapi_spark.entry_queries import _cached_lake
     from carbonapi_spark.evaluator import EvalContext, eval_expr, static_step
     from carbonapi_spark.parser import parse
-    q = QUERIES[name]
-    cells = dict(zip(q.__code__.co_freevars,
-                     (c.cell_contents for c in q.__closure__)))
+    cells = _cells(name)
     lake = _cached_lake(spark, SF_DIR)
     exp = parse(cells["target"])
     step = static_step(EvalContext(spark, lake, cells["from_ts"],
@@ -98,3 +103,18 @@ def test_static_step_matches_build(spark, name):
     finally:
         scratch.release()
     assert step == built
+
+
+@pytest.mark.parametrize("name", GRAPHITE)
+def test_build_round_trip_budget(spark, name):
+    """Every catalog target builds its render plan in at most 150 py4j
+    round trips: every expression is SQL text, parsed in one call, where a
+    plan assembled from Columns paid a round trip per Column operation
+    (up to 577 for one target)."""
+    cells = _cells(name)
+    try:
+        trips = build_round_trips(spark, _cached_lake(spark, SF_DIR), cells["target"],
+                                  cells["from_ts"], cells["until_ts"])
+    finally:
+        scratch.release()
+    assert trips <= 150

@@ -8,7 +8,7 @@ import re
 import pytest
 
 from carbonapi_spark.evaluator import EvalContext, eval_target
-from tests.conftest import make_lake
+from tests.conftest import build_round_trips, make_lake
 
 
 def _exchanges(spark, lake, target, f, u) -> int:
@@ -1206,37 +1206,6 @@ def _day_lake(spark, tmp_path, rows):
     return SeriesLake(spark.read.parquet(path), 3600, time_partition_col="day")
 
 
-def _build_round_trips(spark, lake, target, until=2 * 86400) -> int:
-    """py4j round trips one build of *target* makes on the calling
-    thread, counted at ``ClientServerConnection.send_command``; the build
-    runs once beforehand, so cached expressions are warm, and the garbage
-    collector is held so no finalizer's delete command lands in the
-    count."""
-    import gc
-    import threading
-
-    import py4j.clientserver as cs
-    assert isinstance(spark.sparkContext._gateway, cs.ClientServer)
-    me, count = threading.get_ident(), [0]
-    real = cs.ClientServerConnection.send_command
-
-    def send_command(self, command):
-        if threading.get_ident() == me:
-            count[0] += 1
-        return real(self, command)
-
-    eval_target(EvalContext(spark, lake, 0, until), target)
-    gc.collect()
-    gc.disable()
-    cs.ClientServerConnection.send_command = send_command
-    try:
-        eval_target(EvalContext(spark, lake, 0, until), target)
-    finally:
-        cs.ClientServerConnection.send_command = real
-        gc.enable()
-    return count[0]
-
-
 @pytest.mark.parametrize("target, bound", [
     ("events.u*.click", 30),
     ("movingAverage(sumSeries(events.u*.click),'6h')", 150),
@@ -1249,7 +1218,7 @@ def test_build_round_trip_budget(spark, tmp_path, target, bound):
     rows = [(f"events.u{u}.{e}", 3600 * h, float(u * h))
             for u in (1, 2) for e in ("click", "view") for h in range(48)]
     lake = _day_lake(spark, tmp_path, rows)
-    assert _build_round_trips(spark, lake, target) <= bound
+    assert build_round_trips(spark, lake, target) <= bound
 
 
 @pytest.mark.parametrize("target, trips", [
@@ -1265,7 +1234,7 @@ def test_fetch_round_trips_pinned(spark, tmp_path, target, trips):
     rows += [(f"app.req;dc=dc{d}", 3600 * h, 1.0) for d in (0, 1)
              for h in range(48)]
     lake = _day_lake(spark, tmp_path, rows)
-    assert _build_round_trips(spark, lake, target) == trips
+    assert build_round_trips(spark, lake, target) == trips
 
 
 def test_render_path_does_not_import_datapipe():
@@ -1304,3 +1273,62 @@ def test_fetch_quotes_names(spark, pattern, names):
     got = lake.fetch(spark, pattern, 0, 180).df.collect()
     assert sorted({r["name"] for r in got}) == names
     assert len(got) == 3 * len(names)
+
+
+_QUOTED = ["it's.a.c'pu", "it's.a.m\\em", "back\\slash.b.c'pu", "back\\slash.b.m\\em",
+           "plain.c.c'pu", "plain.c.m\\em", "tag's;d'c=x\\y", "tag's;d'c=z'w"]
+_PLAIN = _QUOTED[:6]
+
+
+@pytest.mark.parametrize("target, names", [
+    ("grep(*.*.*, \"it's\")", _PLAIN[:2]),
+    ("grep(*.*.*, 'back\\\\slash')", _PLAIN[2:4]),
+    ("grep(*.*.*, \"(a') OR (1=1)\")", []),
+    ("exclude(*.*.*, \"c'pu\")", _PLAIN[1::2]),
+    ("exclude(*.*.*, \"(a') OR (1=1)\")", _PLAIN),
+    ("aliasSub(*.*.*, \"it's\", \"a') OR (1=1\")",
+     ["a') OR (1=1.a.c'pu", "a') OR (1=1.a.m\\em"] + _PLAIN[2:]),
+    ("aliasSub(*.*.*, 'm\\\\em', \"it's\")",
+     [n.replace("m\\em", "it's") for n in _PLAIN]),
+    ("legendValue(*.*.*, 'avg', 'last')",
+     [f"{n} (avg: {i + 1}.0) (last: {i + 2}.0)" for i, n in enumerate(_PLAIN)]),
+    ("applyByNode(plain.*.*, 0, 'sumSeries(%.*.*)', \"it's % \\ a') OR (1=1\")",
+     ["it's plain \\ a') OR (1=1"]),
+    ("reduceSeries(mapSeries(*.*.*, 1), 'diffSeries', 2, \"c'pu\", 'm\\em')",
+     [f"{p}.reduce.diffSeries" for p in ("it's.a", "back\\slash.b", "plain.c")]),
+    ("reduceSeries(mapSeries(*.*.*, 1), 'sum', 2, \"a') OR (1=1\", 'm\\em')", []),
+    ("groupByTags(seriesByTag(\"name=tag's\"), 'sum', \"d'c\")", _QUOTED[6:]),
+    ("groupByTags(seriesByTag(\"name=tag's\"), 'sum', 'name', \"a') OR (1=1\")",
+     ["tag's;a') OR (1=1="]),
+])
+def test_functions_quote_arguments(spark, target, names):
+    """Regexes, labels, matchers and tag names holding ``'`` and ``\\``
+    reach the plan as the strings they are: each function returns the
+    series it returns for any other string, and an argument that would
+    close a string literal matches or renames nothing else."""
+    from carbonapi_spark.sources.lake import SeriesLake
+    rows = [(n, 60 * t, float(t + i)) for i, n in enumerate(_QUOTED) for t in range(3)]
+    lake = SeriesLake(spark.createDataFrame(
+        rows, "name STRING, ts BIGINT, value DOUBLE"), 60)
+    got = eval_target(EvalContext(spark, lake, 0, 180), target).df.collect()
+    assert sorted({r["name"] for r in got}) == sorted(names)
+    assert len(got) == 3 * len(names)
+
+
+@pytest.mark.parametrize("query, ids", [
+    ("it's.*", ["it's.a"]),
+    ("back\\slash.*", ["back\\slash.b"]),
+    ("*.*.m\\em", sorted(_PLAIN[1::2])),
+    ("a') OR (1=1.*", []),
+])
+def test_metrics_find_quotes_globs(spark, query, ids):
+    """``/metrics/find`` and ``/metrics/expand`` match a glob holding
+    ``'`` or ``\\`` as the names it spells, and nothing for a glob that
+    would close a string literal."""
+    from carbonapi_spark.render import metadata
+    from carbonapi_spark.sources.lake import SeriesLake
+    rows = [(n, 0, 1.0) for n in _QUOTED]
+    lake = SeriesLake(spark.createDataFrame(
+        rows, "name STRING, ts BIGINT, value DOUBLE"), 60)
+    assert [e["id"] for e in metadata.find(lake, query)] == ids
+    assert metadata.expand(lake, query) == ids
